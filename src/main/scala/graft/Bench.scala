@@ -95,6 +95,9 @@ object Bench {
           CacheDirs.deleteRecursively(f)
       })
     }
+    var failed = List.empty[String]
+    // a failed build is named in `failed` and left out of the timed set:
+    // its time-to-failure is not a build time
     val indexBuilds: Seq[(String, Double)] = Seq[(String, () => Unit)](
       "sidx_sig16" -> (() => SimilarityQueries.sigTableCached(spark, sfDir)
         .write.format("noop").mode("overwrite").save()),
@@ -105,20 +108,22 @@ object Bench {
       "sidx_sq8" -> (() => SimilarityQueries.sq8TableCached(spark, sfDir)
         .write.format("noop").mode("overwrite").save()),
       "sidx_pqcb" -> (() => { SimilarityQueries.pqCodebooksCached(spark, sfDir); () })
-    ).map { case (name, build) =>
+    ).flatMap { case (name, build) =>
       val t0 = System.nanoTime()
-      try build()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try { build(); true }
+        catch { case e: Throwable =>
+          failed ::= name
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
-      name -> dt
+      if (ok) Some(name -> dt) else None
     }
     // Sorted order: stable run-to-run and round-to-round comparisons
     // (Map iteration order would shuffle which query pays warm-cache
     // effects as the registry grows).
-    var failed = List.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => exactnessTwins(name) }
       .map { case (name, fn) =>

@@ -1,5 +1,6 @@
 package graft.job
 
+import graft.sources.Readers
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.ConcurrentHashMap
@@ -29,6 +30,7 @@ final class JobMetrics(spark: SparkSession) extends SparkListener {
   // thread's job-group local property is invisible — capture the
   // group at job start and route per stage.
   private val stageToGroup = new ConcurrentHashMap[Int, String]()
+  private val Uncounted = new String("uncounted") // a stage routing mark, never a group
   @volatile private var lastLog = 0L
   @volatile var progressLogIntervalMs: Long = 2000L
 
@@ -38,8 +40,12 @@ final class JobMetrics(spark: SparkSession) extends SparkListener {
   def counters(group: String): Option[Counters] = Option(byGroup.get(group))
 
   override def onJobStart(j: SparkListenerJobStart): Unit = {
-    val group = Option(j.properties)
-      .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("default")
+    val props = Option(j.properties)
+    // the CSV scan-mode probe is one more pass over the source before
+    // any row loads: counting it would inflate live progress
+    val group =
+      if (props.exists(_.getProperty(Readers.ProbeJobProperty) != null)) Uncounted
+      else props.flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("default")
     j.stageIds.foreach(sid => stageToGroup.put(sid, group))
   }
 
@@ -48,6 +54,7 @@ final class JobMetrics(spark: SparkSession) extends SparkListener {
 
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
     val group = Option(stageToGroup.get(t.stageId)).getOrElse("default")
+    if (group eq Uncounted) return
     val c = byGroup.computeIfAbsent(group, _ => Counters())
     val m = t.taskMetrics
     if (m != null) {

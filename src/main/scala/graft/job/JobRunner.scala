@@ -142,8 +142,12 @@ object JobRunner {
   /** Build the mapped (and error-enforced) DataFrame for a job WITHOUT
     * writing — the query-shaped view of a job, used by SparkEntry. */
   def buildDataFrame(spark: SparkSession, cfg: JobConfig,
-                     plugins: Map[String, DataFrame => DataFrame] = Map.empty): DataFrame = {
-    val raw = Readers.forConfig(spark, cfg.source, cfg.mappings)
+                     plugins: Map[String, DataFrame => DataFrame] = Map.empty): DataFrame =
+    mapSource(Readers.forConfig(spark, cfg.source, cfg.mappings), cfg, plugins)
+
+  /** The job's mapping and transformation stages over its source frame. */
+  private def mapSource(raw: DataFrame, cfg: JobConfig,
+                        plugins: Map[String, DataFrame => DataFrame]): DataFrame = {
     val mapped = MappingOp(raw, cfg.mappings, cfg.source.connectionDetails.filter)
     val transformed = cfg.transformation.`type`.toUpperCase match {
       // Reference stage-2 hook (P8): PYTHON_SCRIPT -> pluggable DataFrame=>DataFrame.
@@ -213,12 +217,15 @@ object JobRunner {
     registryPut(configKey, JobResult(cfg.jobId, configKey, Running, 0, 0, Nil, ""))
     spark.sparkContext.setJobGroup(configKey, s"graft job ${cfg.jobId}", interruptOnCancel = true)
     val steps = if (cfg.steps.nonEmpty) cfg.steps else List("LOAD", "NOTIFY_SUCCESS")
+    // One source frame per job, shared by every step that reads the
+    // source: the CSV scan-mode probe and header inference run once.
+    lazy val source = Readers.forConfig(spark, cfg.source, cfg.mappings)
+    def mappedSource(): DataFrame = mapSource(source, cfg, plugins)
     try {
       steps.foreach { step =>
         step.toUpperCase match {
           case "VALIDATE_SOURCE" =>
-            val df = Readers.forConfig(spark, cfg.source, cfg.mappings)
-            val present = df.schema.fieldNames.toSet
+            val present = source.schema.fieldNames.toSet
             val missing = cfg.mappings.map(_.sourceFieldName).filterNot(present.contains)
             if (missing.nonEmpty)
               throw new ErrorPolicy.JobFailedException(s"VALIDATE_SOURCE: missing columns ${missing.mkString(",")}")
@@ -228,11 +235,10 @@ object JobRunner {
             // distinct — the scale-safe mode). The report is metadata
             // (one row per column): written next to a file destination
             // as <path>_profile, else logged.
-            val df = Readers.forConfig(spark, cfg.source, cfg.mappings)
             val mapped = cfg.mappings.map(_.sourceFieldName)
-              .filter(df.schema.fieldNames.contains)
-            val cols = if (mapped.nonEmpty) mapped else df.schema.fieldNames.toSeq
-            val prof = graft.operators.Profile.profile(df, cols, exact = false)
+              .filter(source.schema.fieldNames.contains)
+            val cols = if (mapped.nonEmpty) mapped else source.schema.fieldNames.toSeq
+            val prof = graft.operators.Profile.profile(source, cols, exact = false)
             cfg.destination.flatMap(_.connectionDetails.pathOrFile) match {
               case Some(p) =>
                 prof.coalesce(1).write.mode("overwrite")
@@ -250,9 +256,8 @@ object JobRunner {
             val spec = cfg.transformation.parameters.getOrElse("qualityRules",
               throw new IllegalArgumentException(
                 "VALIDATE_QUALITY needs transformation.parameters.qualityRules"))
-            val df = Readers.forConfig(spark, cfg.source, cfg.mappings)
             val failed = graft.operators.Quality
-              .check(df, graft.operators.Quality.parseRules(spec))
+              .check(source, graft.operators.Quality.parseRules(spec))
               .filter(!org.apache.spark.sql.functions.col("passed"))
               .collect() // <= |rules| rows of metadata
             if (failed.nonEmpty)
@@ -275,9 +280,8 @@ object JobRunner {
             val width = need("driftBandWidth").toDouble
             val basePath = need("driftBaselinePath")
             val maxPsi = p.getOrElse("driftMaxPsiMicro", "200000").toLong
-            val cur = Readers.forConfig(spark, cfg.source, cfg.mappings)
             val psi = graft.operators.Profile.psiMicro(
-              cur, spark.read.parquet(basePath), dcol, width)
+              source, spark.read.parquet(basePath), dcol, width)
             if (psi > maxPsi)
               throw new ErrorPolicy.JobFailedException(
                 s"VALIDATE_DRIFT: psi_micro=$psi over $dcol exceeds $maxPsi vs baseline $basePath")
@@ -313,7 +317,7 @@ object JobRunner {
             // own input records don't saturate this group's counters.
             if (progressMetrics.isDefined) {
               spark.sparkContext.clearJobGroup()
-              try expectedTotals.put(configKey, buildDataFrame(spark, cfg, plugins).count())
+              try expectedTotals.put(configKey, mappedSource().count())
               finally spark.sparkContext.setJobGroup(configKey, s"graft job ${cfg.jobId}",
                 interruptOnCancel = true)
             }
@@ -328,7 +332,7 @@ object JobRunner {
             var counts: (Long, () => Long) = null
             Retry.withRetry() { () =>
               val enforced = ErrorPolicy.enforceObserved(
-                buildDataFrame(spark, cfg, plugins), cfg.mappings, cfg.errorHandling)
+                mappedSource(), cfg.mappings, cfg.errorHandling)
               val loadObs = org.apache.spark.sql.Observation(s"graft_load_${seq.incrementAndGet()}")
               val counted = enforced.good.observe(loadObs, org.apache.spark.sql.functions.count(
                 org.apache.spark.sql.functions.lit(1)).as("rows"))
@@ -355,7 +359,7 @@ object JobRunner {
             var sCounts: (Long, () => Long) = null
             Retry.withRetry() { () =>
               val enforced = ErrorPolicy.enforceObserved(
-                buildDataFrame(spark, cfg, plugins), cfg.mappings, cfg.errorHandling)
+                mappedSource(), cfg.mappings, cfg.errorHandling)
               val obs = org.apache.spark.sql.Observation(s"graft_snap_${seq.incrementAndGet()}")
               val counted = enforced.good.observe(obs, org.apache.spark.sql.functions.count(
                 org.apache.spark.sql.functions.lit(1)).as("rows"))
@@ -389,7 +393,7 @@ object JobRunner {
               throw new IllegalArgumentException(s"MERGE_STRATEGY needs transformation.parameters.$k"))
             val keys = param("mergeKeys").split(",").map(_.trim).filter(_.nonEmpty).toSeq
             val enforced = ErrorPolicy.enforceObserved(
-              buildDataFrame(spark, cfg, plugins), cfg.mappings, cfg.errorHandling)
+              mappedSource(), cfg.mappings, cfg.errorHandling)
             val fsPath = new org.apache.hadoop.fs.Path(destPath)
             val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
             // crash-recovery guard: a missing destination WITH a
@@ -397,7 +401,8 @@ object JobRunner {
             // its two renames — treating that as a first load would
             // silently shrink the dimension to the incoming batch.
             // Fail loudly and name the stranded data instead.
-            if (!fs.exists(fsPath)) {
+            val firstLoad = !fs.exists(fsPath)
+            if (firstLoad) {
               val stranded = graft.operators.Maintenance.strandedSiblings(fs, fsPath)
               if (stranded.nonEmpty)
                 throw new ErrorPolicy.JobFailedException(
@@ -405,22 +410,22 @@ object JobRunner {
                     s"${stranded.mkString(", ")} — a prior run died mid-swap; rename " +
                     "the newest _old_ dir back to the destination before re-running")
             }
-            val merged =
-              if (!fs.exists(fsPath)) enforced.good // first load: nothing to merge
-              else {
-                val existing = Readers.forConfig(spark,
-                  SourceConfig(dest.`type`, dest.connectionDetails), cfg.mappings)
-                param("mergeStrategy").toUpperCase match {
-                  case "KEEP_LATEST" => graft.operators.Upsert.keepLatest(
-                    existing, enforced.good, keys, param("versionColumn"))
-                  case "SCD2" => graft.operators.Upsert.scd2Apply(
-                    existing, enforced.good, keys,
-                    params.getOrElse("validFromColumn", "valid_from"),
-                    params.getOrElse("validToColumn", "valid_to"))
-                  case other =>
-                    throw new IllegalArgumentException(s"unknown mergeStrategy: $other")
-                }
-              }
+            def existing = Readers.forConfig(spark,
+              SourceConfig(dest.`type`, dest.connectionDetails), cfg.mappings)
+            val merged = param("mergeStrategy").toUpperCase match {
+              // a first load merges into an empty destination, so keys
+              // repeated within the batch resolve as in every later batch
+              case "KEEP_LATEST" => graft.operators.Upsert.keepLatest(
+                if (firstLoad) enforced.good.limit(0) else existing,
+                enforced.good, keys, param("versionColumn"))
+              case "SCD2" if firstLoad => enforced.good // nothing to close yet
+              case "SCD2" => graft.operators.Upsert.scd2Apply(
+                existing, enforced.good, keys,
+                params.getOrElse("validFromColumn", "valid_from"),
+                params.getOrElse("validToColumn", "valid_to"))
+              case other =>
+                throw new IllegalArgumentException(s"unknown mergeStrategy: $other")
+            }
             // stage-and-swap: the destination is an INPUT of the merge
             // plan, so it cannot be overwritten in place — materialize
             // the merge next to it, then swap directories. (One keyed
@@ -677,7 +682,7 @@ object JobRunner {
               throw new IllegalArgumentException(
                 s"INGEST_DEDUP_DESTINATION requires transformation.parameters.$key"))
             graft.streaming.EventStreams.ingestDedupBatch(spark,
-              buildDataFrame(spark, cfg, plugins), ingPath,
+              mappedSource(), ingPath,
               ingNeed("ingestBatchId").toLong,
               idCol = ingNeed("ingestIdColumn"),
               textCol = ingNeed("ingestTextColumn"))
@@ -726,7 +731,7 @@ object JobRunner {
                 s"INGEST_SPAN_DESTINATION requires transformation.parameters.$key"))
             val spGrain = spP.getOrElse("spanGrain", "word")
             graft.streaming.EventStreams.ingestSpanBatch(spark,
-              buildDataFrame(spark, cfg, plugins), spPath,
+              mappedSource(), spPath,
               spNeed("ingestBatchId").toLong,
               idCol = spNeed("ingestIdColumn"),
               textCol = spNeed("ingestTextColumn"),
@@ -769,7 +774,7 @@ object JobRunner {
               throw new IllegalArgumentException(
                 s"INGEST_BM25_DESTINATION requires transformation.parameters.$key"))
             graft.streaming.EventStreams.ingestBm25Batch(spark,
-              buildDataFrame(spark, cfg, plugins), bmPath,
+              mappedSource(), bmPath,
               bmNeed("ingestBatchId").toLong,
               idCol = bmNeed("ingestIdColumn"),
               textCol = bmNeed("ingestTextColumn"))
@@ -817,7 +822,7 @@ object JobRunner {
             // (keep the set stable per destination; it is part of the
             // state's schema)
             graft.streaming.EventStreams.ingestAnnBatch(spark,
-              buildDataFrame(spark, cfg, plugins), anPath2,
+              mappedSource(), anPath2,
               anNeed("ingestBatchId").toLong,
               idCol = anNeed("ingestIdColumn"),
               vecCol = anNeed("ingestVectorColumn"),
@@ -852,7 +857,7 @@ object JobRunner {
               .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
             require(bfParts.nonEmpty,
               "BACKFILL_DESTINATION requires transformation.parameters.partitionColumns")
-            val bfBatch = buildDataFrame(spark, cfg, plugins)
+            val bfBatch = mappedSource()
             val bfMissing = bfParts.filterNot(bfBatch.columns.contains)
             require(bfMissing.isEmpty,
               s"partitionColumns not in the mapped batch: ${bfMissing.mkString(", ")}")

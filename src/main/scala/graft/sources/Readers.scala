@@ -1,9 +1,17 @@
 package graft.sources
 
 import graft.model.{FieldMapping, SourceConfig}
+import java.nio.charset.{Charset, StandardCharsets}
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import scala.annotation.tailrec
+import scala.util.Try
 
 /**
  * Source builders: config -> lazy DataFrame scan.
@@ -133,17 +141,31 @@ object Readers {
    * in the mapping stage); headerless files get positional names from
    * mapping order (ItemReaderFactory.java:205-210); quoted fields are
    * honored (`readString`, ItemReaderFactory.java:218).
+   *
+   * Scan mode. `multiLine=true` (quoted values may span lines) is the
+   * default, and it parses each file in ONE task. The scan switches to
+   * Spark's splittable line mode only when `singleLineRecords` proves
+   * that every record of the listing sits on one line, so both parses
+   * give the same rows. That needs: no preamble, a one-character ASCII
+   * delimiter, the `"` quote (escape == quote, RFC 4180), UTF-8 or
+   * US-ASCII, some splittable file larger than Spark's split size for
+   * the listing (else line mode adds no task and the probe is skipped),
+   * and one parallel pass over the raw lines that finds no bad line
+   * (see `singleLine`), no file mixing CRLF and LF line ends, no CRLF
+   * file without a final newline, and, with `header`, one header text
+   * across the files. Anything else keeps the multiLine scan.
    */
   def csv(spark: SparkSession, path: String, mappings: Seq[FieldMapping],
           delimiter: String = ",", header: Boolean = true,
           encoding: String = "UTF-8", quote: String = "\"",
           linesToSkip: Int = 0): DataFrame = {
+    val lineMode = linesToSkip == 0 && singleLineRecords(spark, path, delimiter, encoding, quote, header)
     val base = spark.read
       .option("delimiter", delimiter)
       .option("encoding", encoding)
       .option("quote", quote)
       .option("escape", "\"") // RFC-4180 doubled-quote escaping (ETLCoreCsvFileWriter.java:174-185)
-      .option("multiLine", "true") // values may span newlines when quoted
+      .option("multiLine", (!lineMode).toString) // values may span newlines when quoted
       .option("header", header.toString)
     val schema = StructType(mappings.map(m => StructField(m.sourceFieldName, StringType, nullable = true)))
     if (linesToSkip > 0) {
@@ -172,6 +194,133 @@ object Readers {
     else {
       // Positional columns named from the mapping order.
       if (mappings.nonEmpty) base.schema(schema).csv(path) else base.csv(path)
+    }
+  }
+
+  /** Local property set on the scan-mode probe's Spark job. Progress
+    * counters (`graft.job.JobMetrics`) leave its reads out, so live
+    * progress does not count the probe's pass as loaded rows. */
+  val ProbeJobProperty = "graft.sources.scanProbe"
+
+  /** What one probe task saw of one file block: the block's first line
+    * when it starts the file, and which line ends (CRLF, LF) it holds. */
+  private final case class ProbedBlock(file: String, firstLine: Option[String],
+                                       crlf: Boolean, lf: Boolean)
+
+  /** True when no CSV record under `path` can span a line, so the
+    * line-mode parse gives the multiLine parse's rows (rule: `csv`).
+    * The pass is one stage with no exchange; a task stops at its first
+    * bad line. */
+  private def singleLineRecords(spark: SparkSession, path: String, delimiter: String,
+                                encoding: String, quote: String, header: Boolean): Boolean = {
+    val utf8 = Try(Charset.forName(encoding)).toOption
+      .exists(c => c == StandardCharsets.UTF_8 || c == StandardCharsets.US_ASCII)
+    if (!utf8 || quote != "\"" || delimiter.length != 1 || delimiter(0) >= 0x80 ||
+        "\"\r\n".contains(delimiter(0))) return false
+    // raw lines split on \n alone, so a line keeps any \r it holds
+    val text = spark.read.option("lineSep", "\n").text(path)
+    val listing = text.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.listFiles(Nil, Nil)
+    }.getOrElse(return false)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val codecs = new CompressionCodecFactory(conf)
+    val splitBytes = FilePartition.maxSplitBytes(spark, listing)
+    if (!listing.flatMap(_.files).exists(f => f.getLen > splitBytes &&
+        Option(codecs.getCodec(f.getPath)).forall(_.isInstanceOf[SplittableCompressionCodec])))
+      return false
+    val delim = delimiter(0).toByte
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(ProbeJobProperty)
+    sc.setLocalProperty(ProbeJobProperty, "true")
+    val tasks = try text.select(col("value"), input_file_name(), input_file_block_start())
+        .queryExecution.toRdd.mapPartitions(rows => Iterator.single(probeTask(rows, delim)))
+        .collect()
+      finally sc.setLocalProperty(ProbeJobProperty, prev)
+    if (tasks.contains(None)) return false
+    val blocks = tasks.toSeq.flatten.flatten
+    // univocity's multiLine parse takes a file's line end from its first
+    // line and keeps any other \r as data (a lone \r ending a CRLF file
+    // too), where Hadoop's line reader drops it: a file's lines must all
+    // end alike, and a CRLF file must end in \n
+    val crlfFiles = blocks.groupBy(_.file).collect {
+      case (f, bs) if bs.exists(_.crlf) => (f, bs.exists(_.lf))
+    }
+    crlfFiles.forall { case (f, mixed) => !mixed && endsWithNewline(f, conf, codecs) } &&
+      // with a header, multiLine names columns from the first file in the
+      // listing and line mode from the largest: they agree when all agree
+      (!header || blocks.flatMap(_.firstLine).distinct.size <= 1)
+  }
+
+  /** One probe task over (line, file, block start) rows: None at its
+    * first bad line, else one ProbedBlock per file block it read. */
+  private def probeTask(rows: Iterator[InternalRow], delim: Byte): Option[Seq[ProbedBlock]] = {
+    val blocks = Seq.newBuilder[ProbedBlock]
+    var file: UTF8String = null
+    var start = -1L
+    var firstLine: Option[String] = None
+    var crlf, lf = false
+    def close(): Unit = if (file != null) blocks += ProbedBlock(file.toString, firstLine, crlf, lf)
+    while (rows.hasNext) {
+      val r = rows.next()
+      val line = r.getUTF8String(0)
+      if (!singleLine(line, delim)) return None
+      if (r.getLong(2) != start || r.getUTF8String(1) != file) {
+        close()
+        file = r.getUTF8String(1).clone()
+        start = r.getLong(2)
+        firstLine = if (start == 0) Some(line.toString.stripSuffix("\r")) else None
+        crlf = false; lf = false
+      }
+      if (line.numBytes > 0 && line.getByte(line.numBytes - 1) == '\r') crlf = true else lf = true
+    }
+    close()
+    Some(blocks.result())
+  }
+
+  /** The strict single-line grammar over one raw line (UTF-8 bytes, its
+    * `\n` removed, one final `\r` allowed). A line is bad when it is
+    * blank or whitespace only (line mode drops it, multiLine does not),
+    * starts with a BOM, holds any other `\r` (Hadoop's line reader splits
+    * there, univocity does not), or has a field that contains a `"` and
+    * is not one `"…"` with `""` escapes followed by the delimiter or the
+    * line's end. A good line holds one complete record in both modes. */
+  private def singleLine(line: UTF8String, delim: Byte): Boolean = {
+    val n = if (line.numBytes > 0 && line.getByte(line.numBytes - 1) == '\r') line.numBytes - 1
+            else line.numBytes
+    def at(i: Int): Byte = line.getByte(i)
+    // index after the closing quote of a field opened before i, or -1
+    @tailrec def quotedEnd(i: Int): Int =
+      if (i >= n) -1
+      else if (at(i) != '"') quotedEnd(i + 1)
+      else if (i + 1 < n && at(i + 1) == '"') quotedEnd(i + 2)
+      else i + 1
+    // index of the delimiter (or n) ending an unquoted field, or -1
+    @tailrec def unquotedEnd(i: Int): Int =
+      if (i >= n || at(i) == delim) i else if (at(i) == '"') -1 else unquotedEnd(i + 1)
+    @tailrec def fields(i: Int): Boolean = {
+      val end = if (i < n && at(i) == '"') quotedEnd(i + 1) else unquotedEnd(i)
+      if (end == n) true
+      else if (end < 0 || at(end) != delim) false
+      else fields(end + 1)
+    }
+    // no \r before n, and some byte above ' ' (String.trim's whitespace)
+    @tailrec def plain(i: Int, blank: Boolean): Boolean =
+      if (i >= n) !blank
+      else at(i) != '\r' && plain(i + 1, blank && (at(i) & 0xff) <= ' ')
+    val bom = n >= 3 && at(0) == 0xEF.toByte && at(1) == 0xBB.toByte && at(2) == 0xBF.toByte
+    !bom && plain(0, blank = true) && fields(0)
+  }
+
+  /** A CRLF file must end in its line end: univocity keeps the \r of an
+    * unterminated last line. Compressed bytes do not tell, so no. */
+  private def endsWithNewline(file: String, conf: org.apache.hadoop.conf.Configuration,
+                              codecs: CompressionCodecFactory): Boolean = {
+    val p = new Path(new java.net.URI(file))
+    val fs = p.getFileSystem(conf)
+    val len = fs.getFileStatus(p).getLen
+    codecs.getCodec(p) == null && len > 0 && {
+      val in = fs.open(p)
+      try { in.seek(len - 1); in.read() == '\n' } finally in.close()
     }
   }
 

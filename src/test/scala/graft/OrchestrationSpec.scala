@@ -219,6 +219,28 @@ class OrchestrationSpec extends SparkTestBase {
     }
   }
 
+  test("MERGE_STRATEGY KEEP_LATEST: a first load keeps the latest row per key") {
+    import spark.implicits._
+    val work = tmpDir("merge_first")
+    // key 1 arrives three times in the first batch; no destination yet
+    Seq((1L, 1L, "a"), (1L, 3L, "a3"), (2L, 1L, "b"), (1L, 2L, "a2"))
+      .toDF("k", "ver", "v").write.parquet(s"$work/batch1")
+    val r = JobRunner.run(spark, graft.model.JobConfig.fromJson(
+      s"""{"jobId":"kl-first","steps":["MERGE_STRATEGY"],
+         |"source":{"type":"PARQUET","connectionDetails":{"path":"$work/batch1"}},
+         |"destination":{"type":"PARQUET","connectionDetails":{"path":"$work/dest"}},
+         |"mappings":[
+         |  {"sourceFieldName":"k","destinationFieldName":"k","destFieldType":"LONG"},
+         |  {"sourceFieldName":"ver","destinationFieldName":"ver","destFieldType":"LONG"},
+         |  {"sourceFieldName":"v","destinationFieldName":"v","destFieldType":"STRING"}],
+         |"transformation":{"type":"NONE","parameters":{
+         |  "mergeStrategy":"KEEP_LATEST","mergeKeys":"k","versionColumn":"ver"}}}""".stripMargin))
+    assert(r.status == JobRunner.Completed && r.recordsWritten == 2, r.message)
+    val got = spark.read.parquet(s"$work/dest")
+      .collect().map(r => r.getAs[Long]("k") -> (r.getAs[Long]("ver"), r.getAs[String]("v"))).toMap
+    assert(got == Map(1L -> (3L, "a3"), 2L -> (1L, "b")))
+  }
+
   test("MANIFEST_DESTINATION step writes the zone-map beside the data it describes") {
     import spark.implicits._
     val work = tmpDir("manifest_step")
