@@ -3672,7 +3672,7 @@ object AnalyticsQueries {
         val (src, work) = stageTwoFileFeed(s, dir, "graft_stream_fanout_")
         val pq = s"$work/pq"
         val js = s"$work/js"
-        val q = graft.streaming.EventStreams
+        graft.streaming.EventStreams.runAvailableNow(graft.streaming.EventStreams
           .readEvents(s, src, maxFilesPerTrigger = Some(1))
           .select(col("event_id"), col("event_type"), col("user_id"))
           .writeStream
@@ -3683,10 +3683,7 @@ object AnalyticsQueries {
             df.unpersist()
             ()
           }
-          .option("checkpointLocation", s"$work/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("checkpointLocation", s"$work/ckpt"))
         val p = s.read.parquet(pq)
         val j = s.read.schema("event_id LONG, event_type STRING, user_id LONG")
           .json(js)

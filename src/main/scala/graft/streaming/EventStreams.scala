@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /**
@@ -247,12 +247,64 @@ object EventStreams {
       }
   }
 
+  /** Start an already-configured streaming writer under
+    * `Trigger.AvailableNow`: process everything the source holds at
+    * start, then stop. The one place a graft stream picks its
+    * trigger; [[jdbcLoadStream]] hands the started query back, every
+    * other caller goes through [[runAvailableNow]]. */
+  private def startAvailableNow[T](w: DataStreamWriter[T]): StreamingQuery =
+    w.trigger(Trigger.AvailableNow()).start()
+
+  /** [[startAvailableNow]], then block until the run finishes — the
+    * runner behind every operator here that reads its sink back. A
+    * failed micro-batch surfaces as the `StreamingQueryException`
+    * `awaitTermination` throws. */
+  private[graft] def runAvailableNow[T](w: DataStreamWriter[T]): Unit =
+    startAvailableNow(w).awaitTermination()
+
   /** The per-batch partition directory of the exactly-once append
-    * protocol shared by [[nearDupStream]] and [[dupSpanStream]]:
-    * every micro-batch writes each of its outputs to its OWN
-    * `batch=<batchId>` partition with OVERWRITE mode, so a replayed
-    * batch replaces its own files instead of duplicating them. */
-  private def batchPart(dir: String, batchId: Long) = s"$dir/batch=$batchId"
+    * protocol ([[runExactlyOnce]]): every micro-batch writes each of
+    * its outputs to its OWN `<part>=<batchId>` partition with
+    * OVERWRITE mode, so a replayed batch replaces its own files
+    * instead of duplicating them. `part` is `batch` everywhere except
+    * the operators whose output carries the caller's columns. */
+  private def batchPart(dir: String, batchId: Long, part: String = "batch") =
+    s"$dir/$part=$batchId"
+
+  /**
+   * The per-batch exactly-once append protocol on top of
+   * [[runAvailableNow]], shared by every foreachBatch operator that
+   * appends per-batch partitions. Per micro-batch: drop marker-less
+   * partials of `outDir` and `stateDirs` ([[dropPartialBatchDirs]]),
+   * skip the batch whole when every directory already holds this
+   * batch id's `_SUCCESS` marker, else run `write(batch, batchId)`,
+   * which writes each output to its own [[batchPart]] with OVERWRITE.
+   * A foreachBatch retry at any crash point therefore replaces only
+   * its own output and never repeats a committed batch's side
+   * effects. Returns `outDir`'s committed rows with the bookkeeping
+   * `part` column dropped.
+   *
+   * `part` is `batch` by default; operators whose output carries the
+   * caller's columns use `enrich_batch`, since one of those columns
+   * could itself be named `batch`.
+   */
+  private def runExactlyOnce(spark: SparkSession, stream: DataFrame, checkpoint: String,
+                             outDir: String, stateDirs: Seq[String] = Nil,
+                             part: String = "batch")
+                            (write: (DataFrame, Long) => Unit): DataFrame = {
+    val dirs = outDir +: stateDirs
+    runAvailableNow(stream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val conf = batch.sparkSession.sparkContext.hadoopConfiguration
+        dropPartialBatchDirs(conf, dirs, part)
+        val committed = dirs.forall(d => fsOf(conf, d).exists(
+          new org.apache.hadoop.fs.Path(batchPart(d, batchId, part), "_SUCCESS")))
+        if (!committed) write(batch, batchId)
+      })
+    spark.read.parquet(outDir).drop(part)
+  }
 
   /** The FileSystem of THIS directory — every protocol helper
     * resolves per path (out and state dirs may live on DIFFERENT
@@ -261,10 +313,10 @@ object EventStreams {
   private def fsOf(conf: org.apache.hadoop.conf.Configuration, dir: String) =
     new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
 
-  /** Replay repair for the `batch=<id>` append protocol: first
+  /** Replay repair for the `<part>=<id>` append protocol: first
     * resolve any crashed COMPACTION ([[repairCompaction]] — roll it
     * forward or back so no batch partition is half-moved), then drop
-    * any batch partition without a `_SUCCESS` marker — the partial
+    * any `part` partition without a `_SUCCESS` marker — the partial
     * output of a write that crashed mid-flight (parquet's committer
     * writes the marker last, so marker-less dirs are never
     * complete). Runs before ANY read of the directories;
@@ -278,7 +330,7 @@ object EventStreams {
     * write would leave a mixed layout partition discovery cannot
     * read. */
   private def dropPartialBatchDirs(conf: org.apache.hadoop.conf.Configuration,
-                                   dirs: Seq[String]): Unit =
+                                   dirs: Seq[String], part: String = "batch"): Unit =
     dirs.foreach { dir =>
       val fs = fsOf(conf, dir)
       repairCompaction(fs, dir)
@@ -297,7 +349,7 @@ object EventStreams {
             "_SUCCESS included), and remove the root files; the accumulated state then " +
             "serves as the first committed batch")
         children.foreach { st =>
-          if (st.getPath.getName.startsWith("batch=") &&
+          if (st.getPath.getName.startsWith(s"$part=") &&
               !fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
             fs.delete(st.getPath, true)
         }
@@ -568,7 +620,7 @@ object EventStreams {
    * Exactly-once state on at-least-once delivery: each batch writes
    * its pairs, docs, and sketch rows to its own `batch=<batchId>`
    * partition of the three directories with OVERWRITE mode (the
-   * `enrichRefreshedDimStream` replay protocol), a batch whose three
+   * [[runExactlyOnce]] replay protocol), a batch whose three
    * `_SUCCESS` markers all exist is skipped whole, and every batch
    * first drops marker-less partials ([[dropPartialBatchDirs]]) and
    * reads prior state partition-pruned to `batch < batchId` — so a
@@ -592,25 +644,11 @@ object EventStreams {
                     num: Int = 7, den: Int = 10): DataFrame = {
     val docsDir = s"$stateDir/docs"
     val sketchDir = s"$stateDir/sketch"
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        val dirs = Seq(outDir, docsDir, sketchDir)
-        dropPartialBatchDirs(conf, dirs)
-        val committed = dirs.forall(d => fsOf(conf, d).exists(
-          new org.apache.hadoop.fs.Path(batchPart(d, batchId), "_SUCCESS")))
-        if (!committed)
-          writeNearDupBatch(s, conf, batch.toDF(), batchId, outDir, docsDir,
-            sketchDir, shingleN, k, bands, num, den)
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
+    runExactlyOnce(spark, stream, checkpoint, outDir, Seq(docsDir, sketchDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      writeNearDupBatch(s, s.sparkContext.hadoopConfiguration, batch, batchId,
+        outDir, docsDir, sketchDir, shingleN, k, bands, num, den)
+    }
   }
 
   /** The compute-and-write kernel ONE near-dedup ingest shares between
@@ -627,51 +665,54 @@ object EventStreams {
                                 shingleN: Int, k: Int, bands: Int,
                                 num: Int, den: Int): Unit = {
     val b = batch.select("doc_id", "text").localCheckpoint()
-    // ONE shingle spine and ONE band-row frame per micro-batch,
-    // shared by all three consumers (internal-pair join, cross-batch
-    // sketch probe, the sketch write — bandRows IS signatureBandRows'
-    // output, bit-identically): before this the batch's shingle
-    // kernel ran up to six times and the minhash banding three times
-    // per ingest (guide §1.2/§2.3 — don't compute things twice;
-    // measured: the 3-job ingest gate spent 3.4 s in
-    // minhashNearDups alone at sf0.1).
-    val spine = graft.operators.Dedup
-      .shingleSpine(b, "doc_id", "text", shingleN).localCheckpoint()
-    val bandRows = graft.operators.Dedup
-      .bandRowsOfSpine(spine, "doc_id", k, bands).localCheckpoint()
-    val internal = graft.operators.Dedup.verifyJaccard(
-      graft.operators.Dedup.candidatePairsFrom(bandRows, "doc_id"),
-      spine, "doc_id", num, den)
-    val out =
-      if (hasCommittedBatchBefore(conf, sketchDir, batchId)) {
-        val cross = graft.operators.Dedup.incrementalNearDupsFromSketchSpine(
-            stateBefore(s, sketchDir, batchId),
-            stateBefore(s, docsDir, batchId),
-            bandRows, spine, "doc_id", "text", shingleN, num, den)
-          // one-shot orientation: doc_a < doc_b with (na, nb)
-          // following the id order, not the corpus/fresh roles
-          .select(
-            least(col("corpus_id"), col("fresh_id")).as("doc_a"),
-            greatest(col("corpus_id"), col("fresh_id")).as("doc_b"),
-            col("n_common"),
-            when(col("corpus_id") < col("fresh_id"), col("na"))
-              .otherwise(col("nb")).as("na"),
-            when(col("corpus_id") < col("fresh_id"), col("nb"))
-              .otherwise(col("na")).as("nb"))
-        internal.unionByName(cross)
-      } else internal
-    out.write.mode("overwrite").parquet(batchPart(outDir, batchId))
-    b.write.mode("overwrite").parquet(batchPart(docsDir, batchId))
-    bandRows.write.mode("overwrite").parquet(batchPart(sketchDir, batchId))
-    // frees EVERY checkpoint block in the batch's plan — `b`, the
-    // spine and band frames above, and the candidate frame
-    // incrementalNearDupsFromSketchSpine pins internally (ADVICE r16:
-    // without this a long-running stream accumulates one candidate
-    // checkpoint per micro-batch)
-    graft.operators.Checkpoints.free(out)
-    graft.operators.Checkpoints.free(bandRows)
-    graft.operators.Checkpoints.free(spine)
-    graft.operators.Checkpoints.free(b)
+    // every checkpointed frame of this batch, freed in `finally` —
+    // `b`, the spine and band frames below, and (through `out`'s
+    // plan) the candidate frame incrementalNearDupsFromSketchSpine
+    // pins internally (ADVICE r16: without this a long-running stream
+    // accumulates one candidate checkpoint per micro-batch, and a
+    // failed write would leak its batch's checkpoints on every retry)
+    var pinned = List(b)
+    try {
+      // ONE shingle spine and ONE band-row frame per micro-batch,
+      // shared by all three consumers (internal-pair join, cross-batch
+      // sketch probe, the sketch write — bandRows IS signatureBandRows'
+      // output, bit-identically): before this the batch's shingle
+      // kernel ran up to six times and the minhash banding three times
+      // per ingest (guide §1.2/§2.3 — don't compute things twice;
+      // measured: the 3-job ingest gate spent 3.4 s in
+      // minhashNearDups alone at sf0.1).
+      val spine = graft.operators.Dedup
+        .shingleSpine(b, "doc_id", "text", shingleN).localCheckpoint()
+      pinned ::= spine
+      val bandRows = graft.operators.Dedup
+        .bandRowsOfSpine(spine, "doc_id", k, bands).localCheckpoint()
+      pinned ::= bandRows
+      val internal = graft.operators.Dedup.verifyJaccard(
+        graft.operators.Dedup.candidatePairsFrom(bandRows, "doc_id"),
+        spine, "doc_id", num, den)
+      val out =
+        if (hasCommittedBatchBefore(conf, sketchDir, batchId)) {
+          val cross = graft.operators.Dedup.incrementalNearDupsFromSketchSpine(
+              stateBefore(s, sketchDir, batchId),
+              stateBefore(s, docsDir, batchId),
+              bandRows, spine, "doc_id", "text", shingleN, num, den)
+            // one-shot orientation: doc_a < doc_b with (na, nb)
+            // following the id order, not the corpus/fresh roles
+            .select(
+              least(col("corpus_id"), col("fresh_id")).as("doc_a"),
+              greatest(col("corpus_id"), col("fresh_id")).as("doc_b"),
+              col("n_common"),
+              when(col("corpus_id") < col("fresh_id"), col("na"))
+                .otherwise(col("nb")).as("na"),
+              when(col("corpus_id") < col("fresh_id"), col("nb"))
+                .otherwise(col("na")).as("nb"))
+          internal.unionByName(cross)
+        } else internal
+      pinned ::= out
+      out.write.mode("overwrite").parquet(batchPart(outDir, batchId))
+      b.write.mode("overwrite").parquet(batchPart(docsDir, batchId))
+      bandRows.write.mode("overwrite").parquet(batchPart(sketchDir, batchId))
+    } finally pinned.foreach(graft.operators.Checkpoints.free)
   }
 
   /** The newest committed `batch=<i>` with i < batchId, or None —
@@ -1174,38 +1215,24 @@ object EventStreams {
   def dupSpanStream(spark: SparkSession, stream: DataFrame,
                     outDir: String, stateDir: String, checkpoint: String,
                     k: Int = 3, minTokens: Int = 5): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        val dirs = Seq(outDir, stateDir)
-        dropPartialBatchDirs(conf, dirs)
-        val committed = dirs.forall(d => fsOf(conf, d).exists(
-          new org.apache.hadoop.fs.Path(batchPart(d, batchId), "_SUCCESS")))
-        if (!committed) {
-          val b = batch.select("doc_id", "text").localCheckpoint()
-          val index =
-            if (hasCommittedBatchBefore(conf, stateDir, batchId))
-              stateBefore(s, stateDir, batchId)
-            else s.createDataFrame(
-              s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              StructType(Seq(StructField("gram", StringType),
-                StructField("lo_doc", LongType), StructField("hi_doc", LongType))))
-          graft.operators.Dedup
-            .dupSpansIncremental(index, b, "doc_id", "text", k, minTokens)
-            .write.mode("overwrite").parquet(batchPart(outDir, batchId))
-          graft.operators.Dedup.gramSpanSummary(b, "doc_id", "text", k)
-            .write.mode("overwrite").parquet(batchPart(stateDir, batchId))
-          graft.operators.Checkpoints.free(b)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
+    runExactlyOnce(spark, stream, checkpoint, outDir, Seq(stateDir)) { (batch, batchId) =>
+      val s = batch.sparkSession
+      val b = batch.select("doc_id", "text").localCheckpoint()
+      try {
+        val index =
+          if (hasCommittedBatchBefore(s.sparkContext.hadoopConfiguration, stateDir, batchId))
+            stateBefore(s, stateDir, batchId)
+          else s.createDataFrame(
+            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType(Seq(StructField("gram", StringType),
+              StructField("lo_doc", LongType), StructField("hi_doc", LongType))))
+        graft.operators.Dedup
+          .dupSpansIncremental(index, b, "doc_id", "text", k, minTokens)
+          .write.mode("overwrite").parquet(batchPart(outDir, batchId))
+        graft.operators.Dedup.gramSpanSummary(b, "doc_id", "text", k)
+          .write.mode("overwrite").parquet(batchPart(stateDir, batchId))
+      } finally graft.operators.Checkpoints.free(b)
+    }
   }
 
   /**
@@ -1232,40 +1259,25 @@ object EventStreams {
    */
   def fertilityDriftStream(spark: SparkSession, stream: DataFrame,
                            merges: Seq[String], refCptPm: Long,
-                           outDir: String, checkpoint: String): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        dropPartialBatchDirs(conf, Seq(outDir))
-        val part = batchPart(outDir, batchId)
-        if (!fsOf(conf, outDir).exists(new org.apache.hadoop.fs.Path(part, "_SUCCESS"))) {
-          batch.select(explode(split(col("text"), " ")).as("w"))
-            .filter(length(col("w")) >= 2)
-            .groupBy("w").agg(count(lit(1)).as("c"))
-            .select(col("w"), col("c"), graft.functions.Bpe.nTokens(
-              graft.functions.Bpe.encodeFramed(col("w"), merges)).as("n_tok"))
-            .agg(sum("c").as("n_words"),
-              sum(col("c") * length(col("w")).cast("long")).as("_chars"),
-              sum(col("c") * col("n_tok")).as("n_tokens"))
-            .select(lit(batchId).as("batch_id"), col("n_words"), col("n_tokens"),
-              expr("(1000 * _chars) div n_tokens").as("cpt_permille"))
-            .withColumn("drift_pm", abs(col("cpt_permille") - lit(refCptPm)))
-            // an EMPTY batch (or one with only sub-2-char words) must
-            // write an empty partition, not one all-NULL phantom row —
-            // the global agg still emits a row over zero input
-            .filter(col("n_tokens").isNotNull)
-            .write.mode("overwrite").parquet(part)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
+                           outDir: String, checkpoint: String): DataFrame =
+    runExactlyOnce(spark, stream, checkpoint, outDir) { (batch, batchId) =>
+      batch.select(explode(split(col("text"), " ")).as("w"))
+        .filter(length(col("w")) >= 2)
+        .groupBy("w").agg(count(lit(1)).as("c"))
+        .select(col("w"), col("c"), graft.functions.Bpe.nTokens(
+          graft.functions.Bpe.encodeFramed(col("w"), merges)).as("n_tok"))
+        .agg(sum("c").as("n_words"),
+          sum(col("c") * length(col("w")).cast("long")).as("_chars"),
+          sum(col("c") * col("n_tok")).as("n_tokens"))
+        .select(lit(batchId).as("batch_id"), col("n_words"), col("n_tokens"),
+          expr("(1000 * _chars) div n_tokens").as("cpt_permille"))
+        .withColumn("drift_pm", abs(col("cpt_permille") - lit(refCptPm)))
+        // an EMPTY batch (or one with only sub-2-char words) must
+        // write an empty partition, not one all-NULL phantom row —
+        // the global agg still emits a row over zero input
+        .filter(col("n_tokens").isNotNull)
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId))
+    }
 
   /**
    * STREAMING FEED-FRESHNESS MONITOR: per micro-batch, each stream's
@@ -1279,30 +1291,15 @@ object EventStreams {
    * batch replaces its own rows instead of duplicating them).
    */
   def freshnessStream(spark: SparkSession, stream: DataFrame,
-                      outDir: String, checkpoint: String): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        dropPartialBatchDirs(conf, Seq(outDir))
-        val part = batchPart(outDir, batchId)
-        if (!fsOf(conf, outDir).exists(new org.apache.hadoop.fs.Path(part, "_SUCCESS"))) {
-          val perType = batch.groupBy("event_type")
-            .agg(max(unix_micros(col("ts"))).as("last_us"))
-          perType.crossJoin(broadcast(perType.agg(max("last_us").as("g_us"))))
-            .select(lit(batchId).as("batch_id"), col("event_type"),
-              expr("(g_us - last_us) div 60000000").as("lag_minutes"))
-            .write.mode("overwrite").parquet(part)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
-  }
+                      outDir: String, checkpoint: String): DataFrame =
+    runExactlyOnce(spark, stream, checkpoint, outDir) { (batch, batchId) =>
+      val perType = batch.groupBy("event_type")
+        .agg(max(unix_micros(col("ts"))).as("last_us"))
+      perType.crossJoin(broadcast(perType.agg(max("last_us").as("g_us"))))
+        .select(lit(batchId).as("batch_id"), col("event_type"),
+          expr("(g_us - last_us) div 60000000").as("lag_minutes"))
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId))
+    }
 
   final case class GapRow(event_type: String, gap_hour_us: Long)
 
@@ -1849,23 +1846,21 @@ object EventStreams {
    * reference's batch-loader identity extended to streams: each
    * micro-batch rides the same W1 batch-insert writer
    * ([[graft.sinks.Writers.write]] — `batchsize`, dialect DDL
-   * override), appended per trigger. Semantics are at-least-once on
+   * override), appended per micro-batch. Semantics are at-least-once on
    * task/batch retry, matching every non-transactional sink here and
    * in the reference; idempotence belongs to the destination design
    * (a keyed MERGE target or dedup-on-read view). The caller's
    * `dest.saveMode` is intentionally overridden: "overwrite" per
-   * micro-batch would keep only the LAST batch.
+   * micro-batch would keep only the LAST batch. Returns the query
+   * started under `Trigger.AvailableNow`; the caller awaits it.
    */
   def jdbcLoadStream(stream: DataFrame,
-                     dest: graft.model.DestinationConfig,
-                     trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
+                     dest: graft.model.DestinationConfig): StreamingQuery =
+    startAvailableNow(stream.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         graft.sinks.Writers.write(batch, dest.copy(saveMode = "append"))
-      }
-      .trigger(trigger)
-      .start()
+      })
 
   /** Bucket assignment of [[upsertStream]]'s destination layout —
     * exposed so out-of-band seeds/compactions of the same destination
@@ -1925,17 +1920,26 @@ object EventStreams {
    * grows, instead of O(touched x destination/N) under a fixed N.
    * Each doubling rewrites the destination once — O(log growth)
    * rewrites total, the extendible-hashing amortization.
+   *
+   * `trigger` must be `Trigger.AvailableNow()` (the default): the
+   * call waits for the run to finish before it reads the destination
+   * back, which a trigger that never stops on its own would turn into
+   * a hang.
    */
   def upsertStream(spark: SparkSession, stream: DataFrame, destDir: String,
                    keys: Seq[String], versionCol: String, checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow(),
                    nBuckets: Int = 32,
                    targetBucketBytes: Long = 0L,
-                   bucketCols: Seq[String] = Nil): DataFrame =
-    bucketedMergeStream(spark, stream, destDir, keys, checkpoint, trigger,
+                   bucketCols: Seq[String] = Nil): DataFrame = {
+    require(trigger == Trigger.AvailableNow(),
+      s"upsertStream runs under Trigger.AvailableNow only (it waits for the run " +
+        s"to finish, then reads the destination back), got $trigger")
+    bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
       nBuckets, (existing, batch) =>
         graft.operators.Upsert.keepLatest(existing, batch, keys, versionCol),
       targetBucketBytes, bucketCols)
+  }
 
   /** `<dest>__old` — the aside name of the whole-directory
     * rename-aside swap protocol shared by [[bucketedMergeStream]]
@@ -1997,7 +2001,7 @@ object EventStreams {
    */
   private def bucketedMergeStream(spark: SparkSession, stream: DataFrame,
                                   destDir: String, keys: Seq[String],
-                                  checkpoint: String, trigger: Trigger,
+                                  checkpoint: String,
                                   nBuckets: Int,
                                   merge: (DataFrame, DataFrame) => DataFrame,
                                   targetBucketBytes: Long = 0L,
@@ -2014,7 +2018,7 @@ object EventStreams {
     require(layoutCols.forall(keys.contains),
       s"bucketCols must be a subset of keys: $layoutCols vs $keys")
     import org.apache.hadoop.fs.Path
-    val q: StreamingQuery = stream.writeStream
+    runAvailableNow(stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -2143,10 +2147,7 @@ object EventStreams {
           }
           ()
         }
-      }
-      .trigger(trigger)
-      .start()
-    q.awaitTermination()
+      })
     // an empty feed commits no batch and never creates the
     // destination — the contract (return destination state) then
     // means an EMPTY frame, not a PATH_NOT_FOUND crash
@@ -2174,10 +2175,9 @@ object EventStreams {
   def cdcStream(spark: SparkSession, stream: DataFrame, destDir: String,
                 keys: Seq[String], versionCol: String, opCol: String,
                 checkpoint: String,
-                trigger: Trigger = Trigger.AvailableNow(),
                 nBuckets: Int = 32): DataFrame =
     upsertStream(spark, stream, destDir, keys, versionCol, checkpoint,
-        trigger, nBuckets)
+        nBuckets = nBuckets)
       .filter(col(opCol) =!= "D").drop(opCol)
 
   /**
@@ -2203,12 +2203,11 @@ object EventStreams {
   def topKStream(spark: SparkSession, stream: DataFrame, destDir: String,
                  keys: Seq[String], orderCol: String, tieCol: String, k: Int,
                  checkpoint: String,
-                 trigger: Trigger = Trigger.AvailableNow(),
                  nBuckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(desc(orderCol), desc(tieCol))
-    bucketedMergeStream(spark, stream, destDir, keys, checkpoint, trigger,
+    bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
       nBuckets, (existing, batch) =>
         existing.unionByName(batch)
           // collapse replayed rows BEFORE ranking: on an at-least-once
@@ -2222,6 +2221,28 @@ object EventStreams {
           .withColumn("_rn", row_number().over(w))
           .filter(col("_rn") <= k).drop("_rn"))
   }
+
+  /**
+   * Streaming CDC apply WITH DELETES into a relational destination —
+   * the JDBC twin of [[cdcStream]]: the feed carries a version column
+   * and an op column ('D' = tombstone). Tombstones PERSIST AS ROWS in
+   * the target (the MERGE's version guard updates them like any other
+   * record) and are filtered only on read-back — a server-side DELETE
+   * clause would let a late, OLDER-version upsert re-insert a deleted
+   * key on the next batch (NOT MATCHED → INSERT), the classic CDC-sink
+   * bug. A maintenance job may hard-delete tombstone rows older than
+   * the feed's replay horizon; until then they are the correctness
+   * state. Same one-MERGE-per-batch, replay-idempotent discipline as
+   * [[jdbcUpsertStream]].
+   */
+  def jdbcCdcStream(spark: SparkSession, stream: DataFrame,
+                    url: String, table: String, stagingTable: String,
+                    keys: Seq[String], versionCol: String, opCol: String,
+                    ddl: String, checkpoint: String,
+                    stagingColumnTypes: Option[String] = None): DataFrame =
+    jdbcUpsertStream(spark, stream, url, table, stagingTable, keys,
+        versionCol, ddl, checkpoint, stagingColumnTypes)
+      .filter(col(opCol) =!= "D").drop(opCol)
 
   /**
    * Streaming keyed upsert into a RELATIONAL destination — the
@@ -2247,35 +2268,11 @@ object EventStreams {
    * states VARCHAR widths). Identifiers are double-quoted to match
    * the Spark JDBC writer's quoted (case-preserving) staging columns.
    */
-  /**
-   * Streaming CDC apply WITH DELETES into a relational destination —
-   * the JDBC twin of [[cdcStream]]: the feed carries a version column
-   * and an op column ('D' = tombstone). Tombstones PERSIST AS ROWS in
-   * the target (the MERGE's version guard updates them like any other
-   * record) and are filtered only on read-back — a server-side DELETE
-   * clause would let a late, OLDER-version upsert re-insert a deleted
-   * key on the next batch (NOT MATCHED → INSERT), the classic CDC-sink
-   * bug. A maintenance job may hard-delete tombstone rows older than
-   * the feed's replay horizon; until then they are the correctness
-   * state. Same one-MERGE-per-batch, replay-idempotent discipline as
-   * [[jdbcUpsertStream]].
-   */
-  def jdbcCdcStream(spark: SparkSession, stream: DataFrame,
-                    url: String, table: String, stagingTable: String,
-                    keys: Seq[String], versionCol: String, opCol: String,
-                    ddl: String, checkpoint: String,
-                    stagingColumnTypes: Option[String] = None,
-                    trigger: Trigger = Trigger.AvailableNow()): DataFrame =
-    jdbcUpsertStream(spark, stream, url, table, stagingTable, keys,
-        versionCol, ddl, checkpoint, stagingColumnTypes, trigger)
-      .filter(col(opCol) =!= "D").drop(opCol)
-
   def jdbcUpsertStream(spark: SparkSession, stream: DataFrame,
                        url: String, table: String, stagingTable: String,
                        keys: Seq[String], versionCol: String, ddl: String,
                        checkpoint: String,
-                       stagingColumnTypes: Option[String] = None,
-                       trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
+                       stagingColumnTypes: Option[String] = None): DataFrame = {
     require(keys.nonEmpty, "jdbcUpsertStream needs at least one merge key")
     val cols = stream.schema.fieldNames.toSeq
     val nonKeys = cols.filterNot(c => keys.contains(c))
@@ -2302,7 +2299,7 @@ object EventStreams {
       catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
       finally st.close()
     } finally conn0.close()
-    val query: StreamingQuery = stream.writeStream
+    runAvailableNow(stream.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
@@ -2322,11 +2319,84 @@ object EventStreams {
           try st.executeUpdate(mergeSql) finally st.close()
         } finally conn.close()
         () // foreachBatch wants Unit, not executeUpdate's row count
-      }
-      .trigger(trigger)
-      .start()
-    query.awaitTermination()
+      })
     spark.read.jdbc(url, table, props)
+  }
+
+  /**
+   * Streaming SKETCH maintenance — the shape a 100 TB telemetry
+   * pipeline actually runs: per-group theta sketches maintained
+   * INCREMENTALLY per micro-batch, never recomputed from facts. Each
+   * batch builds its own |groups| sketch binaries (map-side partial
+   * aggregation over just the batch) and theta_union_agg-merges them
+   * into the persisted state table at `destDir` — so per-batch work
+   * is O(batch + groups·2^lgK bytes) and the state stays ~26 KB per
+   * group FLAT regardless of stream history (the SCALE theta
+   * evidence). Returns the final state: (groupCols..., sk binary);
+   * feed `theta_sketch_estimate(sk)` for cardinalities or keep
+   * merging the binaries upward (day → month) batch-side.
+   *
+   * Correctness across batches: theta union is an idempotent,
+   * commutative, associative semilattice over the retained-hash sets
+   * (re-merging a replayed batch's sketch changes nothing — the
+   * min-k hash set already contains it), so the merged state equals
+   * the one-shot batch sketch over the whole feed and at-least-once
+   * replays converge. The state swap is a whole-directory
+   * rename-aside (state is groups-sized — tiny), repaired on the
+   * next batch exactly like the bucketed sink's protocol.
+   */
+  def sketchRollupStream(spark: SparkSession, stream: DataFrame, destDir: String,
+                         groupCols: Seq[String], valueCol: String,
+                         checkpoint: String,
+                         lgK: Int = 12,
+                         buildAgg: Option[String] = None,
+                         mergeAgg: Option[String] = None): DataFrame = {
+    require(groupCols.nonEmpty, "sketchRollupStream needs at least one group column")
+    // default: theta distinct-count sketches; any mergeable-sketch
+    // pair works — e.g. KLL quantiles via
+    //   buildAgg = kll_sketch_agg_double(<value>, 200)
+    //   mergeAgg = kll_merge_agg_double(sk)
+    // (KLL merge is associative/commutative; re-merging a replayed
+    // batch's sketch is NOT a strict no-op like theta's min-k set,
+    // but the checkpoint replays the same batch boundary, so the
+    // recovered state still converges to a valid whole-feed sketch.)
+    val build = buildAgg.getOrElse(s"theta_sketch_agg($valueCol, $lgK)")
+    val mergeA = mergeAgg.getOrElse(s"theta_union_agg(sk, $lgK)")
+    import org.apache.hadoop.fs.Path
+    runAvailableNow(stream.writeStream
+      .outputMode(OutputMode.Append())
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        val s = batch.sparkSession
+        val dest = new Path(destDir)
+        val fs = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
+        // repair a crashed whole-dir swap before any read — the ONE
+        // shared protocol implementation (repairWholeDirSwap)
+        repairWholeDirSwap(fs, dest, "sketch rollup")
+        val g = groupCols.map(col)
+        val batchSk = batch.toDF().groupBy(g: _*)
+          .agg(expr(build).as("sk"))
+        val merged =
+          if (fs.exists(dest))
+            s.read.parquet(destDir).unionByName(batchSk)
+              .groupBy(g: _*).agg(expr(mergeA).as("sk"))
+          else batchSk
+        val staging = new Path(dest.getParent, dest.getName + s"_stage_$batchId")
+        fs.delete(staging, true) // a replayed batch's leftover
+        // the write MATERIALIZES merged while dest is still live; the
+        // swap below only moves directories
+        merged.coalesce(1).write.parquet(staging.toString)
+        swapWholeDir(fs, staging, dest, "sketch rollup")
+        ()
+      })
+    val destPath = new Path(destDir)
+    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(destPath)) spark.read.parquet(destDir)
+    else {
+      val fields = groupCols.map(c => stream.schema(c)) :+ StructField("sk", BinaryType)
+      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
+        StructType(fields))
+    }
   }
 
   /**
@@ -2358,86 +2428,6 @@ object EventStreams {
    * would observe the temporary value — callers running queries in
    * parallel should pass None (or plan on a separate session).
    */
-  /**
-   * Streaming SKETCH maintenance — the shape a 100 TB telemetry
-   * pipeline actually runs: per-group theta sketches maintained
-   * INCREMENTALLY per micro-batch, never recomputed from facts. Each
-   * batch builds its own |groups| sketch binaries (map-side partial
-   * aggregation over just the batch) and theta_union_agg-merges them
-   * into the persisted state table at `destDir` — so per-batch work
-   * is O(batch + groups·2^lgK bytes) and the state stays ~26 KB per
-   * group FLAT regardless of stream history (the SCALE theta
-   * evidence). Returns the final state: (groupCols..., sk binary);
-   * feed `theta_sketch_estimate(sk)` for cardinalities or keep
-   * merging the binaries upward (day → month) batch-side.
-   *
-   * Correctness across batches: theta union is an idempotent,
-   * commutative, associative semilattice over the retained-hash sets
-   * (re-merging a replayed batch's sketch changes nothing — the
-   * min-k hash set already contains it), so the merged state equals
-   * the one-shot batch sketch over the whole feed and at-least-once
-   * replays converge. The state swap is a whole-directory
-   * rename-aside (state is groups-sized — tiny), repaired on the
-   * next batch exactly like the bucketed sink's protocol.
-   */
-  def sketchRollupStream(spark: SparkSession, stream: DataFrame, destDir: String,
-                         groupCols: Seq[String], valueCol: String,
-                         checkpoint: String,
-                         trigger: Trigger = Trigger.AvailableNow(),
-                         lgK: Int = 12,
-                         buildAgg: Option[String] = None,
-                         mergeAgg: Option[String] = None): DataFrame = {
-    require(groupCols.nonEmpty, "sketchRollupStream needs at least one group column")
-    // default: theta distinct-count sketches; any mergeable-sketch
-    // pair works — e.g. KLL quantiles via
-    //   buildAgg = kll_sketch_agg_double(<value>, 200)
-    //   mergeAgg = kll_merge_agg_double(sk)
-    // (KLL merge is associative/commutative; re-merging a replayed
-    // batch's sketch is NOT a strict no-op like theta's min-k set,
-    // but the checkpoint replays the same batch boundary, so the
-    // recovered state still converges to a valid whole-feed sketch.)
-    val build = buildAgg.getOrElse(s"theta_sketch_agg($valueCol, $lgK)")
-    val mergeA = mergeAgg.getOrElse(s"theta_union_agg(sk, $lgK)")
-    import org.apache.hadoop.fs.Path
-    val q: StreamingQuery = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val dest = new Path(destDir)
-        val fs = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // repair a crashed whole-dir swap before any read — the ONE
-        // shared protocol implementation (repairWholeDirSwap)
-        repairWholeDirSwap(fs, dest, "sketch rollup")
-        val g = groupCols.map(col)
-        val batchSk = batch.toDF().groupBy(g: _*)
-          .agg(expr(build).as("sk"))
-        val merged =
-          if (fs.exists(dest))
-            s.read.parquet(destDir).unionByName(batchSk)
-              .groupBy(g: _*).agg(expr(mergeA).as("sk"))
-          else batchSk
-        val staging = new Path(dest.getParent, dest.getName + s"_stage_$batchId")
-        fs.delete(staging, true) // a replayed batch's leftover
-        // the write MATERIALIZES merged while dest is still live; the
-        // swap below only moves directories
-        merged.coalesce(1).write.parquet(staging.toString)
-        swapWholeDir(fs, staging, dest, "sketch rollup")
-        ()
-      }
-      .trigger(trigger)
-      .start()
-    q.awaitTermination()
-    val destPath = new Path(destDir)
-    val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(destPath)) spark.read.parquet(destDir)
-    else {
-      val fields = groupCols.map(c => stream.schema(c)) :+ StructField("sk", BinaryType)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(fields))
-    }
-  }
-
   def runToParquet(spark: SparkSession, streamed: DataFrame, workDir: String,
                    statePartitions: Option[Int] = None): DataFrame =
     statePartitions match {
@@ -2452,14 +2442,11 @@ object EventStreams {
   private def runToParquetInner(spark: SparkSession, streamed: DataFrame,
                                 workDir: String): DataFrame = {
     val out = s"$workDir/out"
-    val q: StreamingQuery = streamed.writeStream
+    runAvailableNow(streamed.writeStream
       .format("parquet")
       .option("path", out)
       .option("checkpointLocation", s"$workDir/ckpt")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(OutputMode.Append()))
     // explicit schema: when NO window closed (corpus shorter than
     // watermark + window), the sink directory holds only the metadata
     // log and a schema-inferring read would throw instead of
@@ -2471,13 +2458,10 @@ object EventStreams {
     * and return the final result from the in-memory sink. */
   def runToMemory(spark: SparkSession, streamed: DataFrame, queryName: String,
                   outputMode: OutputMode = OutputMode.Complete()): DataFrame = {
-    val q: StreamingQuery = streamed.writeStream
+    runAvailableNow(streamed.writeStream
       .format("memory")
       .queryName(queryName)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      .outputMode(outputMode))
     spark.table(queryName)
   }
 
@@ -2502,51 +2486,36 @@ object EventStreams {
    * named error instead of letting a fact-sized dir OOM the driver
    * mid-stream (the etl_media_binaryfile maxBytes pattern).
    *
-   * Idempotent replay: each batch writes to its own
-   * `enrich_batch=<batchId>` partition directory with OVERWRITE
-   * mode, and a batch whose `_SUCCESS` marker already exists is
-   * skipped entirely (no rewrite, no `afterBatch`). A foreachBatch
-   * retry after the write but before checkpoint commit therefore
-   * replaces its own output in place instead of duplicating it,
-   * and never re-enriches against a dimension version published
-   * AFTER its first successful run — exactly-once output on top of
-   * the sink's at-least-once delivery.
+   * Idempotent replay ([[runExactlyOnce]]): each batch writes to its
+   * own `enrich_batch=<batchId>` partition directory with OVERWRITE
+   * mode, a marker-less partial from a crashed write is dropped first,
+   * and a batch whose `_SUCCESS` marker already exists is skipped
+   * entirely (no rewrite, no `afterBatch`). A foreachBatch retry
+   * after the write but before checkpoint commit therefore replaces
+   * its own output in place instead of duplicating it, and never
+   * re-enriches against a dimension version published AFTER its
+   * first successful run — exactly-once output on top of the sink's
+   * at-least-once delivery.
    */
   def enrichRefreshedDimStream(spark: SparkSession, stream: DataFrame,
                                dimDir: String, outDir: String,
                                checkpoint: String, key: String,
-                               trigger: Trigger = Trigger.AvailableNow(),
                                afterBatch: Long => Unit = _ => (),
-                               maxDimBytes: Long = 512L << 20): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val ss = batch.sparkSession
-        val hconf = ss.sparkContext.hadoopConfiguration
-        val partDir = new org.apache.hadoop.fs.Path(s"$outDir/enrich_batch=$batchId")
-        val fs = partDir.getFileSystem(hconf)
-        val committed = fs.exists(new org.apache.hadoop.fs.Path(partDir, "_SUCCESS"))
-        if (!committed) {
-          val dimPath = new org.apache.hadoop.fs.Path(dimDir)
-          val dimBytes = dimPath.getFileSystem(hconf).getContentSummary(dimPath).getLength
-          require(dimBytes <= maxDimBytes,
-            s"enrichRefreshedDimStream: dimension at $dimDir is $dimBytes bytes " +
-              s"(limit $maxDimBytes) — the static side is broadcast every micro-batch " +
-              "and must stay dimension-sized; repartition-join a fact-sized side instead")
-          val dim = broadcast(ss.read.parquet(dimDir))
-          batch.toDF().join(dim, Seq(key), "left")
-            .write.mode("overwrite").parquet(partDir.toString)
-          afterBatch(batchId)
-        }
-      }
-      .start()
-    q.awaitTermination()
-    // partition discovery adds the enrich_batch bookkeeping column;
-    // drop it so the operator's output schema is the join's
-    spark.read.parquet(outDir).drop("enrich_batch")
-  }
+                               maxDimBytes: Long = 512L << 20): DataFrame =
+    runExactlyOnce(spark, stream, checkpoint, outDir, part = "enrich_batch") { (batch, batchId) =>
+      val ss = batch.sparkSession
+      val dimPath = new org.apache.hadoop.fs.Path(dimDir)
+      val dimBytes = dimPath.getFileSystem(ss.sparkContext.hadoopConfiguration)
+        .getContentSummary(dimPath).getLength
+      require(dimBytes <= maxDimBytes,
+        s"enrichRefreshedDimStream: dimension at $dimDir is $dimBytes bytes " +
+          s"(limit $maxDimBytes) — the static side is broadcast every micro-batch " +
+          "and must stay dimension-sized; repartition-join a fact-sized side instead")
+      val dim = broadcast(ss.read.parquet(dimDir))
+      batch.join(dim, Seq(key), "left")
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId, "enrich_batch"))
+      afterBatch(batchId)
+    }
 
   /**
    * Streaming ANN index maintenance — the streaming face of
@@ -2555,9 +2524,8 @@ object EventStreams {
    * (`Similarity.assignToCentroids`, one argmin projection per row)
    * and appended to the postings directory. Batches write to their
    * own `enrich_batch=<id>` partition with overwrite and a committed
-   * batch is skipped whole (the `enrichRefreshedDimStream` replay
-   * protocol), so postings are exactly-once however often the sink
-   * retries. Centroids stay FIXED for the stream's lifetime — the
+   * batch is skipped whole (the [[runExactlyOnce]] replay protocol),
+   * so postings are exactly-once however often the sink retries. Centroids stay FIXED for the stream's lifetime — the
    * operator's contract; the rebuild decision (embed_centroid_drift)
    * is a batch-side concern between stream restarts.
    *
@@ -2567,26 +2535,12 @@ object EventStreams {
    */
   def ivfAppendStream(spark: SparkSession, stream: DataFrame,
                       centroids: DataFrame, outDir: String,
-                      checkpoint: String, vecCol: String,
-                      trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val partDir = new org.apache.hadoop.fs.Path(s"$outDir/enrich_batch=$batchId")
-        val fs = partDir.getFileSystem(hconf)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(partDir, "_SUCCESS"))) {
-          graft.operators.Similarity
-            .assignToCentroids(batch.toDF(), centroids, vecCol)
-            .write.mode("overwrite").parquet(partDir.toString)
-        }
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("enrich_batch")
-  }
+                      checkpoint: String, vecCol: String): DataFrame =
+    runExactlyOnce(spark, stream, checkpoint, outDir, part = "enrich_batch") { (batch, batchId) =>
+      graft.operators.Similarity
+        .assignToCentroids(batch, centroids, vecCol)
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId, "enrich_batch"))
+    }
 
   /**
    * Streaming IVF-PQ index maintenance — [[ivfAppendStream]]'s
@@ -2604,31 +2558,18 @@ object EventStreams {
   def ivfPqAppendStream(spark: SparkSession, stream: DataFrame,
                         centroids: DataFrame,
                         codebooks: Array[Array[Array[Double]]],
-                        outDir: String, checkpoint: String, vecCol: String,
-                        trigger: Trigger = Trigger.AvailableNow()): DataFrame = {
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val hconf = batch.sparkSession.sparkContext.hadoopConfiguration
-        val partDir = new org.apache.hadoop.fs.Path(s"$outDir/enrich_batch=$batchId")
-        val fs = partDir.getFileSystem(hconf)
-        if (!fs.exists(new org.apache.hadoop.fs.Path(partDir, "_SUCCESS"))) {
-          val assigned = graft.operators.Similarity
-            .assignToCentroids(batch.toDF(), centroids, vecCol)
-          val withRes = assigned.join(broadcast(centroids), "cell")
-            .withColumn("_res", expr(
-              s"zip_with(cast($vecCol as array<double>), centroid, (x, y) -> x - y)"))
-          graft.operators.Similarity.pqEncode(withRes, "_res", codebooks)
-            .drop("_res", "centroid")
-            .write.mode("overwrite").parquet(partDir.toString)
-        }
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("enrich_batch")
-  }
+                        outDir: String, checkpoint: String,
+                        vecCol: String): DataFrame =
+    runExactlyOnce(spark, stream, checkpoint, outDir, part = "enrich_batch") { (batch, batchId) =>
+      val withRes = graft.operators.Similarity
+        .assignToCentroids(batch, centroids, vecCol)
+        .join(broadcast(centroids), "cell")
+        .withColumn("_res", expr(
+          s"zip_with(cast($vecCol as array<double>), centroid, (x, y) -> x - y)"))
+      graft.operators.Similarity.pqEncode(withRes, "_res", codebooks)
+        .drop("_res", "centroid")
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId, "enrich_batch"))
+    }
 
   /**
    * Per-micro-batch distribution-drift monitor (PSI): each batch's
@@ -2662,46 +2603,32 @@ object EventStreams {
       .crossJoin(broadcast(refRows.agg(sum("r").as("mt"))))
       .join(refRows, Seq("band"), "left")
       .select(col("band"), coalesce(col("r"), lit(0L)).as("r"), col("mt"))
-      .localCheckpoint() // bands rows, reused every batch
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val s = batch.sparkSession
-        val conf = s.sparkContext.hadoopConfiguration
-        dropPartialBatchDirs(conf, Seq(outDir))
-        val part = batchPart(outDir, batchId)
-        if (!fsOf(conf, outDir).exists(new org.apache.hadoop.fs.Path(part, "_SUCCESS"))) {
-          val counts = batch
-            .select(graft.operators.Profile.psiBand("value", bandWidth, bands).as("band"))
-            .groupBy("band").agg(count(lit(1)).as("c"))
-          val g = spine.join(counts, Seq("band"), "left")
-            .select(col("band"), col("r"), col("mt"),
-              coalesce(col("c"), lit(0L)).as("c"))
-            .crossJoin(broadcast(counts.agg(coalesce(sum("c"), lit(0L)).as("nt"))))
-            // era-count products wrap 2^63 past ~1e8 rows per era: factor-cast
-            // doubles into the log, DECIMAL(38,0) for the rational — the
-            // etl_distribution_drift_psi discipline, kept verbatim across the
-            // three PSI surfaces.
-            .withColumn("lq_micro",
-              round(log(((col("c") + 1).cast("double") * (col("mt") + bands)) /
-                ((col("r") + 1).cast("double") * (col("nt") + bands))) * 1000000)
-                .cast("long"))
-          g.agg(max("nt").as("n_events"),
-              sum(expr(
-                s"CAST((CAST(c + 1 AS DECIMAL(38,0)) * (mt + $bands)" +
-                  s" - CAST(r + 1 AS DECIMAL(38,0)) * (nt + $bands)) * lq_micro" +
-                  s" div (CAST(nt + $bands AS DECIMAL(38,0)) * (mt + $bands)) AS BIGINT)"))
-                .as("psi_micro"))
-            .withColumn("batch_id", lit(batchId))
-            .select("batch_id", "n_events", "psi_micro")
-            .write.mode("overwrite").parquet(part)
-        }
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    spark.read.parquet(outDir).drop("batch")
+      .localCheckpoint() // bands rows, reused every batch, freed when the run ends
+    try runExactlyOnce(spark, stream, checkpoint, outDir) { (batch, batchId) =>
+      val counts = batch
+        .select(graft.operators.Profile.psiBand("value", bandWidth, bands).as("band"))
+        .groupBy("band").agg(count(lit(1)).as("c"))
+      val g = spine.join(counts, Seq("band"), "left")
+        .select(col("band"), col("r"), col("mt"),
+          coalesce(col("c"), lit(0L)).as("c"))
+        .crossJoin(broadcast(counts.agg(coalesce(sum("c"), lit(0L)).as("nt"))))
+        // era-count products wrap 2^63 past ~1e8 rows per era: factor-cast
+        // doubles into the log, DECIMAL(38,0) for the rational — the
+        // etl_distribution_drift_psi discipline, kept verbatim across the
+        // three PSI surfaces.
+        .withColumn("lq_micro",
+          round(log(((col("c") + 1).cast("double") * (col("mt") + bands)) /
+            ((col("r") + 1).cast("double") * (col("nt") + bands))) * 1000000)
+            .cast("long"))
+      g.agg(max("nt").as("n_events"),
+          sum(expr(
+            s"CAST((CAST(c + 1 AS DECIMAL(38,0)) * (mt + $bands)" +
+              s" - CAST(r + 1 AS DECIMAL(38,0)) * (nt + $bands)) * lq_micro" +
+              s" div (CAST(nt + $bands AS DECIMAL(38,0)) * (mt + $bands)) AS BIGINT)"))
+            .as("psi_micro"))
+        .withColumn("batch_id", lit(batchId))
+        .select("batch_id", "n_events", "psi_micro")
+        .write.mode("overwrite").parquet(batchPart(outDir, batchId))
+    } finally graft.operators.Checkpoints.free(spine)
   }
 }

@@ -1001,8 +1001,12 @@ class StreamingSpec extends SparkTestBase {
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType))))
       .option("maxFilesPerTrigger", 1).parquet(src)
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     val out = graft.streaming.EventStreams.driftPsiStream(spark, stream, refHist,
       s"$work/out", s"$work/ckpt", bandWidth = 50.0)
+    // the reference spine is checkpointed for the run and freed when it ends
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- persisted
+    assert(leaked.isEmpty, s"driftPsiStream left persisted RDDs behind: $leaked")
     val rows = out.orderBy("batch_id").collect()
     assert(rows.length === 2)
     val quiet = rows(0).getAs[Long]("psi_micro")
@@ -1812,44 +1816,167 @@ class StreamingSpec extends SparkTestBase {
       s"expected the named broadcast guard, got: ${messages(e).mkString(" | ")}")
   }
 
-  test("dim-refresh enrich replay is idempotent: committed batches are skipped, output stable") {
-    val work = tmpDir("graft_dimref_replay_")
-    val src = s"$work/src"
-    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(src))
-    def stage(name: String, lo: Long, hi: Long): Unit = {
-      val tmp = s"$work/$name"
-      spark.range(lo, hi).selectExpr("id AS k").coalesce(1).write.parquet(tmp)
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(src, s"$name.parquet"))
+  /** One user of the per-batch exactly-once protocol
+    * (`EventStreams.runExactlyOnce`): two single-file input halves
+    * (batch 0 and batch 1 under maxFilesPerTrigger=1), the partition
+    * column its output dirs use, and how to run it over a stream into
+    * `work`. `log` records side effects (only the enrich operator's
+    * `afterBatch` has any); `effects` is the log a clean run leaves. */
+  private final case class ReplayCase(
+      name: String, part: String,
+      halves: () => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      run: (org.apache.spark.sql.DataFrame, String, Long => Unit) => org.apache.spark.sql.DataFrame,
+      effects: Seq[Long] = Nil)
+
+  private lazy val replayCases = Seq(
+    ReplayCase("freshnessStream", "batch",
+      () => {
+        def half(lo: Long) = spark.range(lo, lo + 20).selectExpr(
+          "CASE WHEN id % 3 = 0 THEN 'click' ELSE 'view' END AS event_type",
+          "timestamp_seconds(1704067200 + id * 60) AS ts")
+        (half(0), half(20))
+      },
+      (stream, work, _) => EventStreams.freshnessStream(spark, stream,
+        s"$work/out", s"$work/ckpt")),
+    ReplayCase("fertilityDriftStream", "batch",
+      () => {
+        import spark.implicits._
+        (Seq("the theme then there", "other three").toDF("text"),
+          Seq("xyzzy plugh quux", "the other").toDF("text"))
+      },
+      (stream, work, _) => EventStreams.fertilityDriftStream(spark, stream,
+        Seq("th", "he"), 2500L, s"$work/out", s"$work/ckpt")),
+    ReplayCase("driftPsiStream", "batch",
+      () => (spark.range(0, 100).selectExpr("CAST(id * 5 AS DOUBLE) AS value"),
+        spark.range(0, 100).selectExpr("7.0D AS value")),
+      (stream, work, _) => {
+        val ref = spark.range(0, 10).selectExpr("id AS band", "10L AS r")
+        EventStreams.driftPsiStream(spark, stream, ref, s"$work/out", s"$work/ckpt",
+          bandWidth = 50.0)
+      }),
+    ReplayCase("ivfAppendStream", "enrich_batch",
+      () => {
+        def half(lo: Long) = spark.range(lo, lo + 20).selectExpr("id AS vec_id",
+          "array(CAST(id % 7 AS DOUBLE), CAST(id % 5 AS DOUBLE) + 0.5D) AS e")
+        (half(0), half(20))
+      },
+      (stream, work, _) => {
+        import spark.implicits._
+        val centroids = Seq((0, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0)), (2, Seq(1.0, 1.0)))
+          .toDF("cell", "centroid")
+        EventStreams.ivfAppendStream(spark, stream, centroids,
+          s"$work/out", s"$work/ckpt", vecCol = "e")
+      }),
+    // the name keeps the pre-table test id of this case
+    ReplayCase("dim-refresh enrich", "enrich_batch",
+      () => (spark.range(0, 50).selectExpr("id AS k"),
+        spark.range(50, 100).selectExpr("id AS k")),
+      (stream, work, log) => {
+        // afterBatch publishes the NEXT dimension version between
+        // batches: a replayed batch that re-ran would re-publish and
+        // re-enrich against a newer version
+        def publish(tag: String): Unit = spark.range(0, 100)
+          .selectExpr("id AS k", s"'$tag' AS tier")
+          .coalesce(1).write.mode("overwrite").parquet(s"$work/dim")
+        if (!new java.io.File(s"$work/dim").exists()) publish("v0")
+        EventStreams.enrichRefreshedDimStream(spark, stream, s"$work/dim",
+          s"$work/out", s"$work/ckpt", key = "k",
+          afterBatch = { id => log(id); publish(s"v${id + 1}") })
+      },
+      effects = Seq(0L, 1L)))
+
+  /** Stage one input half as a single parquet file of `work/src`,
+    * aged so the file source orders batch 0 before batch 1. */
+  private def stageHalf(work: String, h: Int, df: org.apache.spark.sql.DataFrame): Unit = {
+    val tmp = s"$work/h$h"
+    df.coalesce(1).write.parquet(tmp)
+    val part = new java.io.File(tmp).listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val staged = java.nio.file.Paths.get(work, "src", s"h$h.parquet")
+    java.nio.file.Files.createDirectories(staged.getParent)
+    java.nio.file.Files.move(part.toPath, staged)
+    java.nio.file.Files.setLastModifiedTime(staged,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - (1 - h) * 10000L))
+  }
+
+  /** Run `c` over `work/src` (one file per micro-batch); the sorted rows. */
+  private def runCase(c: ReplayCase, work: String, log: Long => Unit): Seq[String] = {
+    val schema = c.halves()._1.schema
+    val stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(s"$work/src")
+    c.run(stream, work, log).collect().map(_.toString).sorted.toSeq
+  }
+
+  /** Every file under `dir`, relative: part files carry a per-write
+    * UUID, so an unchanged listing proves no batch was rewritten. */
+  private def filesUnder(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString).toSet
+    } finally walk.close()
+  }
+
+  replayCases.foreach { c =>
+    test(s"${c.name} replay is idempotent: committed batches are skipped, output stable") {
+      val work = tmpDir("graft_replay_")
+      val (h0, h1) = c.halves()
+      stageHalf(work, 0, h0)
+      stageHalf(work, 1, h1)
+      val log = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val first = runCase(c, work, log += _)
+      assert(first.nonEmpty)
+      assert(log.toSeq === c.effects)
+      val files = filesUnder(s"$work/out")
+      assert(files.exists(_.startsWith(s"${c.part}=1/")), s"no batch 1 partition in $files")
+      // wipe the CHECKPOINT (not the sink): every batch replays from
+      // offset 0 — committed partitions must be skipped whole, so the
+      // output is unchanged, nothing is rewritten and no side effect
+      // fires again
+      CacheDirs.deleteRecursively(new java.io.File(s"$work/ckpt"))
+      val second = runCase(c, work, log += _)
+      assert(log.toSeq === c.effects, s"replayed batches must not re-fire side effects, saw $log")
+      assert(second === first, "replay must leave the output identical")
+      assert(filesUnder(s"$work/out") === files, "replay must not rewrite a committed batch")
     }
-    stage("h0", 0, 50)
-    stage("h1", 50, 100)
-    def publish(tag: String): Unit = spark.range(0, 100)
-      .selectExpr("id AS k", s"'$tag' AS tier")
-      .coalesce(1).write.mode("overwrite").parquet(s"$work/dim")
-    publish("v0")
-    val versions = scala.collection.mutable.ArrayBuffer.empty[Long]
-    def run(): org.apache.spark.sql.DataFrame = {
-      val stream = spark.readStream
-        .schema(org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType))))
-        .option("maxFilesPerTrigger", 1).parquet(src)
-      EventStreams.enrichRefreshedDimStream(spark, stream, s"$work/dim",
-        s"$work/out", s"$work/ckpt", key = "k",
-        afterBatch = { id => versions += id; publish(s"v${id + 1}") })
+
+    test(s"${c.name} replay drops a partial batch directory before any read") {
+      val (h0, h1) = c.halves()
+      val clean = tmpDir("graft_replay_clean_")
+      stageHalf(clean, 0, h0)
+      stageHalf(clean, 1, h1)
+      val cleanLog = scala.collection.mutable.ArrayBuffer.empty[Long]
+      val want = runCase(c, clean, cleanLog += _)
+      // batch 1 "crashed" mid-write: its partition holds a file but no
+      // _SUCCESS marker, and the checkpoint never committed it
+      val work = tmpDir("graft_replay_partial_")
+      stageHalf(work, 0, h0)
+      val log = scala.collection.mutable.ArrayBuffer.empty[Long]
+      runCase(c, work, log += _)
+      val partial = java.nio.file.Paths.get(work, "out", s"${c.part}=1")
+      java.nio.file.Files.createDirectories(partial)
+      val junk = partial.resolve("part-00000-partial.snappy.parquet")
+      java.nio.file.Files.write(junk, "not parquet".getBytes("UTF-8"))
+      stageHalf(work, 1, h1)
+      val got = runCase(c, work, log += _)
+      assert(!java.nio.file.Files.exists(junk), "the partial file must be dropped")
+      assert(java.nio.file.Files.exists(partial.resolve("_SUCCESS")))
+      assert(got === want, "the replayed batch must converge to the clean run's output")
+      assert(log.toSeq === cleanLog.toSeq)
     }
-    val first = run().orderBy("k").collect()
-    assert(first.length === 100)
-    assert(versions.toSeq === Seq(0L, 1L))
-    // wipe the CHECKPOINT (not the sink): every batch replays from
-    // offset 0 — committed enrich_batch dirs must be skipped whole,
-    // so the output is unchanged and afterBatch never re-fires
-    CacheDirs.deleteRecursively(new java.io.File(s"$work/ckpt"))
-    val second = run().orderBy("k").collect()
-    assert(versions.toSeq === Seq(0L, 1L),
-      s"replayed batches must not re-publish, saw $versions")
-    assert(second.toSeq === first.toSeq,
-      "replay must leave the enriched output byte-identical")
+  }
+
+  test("upsertStream rejects a trigger other than AvailableNow before starting") {
+    val work = tmpDir("graft_upsert_trigger_")
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(work, "src"))
+    val stream = spark.readStream.schema("k LONG, ver LONG").parquet(s"$work/src")
+    val e = intercept[IllegalArgumentException] {
+      EventStreams.upsertStream(spark, stream, s"$work/dest", Seq("k"), "ver",
+        s"$work/ckpt", org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 second"))
+    }
+    assert(e.getMessage.contains("AvailableNow"), e.getMessage)
+    assert(!new java.io.File(s"$work/ckpt").exists(), "no query may have started")
   }
 }
