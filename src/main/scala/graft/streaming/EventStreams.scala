@@ -343,9 +343,9 @@ object EventStreams {
         }
         if (flat)
           throw new IllegalStateException(
-            s"batch protocol: $dir holds root-level data files — the pre-protocol " +
+            s"$part protocol: $dir holds root-level data files — the pre-protocol " +
             "flat-append layout. Migrate once before resuming: read the flat files, " +
-            "write them as a `batch=0` child partition (plain parquet, the committer's " +
+            s"write them as a `$part=0` child partition (plain parquet, the committer's " +
             "_SUCCESS included), and remove the root files; the accumulated state then " +
             "serves as the first committed batch")
         children.foreach { st =>

@@ -1820,16 +1820,17 @@ class StreamingSpec extends SparkTestBase {
     * (`EventStreams.runExactlyOnce`): two single-file input halves
     * (batch 0 and batch 1 under maxFilesPerTrigger=1), the partition
     * column its output dirs use, and how to run it over a stream into
-    * `work`. `log` records side effects (only the enrich operator's
-    * `afterBatch` has any); `effects` is the log a clean run leaves. */
+    * `work`. `rows` is the row count a clean run reads back. `log`
+    * records side effects (only the enrich operator's `afterBatch` has
+    * any); `effects` is the log a clean run leaves. */
   private final case class ReplayCase(
-      name: String, part: String,
+      name: String, part: String, rows: Int,
       halves: () => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
       run: (org.apache.spark.sql.DataFrame, String, Long => Unit) => org.apache.spark.sql.DataFrame,
       effects: Seq[Long] = Nil)
 
   private lazy val replayCases = Seq(
-    ReplayCase("freshnessStream", "batch",
+    ReplayCase("freshnessStream", "batch", rows = 4, // 2 event types x 2 batches
       () => {
         def half(lo: Long) = spark.range(lo, lo + 20).selectExpr(
           "CASE WHEN id % 3 = 0 THEN 'click' ELSE 'view' END AS event_type",
@@ -1838,7 +1839,7 @@ class StreamingSpec extends SparkTestBase {
       },
       (stream, work, _) => EventStreams.freshnessStream(spark, stream,
         s"$work/out", s"$work/ckpt")),
-    ReplayCase("fertilityDriftStream", "batch",
+    ReplayCase("fertilityDriftStream", "batch", rows = 2, // one report row per batch
       () => {
         import spark.implicits._
         (Seq("the theme then there", "other three").toDF("text"),
@@ -1846,7 +1847,7 @@ class StreamingSpec extends SparkTestBase {
       },
       (stream, work, _) => EventStreams.fertilityDriftStream(spark, stream,
         Seq("th", "he"), 2500L, s"$work/out", s"$work/ckpt")),
-    ReplayCase("driftPsiStream", "batch",
+    ReplayCase("driftPsiStream", "batch", rows = 2, // one monitor row per batch
       () => (spark.range(0, 100).selectExpr("CAST(id * 5 AS DOUBLE) AS value"),
         spark.range(0, 100).selectExpr("7.0D AS value")),
       (stream, work, _) => {
@@ -1854,7 +1855,7 @@ class StreamingSpec extends SparkTestBase {
         EventStreams.driftPsiStream(spark, stream, ref, s"$work/out", s"$work/ckpt",
           bandWidth = 50.0)
       }),
-    ReplayCase("ivfAppendStream", "enrich_batch",
+    ReplayCase("ivfAppendStream", "enrich_batch", rows = 40, // one posting per vector
       () => {
         def half(lo: Long) = spark.range(lo, lo + 20).selectExpr("id AS vec_id",
           "array(CAST(id % 7 AS DOUBLE), CAST(id % 5 AS DOUBLE) + 0.5D) AS e")
@@ -1868,7 +1869,7 @@ class StreamingSpec extends SparkTestBase {
           s"$work/out", s"$work/ckpt", vecCol = "e")
       }),
     // the name keeps the pre-table test id of this case
-    ReplayCase("dim-refresh enrich", "enrich_batch",
+    ReplayCase("dim-refresh enrich", "enrich_batch", rows = 100,
       () => (spark.range(0, 50).selectExpr("id AS k"),
         spark.range(50, 100).selectExpr("id AS k")),
       (stream, work, log) => {
@@ -1927,7 +1928,7 @@ class StreamingSpec extends SparkTestBase {
       stageHalf(work, 1, h1)
       val log = scala.collection.mutable.ArrayBuffer.empty[Long]
       val first = runCase(c, work, log += _)
-      assert(first.nonEmpty)
+      assert(first.length === c.rows)
       assert(log.toSeq === c.effects)
       val files = filesUnder(s"$work/out")
       assert(files.exists(_.startsWith(s"${c.part}=1/")), s"no batch 1 partition in $files")
@@ -1942,7 +1943,7 @@ class StreamingSpec extends SparkTestBase {
       assert(filesUnder(s"$work/out") === files, "replay must not rewrite a committed batch")
     }
 
-    test(s"${c.name} replay drops a partial batch directory before any read") {
+    test(s"${c.name} replay drops marker-less partial batch directories before reading back") {
       val (h0, h1) = c.halves()
       val clean = tmpDir("graft_replay_clean_")
       stageHalf(clean, 0, h0)
@@ -1950,19 +1951,32 @@ class StreamingSpec extends SparkTestBase {
       val cleanLog = scala.collection.mutable.ArrayBuffer.empty[Long]
       val want = runCase(c, clean, cleanLog += _)
       // batch 1 "crashed" mid-write: its partition holds a file but no
-      // _SUCCESS marker, and the checkpoint never committed it
+      // _SUCCESS marker, and the checkpoint never committed it. Batch
+      // 1's own overwrite would also clear that one, so plant a second
+      // partial no rerun write reaches: a batch 2 that crashed before a
+      // checkpoint rollback discarded its offsets. Only the protocol's
+      // drop removes it before the output is read back; left in place,
+      // the read-back would fail on its non-parquet file.
       val work = tmpDir("graft_replay_partial_")
       stageHalf(work, 0, h0)
       val log = scala.collection.mutable.ArrayBuffer.empty[Long]
       runCase(c, work, log += _)
-      val partial = java.nio.file.Paths.get(work, "out", s"${c.part}=1")
-      java.nio.file.Files.createDirectories(partial)
-      val junk = partial.resolve("part-00000-partial.snappy.parquet")
-      java.nio.file.Files.write(junk, "not parquet".getBytes("UTF-8"))
+      def plant(batchId: Int): java.nio.file.Path = {
+        val dir = java.nio.file.Paths.get(work, "out", s"${c.part}=$batchId")
+        java.nio.file.Files.createDirectories(dir)
+        val junk = dir.resolve("part-00000-partial.snappy.parquet")
+        java.nio.file.Files.write(junk, "not parquet".getBytes("UTF-8"))
+        junk
+      }
+      val junk1 = plant(1)
+      val junk2 = plant(2)
       stageHalf(work, 1, h1)
       val got = runCase(c, work, log += _)
-      assert(!java.nio.file.Files.exists(junk), "the partial file must be dropped")
-      assert(java.nio.file.Files.exists(partial.resolve("_SUCCESS")))
+      assert(!java.nio.file.Files.exists(junk1), "the replayed batch's partial must be dropped")
+      assert(java.nio.file.Files.exists(junk1.getParent.resolve("_SUCCESS")))
+      assert(!java.nio.file.Files.exists(junk2.getParent),
+        "a partial no write overwrites must be dropped before the read-back")
+      assert(got.length === c.rows)
       assert(got === want, "the replayed batch must converge to the clean run's output")
       assert(log.toSeq === cleanLog.toSeq)
     }
