@@ -22,12 +22,24 @@ object Upsert {
 
   /** Keep, per key, the row with the highest `versionCol`; on version
     * ties the updates side wins. Both frames must share a schema
-    * (unionByName). */
+    * (unionByName). `keys` may include a column derived only from the
+    * other keys (e.g. a hash bucket of them): it groups the same rows. */
   def keepLatest(existing: DataFrame, updates: DataFrame, keys: Seq[String],
-                 versionCol: String): DataFrame = {
-    require(keys.nonEmpty, "keepLatest needs at least one merge key")
-    val tagged = existing.withColumn("_src", lit(0))
+                 versionCol: String): DataFrame =
+    latestPerKey(unionTagged(existing, updates), keys, versionCol)
+
+  /** `existing ∪ updates`, each row tagged with its side in `_src`
+    * (0 = existing, 1 = updates): the input [[latestPerKey]] folds. */
+  def unionTagged(existing: DataFrame, updates: DataFrame): DataFrame =
+    existing.withColumn("_src", lit(0))
       .unionByName(updates.withColumn("_src", lit(1)))
+
+  /** [[keepLatest]]'s fold over a [[unionTagged]] frame; drops the
+    * tag. Split out so a caller can hash-partition the union once, on
+    * a column of `keys`, before the fold: the window then needs no
+    * exchange of its own. */
+  def latestPerKey(tagged: DataFrame, keys: Seq[String], versionCol: String): DataFrame = {
+    require(keys.nonEmpty, "keepLatest needs at least one merge key")
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(desc(versionCol), desc("_src"))
     tagged.withColumn("_rn", row_number().over(w))

@@ -1894,7 +1894,17 @@ object EventStreams {
    * partitionOverwriteMode. A batch touching 3 of 1024 buckets of a
    * 100 TB table reads and rewrites 3 buckets. The touched-bucket
    * list is a `collect()` of at most `nBuckets` ints — metadata-
-   * sized by construction.
+   * sized by construction. A batch whose keys spread over every
+   * bucket (batch rows >> nBuckets, the usual case for a hashed
+   * feed) touches every bucket and so rewrites the WHOLE destination
+   * each tick; set `targetBucketBytes` to let the layout grow its
+   * bucket count with the destination.
+   *
+   * Merge plan per batch (see [[bucketedMergeStream]]): ONE exchange,
+   * hash on `_bucket` into `p = min(touched, defaultParallelism)`
+   * partitions, shuffles state and batch rows together; the keyed
+   * fold and the write run in that stage with no further shuffle or
+   * sort, so `p` tasks write exactly one file per touched bucket.
    *
    * Crash-safety: merged buckets are written to a staging dir (the
    * lazy plan can still READ the live partitions while staging
@@ -1936,8 +1946,8 @@ object EventStreams {
       s"upsertStream runs under Trigger.AvailableNow only (it waits for the run " +
         s"to finish, then reads the destination back), got $trigger")
     bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
-      nBuckets, (existing, batch) =>
-        graft.operators.Upsert.keepLatest(existing, batch, keys, versionCol),
+      nBuckets, (rows, groupKeys) =>
+        graft.operators.Upsert.latestPerKey(rows, groupKeys, versionCol),
       targetBucketBytes, bucketCols)
   }
 
@@ -1993,17 +2003,32 @@ object EventStreams {
   /**
    * The shared micro-batch machinery behind [[upsertStream]],
    * [[cdcStream]] and [[topKStream]]: bucket the batch, read back
-   * ONLY the touched bucket partitions, apply `merge(existing,
-   * batch)`, stage, and swap touched bucket dirs in with per-bucket
-   * renames. `merge` must be a per-key semilattice fold (its result
-   * for a key must be independent of batch split and replay) for the
-   * final state to be deterministic and replays idempotent.
+   * ONLY the touched bucket partitions, fold them with the batch,
+   * stage, and swap touched bucket dirs in with per-bucket renames.
+   *
+   * `fold(rows, groupKeys)` gets state ∪ batch as one frame, each row
+   * tagged by [[graft.operators.Upsert.unionTagged]] (`_src`: 0 =
+   * state, 1 = batch; the fold drops it), and must group on
+   * `groupKeys = _bucket +: keys`. It must be a per-key semilattice
+   * fold (its result for a key independent of batch split and
+   * replay) for the final state to be deterministic and replays
+   * idempotent.
+   *
+   * Merge plan: the union is hash-partitioned ONCE on `_bucket` into
+   * `p = min(touched, defaultParallelism)` partitions. Grouping on
+   * `_bucket +: keys` groups the same rows as `keys` (`_bucket` is a
+   * pure function of `layoutCols ⊆ keys`), so the fold's window
+   * needs no exchange of its own, and its sort (led by `_bucket`)
+   * already orders the rows the partitioned write needs. Each bucket
+   * lands wholly in one of the `p` write tasks: one file per touched
+   * bucket, from at most one task per core. This shape does not
+   * depend on `spark.sql.unionOutputPartitioning`.
    */
   private def bucketedMergeStream(spark: SparkSession, stream: DataFrame,
                                   destDir: String, keys: Seq[String],
                                   checkpoint: String,
                                   nBuckets: Int,
-                                  merge: (DataFrame, DataFrame) => DataFrame,
+                                  fold: (DataFrame, Seq[String]) => DataFrame,
                                   targetBucketBytes: Long = 0L,
                                   bucketCols: Seq[String] = Nil): DataFrame = {
     require(nBuckets > 0, "nBuckets must be positive")
@@ -2094,13 +2119,12 @@ object EventStreams {
           // a replayed batch finds its own leftover staging dir — clear
           // it so the rewrite below starts clean instead of throwing
           fs.delete(staging, true)
-          merge(existingTouched, bucketed)
-            // ~one task (=> one output file) per touched bucket: the
-            // keyed window shuffle scatters a bucket's rows across all
-            // partitions, and partitionBy would then write up to
-            // |tasks| tiny files PER bucket — a file-count explosion
-            // the next batch pays for on read-back
-            .repartition(touched.length, col("_bucket"))
+          // the one exchange: a bucket's state and batch rows meet in
+          // one of `p` partitions, so neither the fold nor the write
+          // shuffles again, and no bucket is split across files
+          val p = math.min(touched.length, s.sparkContext.defaultParallelism)
+          fold(graft.operators.Upsert.unionTagged(existingTouched, bucketed)
+              .repartition(p, col("_bucket")), "_bucket" +: keys)
             .write.partitionBy("_bucket")
             .parquet(staging.toString)
           // swap each touched bucket dir in RENAME-ASIDE (atomic per
@@ -2129,7 +2153,8 @@ object EventStreams {
           // together atomically; the repair pass above makes a crash
           // at any rename recoverable). Doubling keeps pmod stable-
           // refining (h mod 2N mod N = h mod N) and costs one full
-          // rewrite per doubling — O(log growth) total.
+          // rewrite per doubling — O(log growth) total — written like
+          // the merge: one file per bucket, at most one task per core.
           if (targetBucketBytes > 0L) {
             var newN = readMarker().getOrElse(curN)
             val size = fs.getContentSummary(dest).getLength
@@ -2139,7 +2164,7 @@ object EventStreams {
               fs.delete(reb, true)
               s.read.parquet(destDir).drop("_bucket")
                 .withColumn("_bucket", upsertBucket(layoutCols, newN))
-                .repartition(newN, col("_bucket"))
+                .repartition(math.min(newN, s.sparkContext.defaultParallelism), col("_bucket"))
                 .write.partitionBy("_bucket").parquet(reb.toString)
               writeMarker(reb, newN)
               swapWholeDir(fs, reb, dest, "streaming merge (re-bucket)")
@@ -2205,11 +2230,9 @@ object EventStreams {
                  checkpoint: String,
                  nBuckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(keys.map(col): _*)
-      .orderBy(desc(orderCol), desc(tieCol))
     bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
-      nBuckets, (existing, batch) =>
-        existing.unionByName(batch)
+      nBuckets, (rows, groupKeys) =>
+        rows.drop("_src")
           // collapse replayed rows BEFORE ranking: on an at-least-once
           // redelivery after a partial bucket swap, batch rows already
           // folded into state arrive again as exact duplicates — ranked
@@ -2217,8 +2240,9 @@ object EventStreams {
           // legitimate rows. tieCol is unique per key by contract, so
           // (keys, order, tie) identifies a row and the fold is a true
           // idempotent semilattice again.
-          .dropDuplicates((keys :+ orderCol :+ tieCol).toIndexedSeq)
-          .withColumn("_rn", row_number().over(w))
+          .dropDuplicates((groupKeys :+ orderCol :+ tieCol).toIndexedSeq)
+          .withColumn("_rn", row_number().over(Window.partitionBy(groupKeys.map(col): _*)
+            .orderBy(desc(orderCol), desc(tieCol))))
           .filter(col("_rn") <= k).drop("_rn"))
   }
 

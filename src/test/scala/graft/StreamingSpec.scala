@@ -156,6 +156,10 @@ class StreamingSpec extends SparkTestBase {
       nBuckets = 4, targetBucketBytes = 256L)
     val n1 = marker()
     assert(n1 > 4, s"expected the layout to double past 4 buckets, marker says $n1")
+    // the re-bucket rewrite keeps the merge's file layout: one part file per bucket
+    val perBucket = partFilesPerBucket(dest)
+    assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1),
+      s"every bucket dir must hold exactly one part file after the doubling: $perBucket")
     // a later caller with a DIFFERENT nBuckets param must follow the
     // marker, not shear the layout — and the merge must stay correct
     val src2 = feed("src2", spark.range(0, 50).selectExpr(
@@ -1979,6 +1983,125 @@ class StreamingSpec extends SparkTestBase {
       assert(got.length === c.rows)
       assert(got === want, "the replayed batch must converge to the clean run's output")
       assert(log.toSeq === cleanLog.toSeq)
+    }
+  }
+
+  /** `_bucket=<b>` dir name -> number of `part-*.parquet` files in it. */
+  private def partFilesPerBucket(dest: String): Map[String, Int] =
+    new java.io.File(dest).listFiles().filter(_.getName.startsWith("_bucket="))
+      .map(b => b.getName -> b.list().count(n => n.startsWith("part-") && n.endsWith(".parquet")))
+      .toMap
+
+  /** One operator over the bucketed merge machinery
+    * (`EventStreams.bucketedMergeStream`): two single-file input
+    * halves (one micro-batch each) keyed on `k`, the layout's bucket
+    * count, how to run it into `work/dest`, and the rows it reads back. */
+  private final case class MergeCase(
+      name: String, nBuckets: Int,
+      halves: () => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame),
+      run: (org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame,
+      expected: Seq[org.apache.spark.sql.Row])
+
+  private lazy val mergeCases = {
+    import org.apache.spark.sql.Row
+    // keys 0..99 at version 1, then keys 0..49 at version 2
+    def upsertHalves() = (
+      spark.range(0, 100).selectExpr("id AS k", "CAST(1 AS BIGINT) AS ver", "'a' AS v"),
+      spark.range(0, 50).selectExpr("id AS k", "CAST(2 AS BIGINT) AS ver", "'b' AS v"))
+    val upserted = (0L until 100L).map(k => if (k < 50) Row(k, 2L, "b") else Row(k, 1L, "a"))
+    def upsert(n: Int) = MergeCase(s"upsertStream (nBuckets=$n)", n, upsertHalves,
+      (stream, work) => EventStreams.upsertStream(spark, stream, s"$work/dest",
+        keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt", nBuckets = n),
+      upserted)
+    // 40 keys x 3 rows, then 80 more rows whose scores interleave
+    def topKRow(id: Long) = (id % 40, id, if (id < 120) id else (id * 7) % 200)
+    val topKept = (0L until 200L).map(topKRow).groupBy(_._1).values
+      .flatMap(_.sortBy { case (_, id, score) => (-score, -id) }.take(2))
+      .map { case (k, id, score) => Row(k, id, score) }.toSeq
+    Seq(
+      upsert(32), // more buckets than the session's cores
+      upsert(2), // fewer buckets than cores
+      MergeCase("cdcStream (nBuckets=32)", 32,
+        () => (spark.range(0, 100).selectExpr("id AS k", "CAST(1 AS BIGINT) AS ver",
+            "'U' AS op", "'a' AS v"),
+          spark.range(0, 50).selectExpr("id AS k", "CAST(2 AS BIGINT) AS ver",
+            "CASE WHEN id % 2 = 0 THEN 'D' ELSE 'U' END AS op", "'b' AS v")),
+        (stream, work) => EventStreams.cdcStream(spark, stream, s"$work/dest",
+          keys = Seq("k"), versionCol = "ver", opCol = "op", checkpoint = s"$work/ckpt"),
+        (0L until 100L).collect {
+          case k if k >= 50 => Row(k, 1L, "a")
+          case k if k % 2 == 1 => Row(k, 2L, "b")
+        }),
+      MergeCase("topKStream (nBuckets=32)", 32,
+        () => (spark.range(0, 120).selectExpr("id % 40 AS k", "id", "id AS score"),
+          spark.range(120, 200).selectExpr("id % 40 AS k", "id", "(id * 7) % 200 AS score")),
+        (stream, work) => EventStreams.topKStream(spark, stream, s"$work/dest",
+          keys = Seq("k"), orderCol = "score", tieCol = "id", k = 2,
+          checkpoint = s"$work/ckpt"),
+        topKept))
+  }
+
+  mergeCases.foreach { c =>
+    test(s"${c.name} merges through one _bucket exchange into one file per touched bucket") {
+      import org.apache.spark.sql.catalyst.expressions.Attribute
+      import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+      import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+      import org.apache.spark.sql.execution.command.DataWritingCommandExec
+      import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.util.QueryExecutionListener
+      import org.scalatest.concurrent.Eventually._
+      import org.scalatest.time.SpanSugar._
+      import scala.jdk.CollectionConverters._
+      val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      val work = tmpDir("graft_bucket_merge_")
+      val (h0, h1) = c.halves()
+      stageHalf(work, 0, h0)
+      stageHalf(work, 1, h1)
+      // the plans of the per-batch staging writes; registered before
+      // the stream starts so the stream's cloned session inherits it
+      val staged = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (helper.find(qe.executedPlan) {
+            case w: DataWritingCommandExec => w.cmd match {
+              case i: InsertIntoHadoopFsRelationCommand =>
+                i.outputPath.getName.startsWith("dest_stage_")
+              case _ => false
+            }
+            case _ => false
+          }.isDefined) staged.add(qe.executedPlan)
+        def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      val out = try {
+        val stream = spark.readStream.schema(h0.schema).option("maxFilesPerTrigger", 1)
+          .parquet(s"$work/src")
+        c.run(stream, work).collect().map(_.toString).sorted.toSeq
+      } finally spark.listenerManager.unregister(listener)
+      assert(out == c.expected.map(_.toString).sorted)
+
+      val perBucket = partFilesPerBucket(s"$work/dest")
+      assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1),
+        s"every bucket dir must hold exactly one part file: $perBucket")
+
+      // one exchange per merge input at most, each on `_bucket` alone
+      // into p = min(touched buckets, cores) partitions
+      val cores = spark.sparkContext.defaultParallelism
+      val ps = Seq(h0, h1).map { h =>
+        math.min(h.select(EventStreams.upsertBucket(Seq("k"), c.nBuckets)).distinct().count().toInt,
+          cores)
+      }
+      eventually(timeout(30.seconds)) { assert(staged.size == 2) }
+      staged.asScala.toSeq.zip(ps).foreach { case (plan, p) =>
+        val exchanges = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+        assert(exchanges.nonEmpty && exchanges.length <= 2, plan.toString)
+        exchanges.foreach(_.outputPartitioning match {
+          case HashPartitioning(Seq(a: Attribute), n) =>
+            assert(a.name == "_bucket" && n == p, plan.toString)
+          case other => fail(s"exchange partitions on $other, not _bucket into $p: $plan")
+        })
+      }
     }
   }
 
