@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Queries whose per-query time goes into the one-line JSON. The
     * driver captures only the LAST ~2000 bytes of output (measured:
@@ -35,10 +35,10 @@ object Bench {
     "dedup_prefix_pairs", "layout_bloom_skipping",
     "text_unigram_train", "sim_ivf_recall", "text_stream_neardup",
     "sim_ivfpq_batch_topk", "text_bm25_incremental", "etl_ingest_dedup",
-    // the five timed index-build rows (VERDICT r19 #3: the bench pays
-    // the persisted-projection builds visibly — see Bench.main)
+    // the timed index-build rows (VERDICT r19 #3: the bench pays
+    // the persisted-cache builds visibly — see Bench.indexBuilds)
     "sidx_sig16", "sidx_bits", "sidx_pfx32",
-    "sidx_sq8", "sidx_pqcb")
+    "sidx_sq8", "sidx_pqcb", "sidx_bloom")
 
   /** Exactness TWINS excluded from the bench loop: each re-runs its
     * approximate sibling's pipeline PLUS an exact reference purely to
@@ -58,68 +58,23 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // bucketed-index gates need the bucket-PRUNED scan; the auto
-      // rule only weighs exchange reuse and would drop the pruning
-      // (set once here — r17 verdict retired the per-gate conf.sets)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session before timing: parquet reader init, codegen
-    // compiler, shuffle machinery. The metric is the sum of per-query
-    // times, so one untimed throwaway query keeps JVM warmup out of
-    // whichever query happens to run first.
-    try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .groupBy("l_returnflag").count().count()
-    } catch { case _: Throwable => () }
-    // ---- The bench PAYS the persisted-index builds (VERDICT r19 #3:
-    // the fingerprint-keyed similarity projections survive across
-    // JVMs, so run 1 of min-of-2 previously rode a previous round's
-    // disk cache and no timed row ever carried the build cost).
-    // Delete the five projection caches up front, then time each
-    // rung's build as its OWN row — run once (a second run would read
-    // the cache and time nothing), added to the queries map and the
-    // total; the serving rows then read the already-built tables, so
-    // nothing double-counts. Additions-only: no previously timed row
-    // changes meaning.
-    locally {
-      val idxPrefixes = Seq("sigtab", "bitstab", "pfxtab", "sq8tab", "pq_cb_")
-      val root = new java.io.File(CacheDirs.root)
-      Option(root.listFiles()).foreach(_.foreach { f =>
-        if (idxPrefixes.exists(p => f.getName.startsWith(p)))
-          CacheDirs.deleteRecursively(f)
-      })
-    }
+    val spark = GraftSession.local(GraftSession.envCpus)
+    warmUp(spark, sfDir)
+    val builds = indexBuilds(spark, sfDir)
+    Option(new java.io.File(CacheDirs.root).listFiles()).foreach(_.foreach { f =>
+      if (builds.exists { case (_, prefix, _) => f.getName.startsWith(prefix) })
+        CacheDirs.deleteRecursively(f)
+    })
     var failed = List.empty[String]
     // a failed build is named in `failed` and left out of the timed set:
     // its time-to-failure is not a build time
-    val indexBuilds: Seq[(String, Double)] = Seq[(String, () => Unit)](
-      "sidx_sig16" -> (() => SimilarityQueries.sigTableCached(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()),
-      "sidx_bits" -> (() => SimilarityQueries.bitsTableCached(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()),
-      "sidx_pfx32" -> (() => SimilarityQueries.prefixTableCached(spark, sfDir, 32)
-        .write.format("noop").mode("overwrite").save()),
-      "sidx_sq8" -> (() => SimilarityQueries.sq8TableCached(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()),
-      "sidx_pqcb" -> (() => { SimilarityQueries.pqCodebooksCached(spark, sfDir); () })
-    ).flatMap { case (name, build) =>
-      val t0 = System.nanoTime()
-      val ok =
-        try { build(); true }
-        catch { case e: Throwable =>
-          failed ::= name
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          false
-        }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      if (ok) Some(name -> dt) else None
+    val buildTimes: Seq[(String, Double)] = builds.flatMap { case (name, _, build) =>
+      try Some(name -> seconds(spark)(build()))
+      catch { case e: Throwable =>
+        failed ::= name
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        None
+      }
     }
     // Sorted order: stable run-to-run and round-to-round comparisons
     // (Map iteration order would shuffle which query pays warm-cache
@@ -127,30 +82,18 @@ object Bench {
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot { case (name, _) => exactnessTwins(name) }
       .map { case (name, fn) =>
-      // noop sink, not count(): count() lets Catalyst prune every
-      // projected column and eliminate the final sort, so map-only
-      // queries would be timed as bare row-count scans — the noop
-      // write evaluates the full output the query exists to produce.
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        val ok =
-          try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-          catch { case e: Throwable =>
-            if (!failed.contains(name)) {
-              failed ::= name
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            }
-            false
+      // a failed run's time-to-failure is not a benchmark number —
+      // NaN poisons min() so a failed query never records a timing
+      // (it is named in `failed` instead)
+      def once(): Double =
+        try seconds(spark)(noop(fn(spark, sfDir)))
+        catch { case e: Throwable =>
+          if (!failed.contains(name)) {
+            failed ::= name
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // queries are independent: drop their persisted intermediates
-        // so earlier queries' caches don't GC-tax later ones
-        spark.catalog.clearCache()
-        // a failed run's time-to-failure is not a benchmark number —
-        // NaN poisons min() so a failed query never records a timing
-        // (it is named in `failed` instead)
-        if (ok) dt else Double.NaN
-      }
+          Double.NaN
+        }
       // EVERY row records min-of-2, not just the headline subset:
       // single-shot timing on a shared box is how BENCH_r13 recorded
       // 1355.9s where the identical binary re-measures at 467.9s
@@ -168,7 +111,7 @@ object Bench {
     // NaN rows (failures) are excluded from the map and the total —
     // "NaN" is not valid JSON and a time-to-failure is not a timing.
     // The index-build rows join the timed set (and the total) first.
-    val timed = indexBuilds ++ results.filterNot(_._2.isNaN)
+    val timed = buildTimes ++ results.filterNot(_._2.isNaN)
     val total = timed.map(_._2).sum
     // Full per-query detail goes to a file (not stdout — see headline
     // scaladoc). Best-effort: bench output must not fail on an
@@ -196,4 +139,48 @@ object Bench {
       sys.exit(1)
     }
   }
+
+  /** Warm the session before timing: parquet reader init, codegen
+    * compiler, shuffle machinery. The metric is the sum of per-query
+    * times, so one untimed throwaway query keeps JVM warmup out of
+    * whichever query happens to run first. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .groupBy("l_returnflag").count().count()
+    } catch { case _: Throwable => () }
+
+  /** noop sink, not count(): count() lets Catalyst prune every
+    * projected column and eliminate the final sort, so map-only
+    * queries would be timed as bare row-count scans — the noop write
+    * evaluates the full output the query exists to produce. */
+  def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
+
+  /** Seconds `body` takes. Afterwards (also on failure) drops the
+    * persisted intermediates: queries are independent, so earlier
+    * queries' caches must not GC-tax later ones. */
+  def seconds(spark: SparkSession)(body: => Unit): Double = {
+    val t0 = System.nanoTime()
+    try { body; (System.nanoTime() - t0) / 1e9 }
+    finally spark.catalog.clearCache()
+  }
+
+  /** The persisted-index builds the bench PAYS (VERDICT r19 #3: the
+    * fingerprint-keyed caches survive across JVMs, so run 1 of
+    * min-of-2 previously rode a previous round's disk cache and no
+    * timed row ever carried the build cost): row name, the cache's
+    * file-name prefix under `CacheDirs.root`, build. Bench deletes
+    * every listed prefix up front, then times each build as its OWN
+    * row — run once (a second run would read the cache and time
+    * nothing), added to the queries map and the total; the serving
+    * rows then read the already-built caches, so nothing
+    * double-counts. Additions-only: no previously timed row changes
+    * meaning. */
+  private def indexBuilds(spark: SparkSession, sfDir: String): Seq[(String, String, () => Unit)] = Seq(
+    ("sidx_sig16", "sigtab", () => noop(SimilarityQueries.sigTableCached(spark, sfDir))),
+    ("sidx_bits", "bitstab", () => noop(SimilarityQueries.bitsTableCached(spark, sfDir))),
+    ("sidx_pfx32", "pfxtab", () => noop(SimilarityQueries.prefixTableCached(spark, sfDir, 32))),
+    ("sidx_sq8", "sq8tab", () => noop(SimilarityQueries.sq8TableCached(spark, sfDir))),
+    ("sidx_pqcb", "pq_cb_", () => SimilarityQueries.pqCodebooksCached(spark, sfDir)),
+    ("sidx_bloom", "bloom_", () => PipelineQueries.bloomBytesCached(spark, sfDir)))
 }

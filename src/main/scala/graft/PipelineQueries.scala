@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.{Privacy, Sampling}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -10,6 +11,39 @@ import org.apache.spark.sql.functions._
  * column/window plans (no UDFs, no driver loops) with DuckDB oracles.
  */
 object PipelineQueries {
+
+  /** `decontaminate_bloom`'s eval slice. */
+  private def bloomEval(docs: DataFrame): DataFrame = docs.filter(col("doc_id") % 25 === 0)
+
+  /** The Bloom filter over `decontaminate_bloom`'s eval n-grams, built
+    * once per corpus and kept as `bloom_<fp>.bin` under the cache root
+    * (Bench purges and times it as `sidx_bloom`). */
+  def bloomBytesCached(s: SparkSession, dir: String): Array[Byte] = {
+    // cache key = CONTENT fingerprint (not path): a regenerated
+    // corpus must never reuse a stale filter (Bloom false
+    // negatives would silently unflag contamination). Write via
+    // temp + atomic move so a concurrent reader never sees a
+    // truncated filter.
+    // owner-only cache root (CacheDirs verifies ownership) — a
+    // pre-created world-writable /tmp file could otherwise feed
+    // the gate a planted filter
+    val fp = Tables.fingerprint(s, s"$dir/documents.parquet")
+    val fix = java.nio.file.Paths.get(s"${CacheDirs.root}/bloom_$fp.bin")
+    if (java.nio.file.Files.exists(fix)) java.nio.file.Files.readAllBytes(fix)
+    else {
+      val eval_ = bloomEval(Tables.t(s, dir, "documents").select("doc_id", "text"))
+      val b = graft.operators.Contamination.buildEvalBloom(eval_, "text", n = 4)
+      val tmp = java.nio.file.Files.createTempFile(
+        fix.getParent, "bloom_", ".tmp")
+      try {
+        java.nio.file.Files.write(tmp, b)
+        java.nio.file.Files.move(tmp, fix,
+          java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally java.nio.file.Files.deleteIfExists(tmp)
+      b
+    }
+  }
 
   val all: Seq[Q] = Seq(
 
@@ -91,34 +125,10 @@ object PipelineQueries {
     Q("decontaminate_bloom",
       (s, dir) => {
         val docs = Tables.t(s, dir, "documents").select("doc_id", "text")
-        val eval_ = docs.filter(col("doc_id") % 25 === 0)
-        // cache key = CONTENT fingerprint (not path): a regenerated
-        // corpus must never reuse a stale filter (Bloom false
-        // negatives would silently unflag contamination). Write via
-        // temp + atomic move so a concurrent reader never sees a
-        // truncated filter.
-        // owner-only cache root (CacheDirs verifies ownership) — a
-        // pre-created world-writable /tmp file could otherwise feed
-        // the gate a planted filter
-        val fp = Tables.fingerprint(s, s"$dir/documents.parquet")
-        val fix = java.nio.file.Paths.get(s"${CacheDirs.root}/bloom_$fp.bin")
-        val bytes =
-          if (java.nio.file.Files.exists(fix)) java.nio.file.Files.readAllBytes(fix)
-          else {
-            val b = graft.operators.Contamination.buildEvalBloom(eval_, "text", n = 4)
-            val tmp = java.nio.file.Files.createTempFile(
-              fix.getParent, "bloom_", ".tmp")
-            try {
-              java.nio.file.Files.write(tmp, b)
-              java.nio.file.Files.move(tmp, fix,
-                java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-            } finally java.nio.file.Files.deleteIfExists(tmp)
-            b
-          }
         graft.operators.Contamination.flagContaminatedBloom(
             train = docs.filter(col("doc_id") % 25 =!= 0),
-            eval = eval_, "doc_id", "text", bytes, n = 4, minMatches = 1)
+            eval = bloomEval(docs), "doc_id", "text", bloomBytesCached(s, dir), n = 4,
+            minMatches = 1)
           .orderBy("doc_id")
       },
       Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),

@@ -23,8 +23,9 @@ object Tables {
     * LongType), now plain timestamp[us] (TIMESTAMP_NTZ). Branch on
     * the type the footer actually carries instead of assuming a
     * vintage, so a regeneration can't silently break every events
-    * read again. All sessions pin spark.sql.session.timeZone=UTC,
-    * so the NTZ->instant cast is a pure reinterpretation. */
+    * read again. All sessions pin spark.sql.session.timeZone=UTC
+    * (GraftSession.local), so the NTZ->instant cast is a pure
+    * reinterpretation. */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))

@@ -2865,8 +2865,8 @@ object TextQueries {
         // would silently drop the bucket-PRUNING benefit this index
         // exists for: k of 64 buckets read instead of all files).
         // autoBucketedScan.enabled=false is set ONCE at session
-        // construction (Bench/Verify/TimeQuery/tests) — the r17
-        // verdict retired the per-gate sticky conf.set sites
+        // construction (GraftSession.local) — the r17 verdict
+        // retired the per-gate sticky conf.set sites
         val postings = tokenPostingsTable(s, dir)
         val hits = postings.filter(col("token").isin(must: _*))
           .groupBy("doc_id").agg(count(lit(1)).as("n_terms"))

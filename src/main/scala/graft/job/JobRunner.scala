@@ -944,12 +944,9 @@ object JobRunner {
   def main(args: Array[String]): Unit = {
     require(args.length >= 1, "usage: JobRunner <config.json> [sfDirSubstitution]")
     val cfg = JobConfig.fromFile(args(0))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // SPARK_MASTER (a deployment's cluster URL) replaces the local master
+    val spark = graft.GraftSession.local(graft.GraftSession.envCpus,
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toMap)
     try {
       val res = run(spark, cfg)
       println(s"""{"jobId":"${res.jobId}","status":"${res.status}","recordsWritten":${res.recordsWritten},"recordsFailed":${res.recordsFailed}}""")

@@ -11,22 +11,12 @@ import org.apache.spark.sql.types._
   * embeddings corpus for the LSH-bucketed embedding near-dup.
   * Sub-quadratic growth here is the evidence that the banding/bucket
   * candidates, not an all-pairs join, are carrying the load.
-  * Usage: runMain graft.tools.ScaleStress <sfDir> [multiples...]
+  * Usage: runMain graft.tools.Dev scale <sfDir> [multiples...]
   * SPARK_GRAFT_STRESS=<substring> runs just the matching sections. */
 object ScaleStress {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val multiples = if (args.length > 1) args.drop(1).map(_.toInt).toSeq else Seq(1, 2, 5, 10)
+  def run(spark: SparkSession, sfDir: String, multiples: Seq[Int]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_STRESS")
     def wanted(label: String): Boolean = only.forall(label.contains)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      // keep bucket pruning for the indexed sections (see Bench)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     // clearCache drops CacheManager entries but NOT localCheckpoint blocks
     // (persisted RDDs outside the cache manager): sweep those explicitly
     // after every multiple, or executor storage accrues across the whole
@@ -1860,6 +1850,5 @@ object ScaleStress {
       freeAll()
     }
     }
-    spark.stop()
   }
 }

@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (object = one per JVM). */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // keep bucket pruning for the indexed-retrieval gates (see Bench)
-    .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkTestBase extends AnyFunSuite {
