@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -33,16 +33,49 @@ object EventStreams {
     * regenerated from nanos-int64 to timestamp[us] and the pinned
     * LongType schema silently read raw micros (timestamps collapsed
     * 1000x; watermarks never fired). So take the schema from the
-    * directory's own parquet footers (one cheap batch footer read)
-    * and normalize `ts` by its ACTUAL type via
-    * [[graft.Tables.normalizeEventTs]]. */
+    * directory's own parquet footer ([[footerSchema]]: one footer
+    * read on the driver, no Spark job) and normalize `ts` by its
+    * ACTUAL type via [[graft.Tables.normalizeEventTs]]. */
   def readEvents(spark: SparkSession, path: String,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val footerSchema = spark.read.parquet(path).schema
-    val r = spark.readStream.schema(footerSchema)
+    val r = spark.readStream.schema(footerSchema(spark, path))
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventTs(r.parquet(path))
+  }
+
+  /** `spark.read.parquet(path).schema` without the one-task Spark job
+    * that schema inference launches to read a footer. Reads the file
+    * Spark's inference reads with `mergeSchema` off (`_common_metadata`,
+    * else `_metadata`, else the first data file by path, among the
+    * files Spark's listing keeps), on the driver, through Spark's own
+    * parquet-to-Spark conversion under the session conf. A directory
+    * with subdirectories (partition columns to infer), or a path that
+    * is missing or holds no file, is left to Spark itself. */
+  private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    val fs = dir.getFileSystem(conf)
+    val listed =
+      if (!fs.exists(dir)) Array.empty[org.apache.hadoop.fs.FileStatus]
+      else fs.listStatus(dir)
+        .filterNot(st => org.apache.spark.sql.GraftSqlBridge.skippedByFileListing(st.getPath.getName))
+        .sortBy(_.getPath.toString)
+    def named(n: String) = listed.find(_.getPath.getName == n)
+    val pick = named("_common_metadata").orElse(named("_metadata")).orElse(listed.headOption)
+    pick.filter(_ => !listed.exists(_.isDirectory)) match {
+      case Some(file) =>
+        val meta = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(file, conf),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)).toNullable
+      case None => spark.read.parquet(path).schema
+    }
   }
 
   /** Tumbling-window counts with late-data handling via watermark. */
@@ -1893,12 +1926,31 @@ object EventStreams {
    * only those partitions via a write-scoped dynamic
    * partitionOverwriteMode. A batch touching 3 of 1024 buckets of a
    * 100 TB table reads and rewrites 3 buckets. The touched-bucket
-   * list is a `collect()` of at most `nBuckets` ints — metadata-
-   * sized by construction. A batch whose keys spread over every
-   * bucket (batch rows >> nBuckets, the usual case for a hashed
+   * list is one scan stage that sends each partition's set of bucket
+   * ids to the driver — at most `nBuckets` ints per partition,
+   * metadata-sized by construction. A batch whose keys spread over
+   * every bucket (batch rows >> nBuckets, the usual case for a hashed
    * feed) touches every bucket and so rewrites the WHOLE destination
-   * each tick; set `targetBucketBytes` to let the layout grow its
-   * bucket count with the destination.
+   * each tick, which is why the layout starts small and grows with
+   * the destination (below).
+   *
+   * Layout rule (bucket count):
+   *  - an existing `_graft_nbuckets` marker always wins;
+   *  - else an explicit `nBuckets` (> 0);
+   *  - else a NEW destination (no `_bucket=` dirs) starts at
+   *    `defaultParallelism` buckets, one per core, so a small state's
+   *    tick writes one file per core rather than a fixed 32;
+   *  - else the destination is a marker-less bucketed layout from
+   *    before the marker existed, which was laid out at 32 buckets:
+   *    it is merged at 32, since any other count would hash keys into
+   *    the wrong buckets.
+   * The bucket count then DOUBLES whenever mean bucket size exceeds
+   * 2x `targetBucketBytes` — by default (0) the session's
+   * `spark.sql.files.maxPartitionBytes`, Spark's own split size.
+   *
+   * Reads launch no schema-inference job: the state read and the
+   * returned read-back pass the schema the merge writes (the stream's
+   * columns plus `_bucket` int).
    *
    * Merge plan per batch (see [[bucketedMergeStream]]): ONE exchange,
    * hash on `_bucket` into `p = min(touched, defaultParallelism)`
@@ -1919,13 +1971,13 @@ object EventStreams {
    * same buckets and keep-latest converges to the identical state.
    *
    * Bucket-count scaling: the layout's nBuckets is persisted in a
-   * `_graft_nbuckets` marker inside the destination (the caller's
-   * parameter applies only at INITIAL layout — later batches follow
-   * the marker, so mismatched callers can't shear the layout). With
-   * `targetBucketBytes` > 0 the layout DOUBLES its bucket count
-   * whenever mean bucket size exceeds 2x the target (whole-directory
-   * rename-aside swap, marker travels inside the new directory, so
-   * the re-bucket is crash-atomic too): per-batch rewritten bytes
+   * `_graft_nbuckets` marker inside the destination (the layout rule
+   * above applies only at INITIAL layout — later batches follow the
+   * marker, so mismatched callers can't shear the layout). The
+   * doubling is a whole-directory rename-aside swap (the marker
+   * travels inside the new directory, so the re-bucket is
+   * crash-atomic too); its size check is one `getContentSummary`
+   * listing per batch, no Spark job. Per-batch rewritten bytes
    * then stay ~O(touched x targetBucketBytes) as the destination
    * grows, instead of O(touched x destination/N) under a fixed N.
    * Each doubling rewrites the destination once — O(log growth)
@@ -1939,7 +1991,7 @@ object EventStreams {
   def upsertStream(spark: SparkSession, stream: DataFrame, destDir: String,
                    keys: Seq[String], versionCol: String, checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow(),
-                   nBuckets: Int = 32,
+                   nBuckets: Int = 0,
                    targetBucketBytes: Long = 0L,
                    bucketCols: Seq[String] = Nil): DataFrame = {
     require(trigger == Trigger.AvailableNow(),
@@ -2014,6 +2066,12 @@ object EventStreams {
    * replay) for the final state to be deterministic and replays
    * idempotent.
    *
+   * Bucket count and growth follow [[upsertStream]]'s layout rule:
+   * marker, else `nBuckets` (> 0), else `defaultParallelism` for a
+   * new destination and [[LegacyBuckets]] for a marker-less bucketed
+   * one; doubling past 2x `targetBucketBytes` (0 = the session's
+   * `spark.sql.files.maxPartitionBytes`).
+   *
    * Merge plan: the union is hash-partitioned ONCE on `_bucket` into
    * `p = min(touched, defaultParallelism)` partitions. Grouping on
    * `_bucket +: keys` groups the same rows as `keys` (`_bucket` is a
@@ -2031,7 +2089,7 @@ object EventStreams {
                                   fold: (DataFrame, Seq[String]) => DataFrame,
                                   targetBucketBytes: Long = 0L,
                                   bucketCols: Seq[String] = Nil): DataFrame = {
-    require(nBuckets > 0, "nBuckets must be positive")
+    require(nBuckets >= 0, "nBuckets must be > 0, or 0 for the layout rule")
     // `bucketCols` (default: the merge keys) chooses the SERVING
     // layout: e.g. an inverted-index state keyed (token, doc_id) but
     // bucketed on token alone keeps each token's postings in ONE
@@ -2060,7 +2118,7 @@ object EventStreams {
         // live dir is missing, drop where it isn't. All metadata-
         // sized: one list of <= nBuckets child names.
         repairWholeDirSwap(fs, dest, "streaming merge")
-        if (fs.exists(dest)) {
+        val hasBuckets = fs.exists(dest) && {
           fs.listStatus(dest).foreach { st =>
             val n = st.getPath.getName
             if (n.startsWith("_stale_bucket_")) {
@@ -2077,20 +2135,20 @@ object EventStreams {
           // loudly with the migration story instead of an unresolved-
           // column error three operators deep.
           val names = fs.listStatus(dest).map(_.getPath.getName)
-          val hasBuckets = names.exists(_.startsWith("_bucket="))
+          val bucketDirs = names.exists(_.startsWith("_bucket="))
           val hasFlatData = names.exists(n => !n.startsWith("_") && !n.startsWith("."))
-          if (!hasBuckets && hasFlatData)
+          if (!bucketDirs && hasFlatData)
             throw new IllegalStateException(
               s"streaming merge: destination $destDir has a pre-bucketing flat-parquet " +
               "layout; rewrite it into `_bucket=` partitions (read it, add " +
               "EventStreams.upsertBucket(keys, n) as `_bucket`, write partitionBy(_bucket), " +
               "and place an n-valued _graft_nbuckets marker) before resuming this stream")
+          bucketDirs
         }
-        // ---- the layout's bucket count: follow the destination's own
-        // marker when it exists (the caller's nBuckets applies only at
-        // initial layout, so differently-configured callers cannot
-        // shear an existing layout); legacy bucketed dirs without a
-        // marker fall back to the parameter, unchanged behavior.
+        // ---- the layout's bucket count (see upsertStream's layout
+        // rule): the destination's own marker, else the caller's
+        // nBuckets, else one bucket per core for a new destination and
+        // the legacy count for a marker-less bucketed one
         val markerPath = new Path(dest, "_graft_nbuckets")
         def readMarker(): Option[Int] =
           if (fs.exists(markerPath)) {
@@ -2103,15 +2161,24 @@ object EventStreams {
           try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           finally out.close()
         }
-        val curN = readMarker().getOrElse(nBuckets)
+        val curN = readMarker().getOrElse(
+          if (nBuckets > 0) nBuckets
+          else if (hasBuckets) LegacyBuckets
+          else s.sparkContext.defaultParallelism)
         val bucketed = batch.toDF().withColumn("_bucket", upsertBucket(layoutCols, curN))
-        // <= nBuckets ints: the one driver-side collect, metadata-sized
-        val touched = bucketed.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
+        // one scan stage, no exchange: each partition sends its set of
+        // bucket ids (<= curN ints), merged here
+        val touched = bucketed.select("_bucket").as(Encoders.scalaInt)
+          .mapPartitions { ids =>
+            val seen = scala.collection.mutable.BitSet()
+            ids.foreach(seen += _)
+            seen.iterator
+          }(Encoders.scalaInt)
+          .collect().distinct.sorted
         if (touched.nonEmpty) {
           val existingTouched =
-            if (fs.exists(dest) && fs.listStatus(dest).exists(_.getPath.getName.startsWith("_bucket=")))
-              s.read.parquet(destDir) // partition-pruned to touched buckets
+            if (hasBuckets)
+              s.read.schema(bucketed.schema).parquet(destDir) // partition-pruned to touched buckets
                 .filter(col("_bucket").isin(touched.map(Integer.valueOf): _*))
             else s.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](), bucketed.schema)
@@ -2155,20 +2222,21 @@ object EventStreams {
           // refining (h mod 2N mod N = h mod N) and costs one full
           // rewrite per doubling — O(log growth) total — written like
           // the merge: one file per bucket, at most one task per core.
-          if (targetBucketBytes > 0L) {
-            var newN = readMarker().getOrElse(curN)
-            val size = fs.getContentSummary(dest).getLength
-            while (size > 2L * targetBucketBytes * newN && newN < 65536) newN *= 2
-            if (newN != curN) {
-              val reb = new Path(dest.getParent, dest.getName + "_rebucket")
-              fs.delete(reb, true)
-              s.read.parquet(destDir).drop("_bucket")
-                .withColumn("_bucket", upsertBucket(layoutCols, newN))
-                .repartition(math.min(newN, s.sparkContext.defaultParallelism), col("_bucket"))
-                .write.partitionBy("_bucket").parquet(reb.toString)
-              writeMarker(reb, newN)
-              swapWholeDir(fs, reb, dest, "streaming merge (re-bucket)")
-            }
+          val target =
+            if (targetBucketBytes > 0L) targetBucketBytes
+            else s.sessionState.conf.filesMaxPartitionBytes
+          var newN = curN
+          val size = fs.getContentSummary(dest).getLength
+          while (size > 2L * target * newN && newN < 65536) newN *= 2
+          if (newN != curN) {
+            val reb = new Path(dest.getParent, dest.getName + "_rebucket")
+            fs.delete(reb, true)
+            s.read.schema(bucketed.schema).parquet(destDir).drop("_bucket")
+              .withColumn("_bucket", upsertBucket(layoutCols, newN))
+              .repartition(math.min(newN, s.sparkContext.defaultParallelism), col("_bucket"))
+              .write.partitionBy("_bucket").parquet(reb.toString)
+            writeMarker(reb, newN)
+            swapWholeDir(fs, reb, dest, "streaming merge (re-bucket)")
           }
           ()
         }
@@ -2178,10 +2246,18 @@ object EventStreams {
     // means an EMPTY frame, not a PATH_NOT_FOUND crash
     val destPath = new org.apache.hadoop.fs.Path(destDir)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(destPath)) spark.read.parquet(destDir).drop("_bucket")
+    // the schema the merge writes: no schema-inference job
+    if (fs.exists(destPath))
+      spark.read.schema(stream.schema.add("_bucket", IntegerType)).parquet(destDir).drop("_bucket")
     else spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), stream.schema)
   }
+
+  /** The bucket count of a marker-less bucketed destination: the
+    * layout this sink wrote before the `_graft_nbuckets` marker, when
+    * the default was a fixed 32. Merging it at any other count would
+    * hash keys into the wrong buckets. */
+  private val LegacyBuckets = 32
 
   /**
    * Streaming CDC apply WITH DELETES into the bucketed parquet
@@ -2196,11 +2272,16 @@ object EventStreams {
    * resurrect a deleted key, which is the classic CDC-sink bug this
    * operator exists to prevent. Unique versions make the final state
    * batch-split- and order-independent; replays are idempotent.
+   *
+   * Layout: [[upsertStream]]'s rule — the destination's marker, else
+   * `nBuckets` (> 0), else one bucket per core for a new destination
+   * (32 for a marker-less bucketed one), doubling once mean bucket
+   * size passes 2x the session's `spark.sql.files.maxPartitionBytes`.
    */
   def cdcStream(spark: SparkSession, stream: DataFrame, destDir: String,
                 keys: Seq[String], versionCol: String, opCol: String,
                 checkpoint: String,
-                nBuckets: Int = 32): DataFrame =
+                nBuckets: Int = 0): DataFrame =
     upsertStream(spark, stream, destDir, keys, versionCol, checkpoint,
         nBuckets = nBuckets)
       .filter(col(opCol) =!= "D").drop(opCol)
@@ -2223,12 +2304,16 @@ object EventStreams {
    * destination is BUCKETED on the key hash: each batch reads back
    * and rewrites only the bucket partitions its keys touch (the
    * shared [[bucketedMergeStream]] machinery), so per-batch work is
-   * O(touched buckets), not O(all keys x k).
+   * O(touched buckets), not O(all keys x k). The bucket count follows
+   * [[upsertStream]]'s layout rule: the destination's marker, else
+   * `nBuckets` (> 0), else one bucket per core for a new destination
+   * (32 for a marker-less bucketed one), doubling once mean bucket
+   * size passes 2x the session's `spark.sql.files.maxPartitionBytes`.
    */
   def topKStream(spark: SparkSession, stream: DataFrame, destDir: String,
                  keys: Seq[String], orderCol: String, tieCol: String, k: Int,
                  checkpoint: String,
-                 nBuckets: Int = 32): DataFrame = {
+                 nBuckets: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
       nBuckets, (rows, groupKeys) =>
@@ -2386,6 +2471,10 @@ object EventStreams {
     // recovered state still converges to a valid whole-feed sketch.)
     val build = buildAgg.getOrElse(s"theta_sketch_agg($valueCol, $lgK)")
     val mergeA = mergeAgg.getOrElse(s"theta_union_agg(sk, $lgK)")
+    val g = groupCols.map(col)
+    // the state's schema (analysis only, no job): reads of the state
+    // pass it, so none launches a footer-read job
+    val stateSchema = stream.groupBy(g: _*).agg(expr(build).as("sk")).schema
     import org.apache.hadoop.fs.Path
     runAvailableNow(stream.writeStream
       .outputMode(OutputMode.Append())
@@ -2397,12 +2486,11 @@ object EventStreams {
         // repair a crashed whole-dir swap before any read — the ONE
         // shared protocol implementation (repairWholeDirSwap)
         repairWholeDirSwap(fs, dest, "sketch rollup")
-        val g = groupCols.map(col)
         val batchSk = batch.toDF().groupBy(g: _*)
           .agg(expr(build).as("sk"))
         val merged =
           if (fs.exists(dest))
-            s.read.parquet(destDir).unionByName(batchSk)
+            s.read.schema(stateSchema).parquet(destDir).unionByName(batchSk)
               .groupBy(g: _*).agg(expr(mergeA).as("sk"))
           else batchSk
         val staging = new Path(dest.getParent, dest.getName + s"_stage_$batchId")
@@ -2415,12 +2503,8 @@ object EventStreams {
       })
     val destPath = new Path(destDir)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(destPath)) spark.read.parquet(destDir)
-    else {
-      val fields = groupCols.map(c => stream.schema(c)) :+ StructField("sk", BinaryType)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        StructType(fields))
-    }
+    if (fs.exists(destPath)) spark.read.schema(stateSchema).parquet(destDir)
+    else spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), stateSchema)
   }
 
   /**

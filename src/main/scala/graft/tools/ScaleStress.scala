@@ -1512,7 +1512,10 @@ object ScaleStress {
     // nBuckets=1 IS the old full-destination rewrite (every batch
     // touches the single bucket = everything) and its wall must
     // track destination size.
-    // The bucketed-vs-flat slope ratio is the scale evidence.
+    // The bucketed-vs-flat slope ratio is the scale evidence. Both
+    // pass a 1 TB targetBucketBytes: the default target (the 128 MB
+    // split size) would double the flat layout past 256 MB and stop
+    // it being the fixed-N baseline.
     if (wanted("upsert")) {
       val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
         .select("user_id", "event_id", "event_type", "value")
@@ -1553,7 +1556,7 @@ object ScaleStress {
           graft.streaming.EventStreams.upsertStream(spark,
             spark.readStream.schema(batchFeed.schema).parquet(s"$work/feed"),
             s"$work/dest", keys = Seq("user_id"), versionCol = "event_id",
-            checkpoint = s"$work/ckpt", nBuckets = nb)
+            checkpoint = s"$work/ckpt", nBuckets = nb, targetBucketBytes = 1L << 40)
           val dt = (System.nanoTime() - t0) / 1e9
           val rewritten = destFiles().filter(_.lastModified >= wallClock0).map(_.length).sum
           println(f"SCALE upsert  m=$m%2d dest=$destN%8d batch=$batchN%6d $label " +
@@ -1561,7 +1564,9 @@ object ScaleStress {
           graft.CacheDirs.deleteRecursively(work.toFile)
         }
         // ADAPTIVE layout: the destination carries the bucket count
-        // the targetBucketBytes doubling policy converges to for its
+        // the targetBucketBytes doubling policy (on by default, at
+        // the split size; 256 KB here so the fixture-sized
+        // destination doubles at all) converges to for its
         // size (seeded via the _graft_nbuckets marker — the steady
         // state the mechanism maintains; the doubling transition
         // itself is pinned in StreamingSpec). With N tracking

@@ -177,6 +177,146 @@ class StreamingSpec extends SparkTestBase {
       s"bucket ids must come from the marker layout ($n1), got $dirs")
   }
 
+  private val kvSchema = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, ver BIGINT, v STRING")
+  private def kv(from: Long, to: Long, ver: Long, v: String) =
+    spark.range(from, to).selectExpr("id AS k", s"CAST($ver AS BIGINT) AS ver", s"'$v' AS v")
+
+  test("a default upsertStream lays a new destination out at one bucket per core") {
+    val work = tmpDir("graft_upsert_layout_")
+    val dest = s"$work/dest"
+    stageHalf(work, 0, kv(0, 100, 1, "a"))
+    val out = EventStreams.upsertStream(spark, spark.readStream.schema(kvSchema).parquet(s"$work/src"),
+      dest, keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt")
+    val cores = spark.sparkContext.defaultParallelism
+    assert(bucketMarker(dest) === cores)
+    val perBucket = partFilesPerBucket(dest)
+    assert(perBucket.size === cores && perBucket.values.forall(_ == 1),
+      s"expected $cores bucket dirs with one part file each: $perBucket")
+    assert(out.count() === 100)
+  }
+
+  test("the default layout doubles past the session's maxPartitionBytes without targetBucketBytes") {
+    val small = spark.newSession()
+    small.conf.set("spark.sql.files.maxPartitionBytes", "256")
+    val work = tmpDir("graft_upsert_split_size_")
+    stageHalf(work, 0, kv(0, 200, 1, "a"))
+    def run(s: org.apache.spark.sql.SparkSession, name: String) =
+      EventStreams.upsertStream(s, s.readStream.schema(kvSchema).parquet(s"$work/src"),
+        s"$work/$name", keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt_$name")
+    run(spark, "dest_default")
+    val dest = s"$work/dest_small"
+    val out = run(small, "dest_small")
+    val (n0, n) = (bucketMarker(s"$work/dest_default"), bucketMarker(dest))
+    assert(n > n0, s"a 256-byte split size must double the $n0-bucket layout, marker says $n")
+    val perBucket = partFilesPerBucket(dest)
+    assert(perBucket.nonEmpty && perBucket.values.forall(_ == 1), perBucket.toString)
+    assert(perBucket.keys.forall(_.stripPrefix("_bucket=").toInt < n), perBucket.toString)
+    assert(out.count() === 200)
+  }
+
+  test("a marker-less 32-bucket destination keeps merging at 32 buckets under the default layout") {
+    val work = tmpDir("graft_upsert_legacy_")
+    val dest = s"$work/dest"
+    // the layout this sink wrote before its marker existed
+    kv(0, 200, 1, "a").withColumn("_bucket", EventStreams.upsertBucket(Seq("k"), 32))
+      .write.partitionBy("_bucket").parquet(dest)
+    def bucketDirs() = new java.io.File(dest).list().filter(_.startsWith("_bucket=")).toSet
+    assert(bucketDirs().size === 32 && !new java.io.File(dest, "_graft_nbuckets").exists())
+    stageHalf(work, 0, kv(0, 50, 2, "b"))
+    val out = EventStreams.upsertStream(spark, spark.readStream.schema(kvSchema).parquet(s"$work/src"),
+      dest, keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt")
+    assert(bucketMarker(dest) === 32)
+    assert(bucketDirs() === (0 until 32).map(b => s"_bucket=$b").toSet)
+    assert(spark.read.parquet(dest)
+      .filter(col("_bucket") =!= EventStreams.upsertBucket(Seq("k"), 32)).count() === 0,
+      "every row must stay in its key's 32-bucket")
+    val want = (0L until 200L).map(k => if (k < 50) (k, 2L, "b") else (k, 1L, "a"))
+    val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(got === want, "read-back must equal keep-latest over the seed and the batch")
+  }
+
+  /** Every job's stages while `body` runs. */
+  private def jobsDuring(body: => Unit): Seq[Seq[org.apache.spark.scheduler.StageInfo]] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[StageInfo]]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.add(j.stageInfos)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toSeq
+  }
+
+  /** Parquet schema inference reads footers in a job over a
+    * `parallelize`d file list; no other job here has that RDD. */
+  private def footerRead(stages: Seq[org.apache.spark.scheduler.StageInfo]): Boolean =
+    stages.exists(_.rddInfos.exists(_.name == "ParallelCollectionRDD"))
+
+  test("an upsert micro-batch on an existing destination runs no footer read and a one-stage touched set") {
+    val work = tmpDir("graft_upsert_jobs_")
+    val dest = s"$work/dest"
+    def run() = EventStreams.upsertStream(spark,
+      spark.readStream.schema(kvSchema).parquet(s"$work/src"),
+      dest, keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt")
+    stageHalf(work, 0, kv(0, 100, 1, "a"))
+    run()
+    // the detector sees Spark's own schema inference
+    assert(jobsDuring(spark.read.parquet(dest)).count(footerRead) === 1)
+    stageHalf(work, 1, kv(0, 50, 2, "b"))
+    var out: org.apache.spark.sql.DataFrame = null
+    val jobs = jobsDuring { out = run() }
+    assert(!jobs.exists(footerRead), s"footer-read job in the micro-batch: ${jobs.map(_.map(_.name))}")
+    // stages per job, in order: the touched-bucket set (one stage, no
+    // exchange), then the merge write, which AQE runs as two jobs: the
+    // `_bucket` exchange's map stage, then the write stage (listed
+    // with that map stage as its skipped parent)
+    assert(jobs.map(_.length) === Seq(1, 1, 2),
+      s"expected a one-stage touched set, then the merge: " +
+        jobs.map(_.map(st => (st.stageId, st.parentIds))))
+    assert(out.count() === 100)
+    assert(out.filter(col("k") < 50 && col("ver") === 2 && col("v") === "b").count() === 50)
+  }
+
+  test("readEvents launches no Spark job and takes the schema spark.read.parquet infers") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    // the nanos-int64 `ts` vintage of the events fixture
+    val nanosDir = tmpDir("graft_events_nanos_")
+    val nanosFile = new org.apache.hadoop.fs.Path(s"$nanosDir/events.parquet")
+    val pq = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); " +
+        "required int64 user_id; optional binary event_type (STRING); optional double value; }")
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(nanosFile,
+      spark.sparkContext.hadoopConfiguration)).withType(pq).build()
+    try {
+      val g = new SimpleGroupFactory(pq)
+      (1L to 3L).foreach(i => w.write(g.newGroup().append("event_id", i)
+        .append("ts", 1704067200000000000L + i).append("user_id", i % 2)
+        .append("event_type", "click").append("value", i * 0.5)))
+    } finally w.close()
+    // a Spark-written dir (`_SUCCESS`, `.crc`) plus hidden junk, and a
+    // nanos-vintage file that sorts first: Spark's pick, whose schema differs
+    val mixedDir = tmpDir("graft_events_mixed_")
+    spark.read.parquet(eventsPath).coalesce(1).write.mode("overwrite").parquet(mixedDir)
+    Seq("_junk", ".junk").foreach(n =>
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(mixedDir, n), "not parquet"))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(nanosDir, "events.parquet"),
+      java.nio.file.Paths.get(mixedDir, "a.parquet"))
+    Seq(eventsPath, nanosDir, mixedDir).foreach { d =>
+      val jobs = jobsDuring(EventStreams.readEvents(spark, d))
+      assert(jobs.isEmpty, s"readEvents($d) ran ${jobs.length} Spark job(s)")
+      assert(EventStreams.footerSchema(spark, d) === spark.read.parquet(d).schema, d)
+    }
+    assert(EventStreams.footerSchema(spark, mixedDir)("ts").dataType ===
+      org.apache.spark.sql.types.LongType, "the nanos file sorts first and is Spark's pick")
+  }
+
   test("streaming sketch rollup: cross-batch merged state equals the one-shot batch sketch") {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val work = tmpDir("graft_sketch_stream_")
@@ -1985,6 +2125,10 @@ class StreamingSpec extends SparkTestBase {
       assert(log.toSeq === cleanLog.toSeq)
     }
   }
+
+  /** The destination's `_graft_nbuckets` marker. */
+  private def bucketMarker(dest: String): Int =
+    java.nio.file.Files.readString(java.nio.file.Paths.get(dest, "_graft_nbuckets")).trim.toInt
 
   /** `_bucket=<b>` dir name -> number of `part-*.parquet` files in it. */
   private def partFilesPerBucket(dest: String): Map[String, Int] =
