@@ -51,7 +51,11 @@ object EventStreams {
     * files Spark's listing keeps), on the driver, through Spark's own
     * parquet-to-Spark conversion under the session conf. A directory
     * with subdirectories (partition columns to infer), or a path that
-    * is missing or holds no file, is left to Spark itself. */
+    * is missing or holds no file, is left to Spark itself.
+    *
+    * The file pick mirrors Spark 4.1's `ParquetUtils.inferSchema` and
+    * `HadoopFSUtils.shouldFilterOutPathName`: re-check it against
+    * them on a Spark upgrade (StreamingSpec pins the two equal). */
   private[graft] def footerSchema(spark: SparkSession, path: String): StructType = {
     import org.apache.hadoop.fs.Path
     import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -1931,22 +1935,19 @@ object EventStreams {
    * metadata-sized by construction. A batch whose keys spread over
    * every bucket (batch rows >> nBuckets, the usual case for a hashed
    * feed) touches every bucket and so rewrites the WHOLE destination
-   * each tick, which is why the layout starts small and grows with
-   * the destination (below).
+   * each tick.
    *
-   * Layout rule (bucket count):
-   *  - an existing `_graft_nbuckets` marker always wins;
-   *  - else an explicit `nBuckets` (> 0);
-   *  - else a NEW destination (no `_bucket=` dirs) starts at
-   *    `defaultParallelism` buckets, one per core, so a small state's
-   *    tick writes one file per core rather than a fixed 32;
-   *  - else the destination is a marker-less bucketed layout from
-   *    before the marker existed, which was laid out at 32 buckets:
-   *    it is merged at 32, since any other count would hash keys into
-   *    the wrong buckets.
-   * The bucket count then DOUBLES whenever mean bucket size exceeds
-   * 2x `targetBucketBytes` — by default (0) the session's
+   * Layout rule (bucket count): the destination's `_graft_nbuckets`
+   * marker wins; without one, `nBuckets` (default 32, which is also
+   * the count of a marker-less bucketed destination from before the
+   * marker existed, so its keys keep hashing into their buckets). The
+   * count then DOUBLES whenever mean bucket size exceeds 2x
+   * `targetBucketBytes`: by default (0) the session's
    * `spark.sql.files.maxPartitionBytes`, Spark's own split size.
+   * The start stays at 32, not one bucket per core: a sparse batch
+   * (a few keys) rewrites the buckets its keys touch, and at 4
+   * buckets those are the whole state (ScaleStress `upsert`, 8 keys
+   * into a 140 MB state: 4 buckets 30.2 s, 32 buckets 5.0 s).
    *
    * Reads launch no schema-inference job: the state read and the
    * returned read-back pass the schema the merge writes (the stream's
@@ -1973,7 +1974,9 @@ object EventStreams {
    * Bucket-count scaling: the layout's nBuckets is persisted in a
    * `_graft_nbuckets` marker inside the destination (the layout rule
    * above applies only at INITIAL layout — later batches follow the
-   * marker, so mismatched callers can't shear the layout). The
+   * marker, so mismatched callers can't shear the layout). A new
+   * destination gets its marker before its first bucket dir, so a
+   * crash mid-swap never leaves bucket dirs without one. The
    * doubling is a whole-directory rename-aside swap (the marker
    * travels inside the new directory, so the re-bucket is
    * crash-atomic too); its size check is one `getContentSummary`
@@ -1991,7 +1994,7 @@ object EventStreams {
   def upsertStream(spark: SparkSession, stream: DataFrame, destDir: String,
                    keys: Seq[String], versionCol: String, checkpoint: String,
                    trigger: Trigger = Trigger.AvailableNow(),
-                   nBuckets: Int = 0,
+                   nBuckets: Int = 32,
                    targetBucketBytes: Long = 0L,
                    bucketCols: Seq[String] = Nil): DataFrame = {
     require(trigger == Trigger.AvailableNow(),
@@ -2067,10 +2070,8 @@ object EventStreams {
    * idempotent.
    *
    * Bucket count and growth follow [[upsertStream]]'s layout rule:
-   * marker, else `nBuckets` (> 0), else `defaultParallelism` for a
-   * new destination and [[LegacyBuckets]] for a marker-less bucketed
-   * one; doubling past 2x `targetBucketBytes` (0 = the session's
-   * `spark.sql.files.maxPartitionBytes`).
+   * the marker, else `nBuckets`; doubling past 2x `targetBucketBytes`
+   * (0 = the session's `spark.sql.files.maxPartitionBytes`).
    *
    * Merge plan: the union is hash-partitioned ONCE on `_bucket` into
    * `p = min(touched, defaultParallelism)` partitions. Grouping on
@@ -2089,7 +2090,7 @@ object EventStreams {
                                   fold: (DataFrame, Seq[String]) => DataFrame,
                                   targetBucketBytes: Long = 0L,
                                   bucketCols: Seq[String] = Nil): DataFrame = {
-    require(nBuckets >= 0, "nBuckets must be > 0, or 0 for the layout rule")
+    require(nBuckets > 0, "nBuckets must be positive")
     // `bucketCols` (default: the merge keys) chooses the SERVING
     // layout: e.g. an inverted-index state keyed (token, doc_id) but
     // bucketed on token alone keeps each token's postings in ONE
@@ -2145,10 +2146,11 @@ object EventStreams {
               "and place an n-valued _graft_nbuckets marker) before resuming this stream")
           bucketDirs
         }
-        // ---- the layout's bucket count (see upsertStream's layout
-        // rule): the destination's own marker, else the caller's
-        // nBuckets, else one bucket per core for a new destination and
-        // the legacy count for a marker-less bucketed one
+        // ---- the layout's bucket count: follow the destination's own
+        // marker when it exists (the caller's nBuckets applies only at
+        // initial layout, so differently-configured callers cannot
+        // shear an existing layout); legacy bucketed dirs without a
+        // marker fall back to the parameter, unchanged behavior.
         val markerPath = new Path(dest, "_graft_nbuckets")
         def readMarker(): Option[Int] =
           if (fs.exists(markerPath)) {
@@ -2161,10 +2163,8 @@ object EventStreams {
           try out.write(n.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           finally out.close()
         }
-        val curN = readMarker().getOrElse(
-          if (nBuckets > 0) nBuckets
-          else if (hasBuckets) LegacyBuckets
-          else s.sparkContext.defaultParallelism)
+        val marker = readMarker()
+        val curN = marker.getOrElse(nBuckets)
         val bucketed = batch.toDF().withColumn("_bucket", upsertBucket(layoutCols, curN))
         // one scan stage, no exchange: each partition sends its set of
         // bucket ids (<= curN ints), merged here
@@ -2199,6 +2199,11 @@ object EventStreams {
           // repair pass above resolves whichever half completed);
           // untouched buckets are never listed or moved
           if (!fs.exists(dest)) fs.mkdirs(dest)
+          // the marker lands BEFORE the first bucket dir: a crash
+          // mid-swap must leave the count on disk, or the replay would
+          // take the bucket dirs for a marker-less layout and merge
+          // them at its own caller's nBuckets
+          if (marker.isEmpty) writeMarker(dest, curN)
           touched.foreach { b =>
             val src = new Path(staging, s"_bucket=$b")
             val dst = new Path(dest, s"_bucket=$b")
@@ -2212,7 +2217,6 @@ object EventStreams {
             }
           }
           fs.delete(staging, true)
-          if (readMarker().isEmpty) writeMarker(dest, curN)
           // ---- size-triggered re-bucket: when mean bucket size
           // exceeds 2x the target, DOUBLE the bucket count with a
           // whole-directory rename-aside swap (the new marker rides
@@ -2253,12 +2257,6 @@ object EventStreams {
       new java.util.ArrayList[org.apache.spark.sql.Row](), stream.schema)
   }
 
-  /** The bucket count of a marker-less bucketed destination: the
-    * layout this sink wrote before the `_graft_nbuckets` marker, when
-    * the default was a fixed 32. Merging it at any other count would
-    * hash keys into the wrong buckets. */
-  private val LegacyBuckets = 32
-
   /**
    * Streaming CDC apply WITH DELETES into the bucketed parquet
    * destination — the streaming twin of
@@ -2274,14 +2272,13 @@ object EventStreams {
    * batch-split- and order-independent; replays are idempotent.
    *
    * Layout: [[upsertStream]]'s rule — the destination's marker, else
-   * `nBuckets` (> 0), else one bucket per core for a new destination
-   * (32 for a marker-less bucketed one), doubling once mean bucket
-   * size passes 2x the session's `spark.sql.files.maxPartitionBytes`.
+   * `nBuckets`, doubling once mean bucket size passes 2x the
+   * session's `spark.sql.files.maxPartitionBytes`.
    */
   def cdcStream(spark: SparkSession, stream: DataFrame, destDir: String,
                 keys: Seq[String], versionCol: String, opCol: String,
                 checkpoint: String,
-                nBuckets: Int = 0): DataFrame =
+                nBuckets: Int = 32): DataFrame =
     upsertStream(spark, stream, destDir, keys, versionCol, checkpoint,
         nBuckets = nBuckets)
       .filter(col(opCol) =!= "D").drop(opCol)
@@ -2306,14 +2303,13 @@ object EventStreams {
    * shared [[bucketedMergeStream]] machinery), so per-batch work is
    * O(touched buckets), not O(all keys x k). The bucket count follows
    * [[upsertStream]]'s layout rule: the destination's marker, else
-   * `nBuckets` (> 0), else one bucket per core for a new destination
-   * (32 for a marker-less bucketed one), doubling once mean bucket
-   * size passes 2x the session's `spark.sql.files.maxPartitionBytes`.
+   * `nBuckets`, doubling once mean bucket size passes 2x the
+   * session's `spark.sql.files.maxPartitionBytes`.
    */
   def topKStream(spark: SparkSession, stream: DataFrame, destDir: String,
                  keys: Seq[String], orderCol: String, tieCol: String, k: Int,
                  checkpoint: String,
-                 nBuckets: Int = 0): DataFrame = {
+                 nBuckets: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     bucketedMergeStream(spark, stream, destDir, keys, checkpoint,
       nBuckets, (rows, groupKeys) =>

@@ -1613,6 +1613,51 @@ object ScaleStress {
             f"n=$nAdapt%5d rewrote=${rewritten / 1024}%7dKB of=${totalBytes / 1024}%7dKB time=$dt%7.1fs")
           graft.CacheDirs.deleteRecursively(work.toFile)
         }
+        // DEFAULT layout (no nBuckets, no targetBucketBytes) against
+        // one bucket per core, on this SPARSE batch: the default is 32
+        // buckets doubled while mean bucket size passes 2x the split
+        // size, and the destination is seeded at the count it holds
+        // for its size. With one bucket per core the batch's 8 keys
+        // touch every bucket, so the tick rewrites the whole state.
+        Seq("dflt ", "cores").foreach { label =>
+          val work = graft.CacheDirs.tempWorkDir("graft_stress_upsertdf_")
+          def destFiles(): Seq[java.io.File] = {
+            def walk(f: java.io.File): Seq[java.io.File] =
+              if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+              else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+            walk(new java.io.File(s"$work/dest"))
+          }
+          def seed(n: Int): Unit = {
+            graft.CacheDirs.deleteRecursively(new java.io.File(s"$work/dest"))
+            destRows
+              .withColumn("_bucket", graft.streaming.EventStreams.upsertBucket(Seq("user_id"), n))
+              .write.partitionBy("_bucket").parquet(s"$work/dest")
+            java.nio.file.Files.writeString(
+              java.nio.file.Paths.get(s"$work/dest/_graft_nbuckets"), n.toString)
+          }
+          var n = spark.sparkContext.defaultParallelism
+          if (label == "dflt ") {
+            n = 32
+            seed(n)
+            val size = destFiles().map(_.length).sum
+            while (size > 2L * spark.sessionState.conf.filesMaxPartitionBytes * n) n *= 2
+          }
+          if (label == "cores" || n != 32) seed(n)
+          batchFeed.coalesce(1).write.parquet(s"$work/feed")
+          val batchN = batchFeed.count()
+          val totalBytes = destFiles().map(_.length).sum
+          val wallClock0 = System.currentTimeMillis()
+          val t0 = System.nanoTime()
+          graft.streaming.EventStreams.upsertStream(spark,
+            spark.readStream.schema(batchFeed.schema).parquet(s"$work/feed"),
+            s"$work/dest", keys = Seq("user_id"), versionCol = "event_id",
+            checkpoint = s"$work/ckpt")
+          val dt = (System.nanoTime() - t0) / 1e9
+          val rewritten = destFiles().filter(_.lastModified >= wallClock0).map(_.length).sum
+          println(f"SCALE upsert  m=$m%2d dest=$destN%8d batch=$batchN%6d $label " +
+            f"n=$n%5d rewrote=${rewritten / 1024}%7dKB of=${totalBytes / 1024}%7dKB time=$dt%7.1fs")
+          graft.CacheDirs.deleteRecursively(work.toFile)
+        }
       }
     }
     // Streaming bounded per-key TOP-K under GROWING KEY CARDINALITY:

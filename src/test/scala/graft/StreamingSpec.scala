@@ -181,18 +181,17 @@ class StreamingSpec extends SparkTestBase {
   private def kv(from: Long, to: Long, ver: Long, v: String) =
     spark.range(from, to).selectExpr("id AS k", s"CAST($ver AS BIGINT) AS ver", s"'$v' AS v")
 
-  test("a default upsertStream lays a new destination out at one bucket per core") {
+  test("a default upsertStream lays a new destination out at 32 buckets, one file each") {
     val work = tmpDir("graft_upsert_layout_")
     val dest = s"$work/dest"
-    stageHalf(work, 0, kv(0, 100, 1, "a"))
+    stageHalf(work, 0, kv(0, 200, 1, "a"))
     val out = EventStreams.upsertStream(spark, spark.readStream.schema(kvSchema).parquet(s"$work/src"),
       dest, keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt")
-    val cores = spark.sparkContext.defaultParallelism
-    assert(bucketMarker(dest) === cores)
+    assert(bucketMarker(dest) === 32)
     val perBucket = partFilesPerBucket(dest)
-    assert(perBucket.size === cores && perBucket.values.forall(_ == 1),
-      s"expected $cores bucket dirs with one part file each: $perBucket")
-    assert(out.count() === 100)
+    assert(perBucket.size === 32 && perBucket.values.forall(_ == 1),
+      s"expected 32 bucket dirs with one part file each: $perBucket")
+    assert(out.count() === 200)
   }
 
   test("the default layout doubles past the session's maxPartitionBytes without targetBucketBytes") {
@@ -233,6 +232,35 @@ class StreamingSpec extends SparkTestBase {
     val want = (0L until 200L).map(k => if (k < 50) (k, 2L, "b") else (k, 1L, "a"))
     val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
     assert(got === want, "read-back must equal keep-latest over the seed and the batch")
+  }
+
+  test("a new destination's first batch, crashed after one bucket rename, replays into its layout") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.crashfs.impl", classOf[CrashingLocalFs].getName)
+    try {
+      val work = tmpDir("graft_upsert_first_crash_")
+      val local = s"$work/dest"
+      def run(nBuckets: Int) = EventStreams.upsertStream(spark,
+        spark.readStream.schema(kvSchema).parquet(s"$work/src"),
+        s"crashfs://$local", keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt",
+        nBuckets = nBuckets)
+      stageHalf(work, 0, kv(0, 100, 1, "a"))
+      CrashingLocalFs.swapsLeft.set(1)
+      try intercept[Exception](run(4)) finally CrashingLocalFs.swapsLeft.set(Int.MaxValue)
+      assert(new java.io.File(local).list().count(_.startsWith("_bucket=")) === 1,
+        "the crash must land after the first bucket rename")
+      // the replay of batch 0, then batch 1, from a caller with the
+      // default nBuckets: the 4-bucket layout must win
+      stageHalf(work, 1, kv(0, 50, 2, "b"))
+      val out = run(32)
+      assert(bucketMarker(local) === 4)
+      assert(spark.read.parquet(local)
+        .filter(col("_bucket") =!= EventStreams.upsertBucket(Seq("k"), 4)).count() === 0,
+        "every row must sit in its key's 4-bucket")
+      val want = (0L until 100L).map(k => if (k < 50) (k, 2L, "b") else (k, 1L, "a"))
+      val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
+      assert(got === want, "read-back must equal keep-latest, one row per key")
+    } finally hadoopConf.unset("fs.crashfs.impl")
   }
 
   /** Every job's stages while `body` runs. */
@@ -315,6 +343,11 @@ class StreamingSpec extends SparkTestBase {
     }
     assert(EventStreams.footerSchema(spark, mixedDir)("ts").dataType ===
       org.apache.spark.sql.types.LongType, "the nanos file sorts first and is Spark's pick")
+    // a partitioned dir is left to Spark's own inference, partition column included
+    val partDir = s"${tmpDir("graft_events_parted_")}/events"
+    spark.read.parquet(eventsPath).write.partitionBy("event_type").parquet(partDir)
+    assert(EventStreams.footerSchema(spark, partDir) === spark.read.parquet(partDir).schema)
+    assert(EventStreams.footerSchema(spark, partDir).fieldNames.last === "event_type")
   }
 
   test("streaming sketch rollup: cross-batch merged state equals the one-shot batch sketch") {
@@ -2171,7 +2204,8 @@ class StreamingSpec extends SparkTestBase {
           spark.range(0, 50).selectExpr("id AS k", "CAST(2 AS BIGINT) AS ver",
             "CASE WHEN id % 2 = 0 THEN 'D' ELSE 'U' END AS op", "'b' AS v")),
         (stream, work) => EventStreams.cdcStream(spark, stream, s"$work/dest",
-          keys = Seq("k"), versionCol = "ver", opCol = "op", checkpoint = s"$work/ckpt"),
+          keys = Seq("k"), versionCol = "ver", opCol = "op", checkpoint = s"$work/ckpt",
+          nBuckets = 32),
         (0L until 100L).collect {
           case k if k >= 50 => Row(k, 1L, "a")
           case k if k % 2 == 1 => Row(k, 2L, "b")
@@ -2181,7 +2215,7 @@ class StreamingSpec extends SparkTestBase {
           spark.range(120, 200).selectExpr("id % 40 AS k", "id", "(id * 7) % 200 AS score")),
         (stream, work) => EventStreams.topKStream(spark, stream, s"$work/dest",
           keys = Seq("k"), orderCol = "score", tieCol = "id", k = 2,
-          checkpoint = s"$work/ckpt"),
+          checkpoint = s"$work/ckpt", nBuckets = 32),
         topKept))
   }
 
@@ -2260,4 +2294,23 @@ class StreamingSpec extends SparkTestBase {
     assert(e.getMessage.contains("AvailableNow"), e.getMessage)
     assert(!new java.io.File(s"$work/ckpt").exists(), "no query may have started")
   }
+}
+
+/** The local file system under the `crashfs` scheme. Renaming a staged
+  * `_bucket=` dir into a streaming-merge destination throws once
+  * `swapsLeft` such renames have run, which is a crash in the middle
+  * of the per-bucket swap. */
+class CrashingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
+  override def getScheme: String = "crashfs"
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (src.getParent.getName.contains("_stage_") && dst.getName.startsWith("_bucket=") &&
+        CrashingLocalFs.swapsLeft.getAndDecrement() <= 0)
+      throw new java.io.IOException(s"injected crash before renaming $src to $dst")
+    super.rename(src, dst)
+  }
+}
+
+object CrashingLocalFs {
+  val swapsLeft = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
 }
