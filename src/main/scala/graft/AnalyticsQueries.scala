@@ -22,6 +22,15 @@ object AnalyticsQueries {
   private val dec = "DECIMAL(12,2)"
   private def sumDec(colExpr: String) = s"CAST(SUM(CAST($colExpr AS $dec)) AS DOUBLE)"
 
+  /** Session scope of the transformWithState gate rows: that operator
+    * runs only on the RocksDB state store, and their state is tiny
+    * (one tuple per user), so 8 state partitions, not the batch
+    * default. */
+  private val rocksDbStreamConf = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.shuffle.partitions" -> "8")
+
   /** Stage the single events parquet behind a fresh per-run work dir
     * (file streaming sources list a DIRECTORY — a symlink stands in
     * for the file) and return (sourceDir, workDir); the work dir also
@@ -3716,28 +3725,18 @@ object AnalyticsQueries {
         val cut = (mm.getLong(0) + mm.getLong(1)) / 2
         val work = CacheDirs.tempWorkDir("graft_stream_boot_")
         raw.filter(col("us") > cut).drop("us").write.parquet(s"$work/stream")
-        val history = raw.filter(col("us") <= cut)
-        val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        GraftSession.withConf(s, rocksDbStreamConf) { c =>
+          val history = org.apache.spark.sql.GraftSqlBridge.rebind(c, raw)
+            .filter(col("us") <= cut)
           val out = graft.streaming.EventStreams.bootstrapCountStream(
-            graft.streaming.EventStreams.readEvents(s, s"$work/stream"),
-            history)(s)
+            graft.streaming.EventStreams.readEvents(c, s"$work/stream"),
+            history)(c)
           val name = s"q_boot_${java.util.UUID.randomUUID().toString.take(8)}"
-          graft.streaming.EventStreams.runToMemory(s, out.toDF(), name,
+          graft.streaming.EventStreams.runToMemory(c, out.toDF(), name,
               org.apache.spark.sql.streaming.OutputMode.Update())
             // totals are monotone per user; the LAST emission is max
             .groupBy("user_id").agg(max("total").as("total"))
             .orderBy("user_id")
-        } finally {
-          prevProv match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
       },
       Some("""WITH e AS (SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us
@@ -3787,27 +3786,14 @@ object AnalyticsQueries {
     Q("events_stream_quota",
       (s, dir) => {
         val (src, _) = stageStreamWork(dir)
-        val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        // transformWithState supports only RocksDB; 8 state partitions
-        // (tiny state — one tuple per user), not the batch default
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        GraftSession.withConf(s, rocksDbStreamConf) { c =>
           val alerts = graft.streaming.EventStreams.quotaAlerts(
-            graft.streaming.EventStreams.readEvents(s, src),
-            thresholdCents = 100000L)(s)
+            graft.streaming.EventStreams.readEvents(c, src),
+            thresholdCents = 100000L)(c)
           val name = s"q_quota_${java.util.UUID.randomUUID().toString.take(8)}"
-          graft.streaming.EventStreams.runToMemory(s, alerts.toDF(), name,
+          graft.streaming.EventStreams.runToMemory(c, alerts.toDF(), name,
               org.apache.spark.sql.streaming.OutputMode.Update())
             .orderBy("user_id")
-        } finally {
-          prevProv match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
       },
       Some("""WITH p AS (SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents
@@ -3866,24 +3852,13 @@ object AnalyticsQueries {
     Q("events_stream_recent_path",
       (s, dir) => {
         val (src, _) = stageStreamWork(dir)
-        val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        GraftSession.withConf(s, rocksDbStreamConf) { c =>
           val out = graft.streaming.EventStreams.recentPathStream(
-            graft.streaming.EventStreams.readEvents(s, src))(s)
+            graft.streaming.EventStreams.readEvents(c, src))(c)
           val name = s"q_rp_${java.util.UUID.randomUUID().toString.take(8)}"
-          graft.streaming.EventStreams.runToMemory(s, out.toDF(), name,
+          graft.streaming.EventStreams.runToMemory(c, out.toDF(), name,
               org.apache.spark.sql.streaming.OutputMode.Update())
             .orderBy("user_id")
-        } finally {
-          prevProv match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
       },
       Some("""WITH o AS (SELECT user_id, event_type,
@@ -3902,24 +3877,13 @@ object AnalyticsQueries {
     Q("events_stream_type_counts",
       (s, dir) => {
         val (src, _) = stageStreamWork(dir)
-        val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        GraftSession.withConf(s, rocksDbStreamConf) { c =>
           val out = graft.streaming.EventStreams.typeCountsStream(
-            graft.streaming.EventStreams.readEvents(s, src))(s)
+            graft.streaming.EventStreams.readEvents(c, src))(c)
           val name = s"q_tc_${java.util.UUID.randomUUID().toString.take(8)}"
-          graft.streaming.EventStreams.runToMemory(s, out.toDF(), name,
+          graft.streaming.EventStreams.runToMemory(c, out.toDF(), name,
               org.apache.spark.sql.streaming.OutputMode.Update())
             .orderBy("user_id", "event_type")
-        } finally {
-          prevProv match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
       },
       Some("""SELECT user_id, event_type, COUNT(*) AS n FROM events
@@ -3943,23 +3907,12 @@ object AnalyticsQueries {
     Q("events_stream_session_timeout",
       (s, dir) => {
         val (src, work) = stageStreamWork(dir)
-        val prevProv = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
+        GraftSession.withConf(s, rocksDbStreamConf) { c =>
           val out = graft.streaming.EventStreams.sessionTimeoutStream(
-            graft.streaming.EventStreams.readEvents(s, src),
-            gapUs = 86400L * 1000000L)(s)
-          graft.streaming.EventStreams.runToParquet(s, out.toDF(), work)
+            graft.streaming.EventStreams.readEvents(c, src),
+            gapUs = 86400L * 1000000L)(c)
+          graft.streaming.EventStreams.runToParquet(c, out.toDF(), work)
             .orderBy("user_id", "session_start_us")
-        } finally {
-          prevProv match {
-            case Some(v) => s.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-            case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
         }
       },
       Some("""WITH e AS (SELECT user_id, CAST(ts AS TIMESTAMP) AS ts FROM events

@@ -19,17 +19,15 @@ object Tables {
     if (name == "events") events(spark, dir) else spark.read.parquet(s"$dir/$name.parquet")
 
   /** `events.ts` has drifted across fixture generations — nanos
-    * int64 (no native Spark type; the legacy conf surfaces it as
-    * LongType), now plain timestamp[us] (TIMESTAMP_NTZ). Branch on
+    * int64 (no native Spark type; the legacy conf that
+    * `GraftSession.local` sets surfaces it as LongType), now plain timestamp[us] (TIMESTAMP_NTZ). Branch on
     * the type the footer actually carries instead of assuming a
     * vintage, so a regeneration can't silently break every events
     * read again. All sessions pin spark.sql.session.timeZone=UTC
     * (GraftSession.local), so the NTZ->instant cast is a pure
     * reinterpretation. */
-  private def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  private def events(spark: SparkSession, dir: String): DataFrame =
     normalizeEventTs(spark.read.parquet(s"$dir/events.parquet"))
-  }
 
   /** Land `ts` as a UTC TimestampType column whatever physical type
     * the source read produced. Shared by the batch reader above and

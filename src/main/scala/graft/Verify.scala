@@ -4,17 +4,19 @@ import java.nio.file.{Files, Paths}
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: substring filter for a fast single-query dev loop
+    // optional 3rd arg: comma-separated name substrings for a fast dev
+    // loop over the queries matching any of them
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, q) => (s, o, Some(q))
+      case Array(s, o, q) => (s, o, Some(q.split(',').toSeq))
       case _ =>
-        System.err.println("usage: Verify <sfDir> <outDir> [queryNameSubstring]")
+        System.err.println("usage: Verify <sfDir> <outDir> [substring[,substring...]]")
         sys.exit(2)
     }
+    def wanted(name: String) = only.forall(_.exists(name.contains))
     val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.filter(kv => only.forall(kv._1.contains)).foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -40,7 +42,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
-      .filter(kv => only.forall(kv._1.contains))
+      .filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Storage hygiene for `localCheckpoint()`ed frames inside iterative
@@ -21,11 +22,17 @@ object Checkpoints {
 
   /** Unpersists the RDD blocks behind every `LogicalRDD` in `df`'s
     * analyzed plan — for a checkpointed frame (or a projection over
-    * one) that is exactly its own truncated-lineage RDD. Only call
-    * once NOTHING will read the frame again: a localCheckpointed RDD
-    * cannot be recomputed after its blocks are dropped. */
+    * one) that is exactly its own truncated-lineage RDD. Each RDD is
+    * unpersisted once, and not at all when already freed: a plan that
+    * joins a frame with itself holds its RDD several times, and Spark
+    * posts an unpersist event and logs a lineage warning per call.
+    * Only call once NOTHING will read the frame again: a
+    * localCheckpointed RDD cannot be recomputed after its blocks are
+    * dropped. */
   def free(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect {
-      case lr: LogicalRDD => lr
-    }.foreach(_.rdd.unpersist(blocking = false))
+      case lr: LogicalRDD => lr.rdd
+    }.distinctBy(_.id)
+      .filter(_.getStorageLevel != StorageLevel.NONE)
+      .foreach(_.unpersist(blocking = false))
 }

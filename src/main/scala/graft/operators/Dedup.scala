@@ -360,8 +360,6 @@ object Dedup {
   def clusters(pairs: DataFrame, aCol: String = "doc_a", bCol: String = "doc_b",
                maxIters: Int = 25): DataFrame = {
     val sym = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
-    val edges0 = sym.union(sym.select(col("dst"), col("src")))
-      .distinct().localCheckpoint()
     // Loop physical hygiene (LoopOpt scaladoc): partitions derived
     // from the MEASURED edge size, standing tables co-partitioned
     // once (edges by dst — the neighbor-min probe's key; labels by
@@ -371,9 +369,8 @@ object Dedup {
     // driver jobs per round (two eager checkpoints + a joined count);
     // now the single count materializes the lazy checkpoint and
     // probes in one job.
-    val spark = pairs.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(edges0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(sym.union(sym.select(col("dst"), col("src")))
+        .distinct().localCheckpoint()) { (edges0, nP) =>
       val edges = edges0.repartition(nP, col("dst")).localCheckpoint()
       Checkpoints.free(edges0) // re-materialized co-partitioned above
       var labels = edges.select(col("src").as("node")).distinct()

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.GraftSqlBridge.rebind
 import org.apache.spark.sql.functions._
 
 /**
@@ -50,13 +51,12 @@ object Graphs {
    * prefer `checkpoint()` with a checkpoint dir if executor loss
    * mid-loop must be survivable.
    */
-  def kCore(edges: DataFrame, k: Int, maxIters: Int = 50): DataFrame = {
-    var cur = edges.select("u", "v").localCheckpoint()
+  def kCore(edges: DataFrame, k: Int, maxIters: Int = 50): DataFrame =
     // loop physical hygiene — LoopOpt scaladoc (partitions from the
     // measured edge size, no per-round broadcast builds, no per-stage
     // AQE jobs or codegen compiles over KB-sized rounds)
-    LoopOpt.withLoopConf(cur.sparkSession,
-      LoopOpt.loopPartitions(cur.sparkSession, LoopOpt.statSize(cur))) {
+    LoopOpt.withLoopConf(edges.select("u", "v").localCheckpoint()) { (cur0, _) =>
+      var cur = cur0
       var n = cur.count()
       var it = 0
       var done = false
@@ -74,7 +74,6 @@ object Graphs {
       require(done, s"k-core peeling did not converge in $maxIters iterations")
       cur
     }
-  }
 
   /**
    * BFS HOP DISTANCES from a seed set: (node, dist) for every node
@@ -91,17 +90,14 @@ object Graphs {
    * oracle's fixed-depth recursive expansion can state exactly.
    */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int = 15): DataFrame = {
-    val sym0 = symmetric(edges).localCheckpoint()
     // loop physical hygiene (LoopOpt scaladoc); the edge list is
     // additionally co-partitioned by u so the frontier expansion join
     // is exchange-free every round (frontier comes out of a node-keyed
     // distinct, which the checkpoint preserves — guide §2.4)
-    val spark = sym0.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(sym0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(symmetric(edges).localCheckpoint()) { (sym0, nP) =>
       val sym = sym0.repartition(nP, col("u")).localCheckpoint()
       Checkpoints.free(sym0)
-      var visited = seeds.select(col("node")).distinct()
+      var visited = rebind(sym0.sparkSession, seeds).select(col("node")).distinct()
         .repartition(nP, col("node"))
         .withColumn("dist", lit(0L)).localCheckpoint()
       var frontier = visited
@@ -142,18 +138,15 @@ object Graphs {
    */
   def weightedHops(edges: DataFrame, seeds: DataFrame, rounds: Int = 12): DataFrame = {
     require(rounds >= 1, "at least one relaxation round")
-    val sym0 = edges.select(col("u"), col("v"), col("w"))
-      .union(edges.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .localCheckpoint()
     // loop physical hygiene (LoopOpt scaladoc); edges co-partitioned
     // by u so the relaxation join is exchange-free (dist comes out of
     // a node-keyed groupBy, preserved by the checkpoint — §2.4)
-    val spark = sym0.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(sym0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(edges.select(col("u"), col("v"), col("w"))
+        .union(edges.select(col("v").as("u"), col("u").as("v"), col("w")))
+        .localCheckpoint()) { (sym0, nP) =>
       val sym = sym0.repartition(nP, col("u")).localCheckpoint()
       Checkpoints.free(sym0)
-      var dist = seeds.select(col("node")).distinct()
+      var dist = rebind(sym0.sparkSession, seeds).select(col("node")).distinct()
         .repartition(nP, col("node"))
         .withColumn("dist", lit(0L)).localCheckpoint()
       var it = 0
@@ -201,14 +194,11 @@ object Graphs {
    */
   def coreNumbers(edges: DataFrame, maxIters: Int = 100): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sym0 = symmetric(edges).localCheckpoint()
     // loop physical hygiene (LoopOpt scaladoc); edges co-partitioned
     // by v — the neighbor-estimate probe's key — so the per-round join
     // is exchange-free (est comes out of a node-keyed aggregate,
     // preserved by the checkpoint — §2.4)
-    val spark = sym0.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(sym0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(symmetric(edges).localCheckpoint()) { (sym0, nP) =>
       val sym = sym0.repartition(nP, col("v")).localCheckpoint()
       Checkpoints.free(sym0)
       var est = sym.groupBy(col("u").as("node"))
@@ -308,13 +298,11 @@ object Graphs {
     // checkpoint the edge table: before this every round's frontier
     // join re-executed the edges plan (a per-round re-scan); with the
     // loop conf (LoopOpt scaladoc) each climb level is one small job
-    val e0 = edges.select(col("child"), col("parent")).distinct().localCheckpoint()
-    val spark = e0.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(e0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(
+        edges.select(col("child"), col("parent")).distinct().localCheckpoint()) { (e0, nP) =>
       val e = e0.repartition(nP, col("child")).localCheckpoint()
       Checkpoints.free(e0)
-      var acc = contrib.select(col("node"), col("w"))
+      var acc = rebind(e0.sparkSession, contrib).select(col("node"), col("w"))
       var frontier = acc.repartition(nP, col("node")).localCheckpoint()
       var n = frontier.count()
       var it = 0
@@ -361,10 +349,7 @@ object Graphs {
     // checkpoint the edge list: every hop joins it, and an un-
     // materialized `sym` re-executed its whole upstream plan per hop;
     // loop conf per LoopOpt scaladoc
-    val symC = sym.localCheckpoint()
-    val spark = symC.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(symC))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(sym.localCheckpoint()) { (symC, _) =>
       val nodes = symC.select(col("u").as("node")).distinct().localCheckpoint()
       var state = nodes.groupBy("node")
         .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk")).localCheckpoint()
@@ -503,14 +488,11 @@ object Graphs {
       .join(transitions.select(col("dst").as("src")).distinct(), Seq("src"), "left_semi")
       .join(transitions.select(col("src").as("dst")).distinct(), Seq("dst"), "left_semi")
     val totals = core.groupBy("src").agg(sum("n").as("row_total"))
-    val matrix0 = core.join(totals, "src").localCheckpoint()
     // loop physical hygiene (LoopOpt scaladoc); matrix co-partitioned
     // by src so the per-round (matrix ⋈ pi) join is exchange-free (pi
     // comes out of a state-keyed exchange, preserved by the
     // checkpoint — §2.4)
-    val spark = matrix0.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(matrix0))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(core.join(totals, "src").localCheckpoint()) { (matrix0, nP) =>
       val matrix = matrix0.repartition(nP, col("src")).localCheckpoint()
       Checkpoints.free(matrix0)
       val states = matrix.select(col("src").as("state"))
@@ -559,13 +541,12 @@ object Graphs {
     // contribution groupBy), broadcast auto-conversion off inside the
     // loop (each round's BHJ was a driver collect + torrent rebuild
     // of state that changes every round).
-    val spark = e.sparkSession
-    val nP = LoopOpt.loopPartitions(spark, LoopOpt.statSize(e))
-    LoopOpt.withLoopConf(spark, nP) {
+    LoopOpt.withLoopConf(e) { (e, nP) =>
+      val s = e.sparkSession
       val ep = e.repartition(nP, col("src")).localCheckpoint()
       val outdeg = ep.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
-      var st = nodes.join(outdeg, Seq("node"), "left")
-        .join(init, "node")
+      var st = rebind(s, nodes).join(outdeg, Seq("node"), "left")
+        .join(rebind(s, init), "node")
         .select(col("node"), col("base"), col("d"), col("r"))
         .repartition(nP, col("node"))
         .localCheckpoint()

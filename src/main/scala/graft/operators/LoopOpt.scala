@@ -21,7 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    task launches per tiny stage.
  *  - [[withLoopConf]]: run the loop body with that partition count
  *    and with broadcast-join auto-conversion OFF (both the planner's
- *    and AQE's thresholds), restoring the session conf afterwards.
+ *    and AQE's thresholds), on a session scope
+ *    ([[graft.GraftSession.withConf]]) — the caller's session, and
+ *    every query other threads plan on it, keep their own conf.
  *    Inside a loop every broadcast is a per-round driver collect +
  *    torrent rebuild of state that changes every round — the
  *    co-partitioned sort-merge join over the checkpointed frames
@@ -59,39 +61,32 @@ object LoopOpt {
   def loopPartitions(spark: SparkSession, bytes: Long): Int = {
     val ceil = spark.sessionState.conf.numShufflePartitions
     val want = math.max(1L, (bytes + BytesPerPartition - 1) / BytesPerPartition)
-    val r = math.min(ceil.toLong, want).toInt
-    if (sys.env.contains("GRAFT_LOOP_DEBUG")) println(s"[loopopt] bytes=$bytes nP=$r")
-    r
+    math.min(ceil.toLong, want).toInt
   }
 
-  /** Runs `body` with the loop conf set (shuffle partitions = `nP`,
-    * broadcast auto-conversion off) and ALWAYS restores the caller's
-    * values — loops run many actions inside, and each action plans
-    * under the session conf current at its submission. */
-  def withLoopConf[A](spark: SparkSession, nP: Int)(body: => A): A = {
-    val conf = spark.conf
-    val keys = Seq(
-      "spark.sql.shuffle.partitions",
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.enabled",
-      "spark.sql.codegen.wholeStage")
-    val saved = keys.map(k => k -> conf.getOption(k))
-    conf.set("spark.sql.codegen.wholeStage", "false")
-    conf.set("spark.sql.shuffle.partitions", nP.toString)
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    // AQE has nothing left to do inside the loop (partitions already
-    // sized from the measured state, joins co-partitioned so there is
-    // no shuffle to re-plan or skew-split) — but it still submits
-    // every exchange as its own stage job: measured 5 driver jobs per
-    // pageRank round vs 1 without it, and the loop wall is pure
-    // driver-job latency at bench scale. Off inside the loop only.
-    conf.set("spark.sql.adaptive.enabled", "false")
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None) => conf.unset(k)
+  /** Runs `body` on a session scope ([[graft.GraftSession.withConf]])
+    * with the loop conf: shuffle partitions = [[loopPartitions]] of
+    * `state`'s measured size, broadcast auto-conversion off. `body`
+    * gets `state` rebound to the scope and the partition count; any
+    * other outer frame it reads must be rebound to the scope too
+    * (`GraftSqlBridge.rebind(state.sparkSession, df)`), or its actions
+    * plan under the caller's conf. A DataFrame result comes back bound
+    * to the caller's session. */
+  def withLoopConf[A](state: DataFrame)(body: (DataFrame, Int) => A): A = {
+    val nP = loopPartitions(state.sparkSession, statSize(state))
+    graft.GraftSession.withConf(state.sparkSession, Map(
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.shuffle.partitions" -> nP.toString,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      // AQE has nothing left to do inside the loop (partitions already
+      // sized from the measured state, joins co-partitioned so there is
+      // no shuffle to re-plan or skew-split) — but it still submits
+      // every exchange as its own stage job: measured 5 driver jobs per
+      // pageRank round vs 1 without it, and the loop wall is pure
+      // driver-job latency at bench scale. Off inside the loop only.
+      "spark.sql.adaptive.enabled" -> "false")) { s =>
+      body(org.apache.spark.sql.GraftSqlBridge.rebind(s, state), nP)
     }
   }
 }

@@ -38,7 +38,6 @@ object EventStreams {
     * ACTUAL type via [[graft.Tables.normalizeEventTs]]. */
   def readEvents(spark: SparkSession, path: String,
                  maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val r = spark.readStream.schema(footerSchema(spark, path))
     maxFilesPerTrigger.foreach(n => r.option("maxFilesPerTrigger", n))
     graft.Tables.normalizeEventTs(r.parquet(path))
@@ -2526,31 +2525,25 @@ object EventStreams {
    * partition EVERY micro-batch, so the session default (sized for
    * batch shuffles) over-pays at small state volumes — state-partition
    * count is a per-query capacity decision (state volume / executor
-   * memory), frozen into the checkpoint on first run. The conf is set
-   * for the blocking run and restored after. NOTE the conf is
-   * SESSION-scoped: a concurrently planned query on the same session
-   * would observe the temporary value — callers running queries in
-   * parallel should pass None (or plan on a separate session).
+   * memory), frozen into the checkpoint on first run. The stream
+   * starts on a session scope ([[graft.GraftSession.withConf]]) with
+   * that many shuffle partitions; `spark`'s own conf is not touched.
    */
   def runToParquet(spark: SparkSession, streamed: DataFrame, workDir: String,
-                   statePartitions: Option[Int] = None): DataFrame =
-    statePartitions match {
-      case None => runToParquetInner(spark, streamed, workDir)
-      case Some(n) =>
-        val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-        try runToParquetInner(spark, streamed, workDir)
-        finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
-
-  private def runToParquetInner(spark: SparkSession, streamed: DataFrame,
-                                workDir: String): DataFrame = {
+                   statePartitions: Option[Int] = None): DataFrame = {
     val out = s"$workDir/out"
-    runAvailableNow(streamed.writeStream
+    def run(df: DataFrame): Unit = runAvailableNow(df.writeStream
       .format("parquet")
       .option("path", out)
       .option("checkpointLocation", s"$workDir/ckpt")
       .outputMode(OutputMode.Append()))
+    statePartitions match {
+      case None => run(streamed)
+      case Some(n) => graft.GraftSession.withConf(spark,
+        Map("spark.sql.shuffle.partitions" -> n.toString)) { s =>
+        run(org.apache.spark.sql.GraftSqlBridge.rebind(s, streamed))
+      }
+    }
     // explicit schema: when NO window closed (corpus shorter than
     // watermark + window), the sink directory holds only the metadata
     // log and a schema-inferring read would throw instead of

@@ -1690,32 +1690,23 @@ object ScaleStress {
       }
     }
     if (wanted("stream")) {
-      // restore after the section: legacy nanos-as-long would leak a
-      // silently different timestamp schema into later sections
-      val prevNanos = spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong")
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      try {
-        val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
-        ev0.count() // warm
-        multiples.foreach { m =>
-          val feed = (0 until m).map(i =>
-            ev0.withColumn("event_id", col("event_id") + lit(i * 100000000L)))
-            .reduce(_ unionByName _)
-          val n = feed.count()
-          val work = graft.CacheDirs.tempWorkDir("graft_stress_stream_")
-          feed.write.parquet(s"$work/feed")
-          val t0 = System.nanoTime()
-          val out = graft.streaming.EventStreams.runToParquet(spark,
-            graft.streaming.EventStreams.tumblingCounts(
-              graft.streaming.EventStreams.readEvents(spark, s"$work/feed")),
-            s"$work/run", statePartitions = Some(8)).count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          println(f"SCALE stream  m=$m%2d rows=$n%7d out=$out%9d time=$dt%7.1fs")
-          graft.CacheDirs.deleteRecursively(work.toFile)
-        }
-      } finally prevNanos match {
-        case Some(v) => spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", v)
-        case None => spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+      val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
+      ev0.count() // warm
+      multiples.foreach { m =>
+        val feed = (0 until m).map(i =>
+          ev0.withColumn("event_id", col("event_id") + lit(i * 100000000L)))
+          .reduce(_ unionByName _)
+        val n = feed.count()
+        val work = graft.CacheDirs.tempWorkDir("graft_stress_stream_")
+        feed.write.parquet(s"$work/feed")
+        val t0 = System.nanoTime()
+        val out = graft.streaming.EventStreams.runToParquet(spark,
+          graft.streaming.EventStreams.tumblingCounts(
+            graft.streaming.EventStreams.readEvents(spark, s"$work/feed")),
+          s"$work/run", statePartitions = Some(8)).count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        println(f"SCALE stream  m=$m%2d rows=$n%7d out=$out%9d time=$dt%7.1fs")
+        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Bucketed co-located join: the bucketed WRITE pays the one-time
@@ -1744,13 +1735,12 @@ object ScaleStress {
         li.write.bucketBy(32, "l_orderkey").sortBy("l_orderkey").saveAsTable(s"$db.li_b")
         or.write.bucketBy(32, "l_orderkey").sortBy("l_orderkey").saveAsTable(s"$db.or_b")
         val tw = (System.nanoTime() - t0) / 1e9
-        val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         val t1 = System.nanoTime()
-        val out =
-          try spark.table(s"$db.li_b").join(spark.table(s"$db.or_b"), "l_orderkey")
+        val out = graft.GraftSession.withConf(spark,
+            Map("spark.sql.autoBroadcastJoinThreshold" -> "-1")) { s =>
+          s.table(s"$db.li_b").join(s.table(s"$db.or_b"), "l_orderkey")
             .groupBy("o_orderstatus").count().count()
-          finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+        }
         val tj = (System.nanoTime() - t1) / 1e9
         println(f"SCALE bucket  m=$m%2d rows=$n%8d out=$out%9d write=$tw%7.1fs join=$tj%7.1fs")
         spark.sql(s"DROP DATABASE $db CASCADE")

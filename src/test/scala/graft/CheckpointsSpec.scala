@@ -29,6 +29,34 @@ class CheckpointsSpec extends SparkTestBase {
     assert(persisted === before)
   }
 
+  test("Checkpoints.free unpersists each RDD once and skips freed ones") {
+    // the ContextCleaner also posts unpersist events for collected RDDs
+    // of earlier tests: count only the events for `df`'s own RDDs
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onUnpersistRDD(e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        unpersisted.add(e.rddId)
+    }
+    def posted(df: org.apache.spark.sql.DataFrame): Int = {
+      val ids = df.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }.toSet
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+      unpersisted.clear()
+      graft.operators.Checkpoints.free(df)
+      org.apache.spark.sql.GraftSqlBridge.drainListeners(spark.sparkContext)
+      unpersisted.toArray.count(id => ids.contains(id.asInstanceOf[Int]))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val spine = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
+      assert(posted(spine.join(spine, "x")) === 1) // two plan occurrences, one RDD
+      val spine2 = Seq(4L, 5L).toDF("x").localCheckpoint()
+      assert(posted(spine2) === 1)
+      assert(posted(spine2.join(spine2, "x")) === 0) // already freed
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   test("pageRank loop storage stays bounded across rounds") {
     val before = persisted
     // a ring mixes slowly — guarantees multiple power rounds
