@@ -561,4 +561,221 @@ class OrchestrationSpec extends SparkTestBase {
       case st => fail(s"expected Failed, got $st")
     }
   }
+
+  // ---- LOAD pin table: strategy x saveMode x destination ----
+  // Each cell loads `loadNew` (two bad rows: a null key and an
+  // unparsable amount) into a copy of a destination and error file that
+  // an earlier ROUTE_TO_FILE load of `loadOld` left behind (or into
+  // nothing, for the `fresh` cells), and pins the job status, the
+  // written and failed counts, the destination listing (UUIDs and .crc
+  // files left out), the destination's ids and the error-CSV content
+  // (header, then its rows sorted: row order across part files is not
+  // part of the contract).
+
+  private lazy val loadWork = tmpDir("load_pin")
+  private def loadCsv(name: String, rows: String*): String = {
+    val f = java.nio.file.Paths.get(loadWork, s"$name.csv")
+    if (!java.nio.file.Files.exists(f))
+      java.nio.file.Files.writeString(f, ("id,name,amount,region" +: rows).mkString("", "\n", "\n"))
+    f.toString
+  }
+  private def loadOld = loadCsv("old", "100,olda,1.00,north", "101,oldb,2.00,south", ",oldc,3.00,north")
+  private def loadNew = loadCsv("new", "1,alice,10.50,north", "2,bob,x,south", ",carol,3.25,north",
+    "4,\"dave, jr\",7.00,south", "5,erin,1.00,east")
+  private def loadClean = loadCsv("clean", "1,alice,10.50,north", "4,\"dave, jr\",7.00,south",
+    "5,erin,1.00,east")
+
+  private val loadDests: Map[String, graft.model.ConnectionDetails => graft.model.DestinationConfig] = {
+    import graft.model.DestinationConfig
+    val keyed = (c: graft.model.ConnectionDetails) =>
+      c.copy(partitionKeys = List("region"), sortKeys = List("id"))
+    Map(
+      "parquet" -> (c => DestinationConfig("PARQUET", c)),
+      "csv" -> (c => DestinationConfig("CSV", c)),
+      "parquet_keys" -> (c => DestinationConfig("PARQUET", keyed(c))),
+      "csv_keys" -> (c => DestinationConfig("CSV", keyed(c))),
+      "orc" -> (c => DestinationConfig("ORC", c)),
+      "orc_keys" -> (c => DestinationConfig("ORC", keyed(c))),
+      "json" -> (c => DestinationConfig("JSON", c)),
+      "json_keys" -> (c => DestinationConfig("JSON", keyed(c))),
+      "xml" -> (c => DestinationConfig("XML", c)))
+  }
+
+  private val loadStrategies: Map[String, graft.model.ErrorHandling] = Map(
+    "FAIL_JOB" -> graft.model.ErrorHandling("FAIL_JOB"),
+    "LOG_ONLY" -> graft.model.ErrorHandling("LOG_ONLY"),
+    "LOG_ONLY_max1" -> graft.model.ErrorHandling("LOG_ONLY", maxErrorsAllowed = 1),
+    "LOG_ONLY_max5" -> graft.model.ErrorHandling("LOG_ONLY", maxErrorsAllowed = 5),
+    "ROUTE_TO_FILE" -> graft.model.ErrorHandling("ROUTE_TO_FILE"),
+    "ROUTE_TO_FILE_max1" -> graft.model.ErrorHandling("ROUTE_TO_FILE", maxErrorsAllowed = 1))
+
+  private def loadJob(id: String, src: String, dest: graft.model.DestinationConfig,
+                      eh: graft.model.ErrorHandling) = graft.model.JobConfig(
+    jobId = id,
+    source = graft.model.SourceConfig("CSV",
+      graft.model.ConnectionDetails(path = Some(src), includeHeader = Some(true))),
+    destination = Some(dest),
+    mappings = List(
+      graft.model.FieldMapping("id", "id", destFieldType = "LONG", isDestNullable = false),
+      graft.model.FieldMapping("name", "name"),
+      graft.model.FieldMapping("amount", "amount", destFieldType = "DECIMAL(10,2)", isDestNullable = false),
+      graft.model.FieldMapping("region", "region")),
+    errorHandling = eh,
+    steps = List("LOAD"))
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(from)) {
+      val s = java.nio.file.Files.walk(from)
+      try s.forEach(p => java.nio.file.Files.copy(p, to.resolve(from.relativize(p).toString)))
+      finally s.close()
+    }
+
+  private def listing(dir: String): String = {
+    val root = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(root)) "-"
+    else {
+      val s = java.nio.file.Files.walk(root)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
+        .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+        .filterNot(_.endsWith(".crc"))
+        .map(_.replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "*"))
+        .sorted.mkString(" ")
+      finally s.close()
+    }
+  }
+
+  private def errorCsv(dir: String): String = {
+    val root = new java.io.File(dir)
+    if (!root.exists()) "-"
+    else {
+      val files = root.listFiles().filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
+      val lines = files.map(f => java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString))
+      val headers = lines.flatMap(_.headOption).distinct
+      (headers ++ lines.flatMap(_.drop(1)).sorted).mkString("|")
+    }
+  }
+
+  private def destIds(kind: String, dir: String): String =
+    if (!new java.io.File(dir).exists()) "-"
+    else spark.read.format(kind.takeWhile(_ != '_')).option("header", "true").option("rowTag", "row").load(dir)
+      .select(col("id").cast("long")).collect().map(_.getLong(0)).sorted.mkString(",")
+
+  /** Runs one cell and renders what it pins. */
+  private def loadCell(dest: String, strategy: String, mode: String, fresh: Boolean,
+                       src: String = loadNew): String = {
+    val cell = s"$dest-$strategy-$mode-${if (fresh) "fresh" else "existing"}-${if (src == loadClean) "clean" else "new"}"
+    val dir = java.nio.file.Paths.get(loadWork, "cells", cell)
+    java.nio.file.Files.createDirectories(dir)
+    if (!fresh) copyTree(java.nio.file.Paths.get(loadWork, "prior", dest), dir.resolve("out"))
+    val out = dir.resolve("out")
+    def conn(p: java.nio.file.Path) = graft.model.ConnectionDetails(path = Some(p.resolve("orders").toString))
+    val eh = loadStrategies(strategy).copy(errorFilePath = Some(out.resolve("errors").toString))
+    val r = JobRunner.run(spark, loadJob(cell, src, loadDests(dest)(conn(out)).copy(saveMode = mode), eh))
+    val status = r.status match {
+      case JobRunner.Failed(m) => s"Failed(${m.replace(dir.toString, "<cell>").takeWhile(_ != '.')})"
+      case s => s.toString
+    }
+    s"$status ${r.recordsWritten} ${r.recordsFailed} [${listing(out.resolve("orders").toString)}] " +
+      s"[${destIds(dest, out.resolve("orders").toString)}] [${errorCsv(out.resolve("errors").toString)}]"
+  }
+
+  private def loadPriors(dests: Iterable[String]): Unit = dests.foreach { d =>
+    val out = java.nio.file.Paths.get(loadWork, "prior", d)
+    if (!java.nio.file.Files.exists(out)) {
+      val r = JobRunner.run(spark, loadJob(s"prior-$d", loadOld,
+        loadDests(d)(graft.model.ConnectionDetails(path = Some(out.resolve("orders").toString))),
+        graft.model.ErrorHandling("ROUTE_TO_FILE", Some(out.resolve("errors").toString))))
+      assert(r.status == JobRunner.Completed, r.message)
+    }
+  }
+
+  /** What a cell leaves: the destination as the earlier load left it
+    * (`old`), replaced by this load (`new`), both loads' files (`both`)
+    * or no destination (`none`); and the error CSV of the earlier load
+    * (`old`), of this load (`new`) or none. */
+  private val loadIds = Map("old" -> "100,101", "new" -> "1,4,5", "both" -> "1,4,5,100,101", "none" -> "-")
+  private val loadErrors = Map("old" -> "id,name,amount,region|,oldc,3.00,north",
+    "new" -> "id,name,amount,region|,carol,3.25,north|2,bob,,south", "none" -> "-")
+  private def loadListing(dest: String, state: String): String = {
+    val ext = Map("parquet" -> ".snappy.parquet", "csv" -> ".csv", "orc" -> ".zstd.orc",
+      "json" -> ".json", "xml" -> ".xml")(dest.takeWhile(_ != '_'))
+    val regions = state match {
+      case "old" => Seq("north", "south")
+      case "new" => Seq("east", "north", "south")
+      case "both" => Seq("east", "north", "north", "south", "south")
+      case _ => return "-"
+    }
+    val files =
+      if (dest.endsWith("_keys")) regions.map(r => s"region=$r/part-00000-*.c000$ext")
+      else Seq.fill(if (state == "both") 2 else 1)(s"part-00000-*-c000$ext")
+    ("_SUCCESS" +: files).mkString(" ")
+  }
+
+  private val nullKeyFail = "Failed(null constraint violated on non-nullable column(s) id,amount (strategy=FAIL_JOB)) 0 0"
+  private val overCapFail = "Failed(recordsFailed=2 exceeds maxErrorsAllowed=1) 0 0"
+  private val existsFail = "Failed([PATH_ALREADY_EXISTS] Path file:<cell>/out/orders already exists) 0 0"
+
+  /** (strategy, saveMode) -> status, written, failed, destination, error CSV. */
+  private val loadOutcomes: Map[(String, String), String] = Map(
+    ("FAIL_JOB", "overwrite") -> s"$nullKeyFail old old",
+    ("FAIL_JOB", "append") -> s"$nullKeyFail old old",
+    ("FAIL_JOB", "ignore") -> s"$nullKeyFail old old",
+    ("FAIL_JOB", "errorifexists") -> s"$nullKeyFail old old",
+    ("LOG_ONLY", "overwrite") -> "Completed 3 2 new old",
+    ("LOG_ONLY", "append") -> "Completed 3 2 both old",
+    // ignore onto an existing destination runs no write, so the
+    // observed count stays 0
+    ("LOG_ONLY", "ignore") -> "Completed 0 0 old old",
+    ("LOG_ONLY", "errorifexists") -> s"$existsFail old old",
+    ("LOG_ONLY_max1", "overwrite") -> s"$overCapFail old old",
+    ("LOG_ONLY_max1", "append") -> s"$overCapFail old old",
+    ("LOG_ONLY_max1", "ignore") -> s"$overCapFail old old",
+    ("LOG_ONLY_max1", "errorifexists") -> s"$overCapFail old old",
+    ("LOG_ONLY_max5", "overwrite") -> "Completed 3 2 new old",
+    ("LOG_ONLY_max5", "append") -> "Completed 3 2 both old",
+    ("LOG_ONLY_max5", "ignore") -> "Completed 0 2 old old",
+    ("LOG_ONLY_max5", "errorifexists") -> s"$existsFail old old",
+    ("ROUTE_TO_FILE", "overwrite") -> "Completed 3 2 new new",
+    ("ROUTE_TO_FILE", "append") -> "Completed 3 2 both new",
+    // the error file is written even where the destination write is
+    // skipped or refused
+    ("ROUTE_TO_FILE", "ignore") -> "Completed 0 2 old new",
+    ("ROUTE_TO_FILE", "errorifexists") -> s"$existsFail old new",
+    ("ROUTE_TO_FILE_max1", "overwrite") -> s"$overCapFail old new",
+    ("ROUTE_TO_FILE_max1", "append") -> s"$overCapFail old new",
+    ("ROUTE_TO_FILE_max1", "ignore") -> s"$overCapFail old new",
+    ("ROUTE_TO_FILE_max1", "errorifexists") -> s"$overCapFail old new")
+
+  /** FAIL_JOB over a source without bad rows. */
+  private val cleanOutcomes: Map[String, String] = Map(
+    "overwrite" -> "Completed 3 0 new old",
+    "append" -> "Completed 3 0 both old",
+    "ignore" -> "Completed 0 0 old old",
+    "errorifexists" -> s"$existsFail old old")
+
+  /** No destination and no error file before the load. */
+  private val freshOutcomes: Map[String, String] = Map(
+    "FAIL_JOB" -> s"$nullKeyFail none none",
+    "ROUTE_TO_FILE" -> "Completed 3 2 new new")
+
+  test("LOAD pin table: status, counts, destination listing and error CSV per strategy and saveMode") {
+    val modes = Seq("overwrite", "append", "ignore", "errorifexists")
+    val full = Seq("parquet", "csv", "parquet_keys")
+    val cells =
+      (for (d <- full; s <- loadStrategies.keys.toSeq.sorted; m <- modes)
+        yield (d, s, m, false, loadNew, loadOutcomes((s, m)))) ++
+      (for (d <- full; m <- modes) yield (d, "FAIL_JOB", m, false, loadClean, cleanOutcomes(m))) ++
+      (for (m <- modes; s <- Seq("FAIL_JOB", "ROUTE_TO_FILE"))
+        yield ("parquet", s, m, true, loadNew, freshOutcomes(s))) ++
+      (for (d <- Seq("csv_keys", "orc", "orc_keys", "json", "json_keys", "xml"); m <- Seq("overwrite", "append"))
+        yield (d, "ROUTE_TO_FILE", m, false, loadNew, loadOutcomes(("ROUTE_TO_FILE", m))))
+    loadPriors(cells.map(_._1).distinct)
+    val wrong = cells.flatMap { case (d, s, m, fresh, src, outcome) =>
+      val Array(status, dest, errors) = outcome.split(" (?=(old|new|both|none)( |$))", 3)
+      val want = s"$status [${loadListing(d, dest)}] [${loadIds(dest)}] [${loadErrors(errors)}]"
+      val got = loadCell(d, s, m, fresh, src)
+      if (got == want) None else Some(s"$d $s $m fresh=$fresh clean=${src == loadClean}\n  got  $got\n  want $want")
+    }
+    assert(wrong.isEmpty, s"${wrong.size} of ${cells.size} cells differ:\n${wrong.mkString("\n")}")
+  }
 }
