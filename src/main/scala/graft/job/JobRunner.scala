@@ -214,6 +214,8 @@ object JobRunner {
     var stepsRun = List.empty[String]
     var written = 0L
     var failedRows = 0L
+    // the schema LOAD wrote: VALIDATE_LOAD reads back with it
+    var loadSchema: Option[org.apache.spark.sql.types.StructType] = None
     registryPut(configKey, JobResult(cfg.jobId, configKey, Running, 0, 0, Nil, ""))
     spark.sparkContext.setJobGroup(configKey, s"graft job ${cfg.jobId}", interruptOnCancel = true)
     val steps = if (cfg.steps.nonEmpty) cfg.steps else List("LOAD", "NOTIFY_SUCCESS")
@@ -323,25 +325,17 @@ object JobRunner {
             }
             // Written/failed counts ride the write itself as observed
             // metrics (CollectMetrics) — one pass, no persist of the full
-            // dataset. At 100 TB a persist+count doubles storage; observe
-            // is free. E4: driver-side retry around the whole write; the
-            // observations are created PER ATTEMPT — Spark completes an
-            // observation even for a FAILED execution, so reusing one
-            // across attempts would freeze the first (failed) attempt's
-            // partial counts.
-            var counts: (Long, () => Long) = null
-            Retry.withRetry() { () =>
-              val enforced = ErrorPolicy.enforceObserved(
-                mappedSource(), cfg.mappings, cfg.errorHandling)
-              val loadObs = org.apache.spark.sql.Observation(s"graft_load_${seq.incrementAndGet()}")
-              val counted = enforced.good.observe(loadObs, org.apache.spark.sql.functions.count(
-                org.apache.spark.sql.functions.lit(1)).as("rows"))
-              Writers.write(counted, dest)
-              counts = (loadObs.get.get("rows").map(_.asInstanceOf[Number].longValue).getOrElse(0L),
-                enforced.rejected)
+            // dataset (ErrorPolicy.load). E4: driver-side retry around the
+            // whole write; the observations are created PER ATTEMPT —
+            // Spark completes an observation even for a FAILED execution,
+            // so reusing one across attempts would freeze the first
+            // (failed) attempt's partial counts.
+            val (w, f) = Retry.withRetry() { () =>
+              ErrorPolicy.load(mappedSource(), cfg.mappings, cfg.errorHandling, dest)
             }
-            written = counts._1
-            failedRows = counts._2()
+            written = w
+            failedRows = f
+            loadSchema = Some(mappedSource().schema)
             stepsRun ::= step
           case "LOAD_SNAPSHOT" =>
             // LOAD into a VERSIONED destination: the mapped batch
@@ -901,15 +895,21 @@ object JobRunner {
             // WRITER's effective options — CSV writes header=true by
             // default while a bare CSV read assumes headerless, which
             // would count header lines as data rows.
+            // After a LOAD into a file destination, the read-back takes
+            // the schema it wrote, so no inference job runs.
             cfg.destination.foreach { dest =>
-              val readBack = dest.`type`.toUpperCase match {
-                case "CSV" | "FLAT_FILE" | "DELIMITED" =>
-                  dest.connectionDetails.copy(includeHeader =
-                    Some(dest.connectionDetails.includeHeader.getOrElse(true)))
-                case _ => dest.connectionDetails
+              val back = (loadSchema, dest.connectionDetails.pathOrFile) match {
+                case (Some(schema), Some(path)) if Writers.fileFormat(dest).isDefined =>
+                  Writers.readFiles(spark, dest, path, schema)
+                case _ =>
+                  val readBack = dest.`type`.toUpperCase match {
+                    case "CSV" | "FLAT_FILE" | "DELIMITED" =>
+                      dest.connectionDetails.copy(includeHeader =
+                        Some(dest.connectionDetails.includeHeader.getOrElse(true)))
+                    case _ => dest.connectionDetails
+                  }
+                  Readers.forConfig(spark, SourceConfig(dest.`type`, readBack), cfg.mappings)
               }
-              val back = Readers.forConfig(spark,
-                SourceConfig(dest.`type`, readBack), cfg.mappings)
               val n = back.count()
               if (n != written)
                 throw new ErrorPolicy.JobFailedException(s"VALIDATE_LOAD: wrote $written but destination has $n")

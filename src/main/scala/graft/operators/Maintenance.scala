@@ -43,7 +43,7 @@ object Maintenance {
     * from Spark's discovery) or `<base><marker><uuid8>` (legacy,
     * written before the hidden scheme) — both must stay recognizable
     * or the stranded-swap guard goes blind across an upgrade. */
-  private val artifactRx = "^(_?)(.+?)_(old|merge|compact)_[0-9a-f]{8}$".r
+  private val artifactRx = "^(_?)(.+?)_(old|merge|compact|load)_[0-9a-f]{8}$".r
 
   private[operators] def artifactBase(name: String): Option[(String, String)] =
     name match {
@@ -83,40 +83,73 @@ object Maintenance {
   /**
    * Crash-safe replacement of `dest` with data written by
    * `writeStaged` (which receives the staging path, a sibling of
-   * `dest` named `_<dest><marker><uuid8>`). The leading underscore
-   * hides staging and rollback dirs from Spark's file/partition
-   * discovery, so a concurrent reader of the PARENT (a hive root
-   * whose leaf is mid-swap, a glob) never sees a transient non-data
-   * directory. Swap is rename-aside, NOT delete-then-rename: a crash
-   * between a delete and the rename-in would leave no destination at
-   * all, and a rerun would silently treat the job as a first load —
-   * the old data stays addressable (as `_<dest>_old_<uuid8>`) until
-   * the new data is in place. `err` builds the exception for swap
-   * failures, so the job layer can surface its own failure type.
+   * `dest` named `_<dest><marker><uuid8>`): `withStaging`, then
+   * `swapIn`. `err` builds the exception for swap failures, so the job
+   * layer can surface its own failure type.
    */
   def replaceDir(fs: FileSystem, dest: Path, marker: String,
                  writeStaged: String => Unit,
-                 err: String => Exception): Unit = {
+                 err: String => Exception): Unit =
+    withStaging(fs, dest, marker) { staged =>
+      writeStaged(staged.toString)
+      swapIn(fs, staged, dest, err)
+    }
+
+  /** Runs `body` on a fresh staging path beside `dest`,
+    * `_<dest><marker><uuid8>`, and removes whatever is left there
+    * afterwards, on success and on failure. The leading underscore
+    * hides staging and rollback dirs from Spark's file/partition
+    * discovery, so a concurrent reader of the PARENT (a hive root
+    * whose leaf is mid-swap, a glob) never sees a transient non-data
+    * directory. */
+  def withStaging[A](fs: FileSystem, dest: Path, marker: String)(body: Path => A): A = {
     val parent = dest.getParent
     require(parent != null, s"cannot swap a filesystem root: $dest")
-    val suffix = java.util.UUID.randomUUID().toString.take(8)
-    val staged = new Path(parent, s"_${dest.getName}$marker$suffix")
-    try {
-      writeStaged(staged.toString)
-      val old = new Path(parent, s"_${dest.getName}_old_$suffix")
-      val hadPrev = fs.exists(dest)
-      if (hadPrev && !fs.rename(dest, old))
-        throw err(s"could not move current $dest aside")
-      if (!fs.rename(staged, dest)) {
-        val restored = !hadPrev || fs.rename(old, dest)
-        throw err(s"could not move staged rewrite into $dest" +
-          (if (restored) "" else s"; RESTORE ALSO FAILED — previous data is at $old"))
-      }
-      if (hadPrev) fs.delete(old, true)
-    } finally {
-      if (fs.exists(staged)) fs.delete(staged, true)
-    }
+    val staged = new Path(parent, s"_${dest.getName}$marker${java.util.UUID.randomUUID().toString.take(8)}")
+    try body(staged)
+    finally if (fs.exists(staged)) fs.delete(staged, true)
   }
+
+  /** Moves the directory `src` into `dest`'s place. Swap is
+    * rename-aside, NOT delete-then-rename: a crash between a delete and
+    * the rename-in would leave no destination at all, and a rerun would
+    * silently treat the job as a first load — the old data stays
+    * addressable (as `_<dest>_old_<uuid8>`, see `strandedSiblings`)
+    * until the new data is in place. */
+  def swapIn(fs: FileSystem, src: Path, dest: Path, err: String => Exception): Unit = {
+    val old = new Path(dest.getParent, s"_${dest.getName}_old_${java.util.UUID.randomUUID().toString.take(8)}")
+    val hadPrev = fs.exists(dest)
+    if (hadPrev && !fs.rename(dest, old))
+      throw err(s"could not move current $dest aside")
+    if (!fs.rename(src, dest)) {
+      val restored = !hadPrev || fs.rename(old, dest)
+      throw err(s"could not move staged rewrite into $dest" +
+        (if (restored) "" else s"; RESTORE ALSO FAILED — previous data is at $old"))
+    }
+    if (hadPrev) fs.delete(old, true)
+  }
+
+  /** Moves the staged output directory `src` into `dest`: `swapIn`
+    * when it replaces `dest`; on `append`, file by file, so `dest`'s
+    * own files stay and `src`'s hive subdirectories merge into its.
+    * The data files move first and `_SUCCESS` (replacing `dest`'s)
+    * last, as Spark's own append commit leaves them. */
+  def moveIn(fs: FileSystem, src: Path, dest: Path, append: Boolean,
+             err: String => Exception): Unit =
+    if (!append) swapIn(fs, src, dest, err)
+    else {
+      val files = fs.listFiles(src, true)
+      val paths = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).toSeq
+      val (markers, data) = paths.partition(_.getName == "_SUCCESS")
+      val root = fs.makeQualified(src).toString + "/"
+      val made = scala.collection.mutable.Set.empty[Path]
+      (data ++ markers).foreach { f =>
+        val to = new Path(dest, f.toString.stripPrefix(root))
+        if (made.add(to.getParent) && !fs.exists(to.getParent)) fs.mkdirs(to.getParent)
+        if (f.getName == "_SUCCESS") fs.delete(to, false)
+        if (!fs.rename(f, to)) throw err(s"could not move $f into $dest")
+      }
+    }
 
   /**
    * Rewrite the flat `format` directory at `dir` into
@@ -675,7 +708,7 @@ object Maintenance {
 
   /**
    * Remove swap leftovers around `dest`: sibling directories carrying
-   * the `_old_` / `_merge_` / `_compact_` swap markers for this
+   * the `_old_` / `_merge_` / `_compact_` / `_load_` swap markers for this
    * destination (current hidden naming or legacy visible naming) whose
    * modification time is older than `olderThanMs`. Runs ONLY when
    * `dest` itself exists — with the destination missing, an `_old_`
@@ -690,7 +723,7 @@ object Maintenance {
    * this operation assumes one maintainer per destination at a time.
    * The artifact patterns are a RESERVED namespace next to a managed
    * destination: do not hand-create sibling dirs named
-   * `[_]<dest>_(old|merge|compact)_<8hex>` — vacuum will treat them
+   * `[_]<dest>_(old|merge|compact|load)_<8hex>` — vacuum will treat them
    * as swap leftovers. Returns the names of directories actually
    * deleted.
    */

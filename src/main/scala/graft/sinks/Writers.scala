@@ -1,7 +1,8 @@
 package graft.sinks
 
 import graft.model.DestinationConfig
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Sink builders: DataFrame -> configured destination (W1-W4,
@@ -42,34 +43,11 @@ object Writers {
       if (effectiveSort.nonEmpty)
         df.sortWithinPartitions(effectiveSort.map(org.apache.spark.sql.functions.col): _*)
       else df
+    val file = fileFormat(dest)
     dest.`type`.toUpperCase match {
-      case "PARQUET" =>
-        partitioned(laidOut.write.mode(mode)).parquet(requirePath(dest))
-      case "ORC" =>
-        partitioned(laidOut.write.mode(mode)).orc(requirePath(dest))
-      case "CSV" | "FLAT_FILE" | "DELIMITED" =>
-        // Reference CSV semantics (ETLCoreCsvFileWriter.java):
-        //  - header from destination names (:46-118) — header option;
-        //  - RFC-4180 quoting with doubled quotes (:174-185) — Spark's
-        //    default quote/escape set to '"' reproduces it;
-        //  - null -> empty string (:161-171) — emptyValue/nullValue "".
-        partitioned(laidOut.write.mode(mode))
-          .option("header", c.includeHeader.getOrElse(true).toString)
-          .option("delimiter", c.delimiter.getOrElse(","))
-          .option("encoding", c.encoding.getOrElse("UTF-8"))
-          .option("quote", "\"").option("escape", "\"")
-          .option("emptyValue", "").option("nullValue", "")
-          // Spark's CSV WRITER trims whitespace by default; the
-          // reference preserves values verbatim (:161-171)
-          .option("ignoreLeadingWhiteSpace", "false")
-          .option("ignoreTrailingWhiteSpace", "false")
-          .csv(requirePath(dest))
-      case "JSON" =>
-        partitioned(laidOut.write.mode(mode)).json(requirePath(dest))
-      case "XML" =>
-        partitioned(laidOut.write.mode(mode)
-          .option("rowTag", c.tableName.getOrElse("row")))
-          .xml(requirePath(dest))
+      case _ if file.isDefined =>
+        val (format, options) = file.get
+        partitioned(laidOut.write.mode(mode)).format(format).options(options).save(requirePath(dest))
       case "JDBC" | "ORACLE" | "MSSQL" | "SQLSERVER" =>
         val url = c.jdbcUrl.getOrElse(throw new IllegalArgumentException("JDBC sink requires jdbcUrl"))
         val table = c.tableName.map(graft.sources.Readers.sanitizeIdent)
@@ -97,6 +75,59 @@ object Writers {
         throw new IllegalArgumentException(s"unsupported destination type: $other")
     }
   }
+
+  /** Format name and writer options of a file destination; None for
+    * JDBC and REST. */
+  def fileFormat(dest: DestinationConfig): Option[(String, Map[String, String])] = {
+    val c = dest.connectionDetails
+    dest.`type`.toUpperCase match {
+      case "PARQUET" => Some("parquet" -> Map.empty)
+      case "ORC" => Some("orc" -> Map.empty)
+      case "CSV" | "FLAT_FILE" | "DELIMITED" =>
+        // Reference CSV semantics (ETLCoreCsvFileWriter.java):
+        //  - header from destination names (:46-118) — header option;
+        //  - RFC-4180 quoting with doubled quotes (:174-185) — Spark's
+        //    default quote/escape set to '"' reproduces it;
+        //  - null -> empty string (:161-171) — emptyValue/nullValue "".
+        Some("csv" -> Map(
+          "header" -> c.includeHeader.getOrElse(true).toString,
+          "delimiter" -> c.delimiter.getOrElse(","),
+          "encoding" -> c.encoding.getOrElse("UTF-8"),
+          "quote" -> "\"", "escape" -> "\"",
+          "emptyValue" -> "", "nullValue" -> "",
+          // Spark's CSV WRITER trims whitespace by default; the
+          // reference preserves values verbatim (:161-171)
+          "ignoreLeadingWhiteSpace" -> "false",
+          "ignoreTrailingWhiteSpace" -> "false"))
+      case "JSON" => Some("json" -> Map.empty)
+      case "XML" => Some("xml" -> Map("rowTag" -> c.tableName.getOrElse("row")))
+      case _ => None
+    }
+  }
+
+  /** Reads files that `write` put at `path` for the file destination
+    * `dest`, with their known `schema`: no inference job runs. Columns
+    * come back in `schema`'s order, hive partition columns included.
+    * CSV values may span lines, and XML keeps the spaces around values,
+    * as written. */
+  def readFiles(spark: SparkSession, dest: DestinationConfig, path: String,
+                schema: StructType): DataFrame = {
+    val (format, options) = fileFormat(dest).getOrElse(
+      throw new IllegalArgumentException(s"${dest.`type`} is not a file destination"))
+    val asWritten = format match {
+      case "csv" => Map("multiLine" -> "true")
+      case "xml" => Map("ignoreSurroundingSpaces" -> "false")
+      case _ => Map.empty[String, String]
+    }
+    val df = spark.read.format(format).options(options ++ asWritten).schema(schema).load(path)
+    df.select(schema.fieldNames.map(n => df.col(s"`${n.replace("`", "``")}`")).toSeq: _*)
+  }
+
+  /** Writes routed rows as the error CSV at `path`, with a header.
+    * Nulls are written as empty strings, matching the reference CSV
+    * writer (ETLCoreCsvFileWriter.java:161-164). */
+  def errorFile(rows: DataFrame, path: String): Unit =
+    rows.write.mode("overwrite").option("header", "true").option("emptyValue", "").csv(path)
 
   /** Pluggable REST posting transport: (url, jsonLinesBatch) -> unit.
     * Executor-side; a real deployment injects an HTTP client.

@@ -1,12 +1,15 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
 import graft.model.{FieldMapping, SourceConfig}
 import java.nio.charset.{Charset, StandardCharsets}
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.io.compress.{CompressionCodecFactory, SplittableCompressionCodec}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -159,14 +162,15 @@ object Readers {
           delimiter: String = ",", header: Boolean = true,
           encoding: String = "UTF-8", quote: String = "\"",
           linesToSkip: Int = 0): DataFrame = {
-    val lineMode = linesToSkip == 0 && singleLineRecords(spark, path, delimiter, encoding, quote, header)
-    val base = spark.read
-      .option("delimiter", delimiter)
-      .option("encoding", encoding)
-      .option("quote", quote)
-      .option("escape", "\"") // RFC-4180 doubled-quote escaping (ETLCoreCsvFileWriter.java:174-185)
-      .option("multiLine", (!lineMode).toString) // values may span newlines when quoted
-      .option("header", header.toString)
+    val probed = if (linesToSkip == 0) singleLineRecords(spark, path, delimiter, encoding, quote, header) else None
+    val options = Map(
+      "delimiter" -> delimiter,
+      "encoding" -> encoding,
+      "quote" -> quote,
+      "escape" -> "\"", // RFC-4180 doubled-quote escaping (ETLCoreCsvFileWriter.java:174-185)
+      "multiLine" -> probed.isEmpty.toString, // values may span newlines when quoted
+      "header" -> header.toString)
+    val base = spark.read.options(options)
     val schema = StructType(mappings.map(m => StructField(m.sourceFieldName, StringType, nullable = true)))
     if (linesToSkip > 0) {
       // Reference `linesToSkip` (preamble lines before data,
@@ -190,7 +194,12 @@ object Readers {
         .option("delimiter", delimiter).option("quote", quote).option("escape", "\"")
         .option("header", header.toString)
       if (mappings.nonEmpty && !header) r.schema(schema).csv(lines) else r.csv(lines)
-    } else if (header) base.csv(path)
+    } else if (header)
+      // A declared read takes its column names from the probe's header
+      // line, so no job infers them; a mapping-less exploratory read
+      // keeps Spark's own inference pass.
+      probed.flatMap(_.header).filter(_ => mappings.nonEmpty).flatMap(headerSchema(spark, _, options))
+        .fold(base.csv(path))(base.schema(_).csv(path))
     else {
       // Positional columns named from the mapping order.
       if (mappings.nonEmpty) base.schema(schema).csv(path) else base.csv(path)
@@ -207,27 +216,31 @@ object Readers {
   private final case class ProbedBlock(file: String, firstLine: Option[String],
                                        crlf: Boolean, lf: Boolean)
 
-  /** True when no CSV record under `path` can span a line, so the
+  /** The scan-mode probe's verdict for a listing that line mode can
+    * parse: the one header text its files start with, when `header`. */
+  private final case class LineMode(header: Option[String])
+
+  /** Some when no CSV record under `path` can span a line, so the
     * line-mode parse gives the multiLine parse's rows (rule: `csv`).
     * The pass is one stage with no exchange; a task stops at its first
     * bad line. */
   private def singleLineRecords(spark: SparkSession, path: String, delimiter: String,
-                                encoding: String, quote: String, header: Boolean): Boolean = {
+                                encoding: String, quote: String, header: Boolean): Option[LineMode] = {
     val utf8 = Try(Charset.forName(encoding)).toOption
       .exists(c => c == StandardCharsets.UTF_8 || c == StandardCharsets.US_ASCII)
     if (!utf8 || quote != "\"" || delimiter.length != 1 || delimiter(0) >= 0x80 ||
-        "\"\r\n".contains(delimiter(0))) return false
+        "\"\r\n".contains(delimiter(0))) return None
     // raw lines split on \n alone, so a line keeps any \r it holds
     val text = spark.read.option("lineSep", "\n").text(path)
     val listing = text.queryExecution.analyzed.collectFirst {
       case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.listFiles(Nil, Nil)
-    }.getOrElse(return false)
+    }.getOrElse(return None)
     val conf = spark.sparkContext.hadoopConfiguration
     val codecs = new CompressionCodecFactory(conf)
     val splitBytes = FilePartition.maxSplitBytes(spark, listing)
     if (!listing.flatMap(_.files).exists(f => f.getLen > splitBytes &&
         Option(codecs.getCodec(f.getPath)).forall(_.isInstanceOf[SplittableCompressionCodec])))
-      return false
+      return None
     val delim = delimiter(0).toByte
     val sc = spark.sparkContext
     val prev = sc.getLocalProperty(ProbeJobProperty)
@@ -236,7 +249,7 @@ object Readers {
         .queryExecution.toRdd.mapPartitions(rows => Iterator.single(probeTask(rows, delim)))
         .collect()
       finally sc.setLocalProperty(ProbeJobProperty, prev)
-    if (tasks.contains(None)) return false
+    if (tasks.contains(None)) return None
     val blocks = tasks.toSeq.flatten.flatten
     // univocity's multiLine parse takes a file's line end from its first
     // line and keeps any other \r as data (a lone \r ending a CRLF file
@@ -245,10 +258,26 @@ object Readers {
     val crlfFiles = blocks.groupBy(_.file).collect {
       case (f, bs) if bs.exists(_.crlf) => (f, bs.exists(_.lf))
     }
-    crlfFiles.forall { case (f, mixed) => !mixed && endsWithNewline(f, conf, codecs) } &&
-      // with a header, multiLine names columns from the first file in the
-      // listing and line mode from the largest: they agree when all agree
-      (!header || blocks.flatMap(_.firstLine).distinct.size <= 1)
+    val headers = if (header) blocks.flatMap(_.firstLine).distinct else Nil
+    // with a header, multiLine names columns from the first file in the
+    // listing and line mode from the largest: they agree when all agree
+    if (crlfFiles.forall { case (f, mixed) => !mixed && endsWithNewline(f, conf, codecs) } &&
+        headers.size <= 1) Some(LineMode(headers.headOption))
+    else None
+  }
+
+  /** The string schema Spark's line-mode CSV read infers from the
+    * header `line` under the read's `options`: the line is tokenized by
+    * the same parser settings and named by Spark's own header rules
+    * (blank names, duplicates, case sensitivity). None when the line
+    * holds no record. */
+  private def headerSchema(spark: SparkSession, line: String,
+                           options: Map[String, String]): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    Option(new CsvParser(parsed.asParserSettings).parseLine(line)).map(tokens =>
+      StructType(CSVUtils.makeSafeHeader(tokens, conf.caseSensitiveAnalysis, parsed).toSeq
+        .map(StructField(_, StringType, nullable = true))))
   }
 
   /** One probe task over (line, file, block start) rows: None at its

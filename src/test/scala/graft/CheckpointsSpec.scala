@@ -15,18 +15,25 @@ class CheckpointsSpec extends SparkTestBase {
   private def persisted: Int = spark.sparkContext.getPersistentRDDs.size
 
   test("Checkpoints.free releases a localCheckpointed frame's blocks") {
-    val before = persisted
+    // the ContextCleaner may unpersist earlier suites' RDDs meanwhile:
+    // count only the persisted RDDs of the frames under test
+    def persistedOf(dfs: org.apache.spark.sql.DataFrame*): Int = {
+      val ids = dfs.flatMap(_.queryExecution.analyzed.collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+      }).toSet
+      spark.sparkContext.getPersistentRDDs.keys.count(ids)
+    }
     val df = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
     assert(df.count() === 3L)
-    assert(persisted === before + 1)
+    assert(persistedOf(df) === 1)
     graft.operators.Checkpoints.free(df)
-    assert(persisted === before)
+    assert(persistedOf(df) === 0)
     // a projection over a checkpointed frame frees the same RDD
     val df2 = Seq(4L, 5L).toDF("x").localCheckpoint()
     val proj = df2.select(col("x") * 2)
     assert(proj.count() === 2L)
     graft.operators.Checkpoints.free(proj)
-    assert(persisted === before)
+    assert(persistedOf(df, df2) === 0)
   }
 
   test("Checkpoints.free unpersists each RDD once and skips freed ones") {

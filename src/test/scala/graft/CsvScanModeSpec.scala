@@ -28,10 +28,12 @@ class CsvScanModeSpec extends SparkTestBase {
   private final class ProbeJobs extends SparkListener {
     @volatile var probes = 0
     @volatile var markers = 0
+    @volatile var others = 0
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       val p = Option(j.properties)
       if (p.exists(_.getProperty(Readers.ProbeJobProperty) != null)) probes += 1
-      if (p.exists(_.getProperty("spark.jobGroup.id") == "scanmode-marker")) markers += 1
+      else if (p.exists(_.getProperty("spark.jobGroup.id") == "scanmode-marker")) markers += 1
+      else others += 1
     }
     def settle(): Unit = {
       val before = markers
@@ -164,5 +166,36 @@ class CsvScanModeSpec extends SparkTestBase {
       assert(read > 0 && read < 100, s"recordsRead=$read")
       assert(df.count() == 400)
     } finally { spark.sparkContext.removeSparkListener(jobs); m.close() }
+  }
+
+  test("a declared line-mode read names columns from the probed header by Spark's rules, " +
+      "with no inference job") {
+    val sensitive = small.newSession()
+    sensitive.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    sensitive.conf.set("spark.sql.caseSensitive", "true")
+    Seq(
+      ("duplicates", "id,id,note", small),
+      ("blank names", "id,,\"\"", small),
+      ("case-insensitive duplicates", "id,ID,note", small),
+      ("case-sensitive names", "id,ID,note", sensitive),
+      ("quoted names", "\"i d\",\"na,me\",\"say \"\"x\"\"\"", small)
+    ).foreach { case (name, head, session) =>
+      val dir = tmpDir("scanmode_header")
+      Files.write(Paths.get(dir, "a.csv"), lines(head +: rows))
+      val jobs = new ProbeJobs
+      spark.sparkContext.addSparkListener(jobs)
+      val got = try {
+        val df = Readers.csv(session, dir, Seq(FieldMapping("id", "id")))
+        jobs.settle()
+        df
+      } finally spark.sparkContext.removeSparkListener(jobs)
+      assert(!multiLineMode(got) && jobs.probes == 1 && jobs.others == 0,
+        s"$name: probes=${jobs.probes} other jobs=${jobs.others}")
+      // Spark's own read, which infers the header in a job of its own
+      val want = session.read.option("quote", "\"").option("escape", "\"")
+        .option("multiLine", "false").option("header", "true").csv(dir)
+      assert(got.schema === want.schema, name)
+      assert(sorted(got) == sorted(want), s"$name: rows differ")
+    }
   }
 }

@@ -1,6 +1,8 @@
 package graft
 
 import graft.job.{JobMetrics, JobQueue, JobRunner}
+import graft.model.{ConnectionDetails, DestinationConfig, ErrorHandling, FieldMapping, JobConfig, SourceConfig}
+import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
 
 class OrchestrationSpec extends SparkTestBase {
@@ -574,9 +576,9 @@ class OrchestrationSpec extends SparkTestBase {
 
   private lazy val loadWork = tmpDir("load_pin")
   private def loadCsv(name: String, rows: String*): String = {
-    val f = java.nio.file.Paths.get(loadWork, s"$name.csv")
-    if (!java.nio.file.Files.exists(f))
-      java.nio.file.Files.writeString(f, ("id,name,amount,region" +: rows).mkString("", "\n", "\n"))
+    val f = Paths.get(loadWork, s"$name.csv")
+    if (!Files.exists(f))
+      Files.writeString(f, ("id,name,amount,region" +: rows).mkString("", "\n", "\n"))
     f.toString
   }
   private def loadOld = loadCsv("old", "100,olda,1.00,north", "101,oldb,2.00,south", ",oldc,3.00,north")
@@ -585,9 +587,8 @@ class OrchestrationSpec extends SparkTestBase {
   private def loadClean = loadCsv("clean", "1,alice,10.50,north", "4,\"dave, jr\",7.00,south",
     "5,erin,1.00,east")
 
-  private val loadDests: Map[String, graft.model.ConnectionDetails => graft.model.DestinationConfig] = {
-    import graft.model.DestinationConfig
-    val keyed = (c: graft.model.ConnectionDetails) =>
+  private val loadDests: Map[String, ConnectionDetails => DestinationConfig] = {
+    val keyed = (c: ConnectionDetails) =>
       c.copy(partitionKeys = List("region"), sortKeys = List("id"))
     Map(
       "parquet" -> (c => DestinationConfig("PARQUET", c)),
@@ -601,42 +602,42 @@ class OrchestrationSpec extends SparkTestBase {
       "xml" -> (c => DestinationConfig("XML", c)))
   }
 
-  private val loadStrategies: Map[String, graft.model.ErrorHandling] = Map(
-    "FAIL_JOB" -> graft.model.ErrorHandling("FAIL_JOB"),
-    "LOG_ONLY" -> graft.model.ErrorHandling("LOG_ONLY"),
-    "LOG_ONLY_max1" -> graft.model.ErrorHandling("LOG_ONLY", maxErrorsAllowed = 1),
-    "LOG_ONLY_max5" -> graft.model.ErrorHandling("LOG_ONLY", maxErrorsAllowed = 5),
-    "ROUTE_TO_FILE" -> graft.model.ErrorHandling("ROUTE_TO_FILE"),
-    "ROUTE_TO_FILE_max1" -> graft.model.ErrorHandling("ROUTE_TO_FILE", maxErrorsAllowed = 1))
+  private val loadStrategies: Map[String, ErrorHandling] = Map(
+    "FAIL_JOB" -> ErrorHandling("FAIL_JOB"),
+    "LOG_ONLY" -> ErrorHandling("LOG_ONLY"),
+    "LOG_ONLY_max1" -> ErrorHandling("LOG_ONLY", maxErrorsAllowed = 1),
+    "LOG_ONLY_max5" -> ErrorHandling("LOG_ONLY", maxErrorsAllowed = 5),
+    "ROUTE_TO_FILE" -> ErrorHandling("ROUTE_TO_FILE"),
+    "ROUTE_TO_FILE_max1" -> ErrorHandling("ROUTE_TO_FILE", maxErrorsAllowed = 1))
 
-  private def loadJob(id: String, src: String, dest: graft.model.DestinationConfig,
-                      eh: graft.model.ErrorHandling) = graft.model.JobConfig(
+  private def loadJob(id: String, src: String, dest: DestinationConfig,
+                      eh: ErrorHandling) = JobConfig(
     jobId = id,
-    source = graft.model.SourceConfig("CSV",
-      graft.model.ConnectionDetails(path = Some(src), includeHeader = Some(true))),
+    source = SourceConfig("CSV",
+      ConnectionDetails(path = Some(src), includeHeader = Some(true))),
     destination = Some(dest),
     mappings = List(
-      graft.model.FieldMapping("id", "id", destFieldType = "LONG", isDestNullable = false),
-      graft.model.FieldMapping("name", "name"),
-      graft.model.FieldMapping("amount", "amount", destFieldType = "DECIMAL(10,2)", isDestNullable = false),
-      graft.model.FieldMapping("region", "region")),
+      FieldMapping("id", "id", destFieldType = "LONG", isDestNullable = false),
+      FieldMapping("name", "name"),
+      FieldMapping("amount", "amount", destFieldType = "DECIMAL(10,2)", isDestNullable = false),
+      FieldMapping("region", "region")),
     errorHandling = eh,
     steps = List("LOAD"))
 
-  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(from)) {
-      val s = java.nio.file.Files.walk(from)
-      try s.forEach(p => java.nio.file.Files.copy(p, to.resolve(from.relativize(p).toString)))
+  private def copyTree(from: Path, to: Path): Unit =
+    if (Files.exists(from)) {
+      val s = Files.walk(from)
+      try s.forEach(p => Files.copy(p, to.resolve(from.relativize(p).toString)))
       finally s.close()
     }
 
   private def listing(dir: String): String = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) "-"
+    val root = Paths.get(dir)
+    if (!Files.exists(root)) "-"
     else {
-      val s = java.nio.file.Files.walk(root)
-      try s.filter(java.nio.file.Files.isRegularFile(_)).toArray.toSeq
-        .map(p => root.relativize(p.asInstanceOf[java.nio.file.Path]).toString)
+      val s = Files.walk(root)
+      try s.filter(Files.isRegularFile(_)).toArray.toSeq
+        .map(p => root.relativize(p.asInstanceOf[Path]).toString)
         .filterNot(_.endsWith(".crc"))
         .map(_.replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "*"))
         .sorted.mkString(" ")
@@ -649,7 +650,7 @@ class OrchestrationSpec extends SparkTestBase {
     if (!root.exists()) "-"
     else {
       val files = root.listFiles().filter(f => f.getName.startsWith("part-")).sortBy(_.getName)
-      val lines = files.map(f => java.nio.file.Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString))
+      val lines = files.map(f => Files.readAllLines(f.toPath).toArray.toSeq.map(_.toString))
       val headers = lines.flatMap(_.headOption).distinct
       (headers ++ lines.flatMap(_.drop(1)).sorted).mkString("|")
     }
@@ -664,13 +665,15 @@ class OrchestrationSpec extends SparkTestBase {
   private def loadCell(dest: String, strategy: String, mode: String, fresh: Boolean,
                        src: String = loadNew): String = {
     val cell = s"$dest-$strategy-$mode-${if (fresh) "fresh" else "existing"}-${if (src == loadClean) "clean" else "new"}"
-    val dir = java.nio.file.Paths.get(loadWork, "cells", cell)
-    java.nio.file.Files.createDirectories(dir)
-    if (!fresh) copyTree(java.nio.file.Paths.get(loadWork, "prior", dest), dir.resolve("out"))
+    val dir = Paths.get(loadWork, "cells", cell)
+    Files.createDirectories(dir)
+    if (!fresh) copyTree(Paths.get(loadWork, "prior", dest), dir.resolve("out"))
     val out = dir.resolve("out")
-    def conn(p: java.nio.file.Path) = graft.model.ConnectionDetails(path = Some(p.resolve("orders").toString))
+    def conn(p: Path) = ConnectionDetails(path = Some(p.resolve("orders").toString))
     val eh = loadStrategies(strategy).copy(errorFilePath = Some(out.resolve("errors").toString))
     val r = JobRunner.run(spark, loadJob(cell, src, loadDests(dest)(conn(out)).copy(saveMode = mode), eh))
+    val left = Option(out.toFile.list()).toSeq.flatten.filterNot(Set("orders", "errors"))
+    assert(left.isEmpty, s"$cell left $left beside the destination")
     val status = r.status match {
       case JobRunner.Failed(m) => s"Failed(${m.replace(dir.toString, "<cell>").takeWhile(_ != '.')})"
       case s => s.toString
@@ -680,11 +683,11 @@ class OrchestrationSpec extends SparkTestBase {
   }
 
   private def loadPriors(dests: Iterable[String]): Unit = dests.foreach { d =>
-    val out = java.nio.file.Paths.get(loadWork, "prior", d)
-    if (!java.nio.file.Files.exists(out)) {
+    val out = Paths.get(loadWork, "prior", d)
+    if (!Files.exists(out)) {
       val r = JobRunner.run(spark, loadJob(s"prior-$d", loadOld,
-        loadDests(d)(graft.model.ConnectionDetails(path = Some(out.resolve("orders").toString))),
-        graft.model.ErrorHandling("ROUTE_TO_FILE", Some(out.resolve("errors").toString))))
+        loadDests(d)(ConnectionDetails(path = Some(out.resolve("orders").toString))),
+        ErrorHandling("ROUTE_TO_FILE", Some(out.resolve("errors").toString))))
       assert(r.status == JobRunner.Completed, r.message)
     }
   }
@@ -692,10 +695,12 @@ class OrchestrationSpec extends SparkTestBase {
   /** What a cell leaves: the destination as the earlier load left it
     * (`old`), replaced by this load (`new`), both loads' files (`both`)
     * or no destination (`none`); and the error CSV of the earlier load
-    * (`old`), of this load (`new`) or none. */
+    * (`old`), of this load (`new`, or `empty` when it routed no row) or
+    * none. */
   private val loadIds = Map("old" -> "100,101", "new" -> "1,4,5", "both" -> "1,4,5,100,101", "none" -> "-")
   private val loadErrors = Map("old" -> "id,name,amount,region|,oldc,3.00,north",
-    "new" -> "id,name,amount,region|,carol,3.25,north|2,bob,,south", "none" -> "-")
+    "new" -> "id,name,amount,region|,carol,3.25,north|2,bob,,south",
+    "empty" -> "id,name,amount,region", "none" -> "-")
   private def loadListing(dest: String, state: String): String = {
     val ext = Map("parquet" -> ".snappy.parquet", "csv" -> ".csv", "orc" -> ".zstd.orc",
       "json" -> ".json", "xml" -> ".xml")(dest.takeWhile(_ != '_'))
@@ -746,12 +751,14 @@ class OrchestrationSpec extends SparkTestBase {
     ("ROUTE_TO_FILE_max1", "ignore") -> s"$overCapFail old new",
     ("ROUTE_TO_FILE_max1", "errorifexists") -> s"$overCapFail old new")
 
-  /** FAIL_JOB over a source without bad rows. */
-  private val cleanOutcomes: Map[String, String] = Map(
-    "overwrite" -> "Completed 3 0 new old",
-    "append" -> "Completed 3 0 both old",
-    "ignore" -> "Completed 0 0 old old",
-    "errorifexists" -> s"$existsFail old old")
+  /** FAIL_JOB and ROUTE_TO_FILE over a source without bad rows. */
+  private val cleanOutcomes: Map[(String, String), String] = Map(
+    ("FAIL_JOB", "overwrite") -> "Completed 3 0 new old",
+    ("FAIL_JOB", "append") -> "Completed 3 0 both old",
+    ("FAIL_JOB", "ignore") -> "Completed 0 0 old old",
+    ("FAIL_JOB", "errorifexists") -> s"$existsFail old old",
+    ("ROUTE_TO_FILE", "overwrite") -> "Completed 3 0 new empty",
+    ("ROUTE_TO_FILE", "append") -> "Completed 3 0 both empty")
 
   /** No destination and no error file before the load. */
   private val freshOutcomes: Map[String, String] = Map(
@@ -764,18 +771,86 @@ class OrchestrationSpec extends SparkTestBase {
     val cells =
       (for (d <- full; s <- loadStrategies.keys.toSeq.sorted; m <- modes)
         yield (d, s, m, false, loadNew, loadOutcomes((s, m)))) ++
-      (for (d <- full; m <- modes) yield (d, "FAIL_JOB", m, false, loadClean, cleanOutcomes(m))) ++
+      (for (d <- full; ((s, m), outcome) <- cleanOutcomes.toSeq) yield (d, s, m, false, loadClean, outcome)) ++
       (for (m <- modes; s <- Seq("FAIL_JOB", "ROUTE_TO_FILE"))
         yield ("parquet", s, m, true, loadNew, freshOutcomes(s))) ++
       (for (d <- Seq("csv_keys", "orc", "orc_keys", "json", "json_keys", "xml"); m <- Seq("overwrite", "append"))
         yield (d, "ROUTE_TO_FILE", m, false, loadNew, loadOutcomes(("ROUTE_TO_FILE", m))))
     loadPriors(cells.map(_._1).distinct)
     val wrong = cells.flatMap { case (d, s, m, fresh, src, outcome) =>
-      val Array(status, dest, errors) = outcome.split(" (?=(old|new|both|none)( |$))", 3)
+      val Array(status, dest, errors) = outcome.split(" (?=(old|new|both|empty|none)( |$))", 3)
       val want = s"$status [${loadListing(d, dest)}] [${loadIds(dest)}] [${loadErrors(errors)}]"
       val got = loadCell(d, s, m, fresh, src)
       if (got == want) None else Some(s"$d $s $m fresh=$fresh clean=${src == loadClean}\n  got  $got\n  want $want")
     }
     assert(wrong.isEmpty, s"${wrong.size} of ${cells.size} cells differ:\n${wrong.mkString("\n")}")
   }
+
+  test("a staged LOAD that crashes leaves no staging dir, the old destination and error file, and reruns") {
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    hadoopConf.set("fs.loadcrash.impl", classOf[LoadCrashFs].getName)
+    hadoopConf.setBoolean("fs.loadcrash.impl.disable.cache", true)
+    try {
+      val work = tmpDir("load_crash")
+      val dest = DestinationConfig("PARQUET",
+        ConnectionDetails(path = Some(s"loadcrash://$work/orders")))
+      val route = ErrorHandling("ROUTE_TO_FILE", Some(s"$work/errors"))
+      def run(id: String, src: String) = JobRunner.run(spark, loadJob(id, src, dest, route))
+      def siblings = new java.io.File(work).list().toSet
+      assert(run("crash-prior", loadOld).status == JobRunner.Completed)
+      // the staged write throws
+      LoadCrashFs.crashWrite.set(true)
+      val crashed = try run("crash-write", loadNew) finally LoadCrashFs.crashWrite.set(false)
+      assert(crashed.status.isInstanceOf[JobRunner.Failed], crashed.message)
+      assert(siblings === Set("errors", "orders"), "no staging dir may stay behind")
+      assert(destIds("parquet", s"$work/orders") === "100,101")
+      assert(errorCsv(s"$work/errors") === loadErrors("old"))
+      val rerun = run("crash-write-rerun", loadNew)
+      assert((rerun.status, rerun.recordsWritten, rerun.recordsFailed) === ((JobRunner.Completed, 3L, 2L)))
+      assert(destIds("parquet", s"$work/orders") === "1,4,5")
+      assert(errorCsv(s"$work/errors") === loadErrors("new"))
+      assert(listing(s"$work/orders") === loadListing("parquet", "new"))
+      // the swap crashes after moving the destination aside
+      LoadCrashFs.crashSwap.set(true)
+      val torn = try run("crash-swap", loadOld) finally LoadCrashFs.crashSwap.set(false)
+      assert(torn.status.isInstanceOf[JobRunner.Failed], torn.message)
+      val fsPath = new org.apache.hadoop.fs.Path(s"loadcrash://$work/orders")
+      val stranded = graft.operators.Maintenance.strandedSiblings(
+        fsPath.getFileSystem(hadoopConf), fsPath)
+      assert(stranded.size === 1 && siblings === Set("errors", stranded.head),
+        s"the moved-aside destination must be the only sibling left: $siblings")
+      assert(destIds("parquet", s"$work/${stranded.head}") === "1,4,5")
+      val again = run("crash-swap-rerun", loadOld)
+      assert((again.status, again.recordsWritten, again.recordsFailed) === ((JobRunner.Completed, 2L, 1L)))
+      assert(destIds("parquet", s"$work/orders") === "100,101")
+    } finally {
+      hadoopConf.unset("fs.loadcrash.impl")
+      hadoopConf.unset("fs.loadcrash.impl.disable.cache")
+    }
+  }
+}
+
+/** Local file system that fails a staged LOAD on demand: creating a
+  * file under a `_load_` staging dir, or renaming the staged output
+  * into the destination after the old one was moved aside. */
+class LoadCrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("loadcrash:///")
+  override def getScheme: String = "loadcrash"
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
+                      replication: Short, blockSize: Long,
+                      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
+    if (LoadCrashFs.crashWrite.get && f.toString.contains("_load_"))
+      throw new IllegalStateException(s"injected crash creating $f")
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
+    if (LoadCrashFs.crashSwap.get && src.getName == "_graft_bad=false" && dst.getName == "orders")
+      throw new IllegalStateException(s"injected crash before renaming $src to $dst")
+    super.rename(src, dst)
+  }
+}
+
+object LoadCrashFs {
+  val crashWrite = new java.util.concurrent.atomic.AtomicBoolean(false)
+  val crashSwap = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
