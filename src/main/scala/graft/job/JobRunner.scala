@@ -214,8 +214,6 @@ object JobRunner {
     var stepsRun = List.empty[String]
     var written = 0L
     var failedRows = 0L
-    // the schema LOAD wrote: VALIDATE_LOAD reads back with it
-    var loadSchema: Option[org.apache.spark.sql.types.StructType] = None
     registryPut(configKey, JobResult(cfg.jobId, configKey, Running, 0, 0, Nil, ""))
     spark.sparkContext.setJobGroup(configKey, s"graft job ${cfg.jobId}", interruptOnCancel = true)
     val steps = if (cfg.steps.nonEmpty) cfg.steps else List("LOAD", "NOTIFY_SUCCESS")
@@ -335,7 +333,6 @@ object JobRunner {
             }
             written = w
             failedRows = f
-            loadSchema = Some(mappedSource().schema)
             stepsRun ::= step
           case "LOAD_SNAPSHOT" =>
             // LOAD into a VERSIONED destination: the mapped batch
@@ -895,12 +892,13 @@ object JobRunner {
             // WRITER's effective options — CSV writes header=true by
             // default while a bare CSV read assumes headerless, which
             // would count header lines as data rows.
-            // After a LOAD into a file destination, the read-back takes
-            // the schema it wrote, so no inference job runs.
+            // A PARQUET/ORC read-back takes the mapped schema, which is
+            // what the job's write steps write, so no footer-inference
+            // job runs; the count does not read any column.
             cfg.destination.foreach { dest =>
-              val back = (loadSchema, dest.connectionDetails.pathOrFile) match {
-                case (Some(schema), Some(path)) if Writers.fileFormat(dest).isDefined =>
-                  Writers.readFiles(spark, dest, path, schema)
+              val back = (dest.`type`.toUpperCase, dest.connectionDetails.pathOrFile) match {
+                case ("PARQUET" | "ORC", Some(path)) =>
+                  Writers.readFiles(spark, dest, path, mappedSource().schema)
                 case _ =>
                   val readBack = dest.`type`.toUpperCase match {
                     case "CSV" | "FLAT_FILE" | "DELIMITED" =>

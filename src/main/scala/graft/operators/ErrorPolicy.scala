@@ -172,7 +172,8 @@ object ErrorPolicy {
    *    `_<dest>_load_<uuid8>` sibling; the good and bad counts ride
    *    that write as one observation;
    *  - FAIL_JOB and maxErrorsAllowed fail the job here, before the
-   *    destination changes;
+   *    destination changes (a failing FAIL_JOB load has written, and
+   *    now discards, its whole staged output);
    *  - ROUTE_TO_FILE writes the error CSV from the small
    *    `_graft_bad=true` side, read back with the mapped schema (no
    *    inference job);
@@ -180,6 +181,9 @@ object ErrorPolicy {
    *    destination by `Maintenance.swapIn`, or joins it file by file
    *    on append.
    * The staging directory is gone afterwards, on success and failure.
+   * An overwrite keeps the old destination until the swap, so the load
+   * needs free space for the old and the new output together (a direct
+   * overwrite deletes the old files before it writes).
    */
   private def stagedLoad(mapped: DataFrame, isBad: Column, mappings: Seq[FieldMapping],
                          policy: ErrorHandling, dest: DestinationConfig,

@@ -195,9 +195,9 @@ object Readers {
         .option("header", header.toString)
       if (mappings.nonEmpty && !header) r.schema(schema).csv(lines) else r.csv(lines)
     } else if (header)
-      // A declared read takes its column names from the probe's header
-      // line, so no job infers them; a mapping-less exploratory read
-      // keeps Spark's own inference pass.
+      // As with JSON and XML, a declared read (mappings given) runs no
+      // inference job: it names its columns from the probe's header
+      // line. A mapping-less exploratory read keeps Spark's inference.
       probed.flatMap(_.header).filter(_ => mappings.nonEmpty).flatMap(headerSchema(spark, _, options))
         .fold(base.csv(path))(base.schema(_).csv(path))
     else {
@@ -269,7 +269,10 @@ object Readers {
   /** The string schema Spark's line-mode CSV read infers from the
     * header `line` under the read's `options`: the line is tokenized by
     * the same parser settings and named by Spark's own header rules
-    * (blank names, duplicates, case sensitivity). None when the line
+    * (blank names, duplicates, case sensitivity). Spark takes the first
+    * line that is not blank (no comment character is set); the probe
+    * picks line mode only when no line is blank, whitespace only or
+    * starts with a BOM, so a file's first line is that line. None when the line
     * holds no record. */
   private def headerSchema(spark: SparkSession, line: String,
                            options: Map[String, String]): Option[StructType] = {
