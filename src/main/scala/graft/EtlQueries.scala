@@ -33,47 +33,13 @@ object EtlQueries {
     errorHandling = ErrorHandling("LOG_ONLY")
   )
 
-  /**
-   * Stage-and-publish protocol for fingerprint-keyed fixture dirs:
-   * when `fix` lacks its `_STAGED` marker, run `write` against a
-   * unique tmp sibling, plant the marker, and rename into place. A
-   * lost publish race leaves a nested copy that is removed (content
-   * is identical either way — fixtures are pure functions of the
-   * corpus; Hadoop rename into an EXISTING dir nests src as a child
-   * and still returns true), and the tmp dir is cleaned whatever
-   * happens. ONE implementation on purpose: the rename-race and
-   * marker semantics are subtle enough that a second inlined copy
-   * would drift.
-   */
-  private[graft] def stagedFixture(s: org.apache.spark.sql.SparkSession,
-                                   fix: String)(write: String => Unit): String = {
-    val fs = new org.apache.hadoop.fs.Path(fix)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(s"$fix/_STAGED")
-    if (!fs.exists(marker)) {
-      val tmp = s"$fix.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      try {
-        write(tmp)
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_STAGED"))
-        val dst = new org.apache.hadoop.fs.Path(fix)
-        if (!fs.exists(dst)) fs.rename(tmpPath, dst)
-        val nested = new org.apache.hadoop.fs.Path(dst, tmpPath.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      } finally {
-        if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-      }
-    }
-    fix
-  }
-
   /** Orders partitioned by o_orderpriority, cached per corpus
     * fingerprint. Shared by the `etl_partition_pruning` gate row and
     * PlanSpec's partition-filter / dynamic-pruning assertions. */
   private[graft] def partitionedOrdersFixture(s: org.apache.spark.sql.SparkSession,
                                               dir: String): String = {
     val fp = Tables.fingerprint(s, s"$dir/orders.parquet")
-    stagedFixture(s, s"${CacheDirs.root}/fix_part_orders_$fp") { tmp =>
+    graft.sinks.Commit.publishIfAbsent(s, s"${CacheDirs.root}/fix_part_orders_$fp") { tmp =>
       Tables.t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"), col("o_orderpriority"))
@@ -820,7 +786,7 @@ object EtlQueries {
     Q("etl_media_binaryfile",
       (s, dir) => {
         val fp = Tables.fingerprint(s, s"$dir/documents.parquet")
-        val fix = stagedFixture(s, s"${CacheDirs.root}/fix_media_$fp") { tmp =>
+        val fix = graft.sinks.Commit.publishIfAbsent(s, s"${CacheDirs.root}/fix_media_$fp") { tmp =>
           // empty texts excluded on BOTH sides: Spark's split
           // planning drops zero-byte files before the source runs
           graft.multimodal.Multimodal.writeMediaFiles(
@@ -1056,8 +1022,8 @@ object EtlQueries {
     // ---- WRITE-AUDIT-PUBLISH (WAP): candidates are staged BESIDE
     //      the destination, audited AS WRITTEN (the staged files are
     //      read back — auditing the plan would miss writer bugs),
-    //      and only a passing audit swaps into place via the
-    //      rename-aside protocol (`Maintenance.replaceDir`); a
+    //      and only a passing audit is published in its place
+    //      (`graft.sinks.Commit.replace`); a
     //      failing audit leaves the published data byte-identical
     //      and cleans its staging. The gate runs one passing cycle,
     //      then a corrupted candidate (half the rows, null keys
@@ -1073,17 +1039,15 @@ object EtlQueries {
           s.sparkContext.hadoopConfiguration)
         def wapCycle(candidate: org.apache.spark.sql.DataFrame): Boolean =
           try {
-            graft.operators.Maintenance.replaceDir(fs, new Path(dest), "_wap_",
-              staged => {
-                candidate.write.parquet(staged)
-                val audit = s.read.parquet(staged)
-                val nullKeys = audit.filter(col("order_id").isNull).limit(1).count()
-                val n = audit.count()
-                if (n < 1000L || nullKeys > 0)
-                  throw new IllegalStateException(
-                    s"WAP audit failed: rows=$n nullKeys=$nullKeys")
-              },
-              msg => new IllegalStateException(msg))
+            graft.sinks.Commit.replace(fs, new Path(dest)) { staged =>
+              candidate.write.parquet(staged.toString)
+              val audit = s.read.parquet(staged.toString)
+              val nullKeys = audit.filter(col("order_id").isNull).limit(1).count()
+              val n = audit.count()
+              if (n < 1000L || nullKeys > 0)
+                throw new IllegalStateException(
+                  s"WAP audit failed: rows=$n nullKeys=$nullKeys")
+            }
             true
           } catch { case _: IllegalStateException => false }
         val good = Tables.t(s, dir, "orders")
@@ -1874,7 +1838,7 @@ object EtlQueries {
     Q("etl_partition_backfill",
       (s, dir) => {
         val fp = Tables.fingerprint(s, s"$dir/orders.parquet")
-        val path = stagedFixture(s, s"${CacheDirs.root}/fix_backfill_orders_$fp") { tmp =>
+        val path = graft.sinks.Commit.publishIfAbsent(s, s"${CacheDirs.root}/fix_backfill_orders_$fp") { tmp =>
           val base = Tables.t(s, dir, "orders")
             .select(col("o_orderkey"), col("o_totalprice"),
               col("o_orderstatus"), col("o_orderpriority"))

@@ -110,25 +110,10 @@ object SimilarityQueries {
         .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
       val trained = graft.operators.Similarity.trainPqCodebooks(
         emb, "vec_id", "e", dim = 64, m = 8, k = 16)
-      // write to a unique temp dir, then rename into place: a
-      // concurrent run never observes a half-written dir. NOTE
-      // Hadoop rename into an EXISTING directory does not fail —
-      // it nests src as a child and returns true — so on a lost
-      // race the nested copy must be removed explicitly, and the
-      // tmp dir is cleaned whatever happens (the winner's
-      // codebooks are identical anyway — training is
-      // deterministic).
-      val tmp = s"$cbPath.tmp_${java.util.UUID.randomUUID().toString.take(8)}"
-      val tmpPath = new org.apache.hadoop.fs.Path(tmp)
-      try {
-        graft.operators.Similarity.savePqCodebooks(s, trained, tmp)
-        val dst = new org.apache.hadoop.fs.Path(cbPath)
-        if (!fs.exists(dst)) fs.rename(tmpPath, dst)
-        val nested = new org.apache.hadoop.fs.Path(dst, tmpPath.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
-      } finally {
-        if (fs.exists(tmpPath)) fs.delete(tmpPath, true)
-      }
+      // a concurrent run never observes a half-written dir (training
+      // is deterministic, so a lost publish race loses nothing)
+      graft.sinks.Commit.publishIfAbsent(s, cbPath)(
+        graft.operators.Similarity.savePqCodebooks(s, trained, _))
       trained
     }
   }

@@ -387,20 +387,10 @@ object JobRunner {
               mappedSource(), cfg.mappings, cfg.errorHandling)
             val fsPath = new org.apache.hadoop.fs.Path(destPath)
             val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            // crash-recovery guard: a missing destination WITH a
-            // rename-aside sibling means a previous swap died between
-            // its two renames — treating that as a first load would
-            // silently shrink the dimension to the incoming batch.
-            // Fail loudly and name the stranded data instead.
+            // a destination whose publish crashed is restored first,
+            // so the batch is never taken for a first load
+            graft.sinks.Commit.repair(fs, fsPath)
             val firstLoad = !fs.exists(fsPath)
-            if (firstLoad) {
-              val stranded = graft.operators.Maintenance.strandedSiblings(fs, fsPath)
-              if (stranded.nonEmpty)
-                throw new ErrorPolicy.JobFailedException(
-                  s"MERGE_STRATEGY: $destPath is missing but a previous swap left " +
-                    s"${stranded.mkString(", ")} — a prior run died mid-swap; rename " +
-                    "the newest _old_ dir back to the destination before re-running")
-            }
             def existing = Readers.forConfig(spark,
               SourceConfig(dest.`type`, dest.connectionDetails), cfg.mappings)
             val merged = param("mergeStrategy").toUpperCase match {
@@ -427,12 +417,9 @@ object JobRunner {
             val mergeObs = org.apache.spark.sql.Observation(s"graft_merge_${seq.incrementAndGet()}")
             val counted = merged.observe(mergeObs, org.apache.spark.sql.functions.count(
               org.apache.spark.sql.functions.lit(1)).as("rows"))
-            // swap protocol (rename-aside, crash-safe) shared with
-            // Maintenance.compact — see Maintenance.replaceDir.
-            graft.operators.Maintenance.replaceDir(fs, fsPath, "_merge_",
-              staged => Writers.write(counted, dest.copy(connectionDetails =
-                dest.connectionDetails.copy(path = Some(staged), filePath = None))),
-              m => new ErrorPolicy.JobFailedException(s"MERGE_STRATEGY: $m"))
+            graft.sinks.Commit.replace(fs, fsPath)(staged =>
+              Writers.write(counted, dest.copy(connectionDetails =
+                dest.connectionDetails.copy(path = Some(staged.toString), filePath = None))))
             written = mergeObs.get.get("rows").map(_.asInstanceOf[Number].longValue).getOrElse(0L)
             failedRows = enforced.rejected()
             stepsRun ::= step
@@ -445,9 +432,8 @@ object JobRunner {
             // transformation.parameters: targetFileBytes (default
             // 128 MiB), sortColumns (csv), compression, minFiles
             // (skip the rewrite when the destination is already
-            // at/below that many files; the skip — and the stranded-
-            // swap diagnostic for a missing destination — live in
-            // Maintenance.compact, the one place they are decided).
+            // at/below that many files; the skip lives in
+            // Maintenance.compact, the one place it is decided).
             val cDest = cfg.destination.getOrElse(
               throw new IllegalArgumentException("COMPACT_DESTINATION requires a destination"))
             require(Set("PARQUET", "ORC")(cDest.`type`.toUpperCase),
@@ -463,16 +449,15 @@ object JobRunner {
                 .flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty),
               compression = cParams.get("compression")
                 .orElse(cDest.connectionDetails.compression),
-              minFiles = cParams.get("minFiles").map(_.toInt).getOrElse(1),
-              err = m => new ErrorPolicy.JobFailedException(s"COMPACT_DESTINATION: $m"))
+              minFiles = cParams.get("minFiles").map(_.toInt).getOrElse(1))
             // a skipped rewrite must not clobber a preceding LOAD's
             // written count (steps [LOAD, COMPACT, VALIDATE_LOAD]
             // would otherwise fail the validation with written=0)
             if (!stats.skipped) written = stats.rows
             stepsRun ::= step
           case "VACUUM_DESTINATION" =>
-            // Swap-debris cleanup from the config surface: delete the
-            // rename-aside leftovers (`_<dest>_(old|merge|compact)_*`)
+            // Commit-debris cleanup from the config surface: delete the
+            // staging and aside leftovers (`_<dest>_(stage|old)_*`)
             // older than retentionHours beside the destination — the
             // step a pipeline schedules after MERGE/COMPACT so crash
             // artifacts don't accumulate. Age-gated because a
@@ -613,6 +598,9 @@ object JobRunner {
               throw new IllegalArgumentException(
                 "DEDUP_DESTINATION requires transformation.parameters.dedupOrderColumn"))
             import org.apache.spark.sql.functions.{col, count, lit, min, struct, sum}
+            val ddP = new org.apache.hadoop.fs.Path(ddPath)
+            val ddFs = ddP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            graft.sinks.Commit.repair(ddFs, ddP)
             val ddCur = spark.read.format(ddDest.`type`.toLowerCase).load(ddPath)
             // validate BOTH column sets up front: a typo'd key column
             // must fail with the step's contract message, not a later
@@ -638,11 +626,8 @@ object JobRunner {
             val kept = deduped
               .select(ddKeys.map(col) ++ payload.map(c => col(s"_keep.$c")): _*)
               .select(ddCur.columns.map(col): _*) // original column order
-            val ddP = new org.apache.hadoop.fs.Path(ddPath)
-            val ddFs = ddP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            graft.operators.Maintenance.replaceDir(ddFs, ddP, "_dedup_",
-              staged => kept.write.format(ddDest.`type`.toLowerCase).save(staged),
-              m => new ErrorPolicy.JobFailedException(s"DEDUP_DESTINATION: $m"))
+            graft.sinks.Commit.replace(ddFs, ddP)(staged =>
+              kept.write.format(ddDest.`type`.toLowerCase).save(staged.toString))
             System.err.println(s"[graft-job] DEDUP_DESTINATION kept $nAfter of " +
               s"$nBefore row(s) by ${ddKeys.mkString(",")}")
             stepsRun ::= step
@@ -874,17 +859,17 @@ object JobRunner {
             require(anCols.nonEmpty,
               "ANONYMIZE_DESTINATION requires transformation.parameters.scrubColumns")
             import org.apache.spark.sql.functions.{col => anCol}
+            val anP = new org.apache.hadoop.fs.Path(anPath)
+            val anFs = anP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            graft.sinks.Commit.repair(anFs, anP)
             val anCur = spark.read.format(anDest.`type`.toLowerCase).load(anPath)
             val missing = anCols.filterNot(anCur.columns.contains)
             require(missing.isEmpty,
               s"scrubColumns not in destination: ${missing.mkString(", ")}")
             val scrubbed = anCols.foldLeft(anCur)((d, c) =>
               d.withColumn(c, graft.operators.Privacy.scrubPii(anCol(c))))
-            val anP = new org.apache.hadoop.fs.Path(anPath)
-            val anFs = anP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            graft.operators.Maintenance.replaceDir(anFs, anP, "_anon_",
-              staged => scrubbed.write.format(anDest.`type`.toLowerCase).save(staged),
-              m => new ErrorPolicy.JobFailedException(s"ANONYMIZE_DESTINATION: $m"))
+            graft.sinks.Commit.replace(anFs, anP)(staged =>
+              scrubbed.write.format(anDest.`type`.toLowerCase).save(staged.toString))
             stepsRun ::= step
           case "VALIDATE_LOAD" =>
             // Post-load row-count check (O4): destination readable and

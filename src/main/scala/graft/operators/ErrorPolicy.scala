@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.model.{DestinationConfig, ErrorHandling, FieldMapping}
-import graft.sinks.Writers
+import graft.sinks.{Commit, Writers}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
@@ -133,7 +133,10 @@ object ErrorPolicy {
    * column, JDBC and REST destinations (nowhere to stage),
    * `ignore`/`errorifexists` onto an existing destination, where the
    * write is skipped or refused, and a partitioned overwrite under
-   * the session's dynamic partition-overwrite mode.
+   * the session's dynamic partition-overwrite mode. Either way a file
+   * destination is repaired first (`Commit.repair`), so an append
+   * after a crashed overwrite joins the earlier rows, not a missing
+   * directory.
    */
   def load(mapped: DataFrame, mappings: Seq[FieldMapping], policy: ErrorHandling,
            dest: DestinationConfig): (Long, Long) = {
@@ -143,17 +146,19 @@ object ErrorPolicy {
     val dynamicOverwrite = dest.connectionDetails.partitionKeys.nonEmpty &&
       mapped.sparkSession.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         .equalsIgnoreCase("dynamic")
-    val target = for {
+    val file = for {
       path <- dest.connectionDetails.pathOrFile if Writers.fileFormat(dest).isDefined
       p = new Path(path)
-      fs = p.getFileSystem(mapped.sparkSession.sparkContext.hadoopConfiguration)
-      if (dest.saveMode.toLowerCase match {
+    } yield (p.getFileSystem(mapped.sparkSession.sparkContext.hadoopConfiguration), p)
+    file.foreach { case (fs, p) => Commit.repair(fs, p) }
+    val target = file.filter { case (fs, p) =>
+      dest.saveMode.toLowerCase match {
         case "overwrite" => !dynamicOverwrite
         case "append" => true
         case "ignore" | "error" | "errorifexists" | "default" => !fs.exists(p)
         case _ => false
-      })
-    } yield (fs, p)
+      }
+    }
     (violationPredicate(mappings), target) match {
       case (Some(isBad), Some((fs, p))) if !uncappedLog =>
         stagedLoad(mapped, isBad, mappings, policy, dest, fs, p)
@@ -169,7 +174,7 @@ object ErrorPolicy {
    * One pass of a LOAD into the file destination at `destPath`:
    *  - write `mapped` once, flagged with `_graft_bad` and partitioned
    *    by it ahead of the destination's own keys, into a hidden
-   *    `_<dest>_load_<uuid8>` sibling; the good and bad counts ride
+   *    `Commit.stage` sibling; the good and bad counts ride
    *    that write as one observation;
    *  - FAIL_JOB and maxErrorsAllowed fail the job here, before the
    *    destination changes (a failing FAIL_JOB load has written, and
@@ -178,8 +183,8 @@ object ErrorPolicy {
    *    `_graft_bad=true` side, read back with the mapped schema (no
    *    inference job);
    *  - `_graft_bad=false` (with its `_SUCCESS`) replaces the
-   *    destination by `Maintenance.swapIn`, or joins it file by file
-   *    on append.
+   *    destination by `Commit.publish`, or joins it file by file on
+   *    append (`Commit.append`).
    * The staging directory is gone afterwards, on success and failure.
    * An overwrite keeps the old destination until the swap, so the load
    * needs free space for the old and the new output together (a direct
@@ -198,7 +203,7 @@ object ErrorPolicy {
     val c = dest.connectionDetails
     def at(p: Path, keys: List[String]) = dest.copy(saveMode = "overwrite",
       connectionDetails = c.copy(path = Some(p.toString), filePath = None, partitionKeys = keys))
-    Maintenance.withStaging(fs, destPath, "_load_") { staged =>
+    Commit.stage(fs, destPath) { staged =>
       val obs = Observation(s"graft_load_${obsSeq.incrementAndGet()}")
       Writers.write(mapped.withColumn(BadFlag, coalesce(isBad, lit(false)))
         .observe(obs, count(lit(1)).as("rows"), coalesce(sum(when(col(BadFlag), 1L)), lit(0L)).as("bad")),
@@ -215,10 +220,10 @@ object ErrorPolicy {
       // no good row: Spark's own empty output (one schema-only file
       // when the layout is flat)
       if (written == 0) Writers.write(mapped.limit(0), at(good, c.partitionKeys))
-      else fs.rename(new Path(staged, "_SUCCESS"), new Path(good, "_SUCCESS"))
+      else Commit.move(fs, new Path(staged, "_SUCCESS"), new Path(good, "_SUCCESS"))
       if (c.partitionKeys.isEmpty) flatFileNames(fs, good)
-      Maintenance.moveIn(fs, good, destPath, append = dest.saveMode.equalsIgnoreCase("append"),
-        m => new JobFailedException(s"LOAD: $m"))
+      if (dest.saveMode.equalsIgnoreCase("append")) Commit.append(fs, good, destPath)
+      else Commit.publish(fs, good, destPath)
       (written, bad)
     }
   }
@@ -230,7 +235,7 @@ object ErrorPolicy {
     val partitioned = "^(part-\\d+-[0-9a-f]{8}(?:-[0-9a-f]{4}){3}-[0-9a-f]{12})\\.(c\\d+.*)$".r
     fs.listStatus(dir).map(_.getPath).foreach { p =>
       p.getName match {
-        case partitioned(stem, rest) => fs.rename(p, new Path(dir, s"$stem-$rest"))
+        case partitioned(stem, rest) => Commit.move(fs, p, new Path(dir, s"$stem-$rest"))
         case _ =>
       }
     }

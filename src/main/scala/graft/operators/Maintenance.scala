@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, min}
+import graft.sinks.Commit
 
 /**
  * Lake-maintenance operators: small-file compaction with optional
@@ -23,9 +24,8 @@ import org.apache.spark.sql.functions.{col, count, input_file_name, lit, max, mi
  * packs small files into ~maxPartitionBytes splits, and `coalesce`
  * merges those without moving rows. Range clustering shuffles once
  * (`repartitionByRange`), which IS the clustering work. Either way
- * the rewrite is staged next to the destination and swapped in via
- * the same crash-safe rename-aside protocol as the merge job
- * (`replaceDir`), so a reader never observes a half-written
+ * the rewrite is staged next to the destination and published by
+ * `graft.sinks.Commit`, so a reader never observes a half-written
  * directory and a crash never strands the only copy.
  *
  * Flat directories only: a hive-partitioned root must be compacted
@@ -38,18 +38,6 @@ object Maintenance {
   final case class CompactStats(
       filesBefore: Long, bytesBefore: Long, filesAfter: Long, rows: Long,
       skipped: Boolean = false)
-
-  /** Swap-artifact naming: `_<base><marker><uuid8>` (current, hidden
-    * from Spark's discovery) or `<base><marker><uuid8>` (legacy,
-    * written before the hidden scheme) — both must stay recognizable
-    * or the stranded-swap guard goes blind across an upgrade. */
-  private val artifactRx = "^(_?)(.+?)_(old|merge|compact|load)_[0-9a-f]{8}$".r
-
-  private[operators] def artifactBase(name: String): Option[(String, String)] =
-    name match {
-      case artifactRx(_, base, marker) => Some((base, marker))
-      case _ => None
-    }
 
   /** Data files under `dir`, excluding `_SUCCESS`/metadata and hidden
     * files — the set a compaction pass rewrites. Flat dirs only:
@@ -64,91 +52,6 @@ object Maintenance {
             "one leaf directory at a time (rewriting across leaves would " +
             "destroy the layout readers prune on)")
       else Seq(st)
-    }
-
-  /** Rename-aside siblings left by a swap that died between its two
-    * renames; a missing destination with one of these present must
-    * stop the job instead of being treated as a first load. Matches
-    * BOTH the current hidden naming and the legacy visible naming —
-    * a leftover written by an older build must still trip the guard. */
-  def strandedSiblings(fs: FileSystem, dest: Path): Seq[String] = {
-    val parent = dest.getParent
-    if (parent != null && fs.exists(parent))
-      fs.listStatus(parent).toSeq.map(_.getPath.getName).filter(n =>
-        artifactBase(n).exists { case (base, marker) =>
-          base == dest.getName && marker == "old" })
-    else Nil
-  }
-
-  /**
-   * Crash-safe replacement of `dest` with data written by
-   * `writeStaged` (which receives the staging path, a sibling of
-   * `dest` named `_<dest><marker><uuid8>`): `withStaging`, then
-   * `swapIn`. `err` builds the exception for swap failures, so the job
-   * layer can surface its own failure type.
-   */
-  def replaceDir(fs: FileSystem, dest: Path, marker: String,
-                 writeStaged: String => Unit,
-                 err: String => Exception): Unit =
-    withStaging(fs, dest, marker) { staged =>
-      writeStaged(staged.toString)
-      swapIn(fs, staged, dest, err)
-    }
-
-  /** Runs `body` on a fresh staging path beside `dest`,
-    * `_<dest><marker><uuid8>`, and removes whatever is left there
-    * afterwards, on success and on failure. The leading underscore
-    * hides staging and rollback dirs from Spark's file/partition
-    * discovery, so a concurrent reader of the PARENT (a hive root
-    * whose leaf is mid-swap, a glob) never sees a transient non-data
-    * directory. */
-  def withStaging[A](fs: FileSystem, dest: Path, marker: String)(body: Path => A): A = {
-    val parent = dest.getParent
-    require(parent != null, s"cannot swap a filesystem root: $dest")
-    val staged = new Path(parent, s"_${dest.getName}$marker${java.util.UUID.randomUUID().toString.take(8)}")
-    try body(staged)
-    finally if (fs.exists(staged)) fs.delete(staged, true)
-  }
-
-  /** Moves the directory `src` into `dest`'s place. Swap is
-    * rename-aside, NOT delete-then-rename: a crash between a delete and
-    * the rename-in would leave no destination at all, and a rerun would
-    * silently treat the job as a first load — the old data stays
-    * addressable (as `_<dest>_old_<uuid8>`, see `strandedSiblings`)
-    * until the new data is in place. */
-  def swapIn(fs: FileSystem, src: Path, dest: Path, err: String => Exception): Unit = {
-    val old = new Path(dest.getParent, s"_${dest.getName}_old_${java.util.UUID.randomUUID().toString.take(8)}")
-    val hadPrev = fs.exists(dest)
-    if (hadPrev && !fs.rename(dest, old))
-      throw err(s"could not move current $dest aside")
-    if (!fs.rename(src, dest)) {
-      val restored = !hadPrev || fs.rename(old, dest)
-      throw err(s"could not move staged rewrite into $dest" +
-        (if (restored) "" else s"; RESTORE ALSO FAILED — previous data is at $old"))
-    }
-    if (hadPrev) fs.delete(old, true)
-  }
-
-  /** Moves the staged output directory `src` into `dest`: `swapIn`
-    * when it replaces `dest`; on `append`, file by file, so `dest`'s
-    * own files stay and `src`'s hive subdirectories merge into its.
-    * The data files move first and `_SUCCESS` (replacing `dest`'s)
-    * last, as Spark's own append commit leaves them. */
-  def moveIn(fs: FileSystem, src: Path, dest: Path, append: Boolean,
-             err: String => Exception): Unit =
-    if (!append) swapIn(fs, src, dest, err)
-    else {
-      val files = fs.listFiles(src, true)
-      val paths = Iterator.continually(files).takeWhile(_.hasNext).map(_.next().getPath).toSeq
-      val (markers, data) = paths.partition(_.getName == "_SUCCESS")
-      val root = fs.makeQualified(src).toString + "/"
-      val made = scala.collection.mutable.Set.empty[Path]
-      (data ++ markers).foreach { f =>
-        val to = new Path(dest, f.toString.stripPrefix(root))
-        if (made.add(to.getParent) && !fs.exists(to.getParent)) fs.mkdirs(to.getParent)
-        if (f.getName == "_SUCCESS") fs.delete(to, false)
-        if (!fs.rename(f, to)) throw err(s"could not move $f into $dest")
-      }
     }
 
   /**
@@ -170,8 +73,7 @@ object Maintenance {
               targetFileBytes: Long = 128L << 20,
               sortCols: Seq[String] = Nil,
               compression: Option[String] = None,
-              minFiles: Int = 1,
-              err: String => Exception = m => new IllegalStateException(m)): CompactStats = {
+              minFiles: Int = 1): CompactStats = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val fmt = format.toLowerCase match {
       case f @ ("parquet" | "orc") => f
@@ -180,14 +82,8 @@ object Maintenance {
     }
     val dest = new Path(dir)
     val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dest)) {
-      val stranded = strandedSiblings(fs, dest)
-      if (stranded.nonEmpty)
-        throw err(s"$dir is missing but a previous swap left " +
-          s"${stranded.mkString(", ")} — a prior run died mid-swap; rename " +
-          "the newest _old_ dir back to the destination before re-running")
-      throw new IllegalArgumentException(s"compact: $dir does not exist")
-    }
+    Commit.repair(fs, dest)
+    require(fs.exists(dest), s"compact: $dir does not exist")
     val files = dataFiles(fs, dest)
     val bytesBefore = files.map(_.getLen).sum
     val nOut = math.max(1L, (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt
@@ -206,10 +102,10 @@ object Maintenance {
     val laidOut = compactionPlan(spark.read.format(fmt).load(dir), nOut, sortCols)
     val obs = Observation(s"graft_compact_${java.util.UUID.randomUUID().toString.take(8)}")
     val counted = laidOut.observe(obs, count(lit(1)).as("rows"))
-    replaceDir(fs, dest, "_compact_", staged => {
+    Commit.replace(fs, dest) { staged =>
       val w = counted.write.mode("overwrite")
-      compression.fold(w)(c => w.option("compression", c)).format(fmt).save(staged)
-    }, err)
+      compression.fold(w)(c => w.option("compression", c)).format(fmt).save(staged.toString)
+    }
     val rows = obs.get.get("rows").map(_.asInstanceOf[Number].longValue).getOrElse(0L)
     CompactStats(files.size.toLong, bytesBefore, dataFiles(fs, dest).size.toLong, rows)
   }
@@ -225,10 +121,10 @@ object Maintenance {
    * instead of the whole table. Returns (leaf path, stats) per
    * compacted leaf; leaves already at one file are skipped via the
    * walker's own listing (one listStatus per directory — the listing
-   * load is the thing compaction exists to reduce). A leaf lost
-   * mid-swap (an `_old_` rollback artifact with no base dir) fails
-   * the whole run loudly, exactly like flat `compact` does — hidden
-   * artifacts must not make a missing partition invisible.
+   * load is the thing compaction exists to reduce). Each listing
+   * first repairs the directories it lists (`Commit.repairChildren`),
+   * so a leaf whose swap crashed is restored and compacted, never
+   * skipped as missing.
    */
   def compactPartitioned(spark: SparkSession, root: String,
                          format: String = "parquet",
@@ -240,23 +136,8 @@ object Maintenance {
     require(fs.exists(rootPath), s"compactPartitioned: $root does not exist")
     // one listing per dir: returns (leaf, visible data-file count)
     def leaves(p: Path): Seq[(Path, Int)] = {
-      val children = fs.listStatus(p).toSeq
+      val children = Commit.repairChildren(fs, p)
       val names = children.map(_.getPath.getName).toSet
-      children.foreach { st =>
-        val n = st.getPath.getName
-        // only HIDDEN rollback artifacts trip the stranded guard: the
-        // hidden scheme is unambiguously ours, while a visible name
-        // that merely looks artifact-shaped could be a real partition
-        // value — aborting a healthy table on a naming coincidence is
-        // worse than leaving a legacy leftover for vacuum
-        artifactBase(n) match {
-          case Some((base, "old")) if n.startsWith("_") && !names.contains(base) =>
-            throw new IllegalStateException(
-              s"$p holds $n but no $base — a prior swap died " +
-                s"mid-swap; rename it back to $base before compacting")
-          case _ => ()
-        }
-      }
       val regular = children.filterNot { st =>
         val n = st.getPath.getName
         // hidden files/dirs, plus visible artifact-shaped dirs whose
@@ -264,7 +145,7 @@ object Maintenance {
         // a visible artifact-shaped dir WITHOUT its base is treated
         // as data (could be a real partition value)
         n.startsWith("_") || n.startsWith(".") ||
-          artifactBase(n).exists { case (base, _) => names.contains(base) }
+          Commit.leftover(n).exists { case (base, _) => names.contains(base) }
       }
       val (dirs, files) = regular.partition(_.isDirectory)
       if (files.nonEmpty) {
@@ -707,14 +588,15 @@ object Maintenance {
     else df.coalesce(nOut)
 
   /**
-   * Remove swap leftovers around `dest`: sibling directories carrying
-   * the `_old_` / `_merge_` / `_compact_` / `_load_` swap markers for this
-   * destination (current hidden naming or legacy visible naming) whose
+   * Remove commit leftovers around `dest`: sibling staging and aside
+   * directories of this destination, in any naming `Commit` writes or
+   * recognises (`_<dest>_stage_<8hex>`, `_<dest>_old_<8hex>`, the
+   * earlier builds' `_merge_`/`_compact_`/`_load_`/`_dedup_`/`_anon_`/
+   * `_wap_` staging markers, hidden or legacy visible), whose
    * modification time is older than `olderThanMs`. Runs ONLY when
    * `dest` itself exists — with the destination missing, an `_old_`
-   * sibling is the only surviving copy of the data (a swap died
-   * between its renames) and must never be vacuumed; that state
-   * demands the manual rename the stranded-guard message describes.
+   * sibling may be the only surviving copy of the data (a publish died
+   * between its renames); `Commit.repair` restores it.
    * Age-gating protects freshly WRITTEN staging dirs; it cannot
    * protect an in-flight swap's `_old_` rollback dir, because rename
    * preserves the directory's old mtime — so `dest` existence is
@@ -723,8 +605,8 @@ object Maintenance {
    * this operation assumes one maintainer per destination at a time.
    * The artifact patterns are a RESERVED namespace next to a managed
    * destination: do not hand-create sibling dirs named
-   * `[_]<dest>_(old|merge|compact|load)_<8hex>` — vacuum will treat them
-   * as swap leftovers. Returns the names of directories actually
+   * `[_]<dest>_(old|stage|merge|compact|load|dedup|anon|wap)_<8hex>` —
+   * vacuum will treat them as commit leftovers. Returns the names of directories actually
    * deleted.
    */
   def vacuum(fs: FileSystem, dest: Path, olderThanMs: Long = 24L * 3600 * 1000): Seq[String] = {
@@ -735,10 +617,10 @@ object Maintenance {
     fs.listStatus(parent).toSeq
       .filter { st =>
         st.isDirectory && st.getModificationTime < cutoff &&
-          artifactBase(st.getPath.getName).exists(_._1 == dest.getName)
+          Commit.leftover(st.getPath.getName).exists(_._1 == dest.getName)
       }
       .filter { st =>
-        val isRollback = artifactBase(st.getPath.getName).exists(_._2 == "old")
+        val isRollback = Commit.leftover(st.getPath.getName).exists(_._2)
         (!isRollback || fs.exists(dest)) && fs.delete(st.getPath, true)
       }
       .map(_.getPath.getName)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.sinks.Commit
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -7,17 +8,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * Versioned snapshot tier: every write lands in a fresh `v=N`
  * directory and a tiny `_current` pointer file names the live
  * version — the minimal form of the snapshot isolation every lake
- * table format provides, built on two filesystem primitives:
+ * table format provides. Both are published by `graft.sinks.Commit`:
  *
  *  - data is IMMUTABLE once written (a new version is a new
  *    directory; nothing rewrites in place), so a reader that
  *    resolved a version keeps a consistent view for the whole scan
- *    even while writers land newer versions;
- *  - the pointer swap is one rename (write `_current_tmp_*`, rename
- *    over `_current`) — readers see the old or the new version,
- *    never a torn state, and a crash before the rename leaves the
- *    previous version live with an orphan data dir that `expire`
- *    collects.
+ *    even while writers land newer versions. A version is staged and
+ *    renamed into place, so a crashed write leaves no `v=N`;
+ *  - the pointer is a one-file destination published rename-aside.
+ *    Between the two renames of a pointer publish `_current` is
+ *    missing; every reader of the pointer runs `Commit.repair` first,
+ *    which restores the previous pointer (a crash there included),
+ *    so a reader sees the old or the new version. A crash between
+ *    the data and the pointer publish leaves the previous version
+ *    live and the new `v=N` unreferenced, for `expire` to collect.
  *
  * Time travel is then just `read(root, Some(version))`, and rollback
  * is `setCurrent(root, olderVersion)` — no data movement in either.
@@ -49,11 +53,13 @@ object Snapshots {
         }
     }.flatten.sorted
 
-  /** The live version from the `_current` pointer; None before the
-    * first commit. A pointer naming a missing directory fails loudly
-    * (manual surgery, not a state this tier produces). */
+  /** The live version from the `_current` pointer, after repairing a
+    * crashed pointer publish; None before the first commit. A pointer
+    * naming a missing directory fails loudly (manual surgery, not a
+    * state this tier produces). */
   def currentVersion(fs: FileSystem, root: Path): Option[Long] = {
     val ptr = new Path(root, "_current")
+    Commit.repair(fs, ptr)
     if (!fs.exists(ptr)) None
     else {
       val in = fs.open(ptr)
@@ -65,23 +71,19 @@ object Snapshots {
     }
   }
 
-  private def setCurrent(fs: FileSystem, root: Path, v: Long): Unit = {
-    val tmp = new Path(root, s"_current_tmp_${java.util.UUID.randomUUID.toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-    // rename-over is the atomic commit; local/HDFS rename replaces,
-    // object stores need their conditional-put equivalent here
-    if (fs.exists(new Path(root, "_current"))) fs.delete(new Path(root, "_current"), false)
-    require(fs.rename(tmp, new Path(root, "_current")),
-      s"snapshot commit failed: could not move pointer for v=$v at $root")
-  }
+  private def setCurrent(fs: FileSystem, root: Path, v: Long): Unit =
+    Commit.replace(fs, new Path(root, "_current")) { staged =>
+      val out = fs.create(staged, true)
+      try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    }
 
   /** Commit `df` as the next version and move the pointer. Returns
     * the committed version number. */
   def write(df: DataFrame, root: String, format: String = "parquet"): Long = {
     val (fs, rootPath) = fsFor(df.sparkSession, root)
     val next = versions(fs, rootPath).lastOption.getOrElse(0L) + 1
-    df.write.format(format).save(new Path(rootPath, s"v=$next").toString)
+    Commit.replace(fs, new Path(rootPath, s"v=$next"))(staged =>
+      df.write.format(format).save(staged.toString))
     setCurrent(fs, rootPath, next)
     next
   }

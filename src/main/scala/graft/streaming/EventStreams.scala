@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.sinks.Commit
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -1960,12 +1961,12 @@ object EventStreams {
    *
    * Crash-safety: merged buckets are written to a staging dir (the
    * lazy plan can still READ the live partitions while staging
-   * writes), then each touched bucket dir is swapped in RENAME-ASIDE
-   * (dst -> aside, src -> dst, delete aside last) — the bucket's
-   * pre-batch rows survive a crash at ANY point, and the repair pass
-   * every batch runs first (restore an aside whose dst is missing,
-   * drop one whose dst exists, clear leftover staging) returns the
-   * destination to a consistent pre- or post-swap state. The
+   * writes), then each touched bucket dir is published rename-aside
+   * by `graft.sinks.Commit` (dst -> aside, src -> dst, delete aside
+   * last) — the bucket's pre-batch rows survive a crash at ANY point,
+   * and the repair every batch runs first (restore an aside whose dst
+   * is missing, drop one whose dst exists) returns the destination to
+   * a consistent pre- or post-swap state. The
    * streaming checkpoint only records the batch AFTER foreachBatch
    * returns, so the replayed batch re-merges the same rows into the
    * same buckets and keep-latest converges to the identical state.
@@ -2003,55 +2004,6 @@ object EventStreams {
       nBuckets, (rows, groupKeys) =>
         graft.operators.Upsert.latestPerKey(rows, groupKeys, versionCol),
       targetBucketBytes, bucketCols)
-  }
-
-  /** `<dest>__old` — the aside name of the whole-directory
-    * rename-aside swap protocol shared by [[bucketedMergeStream]]
-    * (its size-triggered re-bucket) and [[sketchRollupStream]]. */
-  private def wholeDirAside(dest: org.apache.hadoop.fs.Path) =
-    new org.apache.hadoop.fs.Path(dest.getParent, dest.getName + "__old")
-
-  /**
-   * Crash repair for the whole-directory rename-aside swap — ONE
-   * implementation for every state sink that swaps a staged directory
-   * into place (the r12 ADVICE class came from two hand-rolled copies
-   * drifting): a swap that crashed between renames left `<dest>__old`
-   * — restore it if `dest` is gone (crash after set-aside, before
-   * swap-in), drop it if the swap completed. Runs before ANY read of
-   * the destination; metadata-sized (two existence probes).
-   */
-  private def repairWholeDirSwap(fs: org.apache.hadoop.fs.FileSystem,
-                                 dest: org.apache.hadoop.fs.Path,
-                                 what: String): Unit = {
-    val aside = wholeDirAside(dest)
-    if (fs.exists(aside)) {
-      if (!fs.exists(dest)) {
-        if (!fs.rename(aside, dest))
-          throw new IllegalStateException(s"$what: cannot restore $dest")
-      } else fs.delete(aside, true)
-    }
-  }
-
-  /**
-   * The swap half of the protocol: move `staged` into place as `dest`
-   * via rename-aside (set the live dir aside, swap the staged dir in,
-   * delete the aside last). A crash at any rename is resolved by
-   * [[repairWholeDirSwap]] on the next batch — the destination is
-   * always a complete pre- or post-swap state, never a partial one.
-   */
-  private def swapWholeDir(fs: org.apache.hadoop.fs.FileSystem,
-                           staged: org.apache.hadoop.fs.Path,
-                           dest: org.apache.hadoop.fs.Path,
-                           what: String): Unit = {
-    val aside = wholeDirAside(dest)
-    if (fs.exists(dest)) {
-      fs.delete(aside, true)
-      if (!fs.rename(dest, aside))
-        throw new IllegalStateException(s"$what: cannot set aside $dest")
-    }
-    if (!fs.rename(staged, dest))
-      throw new IllegalStateException(s"$what: cannot swap in $dest")
-    fs.delete(aside, true)
   }
 
   /**
@@ -2108,33 +2060,17 @@ object EventStreams {
         val s = batch.sparkSession
         val dest = new Path(destDir)
         val fs = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // ---- replay repair: return the destination to a consistent
-        // state before ANY read. (1) a whole-dir re-bucket swap that
-        // crashed between renames left `<dest>__old` — restore it if
-        // dest is gone, drop it if the swap completed; (2) a bucket
-        // swap that crashed mid-protocol left `_stale_bucket_<b>`
-        // aside dirs (named WITHOUT '=' so a concurrent read's
-        // partition discovery never parses them) — restore where the
-        // live dir is missing, drop where it isn't. All metadata-
-        // sized: one list of <= nBuckets child names.
-        repairWholeDirSwap(fs, dest, "streaming merge")
+        // ---- replay repair before ANY read (graft.sinks.Commit): a
+        // re-bucket publish of the whole destination, then the bucket
+        // publishes inside it, from one listing of <= nBuckets names
+        Commit.repair(fs, dest)
         val hasBuckets = fs.exists(dest) && {
-          fs.listStatus(dest).foreach { st =>
-            val n = st.getPath.getName
-            if (n.startsWith("_stale_bucket_")) {
-              val live = new Path(dest, "_bucket=" + n.stripPrefix("_stale_bucket_"))
-              if (!fs.exists(live)) {
-                if (!fs.rename(st.getPath, live))
-                  throw new IllegalStateException(s"streaming merge: cannot restore $live")
-              } else fs.delete(st.getPath, true)
-            }
-          }
           // ---- layout guard: a non-empty destination with data files
           // but no `_bucket=` partition dirs was written by the
           // pre-bucketing (flat parquet) version of this sink — fail
           // loudly with the migration story instead of an unresolved-
           // column error three operators deep.
-          val names = fs.listStatus(dest).map(_.getPath.getName)
+          val names = Commit.repairChildren(fs, dest).map(_.getPath.getName)
           val bucketDirs = names.exists(_.startsWith("_bucket="))
           val hasFlatData = names.exists(n => !n.startsWith("_") && !n.startsWith("."))
           if (!bucketDirs && hasFlatData)
@@ -2181,44 +2117,33 @@ object EventStreams {
                 .filter(col("_bucket").isin(touched.map(Integer.valueOf): _*))
             else s.createDataFrame(
               new java.util.ArrayList[org.apache.spark.sql.Row](), bucketed.schema)
-          val staging = new Path(dest.getParent, dest.getName + s"_stage_$batchId")
-          // a replayed batch finds its own leftover staging dir — clear
-          // it so the rewrite below starts clean instead of throwing
-          fs.delete(staging, true)
-          // the one exchange: a bucket's state and batch rows meet in
-          // one of `p` partitions, so neither the fold nor the write
-          // shuffles again, and no bucket is split across files
-          val p = math.min(touched.length, s.sparkContext.defaultParallelism)
-          fold(graft.operators.Upsert.unionTagged(existingTouched, bucketed)
-              .repartition(p, col("_bucket")), "_bucket" +: keys)
-            .write.partitionBy("_bucket")
-            .parquet(staging.toString)
-          // swap each touched bucket dir in RENAME-ASIDE (atomic per
-          // bucket, pre-batch rows survive a crash at any point; the
-          // repair pass above resolves whichever half completed);
-          // untouched buckets are never listed or moved
-          if (!fs.exists(dest)) fs.mkdirs(dest)
-          // the marker lands BEFORE the first bucket dir: a crash
-          // mid-swap must leave the count on disk, or the replay would
-          // take the bucket dirs for a marker-less layout and merge
-          // them at its own caller's nBuckets
-          if (marker.isEmpty) writeMarker(dest, curN)
-          touched.foreach { b =>
-            val src = new Path(staging, s"_bucket=$b")
-            val dst = new Path(dest, s"_bucket=$b")
-            val aside = new Path(dest, s"_stale_bucket_$b")
-            if (fs.exists(src)) {
-              if (fs.exists(dst) && !fs.rename(dst, aside))
-                throw new IllegalStateException(s"streaming merge: cannot set aside $dst")
-              if (!fs.rename(src, dst))
-                throw new IllegalStateException(s"streaming merge: cannot swap in $dst")
-              fs.delete(aside, true)
+          Commit.stage(fs, dest) { staging =>
+            // the one exchange: a bucket's state and batch rows meet in
+            // one of `p` partitions, so neither the fold nor the write
+            // shuffles again, and no bucket is split across files
+            val p = math.min(touched.length, s.sparkContext.defaultParallelism)
+            fold(graft.operators.Upsert.unionTagged(existingTouched, bucketed)
+                .repartition(p, col("_bucket")), "_bucket" +: keys)
+              .write.partitionBy("_bucket")
+              .parquet(staging.toString)
+            // publish each touched bucket dir (atomic per bucket,
+            // pre-batch rows survive a crash at any point; the repair
+            // above settles whichever half completed); untouched buckets
+            // are never listed or moved
+            if (!fs.exists(dest)) fs.mkdirs(dest)
+            // the marker lands BEFORE the first bucket dir: a crash
+            // mid-swap must leave the count on disk, or the replay would
+            // take the bucket dirs for a marker-less layout and merge
+            // them at its own caller's nBuckets
+            if (marker.isEmpty) writeMarker(dest, curN)
+            touched.foreach { b =>
+              val src = new Path(staging, s"_bucket=$b")
+              if (fs.exists(src)) Commit.publish(fs, src, new Path(dest, s"_bucket=$b"))
             }
           }
-          fs.delete(staging, true)
           // ---- size-triggered re-bucket: when mean bucket size
           // exceeds 2x the target, DOUBLE the bucket count with a
-          // whole-directory rename-aside swap (the new marker rides
+          // whole-directory publish (the new marker rides
           // inside the new directory, so layout + count change
           // together atomically; the repair pass above makes a crash
           // at any rename recoverable). Doubling keeps pmod stable-
@@ -2231,15 +2156,12 @@ object EventStreams {
           var newN = curN
           val size = fs.getContentSummary(dest).getLength
           while (size > 2L * target * newN && newN < 65536) newN *= 2
-          if (newN != curN) {
-            val reb = new Path(dest.getParent, dest.getName + "_rebucket")
-            fs.delete(reb, true)
+          if (newN != curN) Commit.replace(fs, dest) { reb =>
             s.read.schema(bucketed.schema).parquet(destDir).drop("_bucket")
               .withColumn("_bucket", upsertBucket(layoutCols, newN))
               .repartition(math.min(newN, s.sparkContext.defaultParallelism), col("_bucket"))
               .write.partitionBy("_bucket").parquet(reb.toString)
             writeMarker(reb, newN)
-            swapWholeDir(fs, reb, dest, "streaming merge (re-bucket)")
           }
           ()
         }
@@ -2478,9 +2400,8 @@ object EventStreams {
         val s = batch.sparkSession
         val dest = new Path(destDir)
         val fs = dest.getFileSystem(s.sparkContext.hadoopConfiguration)
-        // repair a crashed whole-dir swap before any read — the ONE
-        // shared protocol implementation (repairWholeDirSwap)
-        repairWholeDirSwap(fs, dest, "sketch rollup")
+        // repair a crashed publish before any read
+        Commit.repair(fs, dest)
         val batchSk = batch.toDF().groupBy(g: _*)
           .agg(expr(build).as("sk"))
         val merged =
@@ -2488,13 +2409,9 @@ object EventStreams {
             s.read.schema(stateSchema).parquet(destDir).unionByName(batchSk)
               .groupBy(g: _*).agg(expr(mergeA).as("sk"))
           else batchSk
-        val staging = new Path(dest.getParent, dest.getName + s"_stage_$batchId")
-        fs.delete(staging, true) // a replayed batch's leftover
         // the write MATERIALIZES merged while dest is still live; the
-        // swap below only moves directories
-        merged.coalesce(1).write.parquet(staging.toString)
-        swapWholeDir(fs, staging, dest, "sketch rollup")
-        ()
+        // publish only moves directories
+        Commit.replace(fs, dest)(staging => merged.coalesce(1).write.parquet(staging.toString))
       })
     val destPath = new Path(destDir)
     val fs = destPath.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -197,18 +197,18 @@ class OrchestrationSpec extends SparkTestBase {
 
     // crash recovery: a destination missing with a rename-aside
     // sibling means a prior swap died between its renames — the next
-    // run must fail loudly, NEVER treat the batch as a first load
+    // run restores the aside and merges into it, NEVER treating the
+    // batch as a first load
+    val beforeCrash = spark.read.parquet(s"$work/dest_kl").collect().map(_.toString).sorted.toSeq
     java.nio.file.Files.move(
       java.nio.file.Paths.get(s"$work/dest_kl"),
       java.nio.file.Paths.get(s"$work/_dest_kl_old_deadbeef"))
-    val crashed = JobRunner.run(spark, graft.model.JobConfig.fromFile(s"$work/kl2.json"))
-    crashed.status match {
-      case JobRunner.Failed(msg) => assert(msg.contains("mid-swap"), msg)
-      case s => fail(s"expected Failed on stranded _old_ sibling, got $s")
-    }
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$work/_dest_kl_old_deadbeef"),
-      java.nio.file.Paths.get(s"$work/dest_kl"))
+    val repaired = JobRunner.run(spark, graft.model.JobConfig.fromFile(s"$work/kl2.json"))
+    assert(repaired.status == JobRunner.Completed && repaired.recordsWritten == 4,
+      s"a first load would write the batch's 2 rows: ${repaired.message}")
+    assert(spark.read.parquet(s"$work/dest_kl").collect().map(_.toString).sorted.toSeq == beforeCrash,
+      "the merge must run on the restored rows: replaying kl2 onto them changes nothing")
+    assert(!new java.io.File(s"$work/_dest_kl_old_deadbeef").exists(), "the aside must be gone")
 
     // misconfiguration fails the job, not the JVM: CSV dest rejected
     val bad = graft.model.JobConfig.fromFile(s"$work/kl1.json")
@@ -787,20 +787,17 @@ class OrchestrationSpec extends SparkTestBase {
   }
 
   test("a staged LOAD that crashes leaves no staging dir, the old destination and error file, and reruns") {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    hadoopConf.set("fs.loadcrash.impl", classOf[LoadCrashFs].getName)
-    hadoopConf.setBoolean("fs.loadcrash.impl.disable.cache", true)
-    try {
+    CrashFs.on(spark) {
       val work = tmpDir("load_crash")
       val dest = DestinationConfig("PARQUET",
-        ConnectionDetails(path = Some(s"loadcrash://$work/orders")))
+        ConnectionDetails(path = Some(s"crashfs://$work/orders")))
       val route = ErrorHandling("ROUTE_TO_FILE", Some(s"$work/errors"))
       def run(id: String, src: String) = JobRunner.run(spark, loadJob(id, src, dest, route))
       def siblings = new java.io.File(work).list().toSet
       assert(run("crash-prior", loadOld).status == JobRunner.Completed)
       // the staged write throws
-      LoadCrashFs.crashWrite.set(true)
-      val crashed = try run("crash-write", loadNew) finally LoadCrashFs.crashWrite.set(false)
+      val crashed = CrashFs.failing(spark, 1)(op => op.kind == "create" &&
+          op.src.toString.contains("_orders_stage_")) { run("crash-write", loadNew) }
       assert(crashed.status.isInstanceOf[JobRunner.Failed], crashed.message)
       assert(siblings === Set("errors", "orders"), "no staging dir may stay behind")
       assert(destIds("parquet", s"$work/orders") === "100,101")
@@ -811,46 +808,43 @@ class OrchestrationSpec extends SparkTestBase {
       assert(errorCsv(s"$work/errors") === loadErrors("new"))
       assert(listing(s"$work/orders") === loadListing("parquet", "new"))
       // the swap crashes after moving the destination aside
-      LoadCrashFs.crashSwap.set(true)
-      val torn = try run("crash-swap", loadOld) finally LoadCrashFs.crashSwap.set(false)
+      val torn = CrashFs.failing(spark, 1)(swapIn) { run("crash-swap", loadOld) }
       assert(torn.status.isInstanceOf[JobRunner.Failed], torn.message)
-      val fsPath = new org.apache.hadoop.fs.Path(s"loadcrash://$work/orders")
-      val stranded = graft.operators.Maintenance.strandedSiblings(
-        fsPath.getFileSystem(hadoopConf), fsPath)
+      val fsPath = new org.apache.hadoop.fs.Path(s"crashfs://$work/orders")
+      val stranded = graft.sinks.Commit.strandedSiblings(
+        fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration), fsPath)
       assert(stranded.size === 1 && siblings === Set("errors", stranded.head),
         s"the moved-aside destination must be the only sibling left: $siblings")
       assert(destIds("parquet", s"$work/${stranded.head}") === "1,4,5")
       val again = run("crash-swap-rerun", loadOld)
       assert((again.status, again.recordsWritten, again.recordsFailed) === ((JobRunner.Completed, 2L, 1L)))
       assert(destIds("parquet", s"$work/orders") === "100,101")
-    } finally {
-      hadoopConf.unset("fs.loadcrash.impl")
-      hadoopConf.unset("fs.loadcrash.impl.disable.cache")
     }
   }
-}
 
-/** Local file system that fails a staged LOAD on demand: creating a
-  * file under a `_load_` staging dir, or renaming the staged output
-  * into the destination after the old one was moved aside. */
-class LoadCrashFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("loadcrash:///")
-  override def getScheme: String = "loadcrash"
-  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean, bufferSize: Int,
-                      replication: Short, blockSize: Long,
-                      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream = {
-    if (LoadCrashFs.crashWrite.get && f.toString.contains("_load_"))
-      throw new IllegalStateException(s"injected crash creating $f")
-    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
-  }
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
-    if (LoadCrashFs.crashSwap.get && src.getName == "_graft_bad=false" && dst.getName == "orders")
-      throw new IllegalStateException(s"injected crash before renaming $src to $dst")
-    super.rename(src, dst)
-  }
-}
+  /** The rename of a staged LOAD's good side into the destination. */
+  private def swapIn(op: CrashFs.Op) = op.kind == "rename" &&
+    op.src.getName == "_graft_bad=false" && op.dst.getName == "orders"
 
-object LoadCrashFs {
-  val crashWrite = new java.util.concurrent.atomic.AtomicBoolean(false)
-  val crashSwap = new java.util.concurrent.atomic.AtomicBoolean(false)
+  test("an append LOAD after a crashed overwrite keeps the earlier rows") {
+    CrashFs.on(spark) {
+      val work = tmpDir("load_append_crash")
+      val dest = DestinationConfig("PARQUET",
+        ConnectionDetails(path = Some(s"crashfs://$work/orders")))
+      val route = ErrorHandling("ROUTE_TO_FILE", Some(s"$work/errors"))
+      def run(id: String, src: String, mode: String) =
+        JobRunner.run(spark, loadJob(id, src, dest.copy(saveMode = mode), route))
+      assert(run("append-prior", loadOld, "overwrite").status == JobRunner.Completed)
+      // the overwrite dies between moving the destination aside and
+      // moving its own output in
+      val torn = CrashFs.failing(spark, 1)(swapIn) { run("append-torn", loadClean, "overwrite") }
+      assert(torn.status.isInstanceOf[JobRunner.Failed], torn.message)
+      val r = run("append-after", loadNew, "append")
+      assert((r.status, r.recordsWritten, r.recordsFailed) === ((JobRunner.Completed, 3L, 2L)))
+      assert(destIds("parquet", s"$work/orders") === loadIds("both"),
+        "the earlier rows plus the appended batch")
+      assert(new java.io.File(work).list().toSet === Set("errors", "orders"),
+        "no aside or staging dir may be left")
+    }
+  }
 }

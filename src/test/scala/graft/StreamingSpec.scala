@@ -235,9 +235,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("a new destination's first batch, crashed after one bucket rename, replays into its layout") {
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    hadoopConf.set("fs.crashfs.impl", classOf[CrashingLocalFs].getName)
-    try {
+    CrashFs.on(spark) {
       val work = tmpDir("graft_upsert_first_crash_")
       val local = s"$work/dest"
       def run(nBuckets: Int) = EventStreams.upsertStream(spark,
@@ -245,8 +243,11 @@ class StreamingSpec extends SparkTestBase {
         s"crashfs://$local", keys = Seq("k"), versionCol = "ver", checkpoint = s"$work/ckpt",
         nBuckets = nBuckets)
       stageHalf(work, 0, kv(0, 100, 1, "a"))
-      CrashingLocalFs.swapsLeft.set(1)
-      try intercept[Exception](run(4)) finally CrashingLocalFs.swapsLeft.set(Int.MaxValue)
+      // the second rename of a staged `_bucket=` dir into the destination
+      CrashFs.failing(spark, 2)(op => op.kind == "rename" &&
+          op.src.getParent.getName.contains("_stage_") && op.dst.getName.startsWith("_bucket=")) {
+        intercept[Exception](run(4))
+      }
       assert(new java.io.File(local).list().count(_.startsWith("_bucket=")) === 1,
         "the crash must land after the first bucket rename")
       // the replay of batch 0, then batch 1, from a caller with the
@@ -260,7 +261,7 @@ class StreamingSpec extends SparkTestBase {
       val want = (0L until 100L).map(k => if (k < 50) (k, 2L, "b") else (k, 1L, "a"))
       val got = out.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted.toSeq
       assert(got === want, "read-back must equal keep-latest, one row per key")
-    } finally hadoopConf.unset("fs.crashfs.impl")
+    }
   }
 
   /** Every job's stages while `body` runs. */
@@ -2244,7 +2245,7 @@ class StreamingSpec extends SparkTestBase {
           if (helper.find(qe.executedPlan) {
             case w: DataWritingCommandExec => w.cmd match {
               case i: InsertIntoHadoopFsRelationCommand =>
-                i.outputPath.getName.startsWith("dest_stage_")
+                i.outputPath.getName.startsWith("_dest_stage_")
               case _ => false
             }
             case _ => false
@@ -2294,23 +2295,4 @@ class StreamingSpec extends SparkTestBase {
     assert(e.getMessage.contains("AvailableNow"), e.getMessage)
     assert(!new java.io.File(s"$work/ckpt").exists(), "no query may have started")
   }
-}
-
-/** The local file system under the `crashfs` scheme. Renaming a staged
-  * `_bucket=` dir into a streaming-merge destination throws once
-  * `swapsLeft` such renames have run, which is a crash in the middle
-  * of the per-bucket swap. */
-class CrashingLocalFs extends org.apache.hadoop.fs.RawLocalFileSystem {
-  override def getUri: java.net.URI = java.net.URI.create("crashfs:///")
-  override def getScheme: String = "crashfs"
-  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean = {
-    if (src.getParent.getName.contains("_stage_") && dst.getName.startsWith("_bucket=") &&
-        CrashingLocalFs.swapsLeft.getAndDecrement() <= 0)
-      throw new java.io.IOException(s"injected crash before renaming $src to $dst")
-    super.rename(src, dst)
-  }
-}
-
-object CrashingLocalFs {
-  val swapsLeft = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
 }
