@@ -505,10 +505,10 @@ object JobRunner {
             // manifest would name leaf files that a later skippingRead
             // loads WITHOUT the partition columns (dataFiles throws on
             // nested layouts — manifest each leaf instead)
-            val mFs = new org.apache.hadoop.fs.Path(mPath)
-              .getFileSystem(spark.sparkContext.hadoopConfiguration)
-            graft.operators.Maintenance.dataFiles(mFs,
-              new org.apache.hadoop.fs.Path(mPath))
+            val mP = new org.apache.hadoop.fs.Path(mPath)
+            val mFs = mP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            graft.sinks.Commit.repair(mFs, mP)
+            graft.operators.Maintenance.dataFiles(mFs, mP)
             graft.operators.Maintenance.statsManifest(
                 spark.read.format(mDest.`type`.toLowerCase).load(mPath), mCols)
               .coalesce(1) // one row per data FILE — metadata-sized
@@ -558,6 +558,7 @@ object JobRunner {
             val idxPath = s"$iPath/_token_index"
             val idxFs = new org.apache.hadoop.fs.Path(idxPath)
               .getFileSystem(spark.sparkContext.hadoopConfiguration)
+            graft.sinks.Commit.repair(idxFs, new org.apache.hadoop.fs.Path(iPath))
             if (idxFs.exists(new org.apache.hadoop.fs.Path(idxPath)))
               idxFs.delete(new org.apache.hadoop.fs.Path(idxPath), true)
             try {
@@ -837,6 +838,11 @@ object JobRunner {
             val bfMissing = bfParts.filterNot(bfBatch.columns.contains)
             require(bfMissing.isEmpty,
               s"partitionColumns not in the mapped batch: ${bfMissing.mkString(", ")}")
+            // a destination whose publish crashed is restored first:
+            // a backfill into a missing one would strand its other
+            // partitions in the aside
+            val bfP = new org.apache.hadoop.fs.Path(bfPath)
+            graft.sinks.Commit.repair(bfP.getFileSystem(spark.sparkContext.hadoopConfiguration), bfP)
             graft.sinks.Writers.backfillPartitions(bfBatch, bfPath, bfParts)
             stepsRun ::= step
           case "ANONYMIZE_DESTINATION" =>

@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
   * operation, that no staging directory is left, and that a rerun
   * converges to the state after. */
 class CommitCrashSpec extends SparkTestBase {
-  import spark.implicits._
 
   private def lfs = new Path("/").getFileSystem(spark.sparkContext.hadoopConfiguration)
 

@@ -564,6 +564,13 @@ class MaintenanceSpec extends SparkTestBase {
       .filter(f => f.getName.startsWith("part-")).map(_.getName)
     assert(files.nonEmpty && files.forall(_.contains("_000")),
       s"expected bucketed file names, got ${files.take(3).mkString(",")}")
+    // after a publish that crashed after moving the destination aside,
+    // the step restores the destination and indexes it again
+    assert(fs.rename(new Path(dir), new Path(s"$root/_dest_old_deadbeef")))
+    val again = JobRunner.run(spark, cfg.copy(jobId = "index-2"))
+    assert(again.status == JobRunner.Completed, again.message)
+    assert(spark.read.parquet(s"$dir/_token_index").count() == postings.size)
+    assert(!fs.exists(new Path(s"$root/_dest_old_deadbeef")), "the aside must be gone")
   }
 
   test("COMPACT_DESTINATION job step compacts the configured destination") {

@@ -285,6 +285,15 @@ class OrchestrationSpec extends SparkTestBase {
     val bPruned = graft.operators.Maintenance.bloomSkippingRead(
       spark, s"$work/dest", bloom, "k", Seq(1234L))
     assert(bPruned.collect().map(_.getLong(0)).toSeq == Seq(1234L))
+    // the step alone after a publish that crashed after moving the
+    // destination aside: it restores the destination, then manifests it
+    java.nio.file.Files.move(java.nio.file.Paths.get(s"$work/dest"),
+      java.nio.file.Paths.get(s"$work/_dest_old_deadbeef"))
+    val alone = JobRunner.run(spark, graft.model.JobConfig.fromFile(s"$work/m.json")
+      .copy(jobId = "manifest-2", steps = List("MANIFEST_DESTINATION")))
+    assert(alone.status == JobRunner.Completed, alone.message)
+    assert(spark.read.parquet(s"$work/dest/_manifest").count() == dataFiles.size)
+    assert(!new java.io.File(s"$work/_dest_old_deadbeef").exists(), "the aside must be gone")
   }
 
   test("LOAD_SNAPSHOT: each job run commits a new pinned version of the destination") {
@@ -355,6 +364,14 @@ class OrchestrationSpec extends SparkTestBase {
     val got = spark.read.parquet(dest).collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet
     assert(got == Set((1L, 10.0, "a"), (2L, 99.0, "b"), (20L, 98.0, "b"), (3L, 30.0, "c")), got)
+    // a publish that crashed after moving the destination aside: the
+    // rerun restores it before backfilling, so partitions a and c stay
+    java.nio.file.Files.move(java.nio.file.Paths.get(dest), java.nio.file.Paths.get(s"$root/_dest_old_deadbeef"))
+    val again = graft.job.JobRunner.run(spark, cfg.copy(jobId = "backfill-1b"))
+    assert(again.status == graft.job.JobRunner.Completed, again.message)
+    assert(spark.read.parquet(dest).collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSet == got)
+    assert(!new java.io.File(s"$root/_dest_old_deadbeef").exists(), "the aside must be gone")
     // a typo'd partition column fails with the step's contract message
     val bad = cfg.copy(jobId = "backfill-2",
       transformation = graft.model.Transformation("NONE",
