@@ -1039,6 +1039,7 @@ object EtlQueries {
           s.sparkContext.hadoopConfiguration)
         def wapCycle(candidate: org.apache.spark.sql.DataFrame): Boolean =
           try {
+            graft.sinks.Commit.repair(fs, new Path(dest))
             graft.sinks.Commit.replace(fs, new Path(dest)) { staged =>
               candidate.write.parquet(staged.toString)
               val audit = s.read.parquet(staged.toString)

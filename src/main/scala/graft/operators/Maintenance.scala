@@ -74,16 +74,23 @@ object Maintenance {
               sortCols: Seq[String] = Nil,
               compression: Option[String] = None,
               minFiles: Int = 1): CompactStats = {
+    val dest = new Path(dir)
+    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    Commit.repair(fs, dest)
+    compactRepaired(spark, fs, dest, format, targetFileBytes, sortCols, compression, minFiles)
+  }
+
+  /** [[compact]] of a `dest` whose crashed publishes are settled. */
+  private def compactRepaired(spark: SparkSession, fs: FileSystem, dest: Path, format: String,
+                              targetFileBytes: Long, sortCols: Seq[String],
+                              compression: Option[String], minFiles: Int): CompactStats = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val fmt = format.toLowerCase match {
       case f @ ("parquet" | "orc") => f
       case other => throw new IllegalArgumentException(
         s"compact supports parquet/orc (self-describing schemas), got $other")
     }
-    val dest = new Path(dir)
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Commit.repair(fs, dest)
-    require(fs.exists(dest), s"compact: $dir does not exist")
+    require(fs.exists(dest), s"compact: $dest does not exist")
     val files = dataFiles(fs, dest)
     val bytesBefore = files.map(_.getLen).sum
     val nOut = math.max(1L, (bytesBefore + targetFileBytes - 1) / targetFileBytes).toInt
@@ -99,7 +106,7 @@ object Maintenance {
       return CompactStats(files.size.toLong, bytesBefore, files.size.toLong, 0L,
         skipped = true)
 
-    val laidOut = compactionPlan(spark.read.format(fmt).load(dir), nOut, sortCols)
+    val laidOut = compactionPlan(spark.read.format(fmt).load(dest.toString), nOut, sortCols)
     val obs = Observation(s"graft_compact_${java.util.UUID.randomUUID().toString.take(8)}")
     val counted = laidOut.observe(obs, count(lit(1)).as("rows"))
     Commit.replace(fs, dest) { staged =>
@@ -124,7 +131,7 @@ object Maintenance {
    * load is the thing compaction exists to reduce). Each listing
    * first repairs the directories it lists (`Commit.repairChildren`),
    * so a leaf whose swap crashed is restored and compacted, never
-   * skipped as missing.
+   * skipped as missing, and no leaf compaction lists its level again.
    */
   def compactPartitioned(spark: SparkSession, root: String,
                          format: String = "parquet",
@@ -161,7 +168,7 @@ object Maintenance {
       // sortCols path is never count-skipped)
       .filter { case (_, n) => n > 1 || sortCols.nonEmpty }
       .map { case (l, _) => l.toString ->
-        compact(spark, l.toString, format, targetFileBytes, sortCols, compression) }
+        compactRepaired(spark, fs, l, format, targetFileBytes, sortCols, compression, 1) }
   }
 
   /**

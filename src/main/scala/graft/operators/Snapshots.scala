@@ -14,14 +14,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    directory; nothing rewrites in place), so a reader that
  *    resolved a version keeps a consistent view for the whole scan
  *    even while writers land newer versions. A version is staged and
- *    renamed into place, so a crashed write leaves no `v=N`;
+ *    renamed into place only while `v=N` is missing, so a crashed
+ *    write leaves no `v=N` and two writers never replace each
+ *    other's version (the later one fails);
  *  - the pointer is a one-file destination published rename-aside.
  *    Between the two renames of a pointer publish `_current` is
- *    missing; every reader of the pointer runs `Commit.repair` first,
- *    which restores the previous pointer (a crash there included),
- *    so a reader sees the old or the new version. A crash between
- *    the data and the pointer publish leaves the previous version
- *    live and the new `v=N` unreferenced, for `expire` to collect.
+ *    missing and the previous pointer is its lone aside; a reader
+ *    then reads the aside (`Commit.committed`) and renames nothing,
+ *    so it sees the old or the new version, and a crash there leaves
+ *    the old one live. The writers (`write`, `rollback`, `expire`)
+ *    repair the pointer before they use it. A crash between the data
+ *    and the pointer publish leaves the previous version live and the
+ *    new `v=N` unreferenced, for `expire` to collect.
  *
  * Time travel is then just `read(root, Some(version))`, and rollback
  * is `setCurrent(root, olderVersion)` — no data movement in either.
@@ -53,37 +57,47 @@ object Snapshots {
         }
     }.flatten.sorted
 
-  /** The live version from the `_current` pointer, after repairing a
-    * crashed pointer publish; None before the first commit. A pointer
+  /** The live version from the `_current` pointer, or from its aside
+    * while a pointer publish is between its renames (or crashed
+    * there); None before the first commit. Renames nothing. A pointer
     * naming a missing directory fails loudly (manual surgery, not a
     * state this tier produces). */
   def currentVersion(fs: FileSystem, root: Path): Option[Long] = {
     val ptr = new Path(root, "_current")
-    Commit.repair(fs, ptr)
-    if (!fs.exists(ptr)) None
-    else {
-      val in = fs.open(ptr)
-      val v = try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
-      require(fs.exists(new Path(root, s"v=$v")),
-        s"snapshot pointer at $root names v=$v but that directory is missing — " +
-          "restore the directory or point _current at an existing version")
-      Some(v)
-    }
+    def at(p: Path): Option[Long] =
+      try {
+        val in = fs.open(p)
+        try Some(new String(in.readAllBytes(), "UTF-8").trim.toLong) finally in.close()
+      } catch { case _: java.io.FileNotFoundException => None }
+    // a publish that moves on between the listing and the open drops
+    // the aside only after its new pointer is in
+    val v = at(ptr).orElse(Commit.committed(fs, ptr).flatMap(at)).orElse(at(ptr))
+    v.foreach(v => require(fs.exists(new Path(root, s"v=$v")),
+      s"snapshot pointer at $root names v=$v but that directory is missing — " +
+        "restore the directory or point _current at an existing version"))
+    v
   }
 
-  private def setCurrent(fs: FileSystem, root: Path, v: Long): Unit =
-    Commit.replace(fs, new Path(root, "_current")) { staged =>
+  private def setCurrent(fs: FileSystem, root: Path, v: Long): Unit = {
+    val ptr = new Path(root, "_current")
+    Commit.repair(fs, ptr)
+    Commit.replace(fs, ptr) { staged =>
       val out = fs.create(staged, true)
       try out.write(v.toString.getBytes("UTF-8")) finally out.close()
     }
+  }
 
   /** Commit `df` as the next version and move the pointer. Returns
     * the committed version number. */
   def write(df: DataFrame, root: String, format: String = "parquet"): Long = {
     val (fs, rootPath) = fsFor(df.sparkSession, root)
     val next = versions(fs, rootPath).lastOption.getOrElse(0L) + 1
-    Commit.replace(fs, new Path(rootPath, s"v=$next"))(staged =>
-      df.write.format(format).save(staged.toString))
+    val dir = new Path(rootPath, s"v=$next")
+    Commit.stage(fs, dir) { staged =>
+      df.write.format(format).save(staged.toString)
+      if (!Commit.moveIfAbsent(fs, staged, dir)) throw new IllegalStateException(
+        s"$dir was committed by another writer meanwhile; a version is never replaced")
+    }
     setCurrent(fs, rootPath, next)
     next
   }
@@ -115,6 +129,7 @@ object Snapshots {
   def expire(spark: SparkSession, root: String, keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "keepLast must be >= 1")
     val (fs, rootPath) = fsFor(spark, root)
+    Commit.repair(fs, new Path(rootPath, "_current"))
     val all = versions(fs, rootPath)
     val cur = currentVersion(fs, rootPath)
     val victims = all.dropRight(keepLast).filterNot(cur.contains)

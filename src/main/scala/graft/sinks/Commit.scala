@@ -22,9 +22,12 @@ import scala.util.control.NonFatal
  *    destination is restored, an aside next to a live destination is
  *    dropped, and two or more asides of one missing destination fail
  *    with their names (which copy is right is not decidable here).
- *    [[replace]] runs it before it publishes, and every reader of a
- *    destination runs it before its first read, so a crashed publish
- *    is never taken for a missing destination or a first load.
+ *    Every step that maintains a destination runs it once, before it
+ *    reads or publishes (`publish` and `replace` take that as given;
+ *    `publishIfAbsent` runs it itself), so a crashed publish is never
+ *    taken for a missing destination or a first load. A reader that
+ *    only reads, beside a running writer, renames nothing: it reads
+ *    through [[committed]].
  *
  * Spark's file discovery skips a name that starts with `_` only when
  * it has no `=`, so a staged or aside name spells `=` as `~e` (and
@@ -32,7 +35,10 @@ import scala.util.control.NonFatal
  * invisible to a read of the partition root. The repair also knows
  * every aside name earlier builds wrote: `_<d>_old_<8hex>` with a raw
  * `=`, the legacy visible `<d>_old_<8hex>`, `<d>__old`, and
- * `_stale_bucket_<b>` (a `_bucket=<b>` aside). These names are a
+ * `_stale_bucket_<b>` (a `_bucket=<b>` aside). A legacy visible name
+ * beside a live destination may as well be a user's own copy
+ * (`orders_old_20241231`), so the repair only restores one and leaves
+ * dropping it to the age-gated `Maintenance.vacuum`. These names are a
  * reserved namespace next to a destination.
  *
  * One maintainer per destination at a time is assumed, as for any
@@ -96,12 +102,26 @@ object Commit {
 
   private def settle(fs: FileSystem, dir: Path, d: String, asides: Seq[String],
                      live: Boolean): Unit =
-    if (live) asides.foreach(a => fs.delete(new Path(dir, a), true))
+    if (live) asides.filter(_.startsWith("_")).foreach(a => fs.delete(new Path(dir, a), true))
     else if (asides.size == 1) move(fs, new Path(dir, asides.head), new Path(dir, d))
-    else throw new IllegalStateException(
-      s"${new Path(dir, d)} is missing and ${asides.sorted.mkString(", ")} each hold an " +
-        s"earlier copy of it: publishes crashed more than once. Rename the right one " +
-        s"back to $d and remove the others before re-running")
+    else throw stranded(new Path(dir, d), asides)
+
+  private def stranded(dest: Path, asides: Seq[String]) = new IllegalStateException(
+    s"$dest is missing and ${asides.sorted.mkString(", ")} each hold an earlier copy " +
+      s"of it: publishes crashed more than once. Rename the right one back to " +
+      s"${dest.getName} and remove the others before re-running")
+
+  /** Where `dest`'s committed copy is, for a reader that must rename
+    * nothing: `dest` itself, or the lone aside of a missing `dest` (a
+    * publish between its renames, or one that crashed there); None
+    * when there is neither. Two or more asides fail as in [[repair]]. */
+  def committed(fs: FileSystem, dest: Path): Option[Path] =
+    if (fs.exists(dest)) Some(dest)
+    else strandedSiblings(fs, dest) match {
+      case Seq() => None
+      case Seq(a) => Some(new Path(dest.getParent, a))
+      case asides => throw stranded(dest, asides)
+    }
 
   /** Renames `from` to `to`, failing when the file system refuses. */
   def move(fs: FileSystem, from: Path, to: Path): Unit =
@@ -119,7 +139,7 @@ object Commit {
   /** Moves `staged` into `dest`'s place, rename-aside: the previous
     * `dest` stays addressable as its aside until the new copy is in,
     * so a crash at any step leaves a state [[repair]] settles. The
-    * caller has repaired `dest` (it read or [[replace]]d it). */
+    * caller has repaired `dest`. */
   def publish(fs: FileSystem, staged: Path, dest: Path): Unit = {
     val aside = new Path(dest.getParent, s"${hide(dest.getName)}_old_$uuid8")
     val had = fs.exists(dest)
@@ -131,16 +151,25 @@ object Commit {
     if (had) fs.delete(aside, true)
   }
 
-  /** Repairs `dest`, writes a staged copy with `write` and publishes
-    * it in `dest`'s place. */
-  def replace[A](fs: FileSystem, dest: Path)(write: Path => A): A = {
-    repair(fs, dest)
+  /** Writes a staged copy with `write` and publishes it in `dest`'s
+    * place; as for [[publish]], the caller has repaired `dest`. */
+  def replace[A](fs: FileSystem, dest: Path)(write: Path => A): A =
     stage(fs, dest) { staged =>
       val out = write(staged)
       publish(fs, staged, dest)
       out
     }
-  }
+
+  /** Moves `staged` to `dest` only while `dest` is missing; false when
+    * `dest` was there. A rename onto a directory that appeared in
+    * between nests the staged copy inside it and still succeeds, so
+    * that copy is taken back out. */
+  def moveIfAbsent(fs: FileSystem, staged: Path, dest: Path): Boolean =
+    !fs.exists(dest) && {
+      move(fs, staged, dest)
+      val nested = new Path(dest, staged.getName)
+      !(fs.exists(nested) && fs.delete(nested, true))
+    }
 
   /** Joins the files of `staged` into `dest`, keeping `dest`'s own;
     * hive subdirectories merge. Data files move first and `_SUCCESS`
@@ -189,11 +218,7 @@ object Commit {
       repair(fs, d)
       stage(fs, d) { staged =>
         write(staged.toString)
-        // a rename onto a directory that appeared meanwhile nests the
-        // staged copy inside it and still succeeds
-        if (!fs.exists(d)) move(fs, staged, d)
-        val nested = new Path(d, staged.getName)
-        if (fs.exists(nested)) fs.delete(nested, true)
+        moveIfAbsent(fs, staged, d)
       }
     }
     dest

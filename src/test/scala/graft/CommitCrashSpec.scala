@@ -113,8 +113,9 @@ class CommitCrashSpec extends SparkTestBase {
       parquetAt("d")),
     Site("Commit.replace (write-audit-publish)",
       w => kv(0, 4, 1, "a").write.parquet(s"$w/d"),
-      w => Commit.replace(lfsFor(w), new Path(s"crashfs://$w/d"))(st =>
-        kv(0, 8, 2, "b").write.parquet(st.toString)),
+      w => { Commit.repair(lfsFor(w), new Path(s"crashfs://$w/d"))
+             Commit.replace(lfsFor(w), new Path(s"crashfs://$w/d"))(st =>
+               kv(0, 8, 2, "b").write.parquet(st.toString)) },
       parquetAt("d")),
     Site("Snapshots.write",
       // through crashfs only: it keeps no checksum files beside the
@@ -204,6 +205,52 @@ class CommitCrashSpec extends SparkTestBase {
       assert(Snapshots.read(spark, root).count() == 8 && Snapshots.read(spark, root, Some(v)).count() == 8)
       assert(Snapshots.expire(spark, root, keepLast = 1).nonEmpty)
       assert(Snapshots.read(spark, root).count() == 8, "expire must keep the live version")
+    }
+  }
+
+  test("a reader beside a snapshot pointer publish renames nothing and sees the old or the new version") {
+    CrashFs.on(spark) {
+      val root = s"crashfs://${tmpDir("graft_snap_reader_")}/s"
+      Snapshots.write(kv(0, 4, 1, "a"), root)
+      // a reader runs between the writer's two pointer renames and
+      // again between its rename-in and the drop of the old pointer
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      val v = CrashFs.before(spark)(op =>
+          (op.kind == "rename" && op.dst.getName == "_current") ||
+            (op.kind == "delete" && Commit.leftover(op.src.getName).contains(("_current", true)))) {
+        op =>
+          val (n, renames) = CrashFs.counting(spark)(_.kind == "rename")(
+            Snapshots.read(spark, root).count())
+          assert(renames == 0, s"a reader renamed at ${op.kind}")
+          seen += op.kind -> n
+      } {
+        Snapshots.write(kv(0, 8, 2, "b"), root)
+      }
+      assert(seen == Seq("rename" -> 4L, "delete" -> 8L))
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(v == 2L && Snapshots.currentVersion(fs, new Path(root)) == Some(2L))
+      assert(Snapshots.read(spark, root).count() == 8)
+    }
+  }
+
+  test("a snapshot version is never replaced: a write whose v=N appeared meanwhile fails") {
+    CrashFs.on(spark) {
+      val local = s"${tmpDir("graft_snap_race_")}/s"
+      val root = s"crashfs://$local"
+      Snapshots.write(kv(0, 4, 1, "a"), root)
+      // another writer publishes v=2 just before this one moves its copy in
+      val other = java.nio.file.Paths.get(local, "v=2")
+      val e = intercept[IllegalStateException](CrashFs.before(spark)(op =>
+          op.kind == "rename" && op.dst.getName == "v=2") { _ =>
+        java.nio.file.Files.createDirectories(other)
+        java.nio.file.Files.write(other.resolve("theirs"), Array[Byte](1))
+      } {
+        Snapshots.write(kv(0, 8, 2, "b"), root)
+      })
+      assert(e.getMessage.contains("never replaced"), e.getMessage)
+      assert(new java.io.File(other.toString).list().toSeq == Seq("theirs"))
+      assert(leftovers(local, asides = true).isEmpty)
+      assert(Snapshots.read(spark, root).count() == 4, "the failed write moved no pointer")
     }
   }
 

@@ -167,9 +167,30 @@ class MaintenanceSpec extends SparkTestBase {
     val stats = Maintenance.compact(spark, dir)
     assert(stats.filesBefore == 2 && stats.rows == 3000, stats.toString)
     assert(!fs.exists(new Path(s"${dir}_old_deadbeef")), "the aside must be gone")
+    // beside a live destination a visible name may be a user's own
+    // copy: the repair leaves it, only the age-gated vacuum drops it
+    val visible = Seq("t_old_20241231", "t__old")
+    visible.foreach(n => fs.mkdirs(new Path(s"$root/$n")))
+    assert(Maintenance.compact(spark, dir).skipped)
+    assert(visible.forall(n => fs.exists(new Path(s"$root/$n"))), "the repair dropped a visible name")
     fs.mkdirs(new Path(s"${dir}_merge_cafe0123"))
-    assert(Maintenance.vacuum(fs, new Path(dir), olderThanMs = -1000)
-      .contains("t_merge_cafe0123"))
+    assert(Maintenance.vacuum(fs, new Path(dir), olderThanMs = -1000).toSet ==
+      visible.toSet + "t_merge_cafe0123")
+  }
+
+  test("compactPartitioned lists the partition level once, however many leaves it compacts") {
+    CrashFs.on(spark) {
+      val root = tmpDir("graft_compact_") + "/p"
+      spark.range(0, 400).withColumn("k", col("id") % 8)
+        .repartition(2).write.partitionBy("k").parquet(root)
+      val (results, listings) = CrashFs.counting(spark)(op =>
+          op.kind == "list" && op.src.getName == "p") {
+        Maintenance.compactPartitioned(spark, s"crashfs://$root")
+      }
+      assert(results.size == 8 && results.forall(!_._2.skipped), results.toString)
+      assert(listings == 1, s"the level of 8 leaves was listed $listings times")
+      assert(spark.read.parquet(root).agg(sum("id")).head().getLong(0) == (0L until 400L).sum)
+    }
   }
 
   test("compactPartitioned restores a leaf lost mid-swap and compacts it") {
