@@ -36,7 +36,7 @@ import scala.util.control.NonFatal
  * every aside name earlier builds wrote: `_<d>_old_<8hex>` with a raw
  * `=`, the legacy visible `<d>_old_<8hex>`, `<d>__old`, and
  * `_stale_bucket_<b>` (a `_bucket=<b>` aside). A legacy visible name
- * beside a live destination may as well be a user's own copy
+ * beside a live destination may be a user's own copy
  * (`orders_old_20241231`), so the repair only restores one and leaves
  * dropping it to the age-gated `Maintenance.vacuum`. These names are a
  * reserved namespace next to a destination.
@@ -168,7 +168,7 @@ object Commit {
     !fs.exists(dest) && {
       move(fs, staged, dest)
       val nested = new Path(dest, staged.getName)
-      !(fs.exists(nested) && fs.delete(nested, true))
+      if (fs.exists(nested)) { fs.delete(nested, true); false } else true
     }
 
   /** Joins the files of `staged` into `dest`, keeping `dest`'s own;
