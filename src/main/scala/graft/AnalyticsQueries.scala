@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -1139,7 +1140,7 @@ object AnalyticsQueries {
             struct(col("u").as("s"), col("v").as("t"), col("rv").as("rt")))
             .otherwise(struct(col("v").as("s"), col("u").as("t"), col("ru").as("rt"))).as("o"))
           .select(col("o.s").as("s"), col("o.t").as("t"), col("o.rt").as("rt"))
-          .localCheckpoint()
+          .checkpointed()
         // SIZE-GATED closure (Graphs.triangleCount): below the gate,
         // the edge-intersection form broadcasts the out-adjacency
         // (total payload Σ out-deg = |E|) and the Σ out-deg² wedge
@@ -1187,7 +1188,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint()
+          .checkpointed()
         val before = graft.operators.Graphs.degrees(e)
         val after = graft.operators.Graphs.degrees(
           graft.operators.Graphs.peel(e, 3))
@@ -1497,7 +1498,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // degree table AND the edge join both read it
+          .checkpointed() // degree table AND the edge join both read it
         val sym = graft.operators.Graphs.symmetric(e)
         val deg = graft.operators.Graphs.degrees(e)
         sym
@@ -1559,7 +1560,7 @@ object AnalyticsQueries {
         val e = a.join(b, Seq("l_orderkey"))
           .filter(col("la") < col("lb") && col("src") =!= col("dst"))
           .select("src", "dst").distinct()
-          .localCheckpoint() // consumed by the count AND both semi-join sides
+          .checkpointed() // consumed by the count AND both semi-join sides
         val rev = e.select(col("dst").as("src"), col("src").as("dst"))
         val recip = e.join(rev, Seq("src", "dst"), "left_semi")
         val tot = e.agg(count(lit(1)).as("n_edges"))
@@ -1598,7 +1599,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // seeds AND the operator's sym both read it
+          .checkpointed() // seeds AND the operator's sym both read it
         val seeds = graft.operators.Graphs.symmetric(e)
           .filter(col("u") % 10 === 0).select(col("u").as("node")).distinct()
         graft.operators.Graphs.bfsHops(e, seeds, maxHops = 15)
@@ -1638,7 +1639,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // consumed by wedges (x2) and the anti-join
+          .checkpointed() // consumed by wedges (x2) and the anti-join
         val sym = graft.operators.Graphs.symmetric(e)
         val w1 = sym.select(col("u").as("x"), col("v").as("a"))
         val w2 = sym.select(col("u").as("x"), col("v").as("b"))
@@ -1683,7 +1684,7 @@ object AnalyticsQueries {
           .filter(col("c") >= 2)
           .select(col("u"), col("v"),
             (lit(11L) - least(col("c"), lit(10L))).cast("long").as("w"))
-          .localCheckpoint() // seeds AND the operator's sym both read it
+          .checkpointed() // seeds AND the operator's sym both read it
         val seeds = e.select(col("u").as("node"))
           .union(e.select(col("v").as("node")))
           .filter(col("node") % 10 === 0).distinct()
@@ -1725,7 +1726,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // wedges (x2), closing join, and degrees all read it
+          .checkpointed() // wedges (x2), closing join, and degrees all read it
         val sym = graft.operators.Graphs.symmetric(e)
         val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
         val w1 = sym.select(col("u").as("node"), col("v").as("a"))
@@ -3294,7 +3295,7 @@ object AnalyticsQueries {
           expr("kll_sketch_get_quantile_double(sk, 0.5d)").as("est50"))
         val ev = Tables.t(s, dir, "events")
           .select(col("event_type"), col("value").cast("double").as("v"))
-          .localCheckpoint() // exact quantile AND the rank census
+          .checkpointed() // exact quantile AND the rank census
         val exact = graft.operators.Ranking
           .groupedCountingQuantile(ev, "event_type", "v", 0.5, out = "p50")
         val rank = ev.join(broadcast(est), Seq("event_type"))
@@ -5253,7 +5254,7 @@ object AnalyticsQueries {
         val fp = Tables.t(s, dir, "lineitem")
           .select(col("l_returnflag").as("f"), col("l_partkey").as("p"))
           .distinct()
-          .localCheckpoint() // feeds the sketch agg AND the exact self-join
+          .checkpointed() // feeds the sketch agg AND the exact self-join
         val sk = fp.groupBy("f")
           .agg(expr("theta_sketch_agg(p, 12)").as("sk")) // |flags| bounded binaries
         val a = sk.select(col("f").as("flag_a"), col("sk").as("ska"))
@@ -5302,7 +5303,7 @@ object AnalyticsQueries {
           .select(date_trunc("month", col("l_shipdate")).cast("date").as("mon"),
             col("l_partkey").as("p"))
           .distinct()
-          .localCheckpoint() // sketch agg AND both sides of the anti-join
+          .checkpointed() // sketch agg AND both sides of the anti-join
         val sk = mp.groupBy("mon")
           .agg(expr("theta_sketch_agg(p, 12)").as("sk")) // |months| binaries
         val prevSk = sk.select(add_months(col("mon"), 1).as("mon"),
@@ -5348,7 +5349,7 @@ object AnalyticsQueries {
           .select(col("l_shipdate").cast("date").as("day"),
             date_trunc("month", col("l_shipdate")).cast("date").as("mon"),
             col("l_partkey").as("p"))
-          .localCheckpoint() // daily sketch pass AND the exact countDistinct
+          .checkpointed() // daily sketch pass AND the exact countDistinct
         val est = e.groupBy("mon", "day")
           .agg(expr("theta_sketch_agg(p, 12)").as("sk"))
           .groupBy("mon")
@@ -5388,7 +5389,7 @@ object AnalyticsQueries {
         val li = Tables.t(s, dir, "lineitem")
           .select(col("l_returnflag"), col("l_quantity").cast("double").as("q"),
             (col("l_orderkey") % 8).as("shard"))
-          .localCheckpoint() // sketch pass, exact quantile AND the rank count
+          .checkpointed() // sketch pass, exact quantile AND the rank count
         val estDf = li.groupBy("l_returnflag", "shard")
           .agg(expr("kll_sketch_agg_double(q, 400)").as("sk"))
           .groupBy("l_returnflag")
@@ -5852,7 +5853,7 @@ object AnalyticsQueries {
             count(lit(1)).as("freq"),
             sum(round(col("o_totalprice") * 100).cast("long")).as("monet"))
           .withColumn("_g", lit(1))
-          .localCheckpoint() // three ntile consumers; customer-dimension-sized
+          .checkpointed() // three ntile consumers; customer-dimension-sized
         def cls(vcol: String, out: String) = graft.operators.Ranking
           .segmentedRanks(m, "_g", Seq(vcol, "c"), ntiles = Some(4))
           .select(col("c"), col("ntile").as(out))
@@ -6295,7 +6296,7 @@ object AnalyticsQueries {
         val deltas = o.select(col("open_mon").as("mon"), lit(1L).as("d"))
           .unionByName(o.select(col("close_mon").as("mon"), lit(-1L).as("d")))
           .groupBy("mon").agg(sum("d").as("delta"))
-          .localCheckpoint() // bounded by the calendar; two consumers
+          .checkpointed() // bounded by the calendar; two consumers
         val d2 = deltas.select(col("mon").as("mon2"), col("delta").as("delta2"))
         deltas.join(broadcast(d2), col("mon2") <= col("mon"))
           .groupBy("mon", "delta").agg(sum("delta2").as("backlog"))
@@ -6332,7 +6333,7 @@ object AnalyticsQueries {
           .select(col("o_custkey").as("u"),
             date_trunc("month", col("o_orderdate")).cast("date").as("mon"))
           .distinct()
-          .localCheckpoint() // four consumers of a (user, month) grid
+          .checkpointed() // four consumers of a (user, month) grid
         val firstMon = am.groupBy("u").agg(min("mon").as("first_mon"))
         val prev = am.select(col("u"), add_months(col("mon"), 1).as("mon"),
           lit(1).as("was_prev"))
@@ -6437,7 +6438,7 @@ object AnalyticsQueries {
         val withNext = h
           .withColumn("nhr", lead("hr", 1).over(w))
           .withColumn("ncents", lead("cents", 1).over(w))
-          .localCheckpoint()
+          .checkpointed()
         val actual = withNext.select(col("event_type"), col("hr"), col("cents"),
           lit(false).as("is_interp"))
         val interp = withNext
@@ -6515,7 +6516,7 @@ object AnalyticsQueries {
       (s, dir) => {
         val it = Tables.t(s, dir, "lineitem")
           .select(col("l_orderkey"), col("l_partkey")).distinct()
-          .localCheckpoint() // three join legs read it
+          .checkpointed() // three join legs read it
         val a = it.select(col("l_orderkey"), col("l_partkey").as("p1"))
         val b = it.select(col("l_orderkey"), col("l_partkey").as("p2"))
         val c = it.select(col("l_orderkey"), col("l_partkey").as("p3"))
@@ -6592,7 +6593,7 @@ object AnalyticsQueries {
           .select(col("user_id"),
             date_trunc("day", col("ts")).cast("date").as("day"))
           .distinct()
-          .localCheckpoint() // the day spine and the coverage both read it
+          .checkpointed() // the day spine and the coverage both read it
         val cover = act.select(col("user_id"),
           explode(expr("sequence(0, 6)")).as("o"), col("day"))
           .select(col("user_id"), expr("date_add(day, o)").as("day"))
@@ -6711,7 +6712,7 @@ object AnalyticsQueries {
           .groupBy(col("event_type"),
             (unix_micros(col("ts")) / 3600000000L).cast("long").as("hr"))
           .agg(count(lit(1)).as("n"))
-          .localCheckpoint() // baseline and probe both read it
+          .checkpointed() // baseline and probe both read it
         val b = h.groupBy(col("event_type").as("_bt"), (col("hr") % 24).as("_hod"))
           .agg(sum("n").as("tot"), count(lit(1)).as("nslots"))
         h.join(b, col("event_type") === col("_bt") &&
@@ -7014,7 +7015,7 @@ object AnalyticsQueries {
         val sp = Tables.t(s, dir, "lineitem")
           .select(col("l_suppkey").as("supplier"), col("l_partkey").as("p"))
           .distinct()
-          .localCheckpoint() // authority AND the hub projection read it
+          .checkpointed() // authority AND the hub projection read it
         val auth = sp.groupBy("p").agg(count(lit(1)).as("authority"))
         sp.join(auth, Seq("p"))
           .groupBy("supplier").agg(sum("authority").as("hub"))
@@ -7049,7 +7050,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // wedges (x2), degrees, and the anti-join
+          .checkpointed() // wedges (x2), degrees, and the anti-join
         val sym = graft.operators.Graphs.symmetric(e)
         val raw = sym.groupBy("u").agg(count(lit(1)).as("deg"))
           .select(col("u").as("x"), expr("1000000 div deg").as("ra_z"))
@@ -7578,7 +7579,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // wedges (x2), degrees, and the anti-join
+          .checkpointed() // wedges (x2), degrees, and the anti-join
         val sym = graft.operators.Graphs.symmetric(e)
         val deg = sym.groupBy("u").agg(count(lit(1)).as("deg"))
         val w1 = sym.select(col("u").as("x"), col("v").as("a"))
@@ -7655,7 +7656,7 @@ object AnalyticsQueries {
           .groupBy(col("l_shipdate").cast("date").as("d"))
           .agg(count(lit(1)).as("n"))
           .withColumn("_band", year(col("d")))
-          .localCheckpoint() // day grain; window + carry + totals read it
+          .checkpointed() // day grain; window + carry + totals read it
         val wIn = Window.partitionBy("_band").orderBy("d")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val bandTot = days.groupBy(col("_band").as("_b2"))
@@ -7771,7 +7772,7 @@ object AnalyticsQueries {
               "zip_with(slice(transform(rs, x -> x.event_type), 1, size(rs) - 1), " +
               "slice(transform(rs, x -> x.event_type), 2, size(rs) - 1), " +
               "(a, b) -> concat(a, '>', b))")).as("bgs"))
-          .localCheckpoint() // probe AND the candidate explode read it
+          .checkpointed() // probe AND the candidate explode read it
         val probe = bg.filter(col("user_id") === 1)
           .select(explode(col("bgs")).as("tok"))
         val pn = probe.agg(count(lit(1)).as("na"))
@@ -7820,7 +7821,7 @@ object AnalyticsQueries {
             least(expr("CAST(floor(l_extendedprice / 10000) AS BIGINT)"), lit(9L)).as("px"),
             least(expr("CAST(floor(l_quantity / 5) AS BIGINT)"), lit(9L)).as("qy"))
           .groupBy("px", "qy").agg(count(lit(1)).as("cxy"))
-          .localCheckpoint() // 100 rows; marginals + terms read it
+          .checkpointed() // 100 rows; marginals + terms read it
         val mx = cells.groupBy("px").agg(sum("cxy").as("cx"))
         val my = cells.groupBy("qy").agg(sum("cxy").as("cy"))
         val n = cells.agg(sum("cxy").as("n"))
@@ -7866,7 +7867,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // degrees AND the qualified-edge join read it
+          .checkpointed() // degrees AND the qualified-edge join read it
         val sym = graft.operators.Graphs.symmetric(e)
         val deg = sym.groupBy("u").agg(count(lit(1)).as("deg"))
         val ks = s.range(1, 4).select((lit(1) * pow(lit(2), col("id"))).cast("long").as("k"))
@@ -7983,7 +7984,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // both hop joins read the symmetric form
+          .checkpointed() // both hop joins read the symmetric form
         val sym = graft.operators.Graphs.symmetric(e)
         val seeds = sym.select(col("u").as("seed")).distinct()
           .filter(col("seed") % 10 === 0)
@@ -8032,8 +8033,8 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // hop joins AND the exact rider read it
-        val sym = graft.operators.Graphs.symmetric(e).localCheckpoint()
+          .checkpointed() // hop joins AND the exact rider read it
+        val sym = graft.operators.Graphs.symmetric(e).checkpointed()
         // sketch side: 2-round HyperBall over ALL nodes (the census a
         // real pipeline keeps); estimates read for the seed slice
         val est = graft.operators.Graphs.reachSketch(sym, hops = 2)
@@ -8088,7 +8089,7 @@ object AnalyticsQueries {
           .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("h"))
           .agg(count(lit(1)).as("c"))
           .withColumn("hod", hour(col("h")).cast("long"))
-          .localCheckpoint() // slot moments AND the flag scan read it
+          .checkpointed() // slot moments AND the flag scan read it
         val slots = hc.groupBy("event_type", "hod")
           .agg(count(lit(1)).as("n"), sum("c").as("s"),
             sum(col("c") * col("c")).as("q"))
@@ -8163,7 +8164,7 @@ object AnalyticsQueries {
           .filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-          .localCheckpoint() // labels, degrees, and the within-edge count
+          .checkpointed() // labels, degrees, and the within-edge count
         val sym = graft.operators.Graphs.symmetric(e)
         val lbl = sym.select(col("u").as("node"), (col("v") % 7).as("lbl"))
           .groupBy("node", "lbl").agg(count(lit(1)).as("c"))

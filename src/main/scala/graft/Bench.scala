@@ -1,4 +1,5 @@
 package graft
+import graft.operators.Checkpoints
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   /** Queries whose per-query time goes into the one-line JSON. The
@@ -159,13 +160,18 @@ object Bench {
     * evaluates the full output the query exists to produce. */
   def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** Seconds `body` takes. Afterwards (also on failure) drops the
-    * persisted intermediates: queries are independent, so earlier
-    * queries' caches must not GC-tax later ones. */
+  /** Runs one query (or index build) in its own `Checkpoints.scoped`
+    * block, then clears the cache. Afterwards (also on failure) it has
+    * left no cached table, checkpoint or temp work dir: queries are
+    * independent, so earlier queries' leftovers must not GC-tax later
+    * ones. `body` consumes its frame inside. */
+  def isolated[A](spark: SparkSession)(body: => A): A =
+    try Checkpoints.scoped(body) finally spark.catalog.clearCache()
+
+  /** Seconds `body` takes, run [[isolated]]; the cleanup is not timed. */
   def seconds(spark: SparkSession)(body: => Unit): Double = {
     val t0 = System.nanoTime()
-    try { body; (System.nanoTime() - t0) / 1e9 }
-    finally spark.catalog.clearCache()
+    isolated(spark) { body; (System.nanoTime() - t0) / 1e9 }
   }
 
   /** The persisted-index builds the bench PAYS (VERDICT r19 #3: the

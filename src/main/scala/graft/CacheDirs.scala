@@ -36,17 +36,28 @@ object CacheDirs {
       tempWork.forEach(p => deleteRecursively(p.toFile))
     }))
 
-  /** A fresh per-invocation work dir, removed by ONE JVM shutdown
-    * hook. For gate queries whose result DataFrame lazily reads files
-    * the query itself produced (streaming sinks, job destinations):
-    * the dir cannot be deleted when the query fn returns, but repeated
-    * runs in one JVM (bench, verify) must not leak it either. */
+  /** A fresh per-invocation work dir, for gate queries whose result
+    * DataFrame lazily reads files the query itself produced (streaming
+    * sinks, job destinations): it cannot be deleted when the query fn
+    * returns. The innermost `Checkpoints.scoped` block open on this
+    * thread owns it and deletes it on exit, so repeated runs in one
+    * JVM (bench, verify) do not pile dirs up; a dir made with no scope
+    * open is removed by ONE JVM shutdown hook. */
   def tempWorkDir(prefix: String): Path = {
-    tempHook
+    require(prefix.startsWith("graft_") && !prefix.startsWith("graft_cache_"),
+      s"temp work dir prefix '$prefix' must start with graft_ (and not graft_cache_)")
     val p = Files.createTempDirectory(prefix)
-    tempWork.add(p)
+    if (!graft.operators.Checkpoints.ownDir(p)) { tempHook; tempWork.add(p) }
     p
   }
+
+  /** The temp work dirs present now: the `graft_*` entries of the JVM's
+    * temp dir, the cache root aside. Two listings, before and after a
+    * run, show the dirs the run left behind. */
+  def tempWorkDirs(): Set[String] =
+    Option(new java.io.File(sys.props.getOrElse("java.io.tmpdir", "/tmp")).list())
+      .fold(Set.empty[String])(_.filter(n => n.startsWith("graft_") &&
+        !n.startsWith("graft_cache_")).toSet)
 
   /** Owner-only cache root; created on first use, re-verified on every
     * call (verification, not creation, is the defense — creation can

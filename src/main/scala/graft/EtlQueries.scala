@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Checkpoints.Checkpointed
 import graft.model._
 import graft.job.JobRunner
 import graft.operators.{ErrorPolicy, IncrementalAgg, Maintenance, MappingOp, Profile, Quality, Upsert}
@@ -2392,7 +2393,7 @@ object EtlQueries {
           .write.text(work.resolve("feed").toString)
         val lines = s.read.text(work.resolve("feed").toString)
           .select(col("value"), substring(col("value"), 1, 1).as("tag"))
-          .localCheckpoint() // one read feeds both the census and the trailer parse
+          .checkpointed() // one read feeds both the census and the trailer parse
         val counts = lines.groupBy("tag").agg(count(lit(1)).as("n"))
         val observed = counts.filter(col("tag") === "D")
           .select(col("n").as("n_detail"))
@@ -2437,7 +2438,7 @@ object EtlQueries {
           // exactly that) — materialize the parsed rows first, the
           // documented save-then-query discipline; at scale this is
           // the landing-parquet write the routing step does anyway
-          .localCheckpoint()
+          .checkpointed()
           .groupBy(col("_corrupt").isNotNull.as("is_bad"))
           .agg(count(lit(1)).as("n"),
             sum(when(col("_corrupt").isNull, round(col("price") * 100).cast("long")))
@@ -2540,7 +2541,7 @@ object EtlQueries {
         val existing = graft.operators.Ranking.segmentedRanks(
             c.filter(col("bk") % 3 =!= 0).withColumn("_g", lit(0)), "_g", Seq("bk"))
           .select(col("bk"), col("row_number").as("sk"))
-          .localCheckpoint() // read twice: the output AND the max offset
+          .checkpointed() // read twice: the output AND the max offset
         // first-ever load (empty existing era) must mint from 0, not
         // NULL every fresh key
         val maxSk = existing.agg(coalesce(max("sk"), lit(0L)).as("mx"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,8 +99,8 @@ object RecallQueries {
       (s, dir) => {
         // one corpus materialization for the truth leg's two passes +
         // the approx leg's candidate-sized vector joins (the
-        // sim_ivf_recall discipline); freed before return
-        val emb = embAll(s, dir).localCheckpoint()
+        // sim_ivf_recall discipline)
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         // THE production operator at its production knobs, through the
         // fingerprint-cached persisted signature table (r19 — no
@@ -113,9 +114,7 @@ object RecallQueries {
           .select("probe_id", "vec_id")
         val truth = graft.operators.Similarity.batchTopK(emb, probes, "e", K)
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "lsh_h6", truth, approx, floorPermille = 300L)
-        graft.operators.Checkpoints.free(emb)
-        out
+        recallRow(s, "lsh_h6", truth, approx, floorPermille = 300L)
       },
       None),
 
@@ -131,9 +130,8 @@ object RecallQueries {
         // approx leg and the truth leg (the truncation-curve
         // checkpoint pattern — VERDICT r19 #2: this gate re-parsed the
         // corpus across both legs and anti-scaled); the assignment
-        // table materializes inside ivfIndex. recallRow's counts run
-        // inside the gate, so the blocks free before return.
-        val emb = embAll(s, dir).localCheckpoint()
+        // table materializes inside ivfIndex.
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         val (assigned, centroids) =
           graft.operators.Similarity.ivfIndex(emb, "vec_id", "e", nLists = 16)
@@ -146,10 +144,7 @@ object RecallQueries {
           .select("probe_id", "vec_id")
         val truth = graft.operators.Similarity.batchTopK(emb, probes, "e", K)
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "ivf_p4", truth, approx, floorPermille = 300L)
-        graft.operators.Checkpoints.free(assigned)
-        graft.operators.Checkpoints.free(emb)
-        out
+        recallRow(s, "ivf_p4", truth, approx, floorPermille = 300L)
       },
       None),
 
@@ -163,8 +158,8 @@ object RecallQueries {
       (s, dir) => {
         // shared-materialization discipline (sim_ivf_recall): one
         // corpus parse feeds training, encode, both serving passes
-        // and the exact truth leg; freed before return
-        val emb = embAll(s, dir).localCheckpoint()
+        // and the exact truth leg
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         val cb = graft.operators.Similarity.trainPqCodebooks(
           emb, "vec_id", "e", dim = 64, m = 8, k = 16)
@@ -172,10 +167,8 @@ object RecallQueries {
         val approx = graft.operators.Similarity
           .pqBatchTopK(enc, probes, cb, k = K, rerankVecCol = Some("e"))
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "pq_m8", exactL2TopK(emb, probes), approx,
+        recallRow(s, "pq_m8", exactL2TopK(emb, probes), approx,
           floorPermille = 600L)
-        graft.operators.Checkpoints.free(emb)
-        out
       },
       None),
 
@@ -193,7 +186,7 @@ object RecallQueries {
         // ivfPqIndex (the ADC stage and the shortlist fetch-back both
         // read it; before, the whole assign+train+encode subtree
         // executed per read)
-        val emb = embAll(s, dir).localCheckpoint()
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         val (enc, cents, cb) = graft.operators.Similarity.ivfPqIndex(
           emb, "vec_id", "e", dim = 64, nLists = 16, m = 8, k = 16)
@@ -201,11 +194,8 @@ object RecallQueries {
             enc, cents, cb, probes, k = K, nProbe = 4,
             rerankVecCol = Some("e"))
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "ivfpq_p4", exactL2TopK(emb, probes), approx,
+        recallRow(s, "ivfpq_p4", exactL2TopK(emb, probes), approx,
           floorPermille = 300L)
-        graft.operators.Checkpoints.free(enc)
-        graft.operators.Checkpoints.free(emb)
-        out
       },
       None),
 
@@ -230,14 +220,14 @@ object RecallQueries {
           (col("vec_id") + 100000).as("vec_id"),
           expr("transform(e, (x, i) -> x * (1.0 + " +
             "(pmod(xxhash64(vec_id * 64 + i), 19) - 9) / 100.0))").as("e"))
-        val corpus = emb.unionByName(jittered).localCheckpoint() // both paths read it
+        val corpus = emb.unionByName(jittered).checkpointed() // both paths read it
         val t = 0.998
         val banded = graft.operators.Similarity
           .embeddingNearDups(corpus, "vec_id", "e", dim = 64, threshold = t)
           .select("id_a", "id_b")
         val exact = graft.operators.Similarity
           .exactBlockedNearDups(corpus, "vec_id", "e", threshold = t, blockDims = 2)
-          .select("id_a", "id_b").localCheckpoint() // denominator AND the semi-join
+          .select("id_a", "id_b").checkpointed() // denominator AND the semi-join
         val nExact = exact.count()
         val hits = exact.join(banded, Seq("id_a", "id_b"), "left_semi").count()
         require(nExact > 0, "jitter fixture produced no near-dup pairs — gate vacuous")
@@ -245,11 +235,8 @@ object RecallQueries {
         require(recall >= 700L,
           s"embedding near-dup recall degraded to $recall permille over $nExact true pairs " +
             "(floor 700) — retune nBits/chunks before serving")
-        val out = Seq(("embed_h3", nExact, recall))
+        Seq(("embed_h3", nExact, recall))
           .toDF("family", "n_true_pairs", "recall_permille")
-        graft.operators.Checkpoints.free(corpus)
-        graft.operators.Checkpoints.free(exact)
-        out
       },
       None),
 
@@ -275,21 +262,18 @@ object RecallQueries {
         val scan = graft.operators.Similarity.annBatchTopK(
             emb, probes, "e", dim = 64, k = K, nBits = 16, probeHamming = 2,
             sigs = sigs)
-          .select("probe_id", "vec_id").localCheckpoint()
+          .select("probe_id", "vec_id").checkpointed()
         val bucketed = graft.operators.Similarity.annBucketedBatchTopK(
             emb, probes, "e", dim = 64, k = K, nBits = 16, probeHamming = 2,
             sigs = sigs)
-          .select("probe_id", "vec_id").localCheckpoint()
+          .select("probe_id", "vec_id").checkpointed()
         val nScan = scan.count()
         val nBuck = bucketed.count()
         val common = scan.join(bucketed, Seq("probe_id", "vec_id"), "left_semi").count()
         require(nScan == nBuck && common == nScan,
           s"bucketed/scan LSH divergence at r=2: scan=$nScan bucketed=$nBuck common=$common")
-        val out = Seq(("ann_bucketed_r2", NProbes.toLong, K.toLong, nScan, common))
+        Seq(("ann_bucketed_r2", NProbes.toLong, K.toLong, nScan, common))
           .toDF("family", "n_probes", "k", "n_rows", "n_agree")
-        graft.operators.Checkpoints.free(scan)
-        graft.operators.Checkpoints.free(bucketed)
-        out
       },
       None),
 
@@ -307,7 +291,7 @@ object RecallQueries {
     Q("sim_mrl_recall",
       (s, dir) => {
         // shared-materialization discipline (sim_ivf_recall)
-        val emb = embAll(s, dir).localCheckpoint()
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         // THE production operator at its production knobs (no
         // hand-rolled copy to drift from), excludeSelf matching the
@@ -320,9 +304,7 @@ object RecallQueries {
           .select("probe_id", "vec_id")
         val truth = graft.operators.Similarity.batchTopK(emb, probes, "e", K)
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "mrl_d32_f8", truth, approx, floorPermille = 500L)
-        graft.operators.Checkpoints.free(emb)
-        out
+        recallRow(s, "mrl_d32_f8", truth, approx, floorPermille = 500L)
       },
       None),
 
@@ -336,7 +318,7 @@ object RecallQueries {
     Q("sim_sq8_recall",
       (s, dir) => {
         // shared-materialization discipline (sim_ivf_recall)
-        val emb = embAll(s, dir).localCheckpoint()
+        val emb = embAll(s, dir).checkpointed()
         val probes = probesOf(emb)
         val approx = graft.operators.Similarity
           .sq8BatchTopK(emb, probes, "e", k = K, shortlistFactor = 2,
@@ -345,9 +327,7 @@ object RecallQueries {
           .select("probe_id", "vec_id")
         val truth = graft.operators.Similarity.batchTopK(emb, probes, "e", K)
           .select("probe_id", "vec_id")
-        val out = recallRow(s, "sq8_f2", truth, approx, floorPermille = 900L)
-        graft.operators.Checkpoints.free(emb)
-        out
+        recallRow(s, "sq8_f2", truth, approx, floorPermille = 900L)
       },
       None),
 
@@ -376,7 +356,7 @@ object RecallQueries {
         val terms = Seq("spark", "merge", "window")
         val (postings, stats) = TextQueries.bm25IncrementalTables(s, dir)
         def leg(ts: Seq[String]) =
-          TextQueries.bm25ScoreTerms(postings, stats, ts, 50).localCheckpoint()
+          TextQueries.bm25ScoreTerms(postings, stats, ts, 50).checkpointed()
         val a = leg(Seq("spark", "merge"))
         val b = leg(Seq("merge", "window"))
         val fused = TextQueries.rrfLeg(a, "score_micro", "ra")
@@ -384,15 +364,15 @@ object RecallQueries {
           .select(col("doc_id"),
             (coalesce(col("ra"), lit(0L)) + coalesce(col("rb"), lit(0L)))
               .as("score_micro"))
-          .localCheckpoint()
+          .checkpointed()
         val relset = postings.filter(col("token").isin(terms: _*))
           .groupBy("doc_id").agg(count(lit(1)).as("nt"))
           .filter(col("nt") === terms.size).select("doc_id")
-          .localCheckpoint()
+          .checkpointed()
         val rtot = relset.count()
         val wts = s.range(1, 11).select(col("id").as("i"),
           expr("CAST(round(1000000 / (ln(CAST(id + 1 AS DOUBLE)) / ln(2.0))) AS BIGINT)")
-            .as("w")).localCheckpoint()
+            .as("w")).checkpointed()
         // coalesce like the dcg path: an empty relset must read
         // idcg = 0 (-> ndcg 0), not NPE on a null sum
         val idcg = wts.filter(col("i") <= math.min(10L, rtot))
@@ -416,13 +396,11 @@ object RecallQueries {
         require(nf >= na && nf >= nb,
           s"RRF fusion must not underperform its best leg: " +
             s"fusion=$nf legA=$na legB=$nb (ndcg permille, floor = max leg)")
-        val out = Seq(
+        Seq(
           ("leg_spark_merge", na, rtot),
           ("leg_merge_window", nb, rtot),
           ("rrf_fusion", nf, rtot))
           .toDF("ranking", "ndcg_permille", "n_relevant")
-        Seq(a, b, fused, relset, wts).foreach(graft.operators.Checkpoints.free)
-        out
       },
       None),
 
@@ -442,7 +420,7 @@ object RecallQueries {
           .withColumn("err_permille", expr(
             "CAST(abs(approx_parts - exact_parts) * 1000 div exact_parts AS BIGINT)"))
           .orderBy("l_returnflag")
-          .localCheckpoint() // 3 rows: the REQUIRE probe and the caller's
+          .checkpointed() // 3 rows: the REQUIRE probe and the caller's
                              // write read ONE materialization, not two scans
         val worst = d.agg(max("err_permille")).head().getLong(0)
         require(worst <= 100L,
@@ -476,7 +454,7 @@ object RecallQueries {
             "CAST(abs(approx_med - exact_med) * 1000 div exact_med AS BIGINT)"))
           .select("l_returnflag", "approx_med", "exact_med", "err_permille")
           .orderBy("l_returnflag")
-          .localCheckpoint() // 3 rows: one materialization for probe + write
+          .checkpointed() // 3 rows: one materialization for probe + write
         val worst = d.agg(max("err_permille")).head().getLong(0)
         require(worst <= 50L,
           s"approx_percentile error degraded: $worst permille (floor 50)")

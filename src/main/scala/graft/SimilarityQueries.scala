@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -642,7 +643,7 @@ object SimilarityQueries {
       (s, dir) => {
         val ph = phashTable(s, dir)
           .select("media_id", "phash_hi", "phash_lo")
-          .localCheckpoint() // both sides of the band join read it
+          .checkpointed() // both sides of the band join read it
         val banded = ph.select(col("media_id"), col("phash_hi"), col("phash_lo"),
           posexplode(array(
             col("phash_lo").bitwiseAND(lit(0xFFFFL)),
@@ -753,7 +754,7 @@ object SimilarityQueries {
       (s, dir) => {
         val ph = phashTable(s, dir)
           .select("media_id", "phash_hi", "phash_lo")
-          .localCheckpoint() // both sides of the band join read it
+          .checkpointed() // both sides of the band join read it
         val banded = ph.select(col("media_id"), col("phash_hi"), col("phash_lo"),
           posexplode(array(
             col("phash_lo").bitwiseAND(lit(0xFFFFL)),
@@ -920,7 +921,7 @@ object SimilarityQueries {
         // replaces 13 file scans of the same parquet (ReuseCheck r19)
         val emb = Tables.t(s, dir, "embeddings")
           .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
-          .localCheckpoint()
+          .checkpointed()
         val probes = emb.filter(col("vec_id") < 20)
           .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
         def top(d: Int) = graft.operators.Similarity.batchTopK(
@@ -1975,14 +1976,14 @@ object SimilarityQueries {
         val (postings, stats) = TextQueries.bm25IncrementalTables(s, dir)
         val lex = TextQueries.bm25ScoreTerms(postings, stats, terms, 20)
           .withColumnRenamed("score_micro", "s_lex")
-          .localCheckpoint() // 20 rows; both sides of the rank self-join
+          .checkpointed() // 20 rows; both sides of the rank self-join
         val emb = Tables.t(s, dir, "embeddings")
           .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
         val probe = emb.filter(col("vec_id") === 0).select(col("e").as("probe_e"))
         val dense = graft.operators.Similarity
           .bruteForceTopK(emb.filter(col("vec_id") =!= 0), probe, "e", 20)
           .select(col("vec_id").as("doc_id"), col("cos_sim"))
-          .localCheckpoint()
+          .checkpointed()
         TextQueries.rrfLeg(lex, "s_lex", "r_lex")
           .join(TextQueries.rrfLeg(dense, "cos_sim", "r_dense"),
             Seq("doc_id"), "full_outer")
@@ -2045,7 +2046,7 @@ object SimilarityQueries {
         val (postings, stats) = TextQueries.bm25IncrementalTables(s, dir)
         val lex = TextQueries.bm25ScoreTerms(postings, stats, terms, 20)
           .withColumnRenamed("score_micro", "s_lex")
-          .localCheckpoint()
+          .checkpointed()
         val ihits = postings.filter(col("token").isin(terms: _*))
         val ctf = ihits.groupBy("token").agg(sum("tf").as("ctf"))
         val lm = ihits.join(broadcast(ctf), Seq("token"))
@@ -2059,14 +2060,14 @@ object SimilarityQueries {
               expr("CAST(round(ln(CAST(2000 AS DOUBLE) / CAST(dl + 2000 AS DOUBLE)) * 1000000) AS BIGINT)"))
               .as("s_lm"))
           .orderBy(desc("s_lm"), col("doc_id")).limit(20)
-          .localCheckpoint()
+          .checkpointed()
         val emb = Tables.t(s, dir, "embeddings")
           .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
         val probe = emb.filter(col("vec_id") === 0).select(col("e").as("probe_e"))
         val dense = graft.operators.Similarity
           .bruteForceTopK(emb.filter(col("vec_id") =!= 0), probe, "e", 20)
           .select(col("vec_id").as("doc_id"), col("cos_sim"))
-          .localCheckpoint()
+          .checkpointed()
         TextQueries.rrfLeg(lex, "s_lex", "r_lex")
           .join(TextQueries.rrfLeg(lm, "s_lm", "r_lm"), Seq("doc_id"), "full_outer")
           .join(TextQueries.rrfLeg(dense, "cos_sim", "r_dense"), Seq("doc_id"), "full_outer")
@@ -2217,11 +2218,11 @@ object SimilarityQueries {
           .select("vec_id", "e")
         val probeB = emb.filter(col("vec_id") === 0)
           .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
-          .localCheckpoint()
-        val probe1 = probeB.select(col("probe_e")).localCheckpoint()
+          .checkpointed()
+        val probe1 = probeB.select(col("probe_e")).checkpointed()
         val packed = bitsTableCached(s, dir)
         val probeBits = packed.filter(col("vec_id") === 0)
-          .select(col("lo").as("plo"), col("hi").as("phi")).localCheckpoint()
+          .select(col("lo").as("plo"), col("hi").as("phi")).checkpointed()
         val sigs = Some(sigTableCached(s, dir))
         val pfx = Some(prefixTableCached(s, dir, 32))
         val sq8 = Some(sq8TableCached(s, dir))
@@ -2246,13 +2247,9 @@ object SimilarityQueries {
             excludeSelf = true)),
           "lsh_bucketed" -> (() => sim.annBucketedBatchTopK(emb, probeB, "e",
             dim = 64, k = 10, nBits = 16, probeHamming = 2, sigs = sigs)))
-        val out = legs.map { case (family, mk) =>
+        legs.map { case (family, mk) =>
           (family, 10L, 3L, medianMicros(mk))
         }.toDF("family", "k", "n_runs", "median_micros")
-        graft.operators.Checkpoints.free(probeB)
-        graft.operators.Checkpoints.free(probe1)
-        graft.operators.Checkpoints.free(probeBits)
-        out
       },
       None),
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -996,7 +997,7 @@ object TextQueries {
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
           .groupBy("w").agg(count(lit(1)).as("freq"))
-          .localCheckpoint() // merge-table stat AND the encode read it
+          .checkpointed() // merge-table stat AND the encode read it
         // the fixed merge table: text_bpe_merge_step's statistic,
         // collected in rank order (10 strings — metadata-sized)
         val merges: Seq[String] = vocab
@@ -1062,7 +1063,7 @@ object TextQueries {
         val words = Tables.t(s, dir, "documents")
           .select(col("source"), explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
-          .localCheckpoint() // vocab stat AND per-source counts read it
+          .checkpointed() // vocab stat AND per-source counts read it
         val vocab = words.groupBy("w").agg(count(lit(1)).as("freq"))
         val merges: Seq[String] = vocab
           .select(col("freq"), explode(expr(
@@ -1135,7 +1136,7 @@ object TextQueries {
         val words = Tables.t(s, dir, "documents")
           .select((col("doc_id") % 2).as("era"), explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
-          .localCheckpoint() // old-era stats AND both eras' counts read it
+          .checkpointed() // old-era stats AND both eras' counts read it
         val merges: Seq[String] = words.filter(col("era") === 0)
           .groupBy("w").agg(count(lit(1)).as("freq"))
           .select(col("freq"), explode(expr(
@@ -1232,7 +1233,7 @@ object TextQueries {
         val oldWords = docs.filter(col("doc_id") % 2 === 0)
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
-          .localCheckpoint() // merge training AND the ref-cpt read it
+          .checkpointed() // merge training AND the ref-cpt read it
         val merges: Seq[String] = oldWords
           .groupBy("w").agg(count(lit(1)).as("freq"))
           .select(col("freq"), explode(expr(
@@ -1317,7 +1318,7 @@ object TextQueries {
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
           .groupBy("w").agg(count(lit(1)).as("freq"))
-          .localCheckpoint() // re-read every training round
+          .checkpointed() // re-read every training round
         val merges = graft.functions.Bpe.trainMerges(vocab, "w", "freq", rounds = 10)
         merges.zipWithIndex.map { case ((l, r, n), i) =>
           (i + 1L, l, r, l + r, n)
@@ -1340,7 +1341,7 @@ object TextQueries {
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
           .groupBy("w").agg(count(lit(1)).as("freq"))
-          .localCheckpoint()
+          .checkpointed()
         val merges = graft.functions.Bpe.trainMerges(vocab, "w", "freq", rounds = 10)
         val enc = graft.functions.Bpe.encodeMerges(col("w"),
           merges.map(m => (m._1, m._2)))
@@ -1390,7 +1391,7 @@ object TextQueries {
           .filter(length(col("w"))
             .between(2, graft.functions.Unigram.MaxWordLen))
           .groupBy("w").agg(count(lit(1)).as("freq"))
-          .localCheckpoint() // trained over AND re-segmented
+          .checkpointed() // trained over AND re-segmented
         val tab = graft.functions.Unigram.trainUnigramTable(
           vocab, "w", "freq", rounds = 2, seedMulti = 32, keepMulti = 24)
         val smap = tab.map(t => t._1 -> t._3).toMap
@@ -1422,7 +1423,7 @@ object TextQueries {
           .filter(length(col("w"))
             .between(2, graft.functions.Unigram.MaxWordLen))
           .groupBy("w").agg(count(lit(1)).as("freq"))
-          .localCheckpoint() // trained over AND re-segmented
+          .checkpointed() // trained over AND re-segmented
         val tab = graft.functions.Unigram.trainUnigramTable(
           vocab, "w", "freq", rounds = 2, seedMulti = 32, keepMulti = 24)
         val pieceDf = tab.map(t => (t._1, t._3)).toDF("piece", "score_micros")
@@ -1675,7 +1676,7 @@ object TextQueries {
           .select(col("source"), explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w"))
             .between(2, graft.functions.Unigram.MaxWordLen))
-          .localCheckpoint() // vocab stat AND per-source counts read it
+          .checkpointed() // vocab stat AND per-source counts read it
         val vocab = words.groupBy("w").agg(count(lit(1)).as("freq"))
         val tab = graft.functions.Unigram.trainUnigramTable(
           vocab, "w", "freq", rounds = 2, seedMulti = 32, keepMulti = 24)
@@ -1752,7 +1753,7 @@ object TextQueries {
         val d = Tables.t(s, dir, "documents")
         val index = graft.operators.Dedup.gramSpanSummary(
             d.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", k = 3)
-          .localCheckpoint() // the persisted-index stand-in: built once
+          .checkpointed() // the persisted-index stand-in: built once
         graft.operators.Dedup.dupSpansIncremental(index,
             d.filter(col("doc_id") % 7 === 0), "doc_id", "text",
             k = 3, minTokens = 5)
@@ -1788,7 +1789,7 @@ object TextQueries {
         val d = Tables.t(s, dir, "documents")
         val index = graft.operators.Dedup.charGramSpanSummary(
             d.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", k = 12)
-          .localCheckpoint() // the persisted-index stand-in: built once
+          .checkpointed() // the persisted-index stand-in: built once
         graft.operators.Dedup.dupSpansCharsIncremental(index,
             d.filter(col("doc_id") % 7 === 0), "doc_id", "text",
             k = 12, minChars = 20)
@@ -1918,19 +1919,19 @@ object TextQueries {
         // discipline — each side's shingle kernel previously re-ran
         // per consumer)
         val spineEven = graft.operators.Dedup
-          .shingleSpine(even, "doc_id", "text").localCheckpoint()
+          .shingleSpine(even, "doc_id", "text").checkpointed()
         val bandEven = graft.operators.Dedup
           .bandRowsOfSpine(spineEven, "doc_id")
-          .localCheckpoint() // the persisted-index stand-in
+          .checkpointed() // the persisted-index stand-in
         val spineOdd = graft.operators.Dedup
-          .shingleSpine(odd, "doc_id", "text").localCheckpoint()
+          .shingleSpine(odd, "doc_id", "text").checkpointed()
         val bandOdd = graft.operators.Dedup
-          .bandRowsOfSpine(spineOdd, "doc_id").localCheckpoint()
+          .bandRowsOfSpine(spineOdd, "doc_id").checkpointed()
         val labels = graft.operators.Dedup.clusters(
           graft.operators.Dedup.verifyJaccard(
             graft.operators.Dedup.candidatePairsFrom(bandEven, "doc_id"),
             spineEven, "doc_id", 7, 10))
-          .localCheckpoint() // the standing assignment: state, not a plan
+          .checkpointed() // the standing assignment: state, not a plan
         val cross = graft.operators.Dedup
           .incrementalNearDupsFromSketchSpine(bandEven, even, bandOdd, spineOdd,
             "doc_id", "text")
@@ -1940,17 +1941,12 @@ object TextQueries {
             graft.operators.Dedup.candidatePairsFrom(bandOdd, "doc_id"),
             spineOdd, "doc_id", 7, 10)
           .select("doc_a", "doc_b")
-        val out = graft.operators.Dedup
+        graft.operators.Dedup
           .clustersIncremental(labels, cross.unionByName(internal))
           .withColumn("n_members", count(lit(1)).over(
             org.apache.spark.sql.expressions.Window.partitionBy("cluster_id")))
           .select(col("node").as("doc_id"), col("cluster_id"), col("n_members"))
           .orderBy("doc_id")
-        // clustersIncremental consumed the pair plans during its loop;
-        // the returned frame reads only the final label checkpoint
-        Seq(spineEven, bandEven, spineOdd, bandOdd, labels)
-          .foreach(graft.operators.Checkpoints.free)
-        out
       },
       Some(clusterOracle +
         """SELECT node AS doc_id, cluster_id,
@@ -3093,7 +3089,7 @@ object TextQueries {
           .select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("p0", "tok")))
           .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"), col("tok"))
           .filter(col("tok").isin(terms: _*))
-          .localCheckpoint() // three join sides read it
+          .checkpointed() // three join sides read it
         def side(t: String, n: Int) = pos.filter(col("tok") === t)
           .select(col("doc_id"), col("pos").as(s"p$n"))
         side(terms(0), 1)
@@ -3145,7 +3141,7 @@ object TextQueries {
         // survives only as text_bm25_topk's static==maintained pin
         val (postings, stats) = bm25IncrementalTables(s, dir)
         val top = bm25ScoreTerms(postings, stats, terms, 10)
-          .localCheckpoint() // both sides of the rank self-join read it
+          .checkpointed() // both sides of the rank self-join read it
         val ranked = top.join(broadcast(
             top.select(col("doc_id").as("d2"), col("score_micro").as("s2"))),
             col("s2") > col("score_micro") ||
@@ -3412,7 +3408,7 @@ object TextQueries {
           .select(explode(split(col("text"), " ")).as("token"))
           .groupBy("token").agg(count(lit(1)).as("f"))
           .orderBy(desc("f"), col("token")).limit(1000)
-          .localCheckpoint() // bounded 1000 rows; joined to itself
+          .checkpointed() // bounded 1000 rows; joined to itself
         val other = top.select(col("token").as("t2"), col("f").as("f2"))
         val ranked = top.join(broadcast(other),
             col("f2") > col("f") || (col("f2") === col("f") && col("t2") < col("token")),
@@ -3922,7 +3918,7 @@ object TextQueries {
         val st = Tables.t(s, dir, "documents")
           .select(col("source"), explode(array_distinct(split(col("text"), " "))).as("token"))
           .distinct()
-          .localCheckpoint() // vocab sizes AND both join sides read it
+          .checkpointed() // vocab sizes AND both join sides read it
         val vs = st.groupBy("source").agg(count(lit(1)).as("vocab"))
         val inter = st.select(col("source").as("sa"), col("token"))
           .join(st.select(col("source").as("sb"), col("token")), Seq("token"))
@@ -3963,7 +3959,7 @@ object TextQueries {
           .select(col("source"), explode(split(col("text"), " ")).as("token"))
         val vocab = toks.groupBy("token").agg(count(lit(1)).as("n"))
           .orderBy(desc("n"), col("token")).limit(1000)
-          .select("token").localCheckpoint() // broadcast probe, built once
+          .select("token").checkpointed() // broadcast probe, built once
         toks.join(broadcast(vocab.withColumn("_in", lit(1L))), Seq("token"), "left")
           .groupBy("source")
           .agg(count(lit(1)).as("n_tokens"),

@@ -17,8 +17,8 @@ object Verify {
     val spark = GraftSession.local(GraftSession.envCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Bench.isolated(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         // a reused outDir must not present the PREVIOUS run's output
@@ -27,7 +27,6 @@ object Verify {
         val stale = new java.io.File(s"$outDir/$name")
         if (stale.exists()) CacheDirs.deleteRecursively(stale)
       }
-      spark.catalog.clearCache() // queries are independent
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -278,19 +279,18 @@ object Unigram {
     val vocab = vocab0
       .filter(length(col(wCol)).between(2, MaxWordLen))
       .select(col(wCol).as("w"), col(freqCol).cast("long").as("freq"))
-      .localCheckpoint() // re-segmented every round
+      .checkpointed() // re-segmented every round
     val subs = vocab.select(col("freq"), explode(expr(
         s"flatten(transform(sequence(1, length(w)), i -> " +
           s"transform(sequence(1, least($MaxPiece, length(w) - i + 1)), " +
           s"l -> substring(w, i, l))))")).as("piece"))
       .groupBy("piece").agg(sum("freq").as("cnt"))
-      .localCheckpoint() // chars AND the multi top-k read it
+      .checkpointed() // chars AND the multi top-k read it
     val seed = subs.filter(length(col("piece")) === 1)
       .unionByName(subs.filter(length(col("piece")) >= 2)
         .orderBy(desc("cnt"), asc("piece")).limit(seedMulti))
     var pieceTab: Seq[(String, Long, Long)] = rescore(seed).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-    graft.operators.Checkpoints.free(subs)
     val charPieces = pieceTab.filter(_._1.length == 1).map(_._1)
     for (_ <- 1 to rounds) {
       val smap = pieceTab.map(t => t._1 -> t._3).toMap
@@ -299,7 +299,7 @@ object Unigram {
         .select(col("freq"),
           explode(viterbiPieces(col("w"), col("_dp"), smap)).as("piece"))
         .groupBy("piece").agg(sum("freq").as("cnt"))
-        .localCheckpoint() // char keep AND the multi top-k read it
+        .checkpointed() // char keep AND the multi top-k read it
       val chars = charPieces.toDF("piece")
         .join(segCounts, Seq("piece"), "left")
         .select(col("piece"), coalesce(col("cnt"), lit(0L)).as("cnt"))
@@ -307,9 +307,8 @@ object Unigram {
         .orderBy(desc("cnt"), asc("piece")).limit(keepMulti)
       pieceTab = rescore(chars.unionByName(multi)).collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
-      graft.operators.Checkpoints.free(segCounts)
+      graft.operators.Checkpoints.free(segCounts) // the round's counts live on in pieceTab
     }
-    graft.operators.Checkpoints.free(vocab)
     pieceTab
   }
 }

@@ -1,7 +1,7 @@
 package graft.job
 
 import graft.model._
-import graft.operators.{ErrorPolicy, MappingOp}
+import graft.operators.{Checkpoints, ErrorPolicy, MappingOp}
 import graft.sinks.Writers
 import graft.sources.Readers
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -221,7 +221,9 @@ object JobRunner {
     // source: the CSV scan-mode probe and header inference run once.
     lazy val source = Readers.forConfig(spark, cfg.source, cfg.mappings)
     def mappedSource(): DataFrame = mapSource(source, cfg, plugins)
-    try {
+    // the job's scope frees every frame its steps checkpoint and every
+    // temp work dir they make, whichever step ends the job
+    try Checkpoints.scoped {
       steps.foreach { step =>
         step.toUpperCase match {
           case "VALIDATE_SOURCE" =>

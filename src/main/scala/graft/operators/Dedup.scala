@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -116,7 +117,7 @@ object Dedup {
     * `collect_set` collapse this replaced would OOM one executor on
     * exactly the duplicate-heavy corpora dedup exists for). */
   private def candidatePairs(bandRows: DataFrame, idCol: String): DataFrame =
-    candidatePairsFrom(bandRows.localCheckpoint(), idCol)
+    candidatePairsFrom(bandRows.checkpointed(), idCol)
 
   /** The band self-join over ALREADY-materialized (id, band, band_key)
     * rows — exposed so a caller holding a checkpointed band frame (the
@@ -306,7 +307,7 @@ object Dedup {
       .join(corpusSketch.select(col(idCol).as("corpus_id"), col("band"), col("band_key")),
         Seq("band", "band_key"))
       .select("corpus_id", "fresh_id").distinct()
-      .localCheckpoint() // the verify reads it twice (prune + pair join)
+      .checkpointed() // the verify reads it twice (prune + pair join)
     val ca = withShingleArray(
         corpusDocs.join(cands.select(col("corpus_id").as(idCol)).distinct(),
           Seq(idCol), "left_semi"),
@@ -370,12 +371,12 @@ object Dedup {
     // now the single count materializes the lazy checkpoint and
     // probes in one job.
     LoopOpt.withLoopConf(sym.union(sym.select(col("dst"), col("src")))
-        .distinct().localCheckpoint()) { (edges0, nP) =>
-      val edges = edges0.repartition(nP, col("dst")).localCheckpoint()
+        .distinct().checkpointed()) { (edges0, nP) =>
+      val edges = edges0.repartition(nP, col("dst")).checkpointed()
       Checkpoints.free(edges0) // re-materialized co-partitioned above
       var labels = edges.select(col("src").as("node")).distinct()
         .withColumn("cluster_id", col("node"))
-        .repartition(nP, col("node")).localCheckpoint()
+        .repartition(nP, col("node")).checkpointed()
       var changed = 1L
       var it = 0
       while (changed > 0 && it < maxIters) {
@@ -399,7 +400,7 @@ object Dedup {
           .select(col("node"), coalesce(col("_pl"), col("cluster_id")).as("cluster_id"),
             col("_old"))
           .repartition(nP, col("node"))
-          .localCheckpoint(false) // lazy: the changed-count materializes it
+          .checkpointed(eager = false) // lazy: the changed-count materializes it
         changed = next.filter(col("cluster_id") < col("_old")).count()
         // round k−1's state: nothing reads its blocks again (Checkpoints
         // scaladoc — clearCache can't free checkpoint storage, so a
@@ -445,7 +446,7 @@ object Dedup {
   def simhashNearDups(fps: DataFrame, idCol: String, maxDist: Int = 3): DataFrame = {
     require(maxDist <= 3,
       s"the 4x16-bit chunk cover is pigeonhole-complete only for hamming <= 3, got maxDist=$maxDist")
-    val banded = fps.localCheckpoint()
+    val banded = fps.checkpointed()
       .select(col(idCol), col("simhash"),
         posexplode(expr(
           "transform(sequence(0, 3), c -> (simhash >> (c * 16)) & 65535)")).as(Seq("chunk_i", "chunk_v")))
@@ -574,7 +575,7 @@ object Dedup {
     // both sides of the band join read the fingerprints — materialize
     // once (narrow: id + two longs) instead of re-running the 64-sum
     // aggregation per side
-    val banded = simhashMd5BandRows(fps.localCheckpoint(), idCol)
+    val banded = simhashMd5BandRows(fps.checkpointed(), idCol)
     val a = banded.select(col(idCol).as("id_a"), col("fp_hi").as("hi_a"),
       col("fp_lo").as("lo_a"), col("band"), col("chunk"))
     val b = banded.select(col(idCol).as("id_b"), col("fp_hi").as("hi_b"),
@@ -625,7 +626,7 @@ object Dedup {
     // 100 TB this is the persisted (id, shingles) projection an
     // AllPairs index maintains beside the corpus, the same artifact
     // posture as the similarity rungs.
-    val docs = withShingleArray(df, idCol, textCol, shingleN).localCheckpoint()
+    val docs = withShingleArray(df, idCol, textCol, shingleN).checkpointed()
     // §2.3 — shuffle keys, not payloads: everything between the spine
     // and the verify stage (df census, per-doc ordering, prefix
     // self-join) only needs shingle IDENTITY, so an 8-byte xxhash64
@@ -702,7 +703,7 @@ object Dedup {
                        shingleN: Int = 3, num: Int = 9, den: Int = 10): DataFrame = {
     // one spine materialization — the prefixFilterNearDups rationale
     // (df census + ordering + container postings + both verify sides)
-    val docs = withShingleArray(df, idCol, textCol, shingleN).localCheckpoint()
+    val docs = withShingleArray(df, idCol, textCol, shingleN).checkpointed()
     val sh = docs.select(col(idCol), explode(col("_sh")).as("shingle"))
     val freq = sh.groupBy("shingle").agg(count(lit(1)).as("tdf"))
     val ordered = sh.join(freq, "shingle")

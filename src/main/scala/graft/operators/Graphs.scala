@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.GraftSqlBridge.rebind
 import org.apache.spark.sql.functions._
@@ -55,7 +56,7 @@ object Graphs {
     // loop physical hygiene — LoopOpt scaladoc (partitions from the
     // measured edge size, no per-round broadcast builds, no per-stage
     // AQE jobs or codegen compiles over KB-sized rounds)
-    LoopOpt.withLoopConf(edges.select("u", "v").localCheckpoint()) { (cur0, _) =>
+    LoopOpt.withLoopConf(edges.select("u", "v").checkpointed()) { (cur0, _) =>
       var cur = cur0
       var n = cur.count()
       var it = 0
@@ -63,7 +64,7 @@ object Graphs {
       while (!done && it < maxIters) {
         // lazy checkpoint: the count right after materializes it — one
         // driver job per round instead of eager-materialize + count
-        val next = peel(cur, k).localCheckpoint(false)
+        val next = peel(cur, k).checkpointed(eager = false)
         val m = next.count()
         done = m == n
         Checkpoints.free(cur) // round k−1's blocks: nothing reads them again
@@ -94,12 +95,12 @@ object Graphs {
     // additionally co-partitioned by u so the frontier expansion join
     // is exchange-free every round (frontier comes out of a node-keyed
     // distinct, which the checkpoint preserves — guide §2.4)
-    LoopOpt.withLoopConf(symmetric(edges).localCheckpoint()) { (sym0, nP) =>
-      val sym = sym0.repartition(nP, col("u")).localCheckpoint()
+    LoopOpt.withLoopConf(symmetric(edges).checkpointed()) { (sym0, nP) =>
+      val sym = sym0.repartition(nP, col("u")).checkpointed()
       Checkpoints.free(sym0)
       var visited = rebind(sym0.sparkSession, seeds).select(col("node")).distinct()
         .repartition(nP, col("node"))
-        .withColumn("dist", lit(0L)).localCheckpoint()
+        .withColumn("dist", lit(0L)).checkpointed()
       var frontier = visited
       var d = 0L
       var n = frontier.count()
@@ -110,7 +111,7 @@ object Graphs {
           .select(col("v").as("node")).distinct()
           .join(visited.select("node"), Seq("node"), "left_anti")
           .withColumn("dist", lit(d))
-          .localCheckpoint(false) // lazy: the count materializes it
+          .checkpointed(eager = false) // lazy: the count materializes it
         n = frontier.count()
         // visited stays a plain union OVER checkpointed frontiers — a
         // flat lineage that replays nothing; checkpointing it would
@@ -143,12 +144,12 @@ object Graphs {
     // a node-keyed groupBy, preserved by the checkpoint — §2.4)
     LoopOpt.withLoopConf(edges.select(col("u"), col("v"), col("w"))
         .union(edges.select(col("v").as("u"), col("u").as("v"), col("w")))
-        .localCheckpoint()) { (sym0, nP) =>
-      val sym = sym0.repartition(nP, col("u")).localCheckpoint()
+        .checkpointed()) { (sym0, nP) =>
+      val sym = sym0.repartition(nP, col("u")).checkpointed()
       Checkpoints.free(sym0)
       var dist = rebind(sym0.sparkSession, seeds).select(col("node")).distinct()
         .repartition(nP, col("node"))
-        .withColumn("dist", lit(0L)).localCheckpoint()
+        .withColumn("dist", lit(0L)).checkpointed()
       var it = 0
       var changed = true
       while (changed && it < rounds) {
@@ -157,7 +158,7 @@ object Graphs {
           .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
           .unionByName(dist)
           .groupBy("node").agg(min("dist").as("dist"))
-          .localCheckpoint(false) // lazy: the changed-probe materializes it
+          .checkpointed(eager = false) // lazy: the changed-probe materializes it
         changed = next.join(dist.withColumnRenamed("dist", "_prev"),
             Seq("node"), "left_outer")
           .filter(col("_prev").isNull || col("dist") =!= col("_prev"))
@@ -198,11 +199,11 @@ object Graphs {
     // by v — the neighbor-estimate probe's key — so the per-round join
     // is exchange-free (est comes out of a node-keyed aggregate,
     // preserved by the checkpoint — §2.4)
-    LoopOpt.withLoopConf(symmetric(edges).localCheckpoint()) { (sym0, nP) =>
-      val sym = sym0.repartition(nP, col("v")).localCheckpoint()
+    LoopOpt.withLoopConf(symmetric(edges).checkpointed()) { (sym0, nP) =>
+      val sym = sym0.repartition(nP, col("v")).checkpointed()
       Checkpoints.free(sym0)
       var est = sym.groupBy(col("u").as("node"))
-        .agg(count(lit(1)).as("c")).localCheckpoint()
+        .agg(count(lit(1)).as("c")).checkpointed()
       var changed = 1L
       var it = 0
       while (changed > 0 && it < maxIters) {
@@ -212,7 +213,7 @@ object Graphs {
         val next = nb
           .withColumn("m", least(row_number().over(w).cast("long"), col("cv")))
           .groupBy("node").agg(max("m").as("c"))
-          .localCheckpoint(false) // lazy: the changed-count materializes it
+          .checkpointed(eager = false) // lazy: the changed-count materializes it
         changed = next.join(est.select(col("node"), col("c").as("_prev")), "node")
           .filter(col("c") =!= col("_prev")).count()
         Checkpoints.free(est) // round k−1's blocks: nothing reads them again
@@ -299,11 +300,11 @@ object Graphs {
     // join re-executed the edges plan (a per-round re-scan); with the
     // loop conf (LoopOpt scaladoc) each climb level is one small job
     LoopOpt.withLoopConf(
-        edges.select(col("child"), col("parent")).distinct().localCheckpoint()) { (e0, nP) =>
-      val e = e0.repartition(nP, col("child")).localCheckpoint()
+        edges.select(col("child"), col("parent")).distinct().checkpointed()) { (e0, nP) =>
+      val e = e0.repartition(nP, col("child")).checkpointed()
       Checkpoints.free(e0)
       var acc = rebind(e0.sparkSession, contrib).select(col("node"), col("w"))
-      var frontier = acc.repartition(nP, col("node")).localCheckpoint()
+      var frontier = acc.repartition(nP, col("node")).checkpointed()
       var n = frontier.count()
       var it = 0
       while (n > 0 && it < maxIters) {
@@ -311,7 +312,7 @@ object Graphs {
           .join(e, frontier("node") === e("child"))
           .select(col("parent").as("node"), col("w"))
           .repartition(nP, col("node"))
-          .localCheckpoint(false) // lazy: the count materializes it
+          .checkpointed(eager = false) // lazy: the count materializes it
         n = frontier.count()
         acc = acc.union(frontier)
         it += 1
@@ -349,10 +350,10 @@ object Graphs {
     // checkpoint the edge list: every hop joins it, and an un-
     // materialized `sym` re-executed its whole upstream plan per hop;
     // loop conf per LoopOpt scaladoc
-    LoopOpt.withLoopConf(sym.localCheckpoint()) { (symC, _) =>
-      val nodes = symC.select(col("u").as("node")).distinct().localCheckpoint()
+    LoopOpt.withLoopConf(sym.checkpointed()) { (symC, _) =>
+      val nodes = symC.select(col("u").as("node")).distinct().checkpointed()
       var state = nodes.groupBy("node")
-        .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk")).localCheckpoint()
+        .agg(expr(s"hll_sketch_agg(node, $lgK)").as("sk")).checkpointed()
       (1 to hops).foreach { _ =>
         // neighbor sketches + the node's own sketch, one keyed union:
         // the self edge keeps state monotone (a ball never shrinks)
@@ -363,7 +364,7 @@ object Graphs {
           // all inputs share this operator's lgK, so no
           // allowDifferentLgConfigK (the boolean 2nd param) is needed
           .groupBy("node").agg(expr("hll_union_agg(sk)").as("sk"))
-          .localCheckpoint()
+          .checkpointed()
         Checkpoints.free(prev) // hop k−1's blocks: nothing reads them again
       }
       state
@@ -422,10 +423,10 @@ object Graphs {
   def pageRank(edges: DataFrame, tolMicros: Long = 100000L,
                maxIters: Int = 25): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint()
+      col("dst").cast("long").as("dst")).checkpointed()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
-      .withColumn("base", lit(150000L)).localCheckpoint()
+      .withColumn("base", lit(150000L)).checkpointed()
     prConverge(e, nodes, nodes.select(col("node"), lit(1000000L).as("r")),
       tolMicros, maxIters)
   }
@@ -445,14 +446,14 @@ object Graphs {
                            tolMicros: Long = 10000L,
                            maxIters: Int = 25): DataFrame = {
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).localCheckpoint()
+      col("dst").cast("long").as("dst")).checkpointed()
     val s = seeds.select(col("node").cast("long").as("node")).distinct()
       .withColumn("_s", lit(1L))
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
       .join(s, Seq("node"), "left")
       .select(col("node"), (coalesce(col("_s"), lit(0L)) * 150000L).as("base"))
-      .localCheckpoint()
+      .checkpointed()
     prConverge(e, nodes, nodes.select(col("node"), col("base").as("r")),
       tolMicros, maxIters)
   }
@@ -492,13 +493,13 @@ object Graphs {
     // by src so the per-round (matrix ⋈ pi) join is exchange-free (pi
     // comes out of a state-keyed exchange, preserved by the
     // checkpoint — §2.4)
-    LoopOpt.withLoopConf(core.join(totals, "src").localCheckpoint()) { (matrix0, nP) =>
-      val matrix = matrix0.repartition(nP, col("src")).localCheckpoint()
+    LoopOpt.withLoopConf(core.join(totals, "src").checkpointed()) { (matrix0, nP) =>
+      val matrix = matrix0.repartition(nP, col("src")).checkpointed()
       Checkpoints.free(matrix0)
       val states = matrix.select(col("src").as("state"))
         .union(matrix.select(col("dst").as("state"))).distinct()
-        .repartition(nP, col("state")).localCheckpoint()
-      var pi = states.withColumn("p", lit(1000000L)).localCheckpoint()
+        .repartition(nP, col("state")).checkpointed()
+      var pi = states.withColumn("p", lit(1000000L)).checkpointed()
       Checkpoints.free(states) // consumed once by pi's eager checkpoint
       var it = 0
       var delta = Long.MaxValue
@@ -509,7 +510,7 @@ object Graphs {
         val next = pi.select(col("state"), col("p").as("_prev"))
           .join(recv, Seq("state"), "left")
           .select(col("state"), coalesce(col("tot"), lit(0L)).as("p"), col("_prev"))
-          .localCheckpoint(false)
+          .checkpointed(eager = false)
         delta = next.agg(max(abs(col("p") - col("_prev")))).head().getLong(0)
         Checkpoints.free(pi) // round k−1's blocks: nothing reads them again
         pi = next.select("state", "p")
@@ -543,13 +544,13 @@ object Graphs {
     // of state that changes every round).
     LoopOpt.withLoopConf(e) { (e, nP) =>
       val s = e.sparkSession
-      val ep = e.repartition(nP, col("src")).localCheckpoint()
+      val ep = e.repartition(nP, col("src")).checkpointed()
       val outdeg = ep.groupBy(col("src").as("node")).agg(count(lit(1)).as("d"))
       var st = rebind(s, nodes).join(outdeg, Seq("node"), "left")
         .join(rebind(s, init), "node")
         .select(col("node"), col("base"), col("d"), col("r"))
         .repartition(nP, col("node"))
-        .localCheckpoint()
+        .checkpointed()
       var it = 0
       var delta = Long.MaxValue
       while (delta > tolMicros && it < maxIters) {
@@ -562,7 +563,7 @@ object Graphs {
           .select(col("node"), col("base"), col("d"),
             (col("base") + expr("(850 * coalesce(tot, 0)) div 1000")).as("r"),
             col("_prev"))
-          .localCheckpoint(false)
+          .checkpointed(eager = false)
         delta = next.agg(max(abs(col("r") - col("_prev")))).head().getLong(0)
         Checkpoints.free(st) // round k−1's blocks: nothing reads them again
         st = next
@@ -570,7 +571,6 @@ object Graphs {
       }
       require(delta <= tolMicros,
         s"pagerank did not converge to $tolMicros micros in $maxIters iterations (delta=$delta)")
-      Checkpoints.free(ep) // loop-local: nothing reads it after the loop
       st.select("node", "r")
     }
   }

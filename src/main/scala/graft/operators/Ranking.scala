@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -241,7 +242,7 @@ object Ranking {
     val counts = df
       .groupBy((g :+ col(valueCol)): _*)
       .agg(sum(weight).as("_w"))
-      .localCheckpoint()
+      .checkpointed()
     // NULL values take the reserved band Long.MinValue so NO value
     // band can sort before them (a band of -1 would order AFTER a
     // negative value's band — caught by the PropertySpec reference

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Checkpoints.Checkpointed
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -235,7 +236,7 @@ object Similarity {
     // artifact a production semantic-dedup materializes anyway)
     val seeds = d.join(broadcast(seedIds), col(idCol) === col("_seed_id"))
       .select(col("_seed_id").as("c_id"), col("pos"), col("q").as("cq"))
-      .localCheckpoint()
+      .checkpointed()
     val assign = d.join(broadcast(seeds), Seq("pos"))
       .groupBy(col(idCol), col("c_id"))
       .agg((sum(col("cq") * col("cq")) - lit(2L) * sum(col("q") * col("cq"))).as("score"))
@@ -245,7 +246,7 @@ object Similarity {
       .groupBy(col(idCol))
       .agg(min(struct(col("score"), col("c_id"))).as("_best"))
       .select(col(idCol), col("_best.c_id").as("cluster_id"))
-      .localCheckpoint()
+      .checkpointed()
     val vecs = corpus.select(col(idCol), col(vecCol))
       .join(assign, idCol)
       .withColumn("_norm", sqrt(dot(col(vecCol), col(vecCol))))
@@ -727,7 +728,7 @@ object Similarity {
     // was accidentally protected by exchange reuse, the map-side form
     // is not — measured 3-4x regressions across the IVF family when
     // this returned a bare plan.
-    (assigned.localCheckpoint(), centroids)
+    (assigned.checkpointed(), centroids)
   }
 
   /** Query the IVF index: probe the nProbe nearest cells, exact
@@ -1093,7 +1094,7 @@ object Similarity {
     // distance folds per row per pass); the assignment table it was
     // derived from frees — nothing reads it once the codes exist
     val enc = pqEncode(withRes, "_res", cbs).drop("_res", "centroid")
-      .localCheckpoint()
+      .checkpointed()
     Checkpoints.free(assigned)
     (enc, centroids, cbs)
   }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import graft.operators.Checkpoints
+import graft.operators.Checkpoints.Checkpointed
 import graft.sinks.Commit
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
@@ -700,56 +702,50 @@ object EventStreams {
                                 batch: DataFrame, batchId: Long,
                                 outDir: String, docsDir: String, sketchDir: String,
                                 shingleN: Int, k: Int, bands: Int,
-                                num: Int, den: Int): Unit = {
-    val b = batch.select("doc_id", "text").localCheckpoint()
-    // every checkpointed frame of this batch, freed in `finally` —
-    // `b`, the spine and band frames below, and (through `out`'s
-    // plan) the candidate frame incrementalNearDupsFromSketchSpine
-    // pins internally (ADVICE r16: without this a long-running stream
-    // accumulates one candidate checkpoint per micro-batch, and a
-    // failed write would leak its batch's checkpoints on every retry)
-    var pinned = List(b)
-    try {
-      // ONE shingle spine and ONE band-row frame per micro-batch,
-      // shared by all three consumers (internal-pair join, cross-batch
-      // sketch probe, the sketch write — bandRows IS signatureBandRows'
-      // output, bit-identically): before this the batch's shingle
-      // kernel ran up to six times and the minhash banding three times
-      // per ingest (guide §1.2/§2.3 — don't compute things twice;
-      // measured: the 3-job ingest gate spent 3.4 s in
-      // minhashNearDups alone at sf0.1).
-      val spine = graft.operators.Dedup
-        .shingleSpine(b, "doc_id", "text", shingleN).localCheckpoint()
-      pinned ::= spine
-      val bandRows = graft.operators.Dedup
-        .bandRowsOfSpine(spine, "doc_id", k, bands).localCheckpoint()
-      pinned ::= bandRows
-      val internal = graft.operators.Dedup.verifyJaccard(
-        graft.operators.Dedup.candidatePairsFrom(bandRows, "doc_id"),
-        spine, "doc_id", num, den)
-      val out =
-        if (hasCommittedBatchBefore(conf, sketchDir, batchId)) {
-          val cross = graft.operators.Dedup.incrementalNearDupsFromSketchSpine(
-              stateBefore(s, sketchDir, batchId),
-              stateBefore(s, docsDir, batchId),
-              bandRows, spine, "doc_id", "text", shingleN, num, den)
-            // one-shot orientation: doc_a < doc_b with (na, nb)
-            // following the id order, not the corpus/fresh roles
-            .select(
-              least(col("corpus_id"), col("fresh_id")).as("doc_a"),
-              greatest(col("corpus_id"), col("fresh_id")).as("doc_b"),
-              col("n_common"),
-              when(col("corpus_id") < col("fresh_id"), col("na"))
-                .otherwise(col("nb")).as("na"),
-              when(col("corpus_id") < col("fresh_id"), col("nb"))
-                .otherwise(col("na")).as("nb"))
-          internal.unionByName(cross)
-        } else internal
-      pinned ::= out
-      out.write.mode("overwrite").parquet(batchPart(outDir, batchId))
-      b.write.mode("overwrite").parquet(batchPart(docsDir, batchId))
-      bandRows.write.mode("overwrite").parquet(batchPart(sketchDir, batchId))
-    } finally pinned.foreach(graft.operators.Checkpoints.free)
+                                num: Int, den: Int): Unit = Checkpoints.scoped {
+    // the batch's scope frees every frame it checkpoints: `b`, the
+    // spine and band frames below, and the candidate frame
+    // incrementalNearDupsFromSketchSpine pins internally (ADVICE r16:
+    // without this a long-running stream accumulates one candidate
+    // checkpoint per micro-batch, and a failed write would leak its
+    // batch's checkpoints on every retry)
+    val b = batch.select("doc_id", "text").checkpointed()
+    // ONE shingle spine and ONE band-row frame per micro-batch,
+    // shared by all three consumers (internal-pair join, cross-batch
+    // sketch probe, the sketch write — bandRows IS signatureBandRows'
+    // output, bit-identically): before this the batch's shingle
+    // kernel ran up to six times and the minhash banding three times
+    // per ingest (guide §1.2/§2.3 — don't compute things twice;
+    // measured: the 3-job ingest gate spent 3.4 s in
+    // minhashNearDups alone at sf0.1).
+    val spine = graft.operators.Dedup
+      .shingleSpine(b, "doc_id", "text", shingleN).checkpointed()
+    val bandRows = graft.operators.Dedup
+      .bandRowsOfSpine(spine, "doc_id", k, bands).checkpointed()
+    val internal = graft.operators.Dedup.verifyJaccard(
+      graft.operators.Dedup.candidatePairsFrom(bandRows, "doc_id"),
+      spine, "doc_id", num, den)
+    val out =
+      if (hasCommittedBatchBefore(conf, sketchDir, batchId)) {
+        val cross = graft.operators.Dedup.incrementalNearDupsFromSketchSpine(
+            stateBefore(s, sketchDir, batchId),
+            stateBefore(s, docsDir, batchId),
+            bandRows, spine, "doc_id", "text", shingleN, num, den)
+          // one-shot orientation: doc_a < doc_b with (na, nb)
+          // following the id order, not the corpus/fresh roles
+          .select(
+            least(col("corpus_id"), col("fresh_id")).as("doc_a"),
+            greatest(col("corpus_id"), col("fresh_id")).as("doc_b"),
+            col("n_common"),
+            when(col("corpus_id") < col("fresh_id"), col("na"))
+              .otherwise(col("nb")).as("na"),
+            when(col("corpus_id") < col("fresh_id"), col("nb"))
+              .otherwise(col("na")).as("nb"))
+        internal.unionByName(cross)
+      } else internal
+    out.write.mode("overwrite").parquet(batchPart(outDir, batchId))
+    b.write.mode("overwrite").parquet(batchPart(docsDir, batchId))
+    bandRows.write.mode("overwrite").parquet(batchPart(sketchDir, batchId))
   }
 
   /** The newest committed `batch=<i>` with i < batchId, or None —
@@ -844,9 +840,9 @@ object EventStreams {
     val conf = spark.sparkContext.hadoopConfiguration
     val dirs = Seq(spansDir, summaryDir)
     dropPartialBatchDirs(conf, dirs)
-    if (ingestSkip(conf, dirs, batchId, strictDirs = dirs) == RunKernel) {
+    if (ingestSkip(conf, dirs, batchId, strictDirs = dirs) == RunKernel) Checkpoints.scoped {
       val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-        .localCheckpoint()
+        .checkpointed()
       val index =
         if (hasCommittedBatchBefore(conf, summaryDir, batchId))
           stateBefore(spark, summaryDir, batchId)
@@ -866,7 +862,6 @@ object EventStreams {
         else
           graft.operators.Dedup.charGramSpanSummary(b, "doc_id", "text", k)
       summary.write.mode("overwrite").parquet(batchPart(summaryDir, batchId))
-      graft.operators.Checkpoints.free(b)
     }
   }
 
@@ -916,16 +911,15 @@ object EventStreams {
     val conf = spark.sparkContext.hadoopConfiguration
     val dirs = Seq(postingsDir, statsDir)
     dropPartialBatchDirs(conf, dirs)
-    if (ingestSkip(conf, dirs, batchId, strictDirs = dirs) == RunKernel) {
+    if (ingestSkip(conf, dirs, batchId, strictDirs = dirs) == RunKernel) Checkpoints.scoped {
       val b = batch.select(col(idCol).as("doc_id"), col(textCol).as("text"))
-        .localCheckpoint() // both writes tokenize it
+        .checkpointed() // both writes tokenize it
       graft.TextQueries.bm25RawPostings(b)
         .withColumn("bucket", pmod(hash(col("token")), lit(Bm25IngestBuckets)))
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(batchPart(postingsDir, batchId))
       graft.TextQueries.bm25StatsOf(b)
         .write.mode("overwrite").parquet(batchPart(statsDir, batchId))
-      graft.operators.Checkpoints.free(b)
     }
   }
 
@@ -1083,37 +1077,39 @@ object EventStreams {
               s"would silently drop from serving until the next rebuild")
         Some(era)
       } else None
-    val b = batch.select(col(idCol).as("vec_id"),
-        col(vecCol).cast(ArrayType(DoubleType)).as("e"))
-      .localCheckpoint()
-    b.write.mode("overwrite").parquet(batchPart(vectorsDir, batchId))
-    // rung projections: batch-sized map-side writes, BEFORE the
-    // postings commit (postings last still opens the era; a crash
-    // anywhere in here leaves postings missing, so the next append is
-    // refused and the in-order retry overwrites everything)
-    rungs.foreach { r =>
-      annRungProjection(b, r).write.mode("overwrite")
-        .parquet(batchPart(s"$destDir/$r", batchId))
+    // the batch's scope frees `b` and the rebuild's assignment table
+    Checkpoints.scoped {
+      val b = batch.select(col(idCol).as("vec_id"),
+          col(vecCol).cast(ArrayType(DoubleType)).as("e"))
+        .checkpointed()
+      b.write.mode("overwrite").parquet(batchPart(vectorsDir, batchId))
+      // rung projections: batch-sized map-side writes, BEFORE the
+      // postings commit (postings last still opens the era; a crash
+      // anywhere in here leaves postings missing, so the next append is
+      // refused and the in-order retry overwrites everything)
+      rungs.foreach { r =>
+        annRungProjection(b, r).write.mode("overwrite")
+          .parquet(batchPart(s"$destDir/$r", batchId))
+      }
+      if (mode == "rebuild") {
+        val corpus =
+          if (hasCommittedBatchBefore(conf, vectorsDir, batchId))
+            stateBefore(spark, vectorsDir, batchId).unionByName(b)
+          else b
+        val (assigned, centroids) =
+          graft.operators.Similarity.ivfIndex(corpus, "vec_id", "e", nLists)
+        // centroids BEFORE postings — the postings commit opens the era
+        centroids.write.mode("overwrite").parquet(batchPart(centroidsDir, batchId))
+        assigned.select("cell", "vec_id", "e")
+          .write.mode("overwrite").parquet(batchPart(postingsDir, batchId))
+      } else {
+        val cents = spark.read.parquet(centroidsDir)
+          .filter(col("batch") === appendEra.get).drop("batch")
+        graft.operators.Similarity.assignToCentroids(b, cents, "e")
+          .select("cell", "vec_id", "e")
+          .write.mode("overwrite").parquet(batchPart(postingsDir, batchId))
+      }
     }
-    if (mode == "rebuild") {
-      val corpus =
-        if (hasCommittedBatchBefore(conf, vectorsDir, batchId))
-          stateBefore(spark, vectorsDir, batchId).unionByName(b)
-        else b
-      val (assigned, centroids) =
-        graft.operators.Similarity.ivfIndex(corpus, "vec_id", "e", nLists)
-      // centroids BEFORE postings — the postings commit opens the era
-      centroids.write.mode("overwrite").parquet(batchPart(centroidsDir, batchId))
-      assigned.select("cell", "vec_id", "e")
-        .write.mode("overwrite").parquet(batchPart(postingsDir, batchId))
-    } else {
-      val cents = spark.read.parquet(centroidsDir)
-        .filter(col("batch") === appendEra.get).drop("batch")
-      graft.operators.Similarity.assignToCentroids(b, cents, "e")
-        .select("cell", "vec_id", "e")
-        .write.mode("overwrite").parquet(batchPart(postingsDir, batchId))
-    }
-    graft.operators.Checkpoints.free(b)
   }
 
   /**
@@ -1254,8 +1250,8 @@ object EventStreams {
                     k: Int = 3, minTokens: Int = 5): DataFrame = {
     runExactlyOnce(spark, stream, checkpoint, outDir, Seq(stateDir)) { (batch, batchId) =>
       val s = batch.sparkSession
-      val b = batch.select("doc_id", "text").localCheckpoint()
-      try {
+      Checkpoints.scoped {
+        val b = batch.select("doc_id", "text").checkpointed()
         val index =
           if (hasCommittedBatchBefore(s.sparkContext.hadoopConfiguration, stateDir, batchId))
             stateBefore(s, stateDir, batchId)
@@ -1268,7 +1264,7 @@ object EventStreams {
           .write.mode("overwrite").parquet(batchPart(outDir, batchId))
         graft.operators.Dedup.gramSpanSummary(b, "doc_id", "text", k)
           .write.mode("overwrite").parquet(batchPart(stateDir, batchId))
-      } finally graft.operators.Checkpoints.free(b)
+      }
     }
   }
 
@@ -2611,14 +2607,14 @@ object EventStreams {
    */
   def driftPsiStream(spark: SparkSession, stream: DataFrame,
                      ref: DataFrame, outDir: String, checkpoint: String,
-                     bandWidth: Double, bands: Int = 10): DataFrame = {
+                     bandWidth: Double, bands: Int = 10): DataFrame = Checkpoints.scoped {
     val refRows = broadcast(ref) // (band, r) — bands-sized
     val spine = spark.range(0, bands).select(col("id").as("band"))
       .crossJoin(broadcast(refRows.agg(sum("r").as("mt"))))
       .join(refRows, Seq("band"), "left")
       .select(col("band"), coalesce(col("r"), lit(0L)).as("r"), col("mt"))
-      .localCheckpoint() // bands rows, reused every batch, freed when the run ends
-    try runExactlyOnce(spark, stream, checkpoint, outDir) { (batch, batchId) =>
+      .checkpointed() // bands rows, reused every batch, freed when the run ends
+    runExactlyOnce(spark, stream, checkpoint, outDir) { (batch, batchId) =>
       val counts = batch
         .select(graft.operators.Profile.psiBand("value", bandWidth, bands).as("band"))
         .groupBy("band").agg(count(lit(1)).as("c"))
@@ -2643,6 +2639,6 @@ object EventStreams {
         .withColumn("batch_id", lit(batchId))
         .select("batch_id", "n_events", "psi_micro")
         .write.mode("overwrite").parquet(batchPart(outDir, batchId))
-    } finally graft.operators.Checkpoints.free(spine)
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Bench, GraftSession, Queries}
+import graft.{Bench, CacheDirs, GraftSession, Queries}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.{FormattedMode, SparkPlan}
@@ -13,8 +13,10 @@ import scala.util.control.NonFatal
   *
   *  - `time <n> <sfDir> <query...>`: per query, min / median / all of
   *    `n` runs (Bench's warm-up and noop-sink timing), the jobs, tasks,
-  *    task time, CPU and GC of those runs and their top stages by run
-  *    time; then TOTAL(min).
+  *    task time, CPU and GC of those runs, their top stages by run
+  *    time, and the persisted RDDs and temp work dirs the runs left
+  *    behind (both 0 when every run frees what it made); then
+  *    TOTAL(min).
   *  - `explain <sfDir> [query...]`: runs each query, prints its final
   *    (post-AQE) formatted plan and its SCANS/REUSED/SMJ/BHJ counts.
   *  - `audit <window|scans|fragment> <sfDir> [query...]`: runs each
@@ -73,12 +75,17 @@ object Dev {
       val total = qs.map { case (name, fn) =>
         GraftSqlBridge.drainListeners(spark.sparkContext)
         stats.reset()
+        val rdds = spark.sparkContext.getPersistentRDDs.keySet
+        val dirs = CacheDirs.tempWorkDirs()
         val times = Seq.fill(n)(Bench.seconds(spark)(Bench.noop(fn(spark, sfDir))))
         GraftSqlBridge.drainListeners(spark.sparkContext)
         val sorted = times.sorted
         val median = (sorted((n - 1) / 2) + sorted(n / 2)) / 2 // mean of the middle two for even n
         println(f"[time] $name%-36s min ${times.min}%7.3f  median $median%7.3f  all ${times.map(t => f"$t%.2f").mkString(",")}")
         stats.report(n).foreach(l => println(s"[time]   $l"))
+        println(s"[time]   left behind: persisted RDDs " +
+          s"${(spark.sparkContext.getPersistentRDDs.keySet -- rdds).size}, " +
+          s"temp work dirs ${(CacheDirs.tempWorkDirs() -- dirs).size}")
         times.min
       }.sum
       println(f"[time] TOTAL(min) $total%.3f over ${qs.size} queries")
@@ -88,7 +95,7 @@ object Dev {
   private def explain(spark: SparkSession, sfDir: String, names: Seq[String]): Unit =
     queries(names).foreach { case (name, fn) =>
       println(s"\n===================== $name =====================")
-      try {
+      try Bench.isolated(spark) {
         val df = fn(spark, sfDir)
         df.collect()
         println(df.queryExecution.explainString(FormattedMode))
@@ -97,7 +104,6 @@ object Dev {
             "SMJ" -> "SortMergeJoin", "BHJ" -> "BroadcastHashJoin")
           .map { case (k, frag) => s"$k=${fragment(frag)(plan)}" }.mkString(" "))
       } catch { case NonFatal(e) => println(s"ERR $name: ${e.getMessage}") }
-      spark.catalog.clearCache()
     }
 
   private def audit(spark: SparkSession, detect: SparkPlan => Int, sfDir: String,
@@ -105,13 +111,12 @@ object Dev {
     queries(names).foreach { case (name, fn) =>
       System.err.println(s"QUERY $name")
       System.err.flush()
-      try {
+      try Bench.isolated(spark) {
         val df = fn(spark, sfDir)
         df.collect()
         val n = detect(df.queryExecution.executedPlan)
         if (n > 0) println(s"HIT $n $name")
       } catch { case NonFatal(e) => println(s"ERR $name: ${String.valueOf(e.getMessage).take(80)}") }
-      spark.catalog.clearCache()
     }
     println("AUDIT DONE")
   }

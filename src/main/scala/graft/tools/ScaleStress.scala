@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.operators.Checkpoints.Checkpointed
 import graft.operators.{Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -17,14 +18,11 @@ object ScaleStress {
   def run(spark: SparkSession, sfDir: String, multiples: Seq[Int]): Unit = {
     val only = sys.env.get("SPARK_GRAFT_STRESS")
     def wanted(label: String): Boolean = only.forall(label.contains)
-    // clearCache drops CacheManager entries but NOT localCheckpoint blocks
-    // (persisted RDDs outside the cache manager): sweep those explicitly
-    // after every multiple, or executor storage accrues across the whole
-    // stress run (ADVICE r15).
-    def freeAll(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
+    // each multiple runs in its own Bench.isolated scope: its caches,
+    // checkpoints and temp work dirs are gone before the next one, so
+    // executor storage does not accrue across the stress run (ADVICE r15)
+    def isolatedEach[A](xs: Seq[A])(body: A => Unit): Unit =
+      xs.foreach(x => graft.Bench.isolated(spark)(body(x)))
     val base = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
     base.count() // warm
 
@@ -32,7 +30,7 @@ object ScaleStress {
     // the id offset keeps replica ids disjoint and MUST stay identical
     // across sections so their datasets are comparable.
     def docRun(label: String)(op: org.apache.spark.sql.DataFrame => Long): Unit =
-      if (wanted(label)) multiples.foreach { m =>
+      if (wanted(label)) isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
@@ -40,7 +38,6 @@ object ScaleStress {
         val out = op(corpus)
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE $label%-7s m=$m%2d docs=$n%7d out=$out%9d time=$dt%7.1fs")
-        freeAll()
       }
 
     // Replicas are exact near-dups of their originals: sub-quadratic
@@ -73,19 +70,18 @@ object ScaleStress {
     if (wanted("dupspaninc")) {
       val batch = base.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
         val t0 = System.nanoTime()
-        val index = Dedup.gramSpanSummary(corpus, "doc_id", "text").localCheckpoint()
+        val index = Dedup.gramSpanSummary(corpus, "doc_id", "text").checkpointed()
         val ni = index.count()
         val t1 = System.nanoTime()
         val out = Dedup.dupSpansIncremental(index, batch, "doc_id", "text").count()
         val t2 = System.nanoTime()
         println(f"SCALE dspaninc m=$m%2d docs=$n%7d grams=$ni%8d spans=$out%7d " +
           f"tindex=${(t1 - t0) / 1e9}%6.1fs tprobe=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // CHAR-grained incremental dup-span probe (the dspaninc claim for
@@ -96,19 +92,18 @@ object ScaleStress {
     if (wanted("cspaninc")) {
       val batch = base.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
         val t0 = System.nanoTime()
-        val index = Dedup.charGramSpanSummary(corpus, "doc_id", "text").localCheckpoint()
+        val index = Dedup.charGramSpanSummary(corpus, "doc_id", "text").checkpointed()
         val ni = index.count()
         val t1 = System.nanoTime()
         val out = Dedup.dupSpansCharsIncremental(index, batch, "doc_id", "text").count()
         val t2 = System.nanoTime()
         println(f"SCALE cspaninc m=$m%2d docs=$n%7d grams=$ni%9d spans=$out%7d " +
           f"tindex=${(t1 - t0) / 1e9}%6.1fs tprobe=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Incremental BM25 maintenance (bm25IncrementalTables'
@@ -122,7 +117,7 @@ object ScaleStress {
     if (wanted("bm25inc")) {
       val batch = base.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
@@ -136,7 +131,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE bm25inc m=$m%2d docs=$n%7d postings=$np%9d batch_p=$nb%8d " +
           f"d=$newD%7d tbuild=${(t1 - t0) / 1e9}%6.1fs tappend=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Exactly-once BM25 ingest (ingestBm25Batch — the batch-protocol
@@ -152,7 +146,7 @@ object ScaleStress {
     if (wanted("bm25ing")) {
       val batch = base.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
@@ -168,8 +162,6 @@ object ScaleStress {
         println(f"SCALE bm25ing m=$m%2d docs=$n%7d top=$top%3d " +
           f"tstate=${(t1 - t0) / 1e9}%6.1fs tingest=${(t2 - t1) / 1e9}%6.1fs " +
           f"tserve=${(t3 - t2) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(new java.io.File(state))
-        freeAll()
       }
     }
     // Corpus-frequency statistic (dup-gram fraction): two gram-keyed
@@ -188,7 +180,7 @@ object ScaleStress {
     docRun("bpe") { c =>
       val words = c.select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) >= 2)
-      val vocab = words.groupBy("w").agg(count(lit(1)).as("freq")).localCheckpoint()
+      val vocab = words.groupBy("w").agg(count(lit(1)).as("freq")).checkpointed()
       val merges = vocab.select(col("freq"), explode(expr(
           "transform(sequence(1, length(w) - 1), i -> substring(w, i, 2))")).as("pair"))
         .groupBy("pair").agg(sum("freq").as("n"))
@@ -207,21 +199,20 @@ object ScaleStress {
     // the vocab) must stay FLAT at 10x corpus — the 100 TB claim of
     // vocab-collapsed training, measured.
     if (wanted("bpetrain")) {
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
         val t0 = System.nanoTime()
         val vocab = corpus.select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2)
-          .groupBy("w").agg(count(lit(1)).as("freq")).localCheckpoint()
+          .groupBy("w").agg(count(lit(1)).as("freq")).checkpointed()
         val nv = vocab.count()
         val t1 = System.nanoTime()
         val merges = graft.functions.Bpe.trainMerges(vocab, "w", "freq", rounds = 10)
         val t2 = System.nanoTime()
         println(f"SCALE bpetrain m=$m%2d docs=$n%7d vocab=$nv%7d merges=${merges.size}%2d " +
           f"nsum=${merges.map(_._3).sum}%10d tvocab=${(t1 - t0) / 1e9}%6.1fs ttrain=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Unigram-LM trainer under replication: same claim as bpetrain —
@@ -230,13 +221,13 @@ object ScaleStress {
     // recount + metadata collect) is m-INVARIANT: tvocab may track m,
     // ttrain must stay FLAT at 10x corpus.
     if (wanted("unigram")) {
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
         val t0 = System.nanoTime()
         val vocab = corpus.select(explode(split(col("text"), " ")).as("w"))
-          .groupBy("w").agg(count(lit(1)).as("freq")).localCheckpoint()
+          .groupBy("w").agg(count(lit(1)).as("freq")).checkpointed()
         val nv = vocab.count()
         val t1 = System.nanoTime()
         val pieces = graft.functions.Unigram.trainUnigram(
@@ -244,7 +235,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE unigram m=$m%2d docs=$n%7d vocab=$nv%7d pieces=${pieces.length}%3d " +
           f"csum=${pieces.map(_.getLong(1)).sum}%11d tvocab=${(t1 - t0) / 1e9}%6.1fs ttrain=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Hashed-n-gram classifier apply under replication: the weight
@@ -287,7 +277,7 @@ object ScaleStress {
         postings.filter(col("token").isin(must: _*))
           .groupBy("doc_id").agg(count(lit(1)).as("n"))
           .filter(col("n") === must.size).count()
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
@@ -308,7 +298,6 @@ object ScaleStress {
         require(inlineHits == idxHits, s"index disagrees: $inlineHits vs $idxHits")
         println(f"SCALE tokidx  m=$m%2d docs=$n%7d hits=$idxHits%7d " +
           f"qinline=${(t1 - t0) / 1e9}%6.1fs build=${(t2 - t1) / 1e9}%6.1fs qidx=${(t3 - t2) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // BM25 ranked retrieval off the persisted index: build cost may
@@ -316,7 +305,7 @@ object ScaleStress {
     // SCORING query reads only the 3 fixed terms' buckets, so qbm25
     // must stay ~flat in corpus size — the serving claim on the gate.
     if (wanted("bm25")) {
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
@@ -345,7 +334,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE bm25    m=$m%2d docs=$n%7d top=${top.length}%2d " +
           f"maxscore=${top.head.getLong(1)}%9d build=${(t1 - t0) / 1e9}%6.1fs qbm25=${(t2 - t1) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // RRF hybrid retrieval: the lexical leg reads only the 3 query
@@ -358,7 +346,7 @@ object ScaleStress {
     if (wanted("rrf")) {
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
       emb0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val work = graft.CacheDirs.tempWorkDir("graft_stress_rrf_")
@@ -385,8 +373,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE rrf     m=$m%2d docs=${corpus.count()}%7d lex=${lex.length}%2d " +
           f"dense=${dense.length}%2d qlex=${(t1 - t0) / 1e9}%6.1fs qdense=${(t2 - t1) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
-        freeAll()
       }
     }
     // Banded perceptual near-dup join: replicas share their
@@ -415,7 +401,7 @@ object ScaleStress {
             i += 1
           }
           (f.media_id, hi, lo)
-        }.toDF("media_id", "phash_hi", "phash_lo").localCheckpoint()
+        }.toDF("media_id", "phash_hi", "phash_lo").checkpointed()
       val banded = ph.select(col("media_id"), col("phash_hi"), col("phash_lo"),
         posexplode(array(
           col("phash_lo").bitwiseAND(lit(0xFFFFL)),
@@ -445,7 +431,7 @@ object ScaleStress {
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
       val vocab = toks.groupBy("token").agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), col("token")).limit(1000)
-        .select("token").localCheckpoint()
+        .select("token").checkpointed()
       toks.join(broadcast(vocab.withColumn("_in", lit(1L))), Seq("token"), "left")
         .groupBy("source")
         .agg(count(lit(1)).as("n_tokens"),
@@ -503,7 +489,7 @@ object ScaleStress {
     if (wanted("hotdup")) {
       val words = "alpha bravo charlie delta echo foxtrot golf hotel " +
         "india juliet kilo lima mike november oscar papa"
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val n = 2500L * m
         val docs = spark.range(n).select(col("id").as("doc_id"), lit(words).as("text"))
         docs.count() // warm
@@ -523,7 +509,6 @@ object ScaleStress {
           .agg(max("count")).head().getLong(0)
         println(f"SCALE hotdup  m=$m%2d copies=$n%6d out=$outS%10d tsimhash=$tS%6.1fs " +
           f"tminhash=$tM%6.1fs bucketmax=$bucketMax%6d oldbufpairs=${bucketMax * (bucketMax - 1) / 2}%11d")
-        freeAll()
       }
     }
     docRun("increm")(c => Dedup.incrementalNearDups(
@@ -547,7 +532,7 @@ object ScaleStress {
         .withColumn("o_orderkey", col("o_orderkey") + lit(8000000000L))
       val dB = cust.filter(col("o_custkey") % 300 === 0)
         .withColumn("o_custkey", col("o_custkey") + lit(8000000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val a = (0 until m).map(i => ob.withColumn("o_orderkey",
           col("o_orderkey") + lit(i * 100000000L))).reduce(_ unionByName _)
         val nA = a.count()
@@ -562,7 +547,6 @@ object ScaleStress {
           a, dA, cust, dB, Seq("o_custkey")).count()
         val tDelta = (System.nanoTime() - t0) / 1e9
         println(f"SCALE incrjoin m=$m%2d orders=$nA%8d full=$full%9d tfull=$tFull%6.1fs deltarows=$deltaRows%7d trefresh=$tDelta%6.1fs")
-        freeAll()
       }
     }
     // Bloom decontamination: eval side FIXED (benchmarks are bounded);
@@ -591,7 +575,7 @@ object ScaleStress {
           col("l_quantity").cast("long").as("wt"),
           col("l_orderkey"), col("l_linenumber"))
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val li = (0 until m).map(i =>
           li0.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
           .reduce(_ unionByName _)
@@ -617,7 +601,6 @@ object ScaleStress {
           .agg(min("l_extendedprice").as("wm")).count()
         val tw = (System.nanoTime() - t1) / 1e9
         println(f"SCALE cumw    m=$m%2d rows=$n%8d out=$out%3d twophase=$t2p%6.1fs window3key=$tw%6.1fs")
-        freeAll()
       }
     }
     // FastSS edit-distance-1 join: corpus of formatted id-names (the
@@ -626,7 +609,7 @@ object ScaleStress {
     // form's comparisons grow with its square. Wall must track
     // corpus x name-length (the variant fan-out), nowhere near n².
     if (wanted("editd")) {
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val n = 5000L * m
         val names = spark.range(n).select(col("id"),
           format_string("Item#%09d", col("id")).as("nm"))
@@ -635,7 +618,6 @@ object ScaleStress {
         val out = graft.operators.Dedup.editDistance1Pairs(names, "id", "nm").count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE editd   m=$m%2d names=$n%7d out=$out%9d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // FastSS at k=2: the C(L,2) two-deletion neighborhood multiplies
@@ -643,7 +625,7 @@ object ScaleStress {
     // variant-keyed — wall must track index + output size, never
     // names².
     if (wanted("editd2")) {
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val n = 2000L * m
         val names = spark.range(n).select(col("id"),
           format_string("Item#%09d", col("id")).as("nm"))
@@ -653,7 +635,6 @@ object ScaleStress {
           .editDistancePairs(names, "id", "nm", maxDist = 2).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE editd2  m=$m%2d names=$n%7d out=$out%9d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Full k-core fixpoint under replication: replica graphs are
@@ -664,7 +645,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val it = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
@@ -679,7 +660,6 @@ object ScaleStress {
         val core = graft.operators.Graphs.kCore(e, 3).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE kcore   m=$m%2d edges=$ne%8d core=$core%8d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // PageRank to convergence: disjoint replicas reproduce the base
@@ -691,7 +671,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val it = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
@@ -708,7 +688,6 @@ object ScaleStress {
         val n = graft.operators.Graphs.pageRank(sym).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE pagerank m=$m%2d edges=$ne%8d nodes=$n%8d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Full core decomposition (h-index fixpoint): disjoint replicas
@@ -720,7 +699,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val it = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
@@ -736,7 +715,6 @@ object ScaleStress {
           .agg(max("core_k")).collect()(0).getLong(0)
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE corenum m=$m%2d edges=$ne%8d maxk=$maxCore%4d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // HyperBall reach sketch vs the exact 2-hop DISTINCT census under
@@ -750,7 +728,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val it = (0 until m).map(i => li0.select(
           col("l_orderkey"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
@@ -760,7 +738,7 @@ object ScaleStress {
         val e = a.join(b, Seq("l_orderkey")).filter(col("u") < col("v"))
           .groupBy("u", "v").agg(count(lit(1)).as("c"))
           .filter(col("c") >= 2).select("u", "v")
-        val sym = graft.operators.Graphs.symmetric(e).localCheckpoint()
+        val sym = graft.operators.Graphs.symmetric(e).checkpointed()
         val ne = sym.count() / 2
         val t0 = System.nanoTime()
         val skSum = graft.operators.Graphs.reachSketch(sym, hops = 2)
@@ -774,7 +752,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE reachsk m=$m%2d edges=$ne%9d skSum=$skSum%11d " +
           f"exact=$exactPairs%11d tSketch=${(t1 - t0) / 1e9}%7.1fs tExact=${(t2 - t1) / 1e9}%7.1fs")
-        freeAll()
       }
     }
     // One HITS iteration: disjoint replicas leave every node's
@@ -786,11 +763,11 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_suppkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val sp = (0 until m).map(i => li0.select(
           (col("l_suppkey") + lit(i * 100000000L)).as("supplier"),
           (col("l_partkey") + lit(i * 10000000L)).as("p")))
-          .reduce(_ unionByName _).distinct().localCheckpoint()
+          .reduce(_ unionByName _).distinct().checkpointed()
         val ne = sp.count()
         val t0 = System.nanoTime()
         val auth = sp.groupBy("p").agg(count(lit(1)).as("authority"))
@@ -802,7 +779,6 @@ object ScaleStress {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE hits    m=$m%2d edges=$ne%8d out=$nOut%7d maxhub=$maxHub%7d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // One label-propagation step: two well-keyed exchanges over the
@@ -813,7 +789,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val it = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
@@ -833,7 +809,6 @@ object ScaleStress {
           .count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE lblprop m=$m%2d edges=$ne%8d nodes=$nodes%8d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Theta-sketch aggregation: per-group state is one bounded
@@ -844,7 +819,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_returnflag", "l_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val rows = (0 until m).map(i => li0.select(col("l_returnflag"),
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey")))
           .reduce(_ unionByName _)
@@ -856,7 +831,6 @@ object ScaleStress {
           .collect()(0).getLong(0)
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE theta   m=$m%2d rows=$n%8d sketchB=$sk%7d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Ancestor rollup: replicated part catalogs keep the decimal
@@ -868,7 +842,7 @@ object ScaleStress {
         .select("l_partkey", "l_extendedprice")
       val pt0 = spark.read.parquet(s"$sfDir/part.parquet").select("p_partkey")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val li = (0 until m).map(i => li0.select(
           (col("l_partkey") + lit(i * 10000000L)).as("l_partkey"),
           col("l_extendedprice"))).reduce(_ unionByName _)
@@ -884,7 +858,6 @@ object ScaleStress {
         val out = graft.operators.Graphs.ancestorRollup(edges, rev).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE rollup  m=$m%2d parts=$n%8d out=$out%8d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Exact quantiles: the bucket-recursion pipeline's JOB COUNT is
@@ -961,7 +934,7 @@ object ScaleStress {
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       val cb = graft.operators.Similarity.trainPqCodebooks(emb0, "vec_id", "e", dim = 64)
       val probe = emb0.orderBy("vec_id").limit(1).collect()(0).getSeq[Double](1).toArray
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -972,7 +945,6 @@ object ScaleStress {
           probe, cb, k = 10, rerankVecCol = Some("e")).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE pq      m=$m%2d vecs=$n%7d out=$out%9d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Incremental IVF append: the corpus (and its build-time
@@ -984,12 +956,9 @@ object ScaleStress {
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb0.count() // warm
-      multiples.foreach { m =>
-        // checkpointed INSIDE the loop: freeAll() sweeps persistent RDDs
-        // per multiple, so a cross-multiple checkpoint would be read
-        // after its blocks were dropped
+      isolatedEach(multiples) { m =>
         val batch = emb0.filter(col("vec_id") % 7 === 0)
-          .withColumn("vec_id", col("vec_id") + lit(900000000L)).localCheckpoint()
+          .withColumn("vec_id", col("vec_id") + lit(900000000L)).checkpointed()
         val nb = batch.count()
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
@@ -1003,7 +972,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE ivfapp  m=$m%2d vecs=$n%7d batch=$nb%6d built=$nAssigned%7d " +
           f"appended=$appended%6d tbuild=${(t1 - t0) / 1e9}%6.1fs tappend=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Incremental near-dup probe FROM THE PERSISTED SKETCH
@@ -1018,12 +986,12 @@ object ScaleStress {
     if (wanted("ndprobe")) {
       val batch = base.filter(col("doc_id") % 7 === 0)
         .withColumn("doc_id", col("doc_id") + lit(900000000L))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           base.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))).reduce(_ unionByName _)
         val n = corpus.count()
         val t0 = System.nanoTime()
-        val sketch = Dedup.signatureBandRows(corpus, "doc_id", "text").localCheckpoint()
+        val sketch = Dedup.signatureBandRows(corpus, "doc_id", "text").checkpointed()
         val ns = sketch.count()
         val t1 = System.nanoTime()
         val out = Dedup.incrementalNearDupsFromSketch(
@@ -1031,7 +999,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE ndprobe m=$m%2d docs=$n%7d sketch=$ns%9d pairs=$out%8d " +
           f"tsketch=${(t1 - t0) / 1e9}%6.1fs tprobe=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // IVF recall@10 at PRODUCTION nProbe=4 under replication (the
@@ -1046,9 +1013,7 @@ object ScaleStress {
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb0.count() // warm
-      multiples.foreach { m =>
-        // built per multiple: freeAll() would drop a cross-multiple
-        // checkpoint's blocks (and the 20-row probe scan is trivial)
+      isolatedEach(multiples) { m =>
         val probes = emb0.filter(col("vec_id") < 20)
           .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
         val corpus = (0 until m).map(i => emb0.select(
@@ -1073,7 +1038,6 @@ object ScaleStress {
         val hits = truth.join(approx, Seq("probe_id", "vec_id"), "left_semi").count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE recall  m=$m%2d vecs=$n%7d recall_pm=${hits * 1000 / 200}%4d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // IVF-PQ serving: the index MATERIALIZES once (assignment +
@@ -1087,7 +1051,7 @@ object ScaleStress {
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -1105,7 +1069,6 @@ object ScaleStress {
           k = 10, nProbe = 4, rerankVecCol = Some("e")).count()
         val tq = (System.nanoTime() - t1) / 1e9
         println(f"SCALE ivfpq   m=$m%2d vecs=$n%7d out=$out%9d build=$tb%7.1fs query=$tq%7.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // BATCH IVF / IVF-PQ serving (ivfBatchTopK / ivfPqBatchTopK): the
@@ -1117,17 +1080,17 @@ object ScaleStress {
     // whatever the batch size. Superlinear growth here would mean the
     // probed-cell join degenerated (e.g. the broadcast side stopped
     // broadcasting).
-    if (wanted("ivfbatch")) {
+    if (wanted("ivfbatch")) graft.Bench.isolated(spark) {
       val emb0 = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb0.count() // warm
       val n = emb0.count()
       val (enc, cents, cb) = graft.operators.Similarity.ivfPqIndex(
         emb0, "vec_id", "e", dim = 64, nLists = 16)
-      val encCp = enc.localCheckpoint()
+      val encCp = enc.checkpointed()
       val (assigned, _) = Similarity.ivfIndex(emb0, "vec_id", "e", nLists = 16)
-      val asgCp = assigned.localCheckpoint()
-      multiples.foreach { m =>
+      val asgCp = assigned.checkpointed()
+      isolatedEach(multiples) { m =>
         val nb = 20 * m
         val probes = emb0.filter(col("vec_id") < nb)
           .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
@@ -1141,8 +1104,6 @@ object ScaleStress {
         println(f"SCALE ivfbatch m=$m%2d vecs=$n%7d probes=$nb%5d ivf_rows=$outIvf%6d " +
           f"pq_rows=$outPq%6d tivf=${(t1 - t0) / 1e9}%6.1fs tpq=${(t2 - t1) / 1e9}%6.1fs")
       }
-      graft.operators.Checkpoints.free(encCp)
-      graft.operators.Checkpoints.free(asgCp)
     }
     // BUCKETED multi-probe LSH vs the bit_count scan
     // (annBucketedBatchTopK vs annBatchTopK at equal radius r=2): the
@@ -1160,7 +1121,7 @@ object ScaleStress {
       emb0.count() // warm
       val probes = emb0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -1174,7 +1135,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE annbucket m=$m%2d vecs=$n%7d scan_rows=$scanRows%5d bkt_rows=$bRows%5d " +
           f"tscan=${(t1 - t0) / 1e9}%6.1fs tbkt=${(t2 - t1) / 1e9}%6.1fs")
-        freeAll()
       }
     }
     // Matryoshka staged retrieval (r18): stage 1 reads the persisted
@@ -1188,7 +1148,7 @@ object ScaleStress {
       emb0.count() // warm
       val probes = emb0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -1205,8 +1165,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE mrl     m=$m%2d vecs=$n%7d brute_rows=$nb%4d mrl_rows=$nm%4d " +
           f"tbrute=${(t1 - t0) / 1e9}%6.1fs tmrl=${(t2 - t1) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(new java.io.File(work))
-        freeAll()
       }
     }
     // INT8 staged retrieval (r18): stage 1 reads the persisted
@@ -1220,7 +1178,7 @@ object ScaleStress {
       emb0.count() // warm
       val probes = emb0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -1236,8 +1194,6 @@ object ScaleStress {
         val t2 = System.nanoTime()
         println(f"SCALE sq8     m=$m%2d vecs=$n%7d brute_rows=$nb%4d sq8_rows=$nq%4d " +
           f"tbrute=${(t1 - t0) / 1e9}%6.1fs tsq8=${(t2 - t1) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(new java.io.File(work))
-        freeAll()
       }
     }
     // ANN ingest-state maintenance (r19: annIngestCompact — the one
@@ -1253,7 +1209,7 @@ object ScaleStress {
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb0.count() // warm
       val slice = emb0.filter(col("vec_id") < 200)
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val dest = s"${graft.CacheDirs.tempWorkDir("graft_stress_anncomp_")}/index"
         val fsP = new org.apache.hadoop.fs.Path(dest)
         val fs = fsP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1295,9 +1251,6 @@ object ScaleStress {
           s"anncomp: $dirsBounded dirs after compact+rebuild+compact — listing not bounded")
         println(f"SCALE anncomp m=$m%2d batches=${nb + 2}%3d dirs_grown=$dirsGrown%3d " +
           f"dirs_bounded=$dirsBounded%2d tingest=$tIngest%6.1fs tcompact=$tComp%6.1fs")
-        graft.CacheDirs.deleteRecursively(
-          new java.io.File(dest).getParentFile)
-        freeAll()
       }
     }
     // Stage-1 bounded-heap shortlist (r19: the row_number-over-
@@ -1338,23 +1291,21 @@ object ScaleStress {
         (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
         .reduce(_ unionByName _)
       // sweep 1: probes grow, corpus fixed
-      Seq(20, 40, 80, 160).foreach { nb =>
+      isolatedEach(Seq(20, 40, 80, 160)) { nb =>
         val corpus = rep(2); val n = corpus.count()
         val (out, shuf, dt) = measured(corpus, nb)
         require(shuf * 10 < nb.toLong * n,
           s"staged1: $shuf shuffle rows at $nb probes x $n vecs — the corpus is " +
             "riding the rank shuffle again (window-form regression)")
         println(f"SCALE staged1 probes=$nb%4d vecs=$n%7d out=$out%6d shuf_rows=$shuf%7d time=$dt%6.1fs")
-        freeAll()
       }
       // sweep 2: corpus grows, probes fixed — shuffle rows FLAT
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = rep(m); val n = corpus.count()
         val (out, shuf, dt) = measured(corpus, 20)
         require(shuf * 10 < 20L * n,
           s"staged1: $shuf shuffle rows at 20 probes x $n vecs — corpus-sized rank shuffle")
         println(f"SCALE staged1 m=$m%2d vecs=$n%7d out=$out%6d shuf_rows=$shuf%7d time=$dt%6.1fs")
-        freeAll()
       }
       spark.sparkContext.removeSparkListener(listener)
     }
@@ -1371,7 +1322,7 @@ object ScaleStress {
       emb0.count() // warm
       val probes = emb0.filter(col("vec_id") < 20)
         .select(col("vec_id").as("probe_id"), col("e").as("probe_e"))
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb0.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"), col("e")))
           .reduce(_ unionByName _)
@@ -1394,8 +1345,6 @@ object ScaleStress {
         println(f"SCALE sigtab  m=$m%2d vecs=$n%7d rows=$fedRows%5d " +
           f"tbuild=${(t1 - t0) / 1e9}%6.1fs tinline=${(t2 - t1) / 1e9}%6.1fs " +
           f"tfed=${(t3 - t2) / 1e9}%6.1fs")
-        graft.CacheDirs.deleteRecursively(new java.io.File(work))
-        freeAll()
       }
     }
     // JDBC round-trip (S1/S3/W1): W1 batch insert OUT, 4-stride
@@ -1411,7 +1360,7 @@ object ScaleStress {
       val orders0 = spark.read.parquet(s"$sfDir/orders.parquet")
         .select("o_orderkey", "o_custkey", "o_totalprice")
       orders0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => orders0.select(
           (col("o_orderkey") + lit(i * 100000000L)).as("k"),
           col("o_custkey").as("c"), col("o_totalprice").as("t")))
@@ -1448,7 +1397,7 @@ object ScaleStress {
     // independent of how fragmented the input was.
     if (wanted("compact")) {
       val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i =>
           docs0.withColumn("doc_id", col("doc_id") + lit(i * 10000000L)))
           .reduce(_ unionByName _)
@@ -1460,7 +1409,6 @@ object ScaleStress {
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE compact m=$m%2d files=${stats.filesBefore}%5d->${stats.filesAfter}%3d " +
           f"rows=${stats.rows}%8d time=$dt%7.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Streaming execution: replicate the events feed mx into a
@@ -1481,7 +1429,7 @@ object ScaleStress {
     if (wanted("debounce")) {
       val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
       ev0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val feed = (0 until m).map(i =>
           ev0.withColumn("event_id", col("event_id") + lit(i * 100000000L))
             .withColumn("user_id", col("user_id") + lit(i * 10000000L)))
@@ -1500,7 +1448,6 @@ object ScaleStress {
           s"$work/run", statePartitions = Some(8)).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE debounce m=$m%2d rows=$n%7d out=$out%9d state=$stateKeys%7d time=$dt%7.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Streaming keyed UPSERT under a GROWING DESTINATION and a FIXED
@@ -1521,7 +1468,7 @@ object ScaleStress {
         .select("user_id", "event_id", "event_type", "value")
       ev0.count() // warm
       val batchFeed = ev0.filter(col("user_id") < 8)
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         // destination seeded in keep-latest form (one row per key —
         // m×1M DISTINCT users): a non-deduped seed would collapse on
         // first merge and fake a small rewrite for the flat variant
@@ -1669,7 +1616,7 @@ object ScaleStress {
     if (wanted("topk")) {
       val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
       ev0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val feed = (0 until m).map(i =>
           ev0.withColumn("event_id", col("event_id") + lit(i * 100000000L))
             .withColumn("user_id", col("user_id") + lit(i * 10000000L)))
@@ -1686,13 +1633,12 @@ object ScaleStress {
           tieCol = "event_id", k = 3, checkpoint = s"$work/ckpt").count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE topk    m=$m%2d rows=$n%7d state=$state%7d time=$dt%7.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     if (wanted("stream")) {
       val ev0 = spark.read.parquet(s"$sfDir/events.parquet")
       ev0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val feed = (0 until m).map(i =>
           ev0.withColumn("event_id", col("event_id") + lit(i * 100000000L)))
           .reduce(_ unionByName _)
@@ -1706,7 +1652,6 @@ object ScaleStress {
           s"$work/run", statePartitions = Some(8)).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE stream  m=$m%2d rows=$n%7d out=$out%9d time=$dt%7.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Bucketed co-located join: the bucketed WRITE pays the one-time
@@ -1720,7 +1665,7 @@ object ScaleStress {
       val or0 = spark.read.parquet(s"$sfDir/orders.parquet")
         .select("o_orderkey", "o_orderstatus")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val li = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
           col("l_extendedprice"))).reduce(_ unionByName _)
@@ -1744,7 +1689,6 @@ object ScaleStress {
         val tj = (System.nanoTime() - t1) / 1e9
         println(f"SCALE bucket  m=$m%2d rows=$n%8d out=$out%9d write=$tw%7.1fs join=$tj%7.1fs")
         spark.sql(s"DROP DATABASE $db CASCADE")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Manifest data skipping: corpus Z-ordered into 16*m files (file
@@ -1758,7 +1702,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 10000000L)).as("l_orderkey"),
           col("l_partkey"), col("l_quantity"))).reduce(_ unionByName _)
@@ -1783,7 +1727,6 @@ object ScaleStress {
         val tf = (System.nanoTime() - t1) / 1e9
         println(f"SCALE skip    m=$m%2d rows=$n%8d files=${paths.size}%3d/${16 * m}%3d " +
           f"out=$out%8d read=$tr%6.1fs fullscan=$tf%6.1fs manifest=$tm%6.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Bloom-manifest point lookup on a hash-scattered layout (zone
@@ -1796,7 +1739,7 @@ object ScaleStress {
       val li0 = spark.read.parquet(s"$sfDir/lineitem.parquet")
         .select("l_orderkey", "l_partkey", "l_quantity")
       li0.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => li0.select(
           (col("l_orderkey") + lit(i * 10000000L)).as("l_orderkey"),
           col("l_partkey"), col("l_quantity"))).reduce(_ unionByName _)
@@ -1821,7 +1764,6 @@ object ScaleStress {
         val tf = (System.nanoTime() - t1) / 1e9
         println(f"SCALE bloomsk m=$m%2d rows=$n%8d files=${paths.size}%3d/${16 * m}%3d " +
           f"out=$out%8d read=$tr%6.1fs fullscan=$tf%6.1fs manifest=$tm%6.1fs")
-        graft.CacheDirs.deleteRecursively(work.toFile)
       }
     }
     // Exact grid-blocked cosine join in its STRONG regime (t=0.995,
@@ -1832,7 +1774,7 @@ object ScaleStress {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"),
           (if (i == 0) col("e") else expr(s"transform(e, x -> x * ${1.0 + 0.0625 / i})")).as("e")))
@@ -1843,7 +1785,6 @@ object ScaleStress {
           corpus, "vec_id", "e", threshold = 0.995, blockDims = 4).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE exactbk m=$m%2d vecs=$n%7d pairs=$pairs%9d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // SemDeDup cells: the intra-cell stage is Σ(cell size)²; the
@@ -1855,7 +1796,7 @@ object ScaleStress {
       val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
         .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
       emb.count() // warm
-      multiples.foreach { m =>
+      isolatedEach(multiples) { m =>
         val corpus = (0 until m).map(i => emb.select(
           (col("vec_id") + lit(i * 10000000L)).as("vec_id"),
           (if (i == 0) col("e") else expr(s"transform(e, x -> x * ${1.0 + 0.0625 / i})")).as("e")))
@@ -1867,7 +1808,6 @@ object ScaleStress {
           nClusters = k, threshold = 0.99).filter(!col("kept")).count()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"SCALE semded  m=$m%2d vecs=$n%7d pruned=$pruned%9d k=$k%3d time=$dt%7.1fs")
-        freeAll()
       }
     }
     // Embedding near-dup: replicas are x1.0625-scaled copies (same
@@ -1877,7 +1817,7 @@ object ScaleStress {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding").cast(ArrayType(DoubleType)).as("e"))
     emb.count() // warm
-    multiples.foreach { m =>
+    isolatedEach(multiples) { m =>
       val corpus = (0 until m).map(i => emb.select(
         (col("vec_id") + lit(i * 10000000L)).as("vec_id"),
         (if (i == 0) col("e") else expr(s"transform(e, x -> x * ${1.0 + 0.0625 / i})")).as("e")))
@@ -1887,7 +1827,6 @@ object ScaleStress {
       val pairs = Similarity.embeddingNearDups(corpus, "vec_id", "e", dim = 64, threshold = 0.9).count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"SCALE embed   m=$m%2d vecs=$n%7d pairs=$pairs%9d time=$dt%7.1fs")
-      freeAll()
     }
     }
   }

@@ -37,8 +37,9 @@ class ConfScopeSpec extends SparkTestBase {
     } finally caller.listenerManager.unregister(l)
   }
 
-  private def freeAll(): Unit =
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  // each test runs in a scope: the loops' checkpoints are freed when it ends
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    graft.operators.Checkpoints.scoped(super.withFixture(test))
 
   test("a loop's jobs leave the caller's conf at the caller's values") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
@@ -56,7 +57,6 @@ class ConfScopeSpec extends SparkTestBase {
     } finally spark.sparkContext.removeSparkListener(l)
     assert(seen.size > 1)
     seen.asScala.foreach(got => assert(got == want))
-    freeAll()
   }
 
   test("a scope sees the caller's runtime conf, functions and listeners") {
@@ -154,6 +154,5 @@ class ConfScopeSpec extends SparkTestBase {
     }
     assert(out.sparkSession eq spark)
     assert(out.count() > 0L)
-    freeAll()
   }
 }

@@ -10,26 +10,36 @@ class QueriesSmokeSpec extends SparkTestBase {
 
   Queries.registry.foreach { q =>
     test(s"${q.name} returns rows") {
-      val df = q.fn(spark, sf)
-      assert(df.count() > 0, s"${q.name} returned 0 rows")
-      // registry-wide plan hygiene: an unpartitioned two-big-sides
-      // cartesian product must never appear (broadcast nested-loop
-      // against a bounded side is fine and shows up differently)
-      assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"),
-        s"${q.name} executes a CartesianProduct")
-      // the physical check alone is vacuous at test scale (everything
-      // fits under autoBroadcastJoinThreshold, so JoinSelection plans
-      // BNLJ) — also reject the LOGICAL shape that becomes a cartesian
-      // at production size: a condition-less join neither side of
-      // which carries an explicit broadcast-class hint
-      val keylessUnhinted = df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join
-            if j.condition.isEmpty &&
-              j.hint.leftHint.forall(_.strategy.isEmpty) &&
-              j.hint.rightHint.forall(_.strategy.isEmpty) => j
+      // the row runs as Bench, Verify and Dev run it: in Bench.isolated,
+      // which must leave nothing the row persisted or made behind
+      val first = spark.sparkContext.emptyRDD[Int].id
+      val dirs = CacheDirs.tempWorkDirs()
+      Bench.isolated(spark) {
+        val df = q.fn(spark, sf)
+        assert(df.count() > 0, s"${q.name} returned 0 rows")
+        // registry-wide plan hygiene: an unpartitioned two-big-sides
+        // cartesian product must never appear (broadcast nested-loop
+        // against a bounded side is fine and shows up differently)
+        assert(!df.queryExecution.executedPlan.toString.contains("CartesianProduct"),
+          s"${q.name} executes a CartesianProduct")
+        // the physical check alone is vacuous at test scale (everything
+        // fits under autoBroadcastJoinThreshold, so JoinSelection plans
+        // BNLJ) — also reject the LOGICAL shape that becomes a cartesian
+        // at production size: a condition-less join neither side of
+        // which carries an explicit broadcast-class hint
+        val keylessUnhinted = df.queryExecution.optimizedPlan.collect {
+          case j: org.apache.spark.sql.catalyst.plans.logical.Join
+              if j.condition.isEmpty &&
+                j.hint.leftHint.forall(_.strategy.isEmpty) &&
+                j.hint.rightHint.forall(_.strategy.isEmpty) => j
+        }
+        assert(keylessUnhinted.isEmpty,
+          s"${q.name} has a keyless join with no broadcast-side hint — a cartesian at scale")
       }
-      assert(keylessUnhinted.isEmpty,
-        s"${q.name} has a keyless join with no broadcast-side hint — a cartesian at scale")
+      val rdds = spark.sparkContext.getPersistentRDDs.keys.filter(_ > first)
+      assert(rdds.isEmpty, s"${q.name} left persisted RDDs behind: ${rdds.mkString(",")}")
+      val leftDirs = CacheDirs.tempWorkDirs() -- dirs
+      assert(leftDirs.isEmpty, s"${q.name} left temp work dirs behind: ${leftDirs.mkString(",")}")
     }
   }
 
